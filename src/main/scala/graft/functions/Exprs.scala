@@ -1,17 +1,157 @@
 package graft.functions
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.{FunctionIdentifier, InternalRow}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, ExpressionInfo, UnaryExpression}
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, ExpressionInfo, TernaryExpression, UnaryExpression}
+import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.types.{ArrayType, BinaryType, BooleanType, DataType, IntegerType, LongType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native Catalyst expressions (with whole-stage codegen) for graft's hot
   * paths — per SURVEY §4.7: no UDFs in hot loops; a codegen'd Expression
   * keeps the similarity joins inside WholeStageCodegen where a Scala UDF
   * would box every row.
+  *
+  * One implementation per kernel: its loops live in a Scala static core
+  * (an `XxxKernel` object) that `nullSafeEval` calls and `doGenCode` emits
+  * as one static call, so the eval paths cannot drift (KernelCodegenSpec
+  * fails a kernel that loops in generated Java). A core returns null
+  * (boxed, for primitive results) where the kernel yields SQL NULL.
   */
+
+/** Static cores of the exact-long vector kernels [[DotQ]], [[SimHash64]],
+  * [[MatVecQ]], [[CentTopKQ]] and [[PqCodesQ]], plus the model fold their
+  * foldable matrix arguments share.
+  */
+object VecKernel {
+
+  /** Null when the lengths differ (see [[DotQ]]). */
+  def dot(x: ArrayData, y: ArrayData): java.lang.Long = {
+    val n = x.numElements()
+    if (n != y.numElements()) return null
+    var acc = 0L
+    var i = 0
+    while (i < n) { acc += x.getLong(i) * y.getLong(i); i += 1 }
+    acc
+  }
+
+  def simHash64(a: ArrayData): Long = {
+    val n = a.numElements()
+    val cnt = new Array[Int](64)
+    var i = 0
+    while (i < n) {
+      val h = a.getLong(i)
+      var b = 0
+      while (b < 64) {
+        if (((h >>> b) & 1L) == 1L) cnt(b) += 1 else cnt(b) -= 1
+        b += 1
+      }
+      i += 1
+    }
+    var fp = 0L
+    var b = 0
+    while (b < 64) { if (cnt(b) > 0) fp |= (1L << b); b += 1 }
+    fp
+  }
+
+  /** Row dots of a folded model; null when `x` mismatches a non-empty
+    * model's width (see [[MatVecQ]]).
+    */
+  def matVec(model: Array[Array[Long]], x: ArrayData): ArrayData = {
+    if (model.nonEmpty && x.numElements() != model(0).length) return null
+    val out = new Array[Long](model.length)
+    var j = 0
+    while (j < model.length) { out(j) = dotRow(model(j), x, 0); j += 1 }
+    ArrayData.toArrayData(out)
+  }
+
+  /** The `bd.length` nearest model rows by `norms(j) − 2·⟨x, row j⟩`, cid
+    * ascending on ties (see [[CentTopKQ]]). `bd`/`bc` are caller-owned
+    * scratch slots — the codegen path passes per-task arrays, so a row
+    * allocates only its result.
+    */
+  def centTopK(model: Array[Array[Long]], norms: Array[Long], x: ArrayData,
+      bd: Array[Long], bc: Array[Int]): ArrayData = {
+    if (model.nonEmpty && x.numElements() != model(0).length) return null
+    val k = bd.length
+    var filled = 0
+    var j = 0
+    while (j < model.length) {
+      val dist = norms(j) - 2L * dotRow(model(j), x, 0)
+      if (filled < k || dist < bd(filled - 1)) {
+        var p = if (filled < k) filled else k - 1
+        while (p > 0 && dist < bd(p - 1)) {
+          bd(p) = bd(p - 1); bc(p) = bc(p - 1); p -= 1
+        }
+        bd(p) = dist; bc(p) = j
+        if (filled < k) filled += 1
+      }
+      j += 1
+    }
+    ArrayData.toArrayData(java.util.Arrays.copyOf(bc, filled))
+  }
+
+  /** struct(codes, n2pq) of the nearest codeword per block, smaller code
+    * on ties; null when `x` is not blocks·subdim long (see [[PqCodesQ]]).
+    */
+  def pqCodes(book: Array[Array[Array[Long]]], norms: Array[Array[Long]],
+      x: ArrayData): InternalRow = {
+    val subDim = if (book.isEmpty) 0 else book(0)(0).length
+    if (x.numElements() != book.length * subDim) return null
+    val codes = new Array[Int](book.length)
+    var n2pq = 0L
+    var j = 0
+    while (j < book.length) {
+      val block = book(j)
+      var best = 0L
+      var bestC = -1
+      var c = 0
+      while (c < block.length) {
+        val dist = norms(j)(c) - 2L * dotRow(block(c), x, j * subDim)
+        if (bestC < 0 || dist < best) { best = dist; bestC = c }
+        c += 1
+      }
+      codes(j) = bestC
+      n2pq += norms(j)(bestC)
+      j += 1
+    }
+    InternalRow(ArrayData.toArrayData(codes), n2pq)
+  }
+
+  /** ⟨row, x[off, off + row.length)⟩ in exact long arithmetic. */
+  private def dotRow(row: Array[Long], x: ArrayData, off: Int): Long = {
+    var acc = 0L
+    var i = 0
+    while (i < row.length) { acc += row(i) * x.getLong(off + i); i += 1 }
+    acc
+  }
+
+  /** The primitive rows of an array<array<bigint>> value. */
+  def rows(m: ArrayData): Array[Array[Long]] =
+    Array.tabulate(m.numElements())(j => m.getArray(j).toLongArray())
+
+  /** Folds a foldable ArrayType(ArrayType(LongType)) model once at plan
+    * time. A foldable NULL folds to an EMPTY model instead of NPE-ing:
+    * doGenCode forces the fold while building the codegen references
+    * array, BEFORE the per-row null check runs — the interpreted path
+    * null-propagates first and never sees the hazard, and a crash that
+    * exists only under codegen is the worst kind of divergence. Rows with
+    * a null model never reach the core either way, so the empty model is
+    * inert. A jagged model is a construction bug, so it fails here.
+    */
+  def foldMatrix(mat: Expression, fn: String): Array[Array[Long]] = {
+    require(mat.foldable, s"$fn: matrix argument must be foldable")
+    val raw = mat.eval()
+    if (raw == null) Array.empty
+    else {
+      val m = rows(raw.asInstanceOf[ArrayData])
+      require(m.forall(_.length == m(0).length),
+        s"$fn: matrix rows must have uniform length")
+      m
+    }
+  }
+}
 
 /** Exact integer dot product of two ArrayType(LongType) columns — the inner
   * kernel of the quantized-embedding similarity operators (SURVEY §2.5
@@ -32,38 +172,33 @@ case class DotQ(left: Expression, right: Expression)
     * the same input, so silence here would also split the engines). Null
     * ELEMENTS remain a precondition: graft quantizes from non-null floats.
     */
-  override protected def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
-    val y = b.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
-    if (x.numElements() != y.numElements()) null
-    else {
-      var acc = 0L
-      var i = 0
-      while (i < x.numElements()) { acc += x.getLong(i) * y.getLong(i); i += 1 }
-      acc
-    }
-  }
+  override protected def nullSafeEval(a: Any, b: Any): Any =
+    VecKernel.dot(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i")
-      val acc = ctx.freshName("acc")
-      s"""
-         |if ($a.numElements() != $b.numElements()) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  long $acc = 0L;
-         |  for (int $i = 0; $i < $a.numElements(); $i++) {
-         |    $acc += $a.getLong($i) * $b.getLong($i);
-         |  }
-         |  ${ev.value} = $acc;
-         |}
-       """.stripMargin
+      val dot = ctx.freshName("dot")
+      s"java.lang.Long $dot = graft.functions.VecKernel.dot($a, $b); " +
+        s"${ev.isNull} = $dot == null; if ($dot != null) ${ev.value} = $dot.longValue();"
     })
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): DotQ =
     copy(left = newLeft, right = newRight)
+}
+
+/** Static core of [[RollingHash]]. */
+object RollingHashKernel {
+  def eval(s: UTF8String): Long = {
+    val bytes = s.getBytes
+    var acc = 0L
+    var i = 0
+    while (i < bytes.length) {
+      acc = (acc * 31L + (bytes(i) & 0xffL)) % 1000000007L
+      i += 1
+    }
+    acc
+  }
 }
 
 /** Polynomial rolling hash over the bytes of an (ASCII-normalized) string:
@@ -79,31 +214,12 @@ case class RollingHash(child: Expression)
   override def inputTypes = Seq(StringType)
   override def dataType: DataType = LongType
 
-  override protected def nullSafeEval(input: Any): Any = {
-    val bytes = input.asInstanceOf[UTF8String].getBytes
-    var acc = 0L
-    var i = 0
-    while (i < bytes.length) {
-      acc = (acc * 31L + (bytes(i) & 0xffL)) % 1000000007L
-      i += 1
-    }
-    acc
-  }
+  override protected def nullSafeEval(input: Any): Any =
+    RollingHashKernel.eval(input.asInstanceOf[UTF8String])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val bytes = ctx.freshName("bytes")
-      val i = ctx.freshName("i")
-      val acc = ctx.freshName("acc")
-      s"""
-         |byte[] $bytes = $c.getBytes();
-         |long $acc = 0L;
-         |for (int $i = 0; $i < $bytes.length; $i++) {
-         |  $acc = ($acc * 31L + ($bytes[$i] & 0xffL)) % 1000000007L;
-         |}
-         |${ev.value} = $acc;
-       """.stripMargin
-    })
+    nullSafeCodeGen(ctx, ev, c =>
+      s"${ev.value} = graft.functions.RollingHashKernel.eval($c);")
 
   override protected def withNewChildInternal(newChild: Expression): RollingHash =
     copy(child = newChild)
@@ -124,48 +240,12 @@ case class SimHash64(child: Expression)
   override def inputTypes = Seq(ArrayType(LongType))
   override def dataType: DataType = LongType
 
-  override protected def nullSafeEval(input: Any): Any = {
-    val a = input.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
-    val n = a.numElements()
-    val cnt = new Array[Int](64)
-    var i = 0
-    while (i < n) {
-      val h = a.getLong(i)
-      var b = 0
-      while (b < 64) {
-        if (((h >>> b) & 1L) == 1L) cnt(b) += 1 else cnt(b) -= 1
-        b += 1
-      }
-      i += 1
-    }
-    var fp = 0L
-    var b = 0
-    while (b < 64) { if (cnt(b) > 0) fp |= (1L << b); b += 1 }
-    fp
-  }
+  override protected def nullSafeEval(input: Any): Any =
+    VecKernel.simHash64(input.asInstanceOf[ArrayData])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val cnt = ctx.freshName("cnt")
-      val i = ctx.freshName("i")
-      val b = ctx.freshName("b")
-      val h = ctx.freshName("h")
-      val fp = ctx.freshName("fp")
-      s"""
-         |int[] $cnt = new int[64];
-         |for (int $i = 0; $i < $a.numElements(); $i++) {
-         |  long $h = $a.getLong($i);
-         |  for (int $b = 0; $b < 64; $b++) {
-         |    $cnt[$b] += (($h >>> $b) & 1L) == 1L ? 1 : -1;
-         |  }
-         |}
-         |long $fp = 0L;
-         |for (int $b = 0; $b < 64; $b++) {
-         |  if ($cnt[$b] > 0) $fp |= (1L << $b);
-         |}
-         |${ev.value} = $fp;
-       """.stripMargin
-    })
+    nullSafeCodeGen(ctx, ev, a =>
+      s"${ev.value} = graft.functions.VecKernel.simHash64($a);")
 
   override protected def withNewChildInternal(newChild: Expression): SimHash64 =
     copy(child = newChild)
@@ -180,15 +260,15 @@ case class SimHash64(child: Expression)
   * makes the analyzed tree O(K·D) nodes — at K=256, D=64 that cost tens
   * of seconds of driver-side analysis + codegen per plan. Here the model
   * folds ONCE into a primitive long[][] held in the codegen references
-  * array, the generated code is two short loops, and the per-row work is
-  * identical arithmetic to K DotQ calls (exact, order-independent,
-  * bit-identical to the oracle at any parallelism).
+  * array, and the per-row work is identical arithmetic to K DotQ calls
+  * (exact, order-independent, bit-identical to the oracle at any
+  * parallelism).
   *
   * Null vec → null (like DotQ); a vec whose length differs from the
   * matrix row width → null (a truncated "plausible" result would mask
   * malformed vectors). The matrix argument must be foldable and uniform —
-  * enforced at first evaluation, since a jagged model is a construction
-  * bug, not a data condition.
+  * enforced at plan time by [[VecKernel.foldMatrix]], since a jagged model
+  * is a construction bug, not a data condition.
   */
 case class MatVecQ(mat: Expression, vec: Expression)
     extends BinaryExpression with ExpectsInputTypes {
@@ -200,73 +280,18 @@ case class MatVecQ(mat: Expression, vec: Expression)
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def nullable: Boolean = true
 
-  /** The folded model: evaluated once at plan time, shared by every row.
-    * A foldable NULL matrix folds to an EMPTY model instead of NPE-ing:
-    * doGenCode forces this lazy while building the codegen references
-    * array, BEFORE the per-row null check runs — the interpreted path
-    * null-propagates first and never sees the hazard, and a crash that
-    * exists only under codegen is the worst kind of divergence. Rows
-    * with a null matrix never reach the kernel either way (nullSafeEval
-    * / nullSafeCodeGen propagate), so the empty model is inert.
-    */
-  @transient private lazy val model: Array[Array[Long]] = {
-    require(mat.foldable, "graft_matvec_q: matrix argument must be foldable")
-    val raw = mat.eval()
-    if (raw == null) Array.empty
-    else {
-      val m = raw.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
-      val rows = Array.tabulate(m.numElements())(j => m.getArray(j).toLongArray())
-      require(rows.isEmpty || rows.forall(_.length == rows(0).length),
-        "graft_matvec_q: matrix rows must have uniform length")
-      rows
-    }
-  }
-  @transient private lazy val dim: Int =
-    if (model.isEmpty) 0 else model(0).length
+  /** The folded model: evaluated once at plan time, shared by every row. */
+  @transient private lazy val model: Array[Array[Long]] =
+    VecKernel.foldMatrix(mat, "graft_matvec_q")
 
-  override protected def nullSafeEval(a: Any, b: Any): Any = {
-    val x = b.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
-    if (model.nonEmpty && x.numElements() != dim) null
-    else {
-      val out = new Array[Long](model.length)
-      var j = 0
-      while (j < model.length) {
-        val row = model(j)
-        var acc = 0L
-        var i = 0
-        while (i < row.length) { acc += row(i) * x.getLong(i); i += 1 }
-        out(j) = acc
-        j += 1
-      }
-      org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(out)
-    }
-  }
+  override protected def nullSafeEval(a: Any, b: Any): Any =
+    VecKernel.matVec(model, b.asInstanceOf[ArrayData])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val modelRef = ctx.addReferenceObj("matvecModel", model, "long[][]")
-    nullSafeCodeGen(ctx, ev, (_, b) => {
-      val out = ctx.freshName("out")
-      val j = ctx.freshName("j")
-      val i = ctx.freshName("i")
-      val acc = ctx.freshName("acc")
-      val row = ctx.freshName("row")
-      s"""
-         |if ($modelRef.length > 0 && $b.numElements() != $dim) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  long[] $out = new long[$modelRef.length];
-         |  for (int $j = 0; $j < $modelRef.length; $j++) {
-         |    long[] $row = $modelRef[$j];
-         |    long $acc = 0L;
-         |    for (int $i = 0; $i < $row.length; $i++) {
-         |      $acc += $row[$i] * $b.getLong($i);
-         |    }
-         |    $out[$j] = $acc;
-         |  }
-         |  ${ev.value} = org.apache.spark.sql.catalyst.util.ArrayData.toArrayData($out);
-         |}
-       """.stripMargin
-    })
+    nullSafeCodeGen(ctx, ev, (_, b) =>
+      s"${ev.value} = graft.functions.VecKernel.matVec($modelRef, $b); " +
+        s"${ev.isNull} = ${ev.value} == null;")
   }
 
   override protected def withNewChildrenInternal(
@@ -293,9 +318,10 @@ case class MatVecQ(mat: Expression, vec: Expression)
   * the model folds once into a primitive long[][] (+ precomputed row
   * norms) in the codegen references array — the [[MatVecQ]] rule — and
   * the per-row work is K primitive dots + a bounded insertion into k
-  * slots, inside whole-stage codegen. (The round-5 MatVecQ-inside-lambda
-  * rewrite was 6× SLOWER because element_at over the kernel output
-  * re-evaluated per lambda element; this form has no lambda at all.)
+  * per-task scratch slots, inside whole-stage codegen. (The round-5
+  * MatVecQ-inside-lambda rewrite was 6× SLOWER because element_at over
+  * the kernel output re-evaluated per lambda element; this form has no
+  * lambda at all.)
   *
   * Null vec → null; vec length ≠ model width → null (the [[MatVecQ]]
   * malformed-vector rule). `k` must be a foldable positive int; fewer
@@ -303,39 +329,24 @@ case class MatVecQ(mat: Expression, vec: Expression)
   * array.
   */
 case class CentTopKQ(mat: Expression, vec: Expression, k: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.TernaryExpression
-    with ExpectsInputTypes {
+    extends TernaryExpression with ExpectsInputTypes {
 
   override def first: Expression = mat
   override def second: Expression = vec
   override def third: Expression = k
   override def inputTypes =
-    Seq(ArrayType(ArrayType(LongType)), ArrayType(LongType),
-      org.apache.spark.sql.types.IntegerType)
-  override def dataType: DataType =
-    ArrayType(org.apache.spark.sql.types.IntegerType, containsNull = false)
+    Seq(ArrayType(ArrayType(LongType)), ArrayType(LongType), IntegerType)
+  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
   override def nullable: Boolean = true
 
   /** Folded model + per-row squared norms, shared by every row (forced
     * while building the codegen references array — before any row runs —
     * so a malformed foldable argument fails at plan time, not mid-task).
     */
-  @transient private lazy val model: Array[Array[Long]] = {
-    require(mat.foldable, "graft_cent_topk: matrix argument must be foldable")
-    val raw = mat.eval()
-    if (raw == null) Array.empty
-    else {
-      val m = raw.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
-      val rows = Array.tabulate(m.numElements())(j => m.getArray(j).toLongArray())
-      require(rows.isEmpty || rows.forall(_.length == rows(0).length),
-        "graft_cent_topk: matrix rows must have uniform length")
-      rows
-    }
-  }
+  @transient private lazy val model: Array[Array[Long]] =
+    VecKernel.foldMatrix(mat, "graft_cent_topk")
   @transient private lazy val norms: Array[Long] =
     model.map(_.map(x => x * x).sum)
-  @transient private lazy val dim: Int =
-    if (model.isEmpty) 0 else model(0).length
   @transient private lazy val kVal: Int = {
     require(k.foldable, "graft_cent_topk: k must be foldable")
     val v = k.eval().asInstanceOf[Int]
@@ -343,34 +354,9 @@ case class CentTopKQ(mat: Expression, vec: Expression, k: Expression)
     v
   }
 
-  override protected def nullSafeEval(matV: Any, vecV: Any, kV: Any): Any = {
-    val x = vecV.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
-    if (model.nonEmpty && x.numElements() != dim) null
-    else {
-      val bd = new Array[Long](kVal)
-      val bc = new Array[Int](kVal)
-      var filled = 0
-      var j = 0
-      while (j < model.length) {
-        val row = model(j)
-        var acc = 0L
-        var i = 0
-        while (i < row.length) { acc += row(i) * x.getLong(i); i += 1 }
-        val dist = norms(j) - 2L * acc
-        if (filled < kVal || dist < bd(filled - 1)) {
-          var p = if (filled < kVal) filled else kVal - 1
-          while (p > 0 && dist < bd(p - 1)) {
-            bd(p) = bd(p - 1); bc(p) = bc(p - 1); p -= 1
-          }
-          bd(p) = dist; bc(p) = j
-          if (filled < kVal) filled += 1
-        }
-        j += 1
-      }
-      org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(
-        java.util.Arrays.copyOf(bc, filled))
-    }
-  }
+  override protected def nullSafeEval(matV: Any, vecV: Any, kV: Any): Any =
+    VecKernel.centTopK(model, norms, vecV.asInstanceOf[ArrayData],
+      new Array[Long](kVal), new Array[Int](kVal))
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val modelRef = ctx.addReferenceObj("centTopkModel", model, "long[][]")
@@ -380,40 +366,9 @@ case class CentTopKQ(mat: Expression, vec: Expression, k: Expression)
       v => s"$v = new long[$kVal];")
     val bc = ctx.addMutableState("int[]", "centTopkBc",
       v => s"$v = new int[$kVal];")
-    nullSafeCodeGen(ctx, ev, (_, b, _) => {
-      val j = ctx.freshName("j")
-      val i = ctx.freshName("i")
-      val p = ctx.freshName("p")
-      val acc = ctx.freshName("acc")
-      val dist = ctx.freshName("dist")
-      val row = ctx.freshName("row")
-      val filled = ctx.freshName("filled")
-      s"""
-         |if ($modelRef.length > 0 && $b.numElements() != $dim) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  int $filled = 0;
-         |  for (int $j = 0; $j < $modelRef.length; $j++) {
-         |    long[] $row = $modelRef[$j];
-         |    long $acc = 0L;
-         |    for (int $i = 0; $i < $row.length; $i++) {
-         |      $acc += $row[$i] * $b.getLong($i);
-         |    }
-         |    long $dist = $normsRef[$j] - 2L * $acc;
-         |    if ($filled < $kVal || $dist < $bd[$filled - 1]) {
-         |      int $p = ($filled < $kVal) ? $filled : $kVal - 1;
-         |      for (; $p > 0 && $dist < $bd[$p - 1]; $p--) {
-         |        $bd[$p] = $bd[$p - 1]; $bc[$p] = $bc[$p - 1];
-         |      }
-         |      $bd[$p] = $dist; $bc[$p] = $j;
-         |      if ($filled < $kVal) $filled++;
-         |    }
-         |  }
-         |  ${ev.value} = org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(
-         |    java.util.Arrays.copyOf($bc, $filled));
-         |}
-       """.stripMargin
-    })
+    nullSafeCodeGen(ctx, ev, (_, b, _) =>
+      s"${ev.value} = graft.functions.VecKernel.centTopK(" +
+        s"$modelRef, $normsRef, $b, $bd, $bc); ${ev.isNull} = ${ev.value} == null;")
   }
 
   override protected def withNewChildrenInternal(
@@ -449,11 +404,9 @@ case class PqCodesQ(cents: Expression, vec: Expression)
   override def right: Expression = vec
   override def inputTypes =
     Seq(ArrayType(ArrayType(ArrayType(LongType))), ArrayType(LongType))
-  override def dataType: DataType = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("codes",
-      ArrayType(org.apache.spark.sql.types.IntegerType, containsNull = false),
-      nullable = false),
-    org.apache.spark.sql.types.StructField("n2pq", LongType, nullable = false)))
+  override def dataType: DataType = StructType(Seq(
+    StructField("codes", ArrayType(IntegerType, containsNull = false), nullable = false),
+    StructField("n2pq", LongType, nullable = false)))
   override def nullable: Boolean = true
 
   /** Folded codebook [block][code][dim] + per-codeword squared norms
@@ -465,11 +418,8 @@ case class PqCodesQ(cents: Expression, vec: Expression)
     val raw = cents.eval()
     if (raw == null) Array.empty
     else {
-      val m = raw.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
-      val blocks = Array.tabulate(m.numElements()) { j =>
-        val b = m.getArray(j)
-        Array.tabulate(b.numElements())(c => b.getArray(c).toLongArray())
-      }
+      val m = raw.asInstanceOf[ArrayData]
+      val blocks = Array.tabulate(m.numElements())(j => VecKernel.rows(m.getArray(j)))
       // a zero-codeword first block would make the rectangularity
       // predicate itself throw a raw AIOOBE (blocks(0)(0)) — guard the
       // shape explicitly so future callers get the intended message
@@ -483,91 +433,39 @@ case class PqCodesQ(cents: Expression, vec: Expression)
   }
   @transient private lazy val norms: Array[Array[Long]] =
     book.map(_.map(_.map(x => x * x).sum))
-  @transient private lazy val subDim: Int =
-    if (book.isEmpty) 0 else book(0)(0).length
 
-  override protected def nullSafeEval(a: Any, b: Any): Any = {
-    val x = b.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
-    if (x.numElements() != book.length * subDim) null
-    else {
-      val codes = new Array[Int](book.length)
-      var n2pq = 0L
-      var j = 0
-      while (j < book.length) {
-        val block = book(j)
-        val off = j * subDim
-        var best = 0L
-        var bestC = -1
-        var c = 0
-        while (c < block.length) {
-          val cw = block(c)
-          var acc = 0L
-          var i = 0
-          while (i < subDim) { acc += cw(i) * x.getLong(off + i); i += 1 }
-          val dist = norms(j)(c) - 2L * acc
-          if (bestC < 0 || dist < best) { best = dist; bestC = c }
-          c += 1
-        }
-        codes(j) = bestC
-        n2pq += norms(j)(bestC)
-        j += 1
-      }
-      org.apache.spark.sql.catalyst.InternalRow(
-        org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(codes), n2pq)
-    }
-  }
+  override protected def nullSafeEval(a: Any, b: Any): Any =
+    VecKernel.pqCodes(book, norms, b.asInstanceOf[ArrayData])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val bookRef = ctx.addReferenceObj("pqBook", book, "long[][][]")
     val normsRef = ctx.addReferenceObj("pqNorms", norms, "long[][]")
-    nullSafeCodeGen(ctx, ev, (_, b) => {
-      val j = ctx.freshName("j")
-      val i = ctx.freshName("i")
-      val c = ctx.freshName("c")
-      val off = ctx.freshName("off")
-      val acc = ctx.freshName("acc")
-      val dist = ctx.freshName("dist")
-      val best = ctx.freshName("best")
-      val bestC = ctx.freshName("bestC")
-      val block = ctx.freshName("block")
-      val cw = ctx.freshName("cw")
-      val codes = ctx.freshName("codes")
-      val n2pq = ctx.freshName("n2pq")
-      s"""
-         |if ($b.numElements() != $bookRef.length * $subDim) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  int[] $codes = new int[$bookRef.length];
-         |  long $n2pq = 0L;
-         |  for (int $j = 0; $j < $bookRef.length; $j++) {
-         |    long[][] $block = $bookRef[$j];
-         |    int $off = $j * $subDim;
-         |    long $best = 0L;
-         |    int $bestC = -1;
-         |    for (int $c = 0; $c < $block.length; $c++) {
-         |      long[] $cw = $block[$c];
-         |      long $acc = 0L;
-         |      for (int $i = 0; $i < $subDim; $i++) {
-         |        $acc += $cw[$i] * $b.getLong($off + $i);
-         |      }
-         |      long $dist = $normsRef[$j][$c] - 2L * $acc;
-         |      if ($bestC < 0 || $dist < $best) { $best = $dist; $bestC = $c; }
-         |    }
-         |    $codes[$j] = $bestC;
-         |    $n2pq += $normsRef[$j][$bestC];
-         |  }
-         |  ${ev.value} = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-         |    new Object[] {
-         |      org.apache.spark.sql.catalyst.util.ArrayData.toArrayData($codes),
-         |      java.lang.Long.valueOf($n2pq) });
-         |}
-       """.stripMargin
-    })
+    nullSafeCodeGen(ctx, ev, (_, b) =>
+      s"${ev.value} = graft.functions.VecKernel.pqCodes($bookRef, $normsRef, $b); " +
+        s"${ev.isNull} = ${ev.value} == null;")
   }
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): PqCodesQ =
     copy(cents = newLeft, vec = newRight)
+}
+
+/** Static core of [[RepeatedRun]]: one byte scan with early exit. */
+object RepeatedRunKernel {
+  def eval(s: UTF8String): Boolean = {
+    val bs = s.getBytes
+    val allowed = RepeatedRun.Allowed
+    var run = 1
+    var i = 1
+    while (i < bs.length) {
+      if (bs(i) == bs(i - 1)) {
+        run += 1
+        if (run >= RepeatedRun.MinRun && allowed(bs(i) & 0xff)) return true
+      } else run = 1
+      i += 1
+    }
+    false
+  }
 }
 
 /** Repeated-character-run detector (SURVEY §2.3 #26): true iff the string
@@ -589,49 +487,14 @@ case class RepeatedRun(child: Expression)
     extends UnaryExpression with ExpectsInputTypes {
 
   override def inputTypes = Seq(StringType)
-  override def dataType: DataType = org.apache.spark.sql.types.BooleanType
+  override def dataType: DataType = BooleanType
 
-  override protected def nullSafeEval(input: Any): Any = {
-    val bs = input.asInstanceOf[UTF8String].getBytes
-    val allowed = RepeatedRun.Allowed
-    var run = 1
-    var i = 1
-    while (i < bs.length) {
-      if (bs(i) == bs(i - 1)) {
-        run += 1
-        if (run >= RepeatedRun.MinRun && allowed(bs(i) & 0xff)) return true
-      } else run = 1
-      i += 1
-    }
-    false
-  }
+  override protected def nullSafeEval(input: Any): Any =
+    RepeatedRunKernel.eval(input.asInstanceOf[UTF8String])
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val allowed = ctx.addReferenceObj("repeatedRunAllowed", RepeatedRun.Allowed,
-      "boolean[]")
-    nullSafeCodeGen(ctx, ev, c => {
-      val bs = ctx.freshName("bs")
-      val i = ctx.freshName("i")
-      val run = ctx.freshName("run")
-      val found = ctx.freshName("found")
-      s"""
-         |byte[] $bs = $c.getBytes();
-         |boolean $found = false;
-         |int $run = 1;
-         |for (int $i = 1; $i < $bs.length && !$found; $i++) {
-         |  if ($bs[$i] == $bs[$i - 1]) {
-         |    $run++;
-         |    if ($run >= ${RepeatedRun.MinRun} && $allowed[$bs[$i] & 0xff]) {
-         |      $found = true;
-         |    }
-         |  } else {
-         |    $run = 1;
-         |  }
-         |}
-         |${ev.value} = $found;
-       """.stripMargin
-    })
-  }
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, c =>
+      s"${ev.value} = graft.functions.RepeatedRunKernel.eval($c);")
 
   override protected def withNewChildInternal(newChild: Expression): RepeatedRun =
     copy(child = newChild)
@@ -656,6 +519,53 @@ object RepeatedRun {
     val a = new Array[Boolean](256)
     (Alnum ++ Punct).foreach(c => a(c.toInt) = true)
     a
+  }
+}
+
+/** Static core of [[TokenCounts]]: one pass for n_bpe / n_punct / n_upper
+  * over the full string, one for n_ws over the space-trimmed region.
+  */
+object TokenCountsKernel {
+  def eval(s: UTF8String): InternalRow = {
+    val bs = s.getBytes
+    var bpe = 0
+    var punct = 0
+    var upper = 0
+    var inLetter = false
+    var i = 0
+    while (i < bs.length) {
+      val b = bs(i) & 0xff
+      if ((b >= 'a' && b <= 'z') || (b >= 'A' && b <= 'Z')) {
+        if (!inLetter) { bpe += 1; inLetter = true }
+        if (b <= 'Z' && b >= 'A') upper += 1
+      } else {
+        inLetter = false
+        if (b >= '0' && b <= '9') bpe += 1
+        else if (b == ' ' || b == '\t' || b == '\n' || b == '\r' || b == '\f') ()
+        else if (b < 0x80) { bpe += 1; punct += 1 } // other ASCII symbol
+        else if (b >= 0xc0) { bpe += 1; punct += 1 } // UTF-8 leading byte
+        // else continuation byte: part of an already-counted code point
+      }
+      i += 1
+    }
+    var lo = 0
+    var hi = bs.length - 1
+    while (lo <= hi && bs(lo) == ' ') lo += 1
+    while (hi >= lo && bs(hi) == ' ') hi -= 1
+    var ws = 0
+    if (lo <= hi) {
+      ws = 1
+      var inWs = false
+      var j = lo
+      while (j <= hi) {
+        val b = bs(j) & 0xff
+        val isWs = b == ' ' || b == '\t' || b == '\n' || b == '\r' || b == '\f'
+        if (isWs && !inWs) ws += 1
+        inWs = isWs
+        j += 1
+      }
+    }
+    InternalRow(ws, bpe, punct, upper)
   }
 }
 
@@ -694,211 +604,37 @@ object RepeatedRun {
   * scan. Results stay oracle-hash-checked against the unchanged DuckDB
   * regex SQL, and a spec pins kernel ≡ regex forms on the real corpus +
   * crafted edges.
+  *
+  * Malformed-UTF-8 caveat (the [[NormKernel]] convention): the regex forms
+  * decode through java.lang.String, which turns each malformed sequence
+  * into one U+FFFD code point; the kernel counts lead bytes, so a stray
+  * continuation byte counts nothing and a truncated sequence counts once.
+  * Valid UTF-8 — every lake this engine reads or writes — is identical.
   */
 case class TokenCounts(child: Expression)
     extends UnaryExpression with ExpectsInputTypes {
 
   override def inputTypes = Seq(StringType)
-  override def dataType: DataType = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("n_ws",
-      org.apache.spark.sql.types.IntegerType, nullable = false),
-    org.apache.spark.sql.types.StructField("n_bpe",
-      org.apache.spark.sql.types.IntegerType, nullable = false),
-    org.apache.spark.sql.types.StructField("n_punct",
-      org.apache.spark.sql.types.IntegerType, nullable = false),
-    org.apache.spark.sql.types.StructField("n_upper",
-      org.apache.spark.sql.types.IntegerType, nullable = false)))
+  override def dataType: DataType = StructType(
+    Seq("n_ws", "n_bpe", "n_punct", "n_upper").map(StructField(_, IntegerType, nullable = false)))
 
-  override protected def nullSafeEval(input: Any): Any = {
-    val bs = input.asInstanceOf[UTF8String].getBytes
-    // n_bpe / n_punct / n_upper over the FULL string
-    var bpe = 0
-    var punct = 0
-    var upper = 0
-    var inLetter = false
-    var i = 0
-    while (i < bs.length) {
-      val b = bs(i) & 0xff
-      if ((b >= 'a' && b <= 'z') || (b >= 'A' && b <= 'Z')) {
-        if (!inLetter) { bpe += 1; inLetter = true }
-        if (b <= 'Z' && b >= 'A') upper += 1
-      } else {
-        inLetter = false
-        if (b >= '0' && b <= '9') bpe += 1
-        else if (b == ' ' || b == '\t' || b == '\n' || b == '\r' || b == '\f') ()
-        else if (b < 0x80) { bpe += 1; punct += 1 } // other ASCII symbol
-        else if (b >= 0xc0) { bpe += 1; punct += 1 } // UTF-8 leading byte
-        // else continuation byte: part of an already-counted code point
-      }
-      i += 1
-    }
-    // n_ws over the space-trimmed region
-    var lo = 0
-    var hi = bs.length - 1
-    while (lo <= hi && bs(lo) == ' ') lo += 1
-    while (hi >= lo && bs(hi) == ' ') hi -= 1
-    var ws = 0
-    if (lo <= hi) {
-      ws = 1
-      var inWs = false
-      var j = lo
-      while (j <= hi) {
-        val b = bs(j) & 0xff
-        val isWs = b == ' ' || b == '\t' || b == '\n' || b == '\r' || b == '\f'
-        if (isWs && !inWs) ws += 1
-        inWs = isWs
-        j += 1
-      }
-    }
-    org.apache.spark.sql.catalyst.InternalRow(ws, bpe, punct, upper)
-  }
+  override protected def nullSafeEval(input: Any): Any =
+    TokenCountsKernel.eval(input.asInstanceOf[UTF8String])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val bs = ctx.freshName("bs")
-      val b = ctx.freshName("b")
-      val i = ctx.freshName("i")
-      val j = ctx.freshName("j")
-      val lo = ctx.freshName("lo")
-      val hi = ctx.freshName("hi")
-      val bpe = ctx.freshName("bpe")
-      val punct = ctx.freshName("punct")
-      val upper = ctx.freshName("upper")
-      val ws = ctx.freshName("ws")
-      val inLetter = ctx.freshName("inLetter")
-      val inWs = ctx.freshName("inWs")
-      val isWs = ctx.freshName("isWs")
-      s"""
-         |byte[] $bs = $c.getBytes();
-         |int $bpe = 0;
-         |int $punct = 0;
-         |int $upper = 0;
-         |boolean $inLetter = false;
-         |for (int $i = 0; $i < $bs.length; $i++) {
-         |  int $b = $bs[$i] & 0xff;
-         |  if (($b >= 'a' && $b <= 'z') || ($b >= 'A' && $b <= 'Z')) {
-         |    if (!$inLetter) { $bpe++; $inLetter = true; }
-         |    if ($b >= 'A' && $b <= 'Z') { $upper++; }
-         |  } else {
-         |    $inLetter = false;
-         |    if ($b >= '0' && $b <= '9') { $bpe++; }
-         |    else if ($b == ' ' || $b == '\\t' || $b == '\\n' || $b == '\\r' || $b == '\\f') { }
-         |    else if ($b < 0x80 || $b >= 0xc0) { $bpe++; $punct++; }
-         |  }
-         |}
-         |int $lo = 0;
-         |int $hi = $bs.length - 1;
-         |while ($lo <= $hi && $bs[$lo] == ' ') $lo++;
-         |while ($hi >= $lo && $bs[$hi] == ' ') $hi--;
-         |int $ws = 0;
-         |if ($lo <= $hi) {
-         |  $ws = 1;
-         |  boolean $inWs = false;
-         |  for (int $j = $lo; $j <= $hi; $j++) {
-         |    int $b = $bs[$j] & 0xff;
-         |    // single line: Spark's Block formatter re-strips '|' margins,
-         |    // so a continuation line starting with || loses its operator
-         |    boolean $isWs = $b == ' ' || $b == '\\t' || $b == '\\n' || $b == '\\r' || $b == '\\f';
-         |    if ($isWs && !$inWs) $ws++;
-         |    $inWs = $isWs;
-         |  }
-         |}
-         |${ev.value} = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-         |  new Object[] { java.lang.Integer.valueOf($ws), java.lang.Integer.valueOf($bpe),
-         |    java.lang.Integer.valueOf($punct), java.lang.Integer.valueOf($upper) });
-       """.stripMargin
-    })
+    nullSafeCodeGen(ctx, ev, c =>
+      s"${ev.value} = graft.functions.TokenCountsKernel.eval($c);")
 
   override protected def withNewChildInternal(newChild: Expression): TokenCounts =
     copy(child = newChild)
 }
 
-/** Per-list stopword-hit counts over an already-LOWERCASED string in one
-  * byte scan (SURVEY §2.3 lang-ID / quality family): for a foldable
-  * `lists` argument (array of word lists, each word nonempty [a-z]+),
-  * returns `array<int>` where element l is exactly
-  * `regexp_count(' ' || regexp_replace(lowered, '[^a-z]+', ' ') || ' ',
-  * ' (w_l1|w_l2|…) ')` — the engine-shared padded-stopword-density rule.
-  *
-  * Equivalence: in the padded form, tokens are maximal [a-z] runs with
-  * single-space boundaries (the replace collapses every non-[a-z] run,
-  * the concat pads the ends), and the pattern ` (w…) ` consumes BOTH
-  * spaces, so of two ADJACENT stopword tokens only the first matches
-  * (the second lost its leading space). That is precisely an
-  * alternating walk over the [a-z]-run token stream: a token counts
-  * for list l iff it equals one of l's words AND the previous token did
-  * not count for l. Prefix/suffix containment can't false-match (the
-  * trailing-space requirement forces whole-token equality), and both
-  * engines' regexes agree because only exact token matches succeed
-  * (leftmost-first vs leftmost-longest is moot). Taking the LOWERED
-  * string as input (not lowering inside) keeps Spark's ICU `lower()`
-  * upstream and shared — the kernel replaces only the regexp_replace
-  * materialization and the per-list NFA walks.
-  *
-  * Null lowered → null; a null lists argument yields a NULL result
-  * (BinaryExpression null propagation short-circuits before this class
-  * sees it) — only an empty list LITERAL yields an empty array.
+/** Static core of [[StopCounts]]: the alternating padded-token walk (see
+  * the class doc for the regex-equivalence argument).
   */
-case class StopCounts(lowered: Expression, lists: Expression)
-    extends BinaryExpression with ExpectsInputTypes {
-
-  override def left: Expression = lowered
-  override def right: Expression = lists
-  override def inputTypes =
-    Seq(StringType, ArrayType(ArrayType(StringType)))
-  override def dataType: DataType =
-    ArrayType(org.apache.spark.sql.types.IntegerType, containsNull = false)
-  override def nullable: Boolean = true
-
-  /** Folded word lists as byte arrays (forced while building the codegen
-    * references array — malformed words fail at plan time).
-    */
-  @transient private lazy val words: Array[Array[Array[Byte]]] = {
-    require(lists.foldable, "graft_stop_counts: lists argument must be foldable")
-    val raw = lists.eval()
-    if (raw == null) Array.empty
-    else {
-      val m = raw.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
-      Array.tabulate(m.numElements()) { l =>
-        val ws = m.getArray(l)
-        Array.tabulate(ws.numElements()) { w =>
-          val bytes = ws.getUTF8String(w).getBytes
-          require(bytes.nonEmpty && bytes.forall(b => b >= 'a' && b <= 'z'),
-            "graft_stop_counts: words must be nonempty [a-z]+")
-          bytes
-        }
-      }
-    }
-  }
-
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(
-      StopCounts.walk(a.asInstanceOf[UTF8String].getBytes, words))
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    // the walk is list-count-dependent control flow — ship the folded
-    // word table as the reference object and call the ONE shared static
-    // walk, so the codegen and interpreted paths execute the same
-    // bytecode and cannot drift. The walk is a tight primitive loop
-    // either way; the win over the regex form is skipping the padded-
-    // string materialization and the per-list NFA walks.
-    val wordsRef = ctx.addReferenceObj("stopWords", words, "byte[][][]")
-    nullSafeCodeGen(ctx, ev, (a, _) =>
-      s"${ev.value} = org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(" +
-        s"graft.functions.StopCounts.walk($a.getBytes(), $wordsRef));")
-  }
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): StopCounts =
-    copy(lowered = newLeft, lists = newRight)
-}
-
-object StopCounts {
-  /** The alternating padded-token walk (see the class doc for the
-    * regex-equivalence argument) — static so the interpreted and codegen
-    * paths run the same bytecode. Public for generated code only.
-    */
-  def walk(bs: Array[Byte], words: Array[Array[Array[Byte]]]): Array[Int] = {
+object StopCountsKernel {
+  def eval(s: UTF8String, words: Array[Array[Array[Byte]]]): ArrayData = {
+    val bs = s.getBytes
     val n = words.length
     val counts = new Array[Int](n)
     val avail = new Array[Boolean](n)
@@ -935,24 +671,85 @@ object StopCounts {
         i = j
       }
     }
-    counts
+    ArrayData.toArrayData(counts)
   }
 }
 
-/** CJK-presence probe (SURVEY §2.3 lang-ID): true iff the string contains
-  * a code point in [U+4E00, U+9FFF] — exactly `rlike '[一-鿿]'` (both
-  * engines' regex classes range over code points), as a byte scan with
-  * early exit: only 3-byte UTF-8 sequences with leading byte 0xE4–0xE9
-  * can encode the range, so ASCII-heavy corpora scan at memory speed.
+/** Per-list stopword-hit counts over an already-LOWERCASED string in one
+  * byte scan (SURVEY §2.3 lang-ID / quality family): for a foldable
+  * `lists` argument (array of word lists, each word nonempty [a-z]+),
+  * returns `array<int>` where element l is exactly
+  * `regexp_count(' ' || regexp_replace(lowered, '[^a-z]+', ' ') || ' ',
+  * ' (w_l1|w_l2|…) ')` — the engine-shared padded-stopword-density rule.
+  *
+  * Equivalence: in the padded form, tokens are maximal [a-z] runs with
+  * single-space boundaries (the replace collapses every non-[a-z] run,
+  * the concat pads the ends), and the pattern ` (w…) ` consumes BOTH
+  * spaces, so of two ADJACENT stopword tokens only the first matches
+  * (the second lost its leading space). That is precisely an
+  * alternating walk over the [a-z]-run token stream: a token counts
+  * for list l iff it equals one of l's words AND the previous token did
+  * not count for l. Prefix/suffix containment can't false-match (the
+  * trailing-space requirement forces whole-token equality), and both
+  * engines' regexes agree because only exact token matches succeed
+  * (leftmost-first vs leftmost-longest is moot). Taking the LOWERED
+  * string as input (not lowering inside) keeps Spark's ICU `lower()`
+  * upstream and shared — the kernel replaces only the regexp_replace
+  * materialization and the per-list NFA walks.
+  *
+  * Null lowered → null; a null lists argument yields a NULL result
+  * (BinaryExpression null propagation short-circuits before this class
+  * sees it) — only an empty list LITERAL yields an empty array.
   */
-case class CjkProbe(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes {
+case class StopCounts(lowered: Expression, lists: Expression)
+    extends BinaryExpression with ExpectsInputTypes {
 
-  override def inputTypes = Seq(StringType)
-  override def dataType: DataType = org.apache.spark.sql.types.BooleanType
+  override def left: Expression = lowered
+  override def right: Expression = lists
+  override def inputTypes =
+    Seq(StringType, ArrayType(ArrayType(StringType)))
+  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
+  override def nullable: Boolean = true
 
-  override protected def nullSafeEval(input: Any): Any = {
-    val bs = input.asInstanceOf[UTF8String].getBytes
+  /** Folded word lists as byte arrays (forced while building the codegen
+    * references array — malformed words fail at plan time).
+    */
+  @transient private lazy val words: Array[Array[Array[Byte]]] = {
+    require(lists.foldable, "graft_stop_counts: lists argument must be foldable")
+    val raw = lists.eval()
+    if (raw == null) Array.empty
+    else {
+      val m = raw.asInstanceOf[ArrayData]
+      Array.tabulate(m.numElements()) { l =>
+        val ws = m.getArray(l)
+        Array.tabulate(ws.numElements()) { w =>
+          val bytes = ws.getUTF8String(w).getBytes
+          require(bytes.nonEmpty && bytes.forall(b => b >= 'a' && b <= 'z'),
+            "graft_stop_counts: words must be nonempty [a-z]+")
+          bytes
+        }
+      }
+    }
+  }
+
+  override protected def nullSafeEval(a: Any, b: Any): Any =
+    StopCountsKernel.eval(a.asInstanceOf[UTF8String], words)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val wordsRef = ctx.addReferenceObj("stopWords", words, "byte[][][]")
+    nullSafeCodeGen(ctx, ev, (a, _) =>
+      s"${ev.value} = graft.functions.StopCountsKernel.eval($a, $wordsRef);")
+  }
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): StopCounts =
+    copy(lowered = newLeft, lists = newRight)
+}
+
+/** Static core of [[CjkProbe]]: a byte scan with early exit. */
+object CjkKernel {
+  def eval(s: UTF8String): Boolean = {
+    val bs = s.getBytes
     var i = 0
     while (i < bs.length) {
       val b = bs(i) & 0xff
@@ -964,37 +761,46 @@ case class CjkProbe(child: Expression)
     }
     false
   }
+}
+
+/** CJK-presence probe (SURVEY §2.3 lang-ID): true iff the string contains
+  * a code point in [U+4E00, U+9FFF] — exactly `rlike '[一-鿿]'` (both
+  * engines' regex classes range over code points), as a byte scan with
+  * early exit: only 3-byte UTF-8 sequences with leading byte 0xE4–0xE9
+  * can encode the range, so ASCII-heavy corpora scan at memory speed.
+  *
+  * Malformed-UTF-8 caveat (the [[NormKernel]] convention): the kernel
+  * reads the two bytes after a 0xE4–0xE9 lead without checking that they
+  * are continuation bytes, so a malformed sequence can decode into the
+  * range where the regex (which sees U+FFFD) does not match. Valid UTF-8
+  * is identical.
+  */
+case class CjkProbe(child: Expression)
+    extends UnaryExpression with ExpectsInputTypes {
+
+  override def inputTypes = Seq(StringType)
+  override def dataType: DataType = BooleanType
+
+  override protected def nullSafeEval(input: Any): Any =
+    CjkKernel.eval(input.asInstanceOf[UTF8String])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val bs = ctx.freshName("bs")
-      val b = ctx.freshName("b")
-      val b1 = ctx.freshName("b1")
-      val b2 = ctx.freshName("b2")
-      val i = ctx.freshName("i")
-      val cp = ctx.freshName("cp")
-      val found = ctx.freshName("found")
-      // the code-point assembly is split into named intermediates: Janino
-      // misparses a parenthesized array-index/mask term followed by a
-      // shift inside an | chain as a cast ("expression is not a type")
-      s"""
-         |byte[] $bs = $c.getBytes();
-         |boolean $found = false;
-         |for (int $i = 0; $i < $bs.length && !$found; $i++) {
-         |  int $b = $bs[$i] & 0xff;
-         |  if ($b >= 0xe4 && $b <= 0xe9 && $i + 2 < $bs.length) {
-         |    int $b1 = $bs[$i + 1] & 0x3f;
-         |    int $b2 = $bs[$i + 2] & 0x3f;
-         |    int $cp = (($b & 0x0f) << 12) + ($b1 << 6) + $b2;
-         |    if ($cp >= 0x4e00 && $cp <= 0x9fff) { $found = true; }
-         |  }
-         |}
-         |${ev.value} = $found;
-       """.stripMargin
-    })
+    nullSafeCodeGen(ctx, ev, c =>
+      s"${ev.value} = graft.functions.CjkKernel.eval($c);")
 
   override protected def withNewChildInternal(newChild: Expression): CjkProbe =
     copy(child = newChild)
+}
+
+/** Static core of [[BloomContains]]: string items probe with
+  * mightContainBinary over the UTF-8 bytes, long items with
+  * mightContainLong.
+  */
+object BloomKernel {
+  def eval(f: org.apache.spark.util.sketch.BloomFilter, item: UTF8String): Boolean =
+    f.mightContainBinary(item.getBytes)
+  def eval(f: org.apache.spark.util.sketch.BloomFilter, item: Long): Boolean =
+    f.mightContainLong(item)
 }
 
 /** Bloom-filter membership test against a FOLDABLE serialized
@@ -1017,16 +823,15 @@ case class BloomContains(bloom: Expression, item: Expression)
 
   override def left: Expression = bloom
   override def right: Expression = item
-  // string items probe with mightContainBinary over the UTF-8 bytes;
-  // long items with mightContainLong — the exact dual of the builder's
-  // putLong for a long column (r14: the decontamination gate sketches
-  // gram HASHES instead of gram strings). Hand-rolled type check:
-  // TypeCollection is private[sql], so ExpectsInputTypes can't spell
-  // "string or long".
+  // long items probe with mightContainLong — the exact dual of the
+  // builder's putLong for a long column (r14: the decontamination gate
+  // sketches gram HASHES instead of gram strings). Hand-rolled type
+  // check: TypeCollection is private[sql], so ExpectsInputTypes can't
+  // spell "string or long".
   override def checkInputDataTypes()
       : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
     import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-    if (bloom.dataType != org.apache.spark.sql.types.BinaryType)
+    if (bloom.dataType != BinaryType)
       TypeCheckResult.TypeCheckFailure(
         s"graft_bloom_contains: bloom must be BINARY, got ${bloom.dataType}")
     else if (item.dataType != StringType && item.dataType != LongType)
@@ -1034,7 +839,7 @@ case class BloomContains(bloom: Expression, item: Expression)
         s"graft_bloom_contains: item must be STRING or BIGINT, got ${item.dataType}")
     else TypeCheckResult.TypeCheckSuccess
   }
-  override def dataType: DataType = org.apache.spark.sql.types.BooleanType
+  override def dataType: DataType = BooleanType
 
   /** A foldable NULL bloom folds to an inert empty filter instead of
     * NPE-ing in readFrom at codegen time (the MatVecQ null-model rule):
@@ -1050,18 +855,16 @@ case class BloomContains(bloom: Expression, item: Expression)
       new java.io.ByteArrayInputStream(raw.asInstanceOf[Array[Byte]]))
   }
 
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    if (item.dataType == LongType) filter.mightContainLong(b.asInstanceOf[Long])
-    else filter.mightContainBinary(b.asInstanceOf[UTF8String].getBytes)
+  override protected def nullSafeEval(a: Any, b: Any): Any = b match {
+    case v: Long => BloomKernel.eval(filter, v)
+    case s: UTF8String => BloomKernel.eval(filter, s)
+  }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val ref = ctx.addReferenceObj("bloomFilter", filter,
       classOf[org.apache.spark.util.sketch.BloomFilter].getName)
     nullSafeCodeGen(ctx, ev, (_, b) =>
-      if (item.dataType == LongType)
-        s"${ev.value} = $ref.mightContainLong($b);"
-      else
-        s"${ev.value} = $ref.mightContainBinary($b.getBytes());")
+      s"${ev.value} = graft.functions.BloomKernel.eval($ref, $b);")
   }
 
   override protected def withNewChildrenInternal(
@@ -1069,97 +872,14 @@ case class BloomContains(bloom: Expression, item: Expression)
     copy(bloom = newLeft, item = newRight)
 }
 
-/** Runtime registration of graft's native expressions so operators can use
-  * them via `call_function` on any already-built session (Verify, Bench,
-  * specs). Idempotent — re-registering replaces the same builder.
-  * [[graft.plans.GraftExtensions]] consumes the same [[GraftFunctions.all]]
-  * list for the session-build path, so the two cannot drift.
+/** Static core of [[BlockCounts]]: the fold-compare token walk (see the
+  * class doc), struct(n_tok, n_blocked).
   */
-/** Token + blocklist-membership counts in one byte scan (SURVEY §2.4 #43h
-  * blocklist filter; shared by q_blocklist_scan, q_doc_features,
-  * q_datacard and q_release_gate through TextOps.blocklistFlags): for a
-  * foldable word list, returns struct(n_tok, n_blocked) ≡
-  * (`size(filter(split(norm, ' '), t -> t <> ''))`,
-  *  `size(filter(split(norm, ' '), t -> t IN (words)))`)
-  * where norm is the canonical Text.norm
-  * (`regexp_replace(translate(trim(text), A-Z, a-z), '[ \t\n\r\f]+', ' ')`).
-  *
-  * Equivalence: norm's collapse maps every maximal [ \t\n\r\f]+ run to one
-  * space, so split-on-space tokens ≠ '' are exactly the maximal non-ws
-  * runs of the folded text; trim only strips leading/trailing SPACES,
-  * whose split artifacts are empty tokens the filter drops — so the scan
-  * can walk the RAW bytes: find maximal non-ws runs, fold A-Z→a-z per
-  * byte during comparison (translate is ASCII-only by the Text.norm
-  * contract; non-ASCII bytes pass through both sides untouched), count
-  * every run and the runs byte-equal to a word. Replaces one regex NFA
-  * walk, a per-row token-array materialization and TWO interpreted HOF
-  * lambda filters. Null text → null struct (split(null) → null → the
-  * sizes are null under sizeOfNull=false, same propagation). The walk is
-  * a shared static method (the [[PiiKernel]] rule): codegen emits a call
-  * to the same bytecode the interpreted twin runs.
-  */
-case class BlockCounts(text: Expression, words: Expression)
-    extends BinaryExpression with ExpectsInputTypes {
-
-  override def left: Expression = text
-  override def right: Expression = words
-  override def inputTypes = Seq(StringType, ArrayType(StringType))
-  override def dataType: DataType = {
-    val it = org.apache.spark.sql.types.IntegerType
-    org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("n_tok", it, nullable = false),
-      org.apache.spark.sql.types.StructField("n_blocked", it, nullable = false)))
-  }
-  override def nullable: Boolean = true
-
-  /** Folded word list as byte arrays (forced while building the codegen
-    * references array — a malformed foldable list fails at plan time).
-    */
-  @transient private lazy val wordBytes: Array[Array[Byte]] = {
-    require(words.foldable, "graft_block_counts: words argument must be foldable")
-    val raw = words.eval()
-    if (raw == null) Array.empty
-    else {
-      val m = raw.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
-      Array.tabulate(m.numElements()) { w =>
-        val bytes = m.getUTF8String(w).getBytes
-        require(bytes.nonEmpty, "graft_block_counts: words must be nonempty")
-        bytes
-      }
-    }
-  }
-
-  override protected def nullSafeEval(a: Any, b: Any): Any = {
-    val packed = BlockCounts.walk(a.asInstanceOf[UTF8String].getBytes, wordBytes)
-    org.apache.spark.sql.catalyst.InternalRow(
-      (packed >>> 32).toInt, (packed & 0xffffffffL).toInt)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val wordsRef = ctx.addReferenceObj("blockWords", wordBytes, "byte[][]")
-    val packed = ctx.freshName("packed")
-    nullSafeCodeGen(ctx, ev, (a, _) =>
-      s"""
-         |long $packed = graft.functions.BlockCounts.walk($a.getBytes(), $wordsRef);
-         |${ev.value} = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-         |  new Object[] { java.lang.Integer.valueOf((int) ($packed >>> 32)),
-         |    java.lang.Integer.valueOf((int) $packed) });
-       """.stripMargin)
-  }
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): BlockCounts =
-    copy(text = newLeft, words = newRight)
-}
-
-object BlockCounts {
-  /** The fold-compare token walk (see the class doc) — static so the
-    * interpreted and codegen paths run the same bytecode. Returns
-    * (n_tok << 32) | n_blocked. Public for generated code only.
-    */
-  def walk(bs: Array[Byte], words: Array[Array[Byte]]): Long = {
+object BlockCountsKernel {
+  def eval(s: UTF8String, words: Array[Array[Byte]]): InternalRow = {
     @inline def ws(c: Int): Boolean =
       c == ' ' || c == '\t' || c == '\n' || c == '\r' || c == '\f'
+    val bs = s.getBytes
     var tok = 0
     var blocked = 0
     var i = 0
@@ -1190,8 +910,70 @@ object BlockCounts {
         i = j
       }
     }
-    (tok.toLong << 32) | (blocked.toLong & 0xffffffffL)
+    InternalRow(tok, blocked)
   }
+}
+
+/** Token + blocklist-membership counts in one byte scan (SURVEY §2.4 #43h
+  * blocklist filter; shared by q_blocklist_scan, q_doc_features,
+  * q_datacard and q_release_gate through TextOps.blocklistFlags): for a
+  * foldable word list, returns struct(n_tok, n_blocked) ≡
+  * (`size(filter(split(norm, ' '), t -> t <> ''))`,
+  *  `size(filter(split(norm, ' '), t -> t IN (words)))`)
+  * where norm is the canonical Text.norm
+  * (`regexp_replace(translate(trim(text), A-Z, a-z), '[ \t\n\r\f]+', ' ')`).
+  *
+  * Equivalence: norm's collapse maps every maximal [ \t\n\r\f]+ run to one
+  * space, so split-on-space tokens ≠ '' are exactly the maximal non-ws
+  * runs of the folded text; trim only strips leading/trailing SPACES,
+  * whose split artifacts are empty tokens the filter drops — so the scan
+  * can walk the RAW bytes: find maximal non-ws runs, fold A-Z→a-z per
+  * byte during comparison (translate is ASCII-only by the Text.norm
+  * contract; non-ASCII bytes pass through both sides untouched), count
+  * every run and the runs byte-equal to a word. Replaces one regex NFA
+  * walk, a per-row token-array materialization and TWO interpreted HOF
+  * lambda filters. Null text → null struct (split(null) → null → the
+  * sizes are null under sizeOfNull=false, same propagation).
+  */
+case class BlockCounts(text: Expression, words: Expression)
+    extends BinaryExpression with ExpectsInputTypes {
+
+  override def left: Expression = text
+  override def right: Expression = words
+  override def inputTypes = Seq(StringType, ArrayType(StringType))
+  override def dataType: DataType = StructType(
+    Seq("n_tok", "n_blocked").map(StructField(_, IntegerType, nullable = false)))
+  override def nullable: Boolean = true
+
+  /** Folded word list as byte arrays (forced while building the codegen
+    * references array — a malformed foldable list fails at plan time).
+    */
+  @transient private lazy val wordBytes: Array[Array[Byte]] = {
+    require(words.foldable, "graft_block_counts: words argument must be foldable")
+    val raw = words.eval()
+    if (raw == null) Array.empty
+    else {
+      val m = raw.asInstanceOf[ArrayData]
+      Array.tabulate(m.numElements()) { w =>
+        val bytes = m.getUTF8String(w).getBytes
+        require(bytes.nonEmpty, "graft_block_counts: words must be nonempty")
+        bytes
+      }
+    }
+  }
+
+  override protected def nullSafeEval(a: Any, b: Any): Any =
+    BlockCountsKernel.eval(a.asInstanceOf[UTF8String], wordBytes)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val wordsRef = ctx.addReferenceObj("blockWords", wordBytes, "byte[][]")
+    nullSafeCodeGen(ctx, ev, (a, _) =>
+      s"${ev.value} = graft.functions.BlockCountsKernel.eval($a, $wordsRef);")
+  }
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): BlockCounts =
+    copy(text = newLeft, words = newRight)
 }
 
 /** Shared byte-scan core of [[PiiCounts]] / [[PiiRedact]] — ONE
@@ -1528,24 +1310,24 @@ object PiiKernel {
   /** struct(n_email, n_ipv4, n_phone, n_idrun, n_pii, n_redactions,
     * redact_delta) — the counts half; no output string is built.
     */
-  def counts(s: UTF8String): org.apache.spark.sql.catalyst.InternalRow = {
+  def counts(s: UTF8String): InternalRow = {
     val bs = s.getBytes
     val e = countOf(bs, 0)
     val i = countOf(bs, 1)
     val d = countOf(bs, 2) // id-run before phone: the PiiAll branch order
     val p = countOf(bs, 3)
     val m = merge(bs, null)
-    org.apache.spark.sql.catalyst.InternalRow(
+    InternalRow(
       e, i, p, d, e + i + p + d, (m >>> 32).toInt, m & 0xffffffffL)
   }
 
   /** struct(clean, n_redactions) — the rewrite half. */
-  def redact(s: UTF8String): org.apache.spark.sql.catalyst.InternalRow = {
+  def redact(s: UTF8String): InternalRow = {
     val bs = s.getBytes
     val out = new Array[Byte](bs.length)
     val m = merge(bs, out)
     val delta = (m & 0xffffffffL).toInt
-    org.apache.spark.sql.catalyst.InternalRow(
+    InternalRow(
       UTF8String.fromBytes(out, 0, bs.length - delta), (m >>> 32).toInt)
   }
 }
@@ -1563,25 +1345,21 @@ case class PiiCounts(child: Expression)
 
   override def inputTypes = Seq(StringType)
   override def dataType: DataType = {
-    val it = org.apache.spark.sql.types.IntegerType
-    org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("n_email", it, nullable = false),
-      org.apache.spark.sql.types.StructField("n_ipv4", it, nullable = false),
-      org.apache.spark.sql.types.StructField("n_phone", it, nullable = false),
-      org.apache.spark.sql.types.StructField("n_idrun", it, nullable = false),
-      org.apache.spark.sql.types.StructField("n_pii", it, nullable = false),
-      org.apache.spark.sql.types.StructField("n_redactions", it, nullable = false),
-      org.apache.spark.sql.types.StructField("redact_delta", LongType,
-        nullable = false)))
+    val it = IntegerType
+    StructType(Seq(
+      StructField("n_email", it, nullable = false),
+      StructField("n_ipv4", it, nullable = false),
+      StructField("n_phone", it, nullable = false),
+      StructField("n_idrun", it, nullable = false),
+      StructField("n_pii", it, nullable = false),
+      StructField("n_redactions", it, nullable = false),
+      StructField("redact_delta", LongType, nullable = false)))
   }
 
   override protected def nullSafeEval(input: Any): Any =
     PiiKernel.counts(input.asInstanceOf[UTF8String])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    // the kernel lives in ONE scala object; generated code calls its
-    // static forwarder, so codegen and interpreted eval share every byte
-    // of the scan (and the Block-formatter margin trap has no surface)
     nullSafeCodeGen(ctx, ev, c =>
       s"${ev.value} = graft.functions.PiiKernel.counts($c);")
 
@@ -1598,10 +1376,9 @@ case class PiiRedact(child: Expression)
     extends UnaryExpression with ExpectsInputTypes {
 
   override def inputTypes = Seq(StringType)
-  override def dataType: DataType = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("clean", StringType, nullable = false),
-    org.apache.spark.sql.types.StructField("n_redactions",
-      org.apache.spark.sql.types.IntegerType, nullable = false)))
+  override def dataType: DataType = StructType(Seq(
+    StructField("clean", StringType, nullable = false),
+    StructField("n_redactions", IntegerType, nullable = false)))
 
   override protected def nullSafeEval(input: Any): Any =
     PiiKernel.redact(input.asInstanceOf[UTF8String])
@@ -1690,9 +1467,6 @@ case class NormText(child: Expression)
     NormKernel.norm(input.asInstanceOf[UTF8String])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    // ONE scala object serves both eval paths (the PiiKernel convention):
-    // generated code calls the static core, so codegen and interpreted
-    // eval share every byte of the scan
     nullSafeCodeGen(ctx, ev, c =>
       s"${ev.value} = graft.functions.NormKernel.norm($c);")
 
@@ -1834,8 +1608,7 @@ object GramHashKernel {
   * foldable.
   */
 case class GramHashes(text: Expression, n: Expression, keepEmpty: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.TernaryExpression
-    with ExpectsInputTypes {
+    extends TernaryExpression with ExpectsInputTypes {
 
   require(n.foldable && keepEmpty.foldable,
     "graft_gram_hashes: n and keepEmpty must be foldable")
@@ -1843,9 +1616,7 @@ case class GramHashes(text: Expression, n: Expression, keepEmpty: Expression)
   override def first: Expression = text
   override def second: Expression = n
   override def third: Expression = keepEmpty
-  override def inputTypes = Seq(StringType,
-    org.apache.spark.sql.types.IntegerType,
-    org.apache.spark.sql.types.BooleanType)
+  override def inputTypes = Seq(StringType, IntegerType, BooleanType)
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
 
   override protected def nullSafeEval(t: Any, nn: Any, ke: Any): Any =
@@ -2135,7 +1906,7 @@ case class JsonIntField(json: Expression, key: Expression)
   override def left: Expression = json
   override def right: Expression = key
   override def inputTypes = Seq(StringType, StringType)
-  override def dataType: DataType = org.apache.spark.sql.types.IntegerType
+  override def dataType: DataType = IntegerType
   override def nullable: Boolean = true
 
   override protected def nullSafeEval(j: Any, k: Any): Any =
@@ -2143,12 +1914,9 @@ case class JsonIntField(json: Expression, key: Expression)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, (j, k) => {
-      val tmp = ctx.freshName("jsonInt")
-      s"""
-         |java.lang.Integer $tmp = graft.functions.JsonIntKernel.eval($j, $k);
-         |if ($tmp == null) { ${ev.isNull} = true; }
-         |else { ${ev.value} = $tmp.intValue(); }
-       """.stripMargin
+      val v = ctx.freshName("jsonInt")
+      s"java.lang.Integer $v = graft.functions.JsonIntKernel.eval($j, $k); " +
+        s"${ev.isNull} = $v == null; if ($v != null) ${ev.value} = $v.intValue();"
     })
 
   override protected def withNewChildrenInternal(
@@ -2189,7 +1957,7 @@ object MinhashBandKernel {
     }
   }
 
-  def bands(hs: org.apache.spark.sql.catalyst.util.ArrayData, k: Int,
+  def bands(hs: ArrayData, k: Int,
       rows: Int): org.apache.spark.sql.catalyst.util.GenericArrayData = {
     val nBands = k / rows
     val n = hs.numElements()
@@ -2232,8 +2000,7 @@ object MinhashBandKernel {
   * element-for-element. k and rows must be foldable, rows must divide k.
   */
 case class MinhashBands(hs: Expression, k: Expression, rows: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.TernaryExpression
-    with ExpectsInputTypes {
+    extends TernaryExpression with ExpectsInputTypes {
 
   require(k.foldable && rows.foldable,
     "graft_minhash_bands: k and rows must be foldable")
@@ -2241,14 +2008,12 @@ case class MinhashBands(hs: Expression, k: Expression, rows: Expression)
   override def first: Expression = hs
   override def second: Expression = k
   override def third: Expression = rows
-  override def inputTypes = Seq(ArrayType(LongType),
-    org.apache.spark.sql.types.IntegerType,
-    org.apache.spark.sql.types.IntegerType)
+  override def inputTypes = Seq(ArrayType(LongType), IntegerType, IntegerType)
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
 
   override protected def nullSafeEval(a: Any, kk: Any, rr: Any): Any =
     MinhashBandKernel.bands(
-      a.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData],
+      a.asInstanceOf[ArrayData],
       kk.asInstanceOf[Int], rr.asInstanceOf[Int])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
@@ -2278,10 +2043,10 @@ case class MinhashBands(hs: Expression, k: Expression, rows: Expression)
   * documents carry NULL bigram fields (the old LEFT JOIN miss).
   */
 object RepStatsKernel {
-  def eval(s: UTF8String): org.apache.spark.sql.catalyst.InternalRow = {
+  def eval(s: UTF8String): InternalRow = {
     val words = GramHashKernel.raw(s, 1, keepEmpty = false)
     val nWords = words.length.toLong
-    if (nWords == 0L) return org.apache.spark.sql.catalyst.InternalRow(
+    if (nWords == 0L) return InternalRow(
       0L, 0L, 0L, null, null)
     java.util.Arrays.sort(words)
     var distinct = 0L
@@ -2294,7 +2059,7 @@ object RepStatsKernel {
       if (run > top) top = run
       i += 1
     }
-    if (nWords < 2L) return org.apache.spark.sql.catalyst.InternalRow(
+    if (nWords < 2L) return InternalRow(
       nWords, distinct, top, null, null)
     val bigrams = GramHashKernel.raw(s, 2, keepEmpty = false)
     java.util.Arrays.sort(bigrams)
@@ -2306,7 +2071,7 @@ object RepStatsKernel {
       if (run > topBg) topBg = run
       i += 1
     }
-    org.apache.spark.sql.catalyst.InternalRow(
+    InternalRow(
       nWords, distinct, top, bigrams.length.toLong, topBg)
   }
 }
@@ -2319,12 +2084,12 @@ case class RepStats(child: Expression)
     extends UnaryExpression with ExpectsInputTypes {
 
   override def inputTypes = Seq(StringType)
-  override def dataType: DataType = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("n_words", LongType, nullable = false),
-    org.apache.spark.sql.types.StructField("n_distinct", LongType, nullable = false),
-    org.apache.spark.sql.types.StructField("top_c", LongType, nullable = false),
-    org.apache.spark.sql.types.StructField("n_bigrams", LongType, nullable = true),
-    org.apache.spark.sql.types.StructField("top_bg_c", LongType, nullable = true)))
+  override def dataType: DataType = StructType(Seq(
+    StructField("n_words", LongType, nullable = false),
+    StructField("n_distinct", LongType, nullable = false),
+    StructField("top_c", LongType, nullable = false),
+    StructField("n_bigrams", LongType, nullable = true),
+    StructField("top_bg_c", LongType, nullable = true)))
 
   override protected def nullSafeEval(input: Any): Any =
     RepStatsKernel.eval(input.asInstanceOf[UTF8String])
@@ -2358,8 +2123,8 @@ case class RepStats(child: Expression)
   * of a whitespace-collapsed input already carries single separators.
   */
 object CoverMaskKernel {
-  def eval(s: UTF8String, ps: org.apache.spark.sql.catalyst.util.ArrayData,
-      n: Int): org.apache.spark.sql.catalyst.InternalRow = {
+  def eval(s: UTF8String, ps: ArrayData,
+      n: Int): InternalRow = {
     val base = s.getBaseObject
     val off = s.getBaseOffset
     val len = s.numBytes
@@ -2410,7 +2175,7 @@ object CoverMaskKernel {
       }
       t += 1
     }
-    org.apache.spark.sql.catalyst.InternalRow(nTok.toLong, covered,
+    InternalRow(nTok.toLong, covered,
       UTF8String.fromBytes(outBytes, 0, w))
   }
 }
@@ -2422,25 +2187,22 @@ object CoverMaskKernel {
   * documents with no matches); n must be foldable.
   */
 case class CoverMask(text: Expression, ps: Expression, n: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.TernaryExpression
-    with ExpectsInputTypes {
+    extends TernaryExpression with ExpectsInputTypes {
 
   require(n.foldable, "graft_cover_mask: n must be foldable")
 
   override def first: Expression = text
   override def second: Expression = ps
   override def third: Expression = n
-  override def inputTypes = Seq(StringType,
-    ArrayType(org.apache.spark.sql.types.IntegerType),
-    org.apache.spark.sql.types.IntegerType)
-  override def dataType: DataType = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("n_tokens", LongType, nullable = false),
-    org.apache.spark.sql.types.StructField("n_covered", LongType, nullable = false),
-    org.apache.spark.sql.types.StructField("clean", StringType, nullable = false)))
+  override def inputTypes = Seq(StringType, ArrayType(IntegerType), IntegerType)
+  override def dataType: DataType = StructType(Seq(
+    StructField("n_tokens", LongType, nullable = false),
+    StructField("n_covered", LongType, nullable = false),
+    StructField("clean", StringType, nullable = false)))
 
   override protected def nullSafeEval(tt: Any, pp: Any, nn: Any): Any =
     CoverMaskKernel.eval(tt.asInstanceOf[UTF8String],
-      pp.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData],
+      pp.asInstanceOf[ArrayData],
       nn.asInstanceOf[Int])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
@@ -2451,6 +2213,12 @@ case class CoverMask(text: Expression, ps: Expression, n: Expression)
       t: Expression): CoverMask = copy(text = f, ps = s, n = t)
 }
 
+/** Runtime registration of graft's native expressions so operators can use
+  * them via `call_function` on any already-built session (Verify, Bench,
+  * specs). Idempotent — re-registering replaces the same builder.
+  * [[graft.plans.GraftExtensions]] consumes the same [[GraftFunctions.all]]
+  * list for the session-build path, so the two cannot drift.
+  */
 object GraftFunctions {
   private def info(name: String, clazz: Class[_]) =
     new ExpressionInfo(clazz.getCanonicalName, name)

@@ -1,9 +1,9 @@
 package graft
 
 import graft.functions._
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression, Literal}
-import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression, Literal, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, GenerateUnsafeProjection}
 import org.apache.spark.sql.catalyst.util.ArrayBasedMapData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -15,9 +15,13 @@ import org.apache.spark.unsafe.types.UTF8String
   * the kernel runs 10× slow. This spec Janino-compiles an UnsafeProjection
   * over ONE exemplar of every registered graft function (bypassing
   * `CodeGeneratorWithInterpretedFallback`, so a compile error FAILS
-  * instead of falling back), then evaluates it on a sample row so the
-  * compiled path actually executes. A kernel added to GraftFunctions
-  * without an exemplar here fails the coverage test by name.
+  * instead of falling back), then evaluates it on a sample row and an
+  * all-null row so the compiled path actually executes and must match
+  * interpreted eval. It also pins the kernel convention: each kernel's
+  * own generated fragment is one static call into a Scala core in
+  * `graft.functions` — no loops in generated Java, no `|`-leading lines.
+  * A kernel added to GraftFunctions without an exemplar here fails the
+  * coverage test by name.
   */
 class KernelCodegenSpec extends org.scalatest.funsuite.AnyFunSuite {
 
@@ -96,8 +100,53 @@ class KernelCodegenSpec extends org.scalatest.funsuite.AnyFunSuite {
             fail(s"$name failed Janino compilation (would run INTERPRETED " +
               s"in production with only a WARN): $t")
         }
-      val out = proj(InternalRow.fromSeq(input))
+      def scala(v: Any) = CatalystTypeConverters.convertToScala(v, e.dataType)
+      val row = InternalRow.fromSeq(input)
+      val nulls = InternalRow.fromSeq(input.map(_ => null))
+      val out = proj(row)
       assert(out.numFields == 1, s"$name: unexpected output arity")
+      assert(scala(out.get(0, e.dataType)) == scala(e.eval(row)),
+        s"$name: compiled value differs from interpreted eval")
+      assert(proj(nulls).isNullAt(0) && e.eval(nulls) == null,
+        s"$name: an all-null row must yield null on both paths")
     }
+  }
+
+  /** The kernel's own fragment (children are bound references and
+    * literals) breaks the convention: no static core call, a loop in
+    * generated Java, or a line the Block formatter would margin-strip.
+    */
+  private def conventionBreaks(e: Expression): Seq[String] = {
+    val code = e.genCode(new CodegenContext).code.code
+    Seq(
+      "no graft.functions static call" ->
+        """graft\.functions\.\w+\.\w+\(""".r.findFirstIn(code).isEmpty,
+      "loop in generated Java" -> (code.contains("for (") || code.contains("while (")),
+      "generated line starts with |" -> code.linesIterator.exists(_.trim.startsWith("|")))
+      .collect { case (what, true) => what }
+  }
+
+  test("every kernel's generated fragment is one static call into its Scala core") {
+    exemplars.toSeq.sortBy(_._1).foreach { case (name, (_, e)) =>
+      val breaks = conventionBreaks(e)
+      assert(breaks.isEmpty, s"$name: ${breaks.mkString(", ")}")
+    }
+    // the guard itself flags a hand-written Java loop
+    assert(conventionBreaks(JavaLoopKernel(str)).toSet ==
+      Set("no graft.functions static call", "loop in generated Java",
+        "generated line starts with |"))
+  }
+
+  /** Negative control: the hand-written style the convention retired. */
+  private case class JavaLoopKernel(child: Expression) extends UnaryExpression {
+    override def dataType: DataType = IntegerType
+    override protected def nullSafeEval(input: Any): Any = 0
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+      nullSafeCodeGen(ctx, ev, c =>
+        s"""${ev.value} = 0;
+           |for (int i = 0; i < $c.numBytes(); i++) { ${ev.value}++; }
+           || ${ev.value} > 0;""")
+    override protected def withNewChildInternal(newChild: Expression): Expression =
+      copy(child = newChild)
   }
 }
