@@ -255,9 +255,6 @@ object Bench {
     val streamsOnly = sys.env.get("SPARK_GRAFT_STREAMS_ONLY").contains("1")
     warm("icu")(Warm.icu(spark))
     warm("entry")(SparkEntry.entry(spark).count())
-    Seq("lineitem", "orders", "documents", "embeddings")
-      .foreach(t => warm(t)(Tables.table(spark, sfDir, t).count()))
-    warm("events")(Tables.events(spark, sfDir).count())
     // the heavy warm list derives from the registry (plus the cheap text/
     // labeling codegen paths) so a renamed query cannot silently drop out
     if (!streamsOnly)
@@ -266,11 +263,12 @@ object Bench {
         .foreach(q => warm(q)(
           SparkEntry.queries(q)(spark, "/root/testdata/sf0.001").count()))
     // the warm-up pinned sf0.001 caches the timed loop never reads —
-    // release that storage memory before timing the sf0.1 builds
-    graft.operators.Similarity.clearIndexCache()
-    graft.operators.Labeling.clearSelCache()
-    graft.operators.Ingest.clearSessionCache()
-    graft.operators.Assembly.clearBpeCache()
+    // release that storage memory before timing the sf0.1 builds (and
+    // resolve the timed lake's tables after it)
+    SessionCache.clear()
+    Seq("lineitem", "orders", "documents", "embeddings")
+      .foreach(t => warm(t)(Tables.table(spark, sfDir, t).count()))
+    warm("events")(Tables.events(spark, sfDir).count())
 
     // shared index builds, timed as their own named entries (a failed
     // build reports -1 like a failed query and its consumers then pay —

@@ -12,25 +12,13 @@ import org.apache.spark.sql.functions._
   * pushdown into the scan.
   */
 object Tables {
-  /** Memoized per (session, dir, table): `spark.read.parquet` re-lists the
-    * files and re-reads the parquet footer schema on every call — a driver
-    * job per table per query. Resolving each table once per session is the
-    * catalog-table behavior a deployed lake would have. NOTE the cached
-    * plan pins the file listing (its `InMemoryFileIndex` snapshot) as well
-    * as the schema: a dir whose files are rewritten mid-session must be
-    * flushed with [[clearResolved]] (as a catalog would REFRESH TABLE).
+  /** Memoized per (session, dir, table) in [[SessionCache]], which
+    * re-resolves it once the dir's files are rewritten:
+    * `spark.read.parquet` re-lists the files and re-reads the parquet
+    * footer schema on every call — a driver job per table per query.
     */
-  private val resolved =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String, String), DataFrame]
-
   def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    resolved.getOrElseUpdate((spark, dir, name),
-      spark.read.parquet(s"$dir/$name.parquet"))
-
-  /** Forget every resolved table (the REFRESH TABLE analog) — call after
-    * rewriting parquet files under a dir already read this session.
-    */
-  def clearResolved(): Unit = resolved.clear()
+    SessionCache(spark, dir, s"table:$name")(spark.read.parquet(s"$dir/$name.parquet"))
 
   def region(s: SparkSession, d: String): DataFrame     = table(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame     = table(s, d, "nation")

@@ -1498,6 +1498,10 @@ case class NormText(child: Expression)
   * XXH64(bytes, seed 42) — the hash of the same bytes is the same long,
   * so consumers' values (and their DuckDB string-gram oracles) are
   * bit-identical. Null text → null (split's propagation).
+  * Malformed-UTF-8 caveat (the [[NormKernel]] convention): `split`
+  * round-trips through java.lang.String, which rewrites malformed bytes
+  * to U+FFFD before they are hashed; the kernel hashes the input bytes as
+  * they are. Valid UTF-8 hashes bit-identically.
   */
 object GramHashKernel {
   private val Seed = 42L // Spark's xxhash64 seed

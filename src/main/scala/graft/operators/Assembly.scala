@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Q, Tables}
+import graft.{Q, SessionCache, Tables}
 import graft.functions.Det._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -283,33 +283,6 @@ object Assembly {
       }, 1), outSchema)
   }
 
-  /** Trained merge tables per (session, dir, rounds, gate) — the model
-    * cache ([[graft.operators.Similarity]] ivfModels pattern): the merge
-    * table IS the tokenizer model, and without the memo every consumer
-    * ([[qBpeMerges]], [[qBpeEncode]], bench repeats) re-runs the full
-    * corpus scan + merge loop. The GATE is part of the key on purpose:
-    * the dual-path spec forces the distributed loop with gate 0 and must
-    * not be handed the driver loop's cached result.
-    */
-  private val bpeModels = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, Int, Long), Seq[(Int, String, String, String, Long)]]
-
-  /** Forget every trained BPE model (after rewriting a dir's inputs —
-    * the [[graft.Tables.clearResolved]] analog).
-    */
-  def clearBpeCache(): Unit = { bpeModels.clear(); bpeSegs.clear() }
-
-  /** Memoized (word, n_bpe) segmentation dictionaries per (session, dir,
-    * gate) — the [[bpeModels]] convention. Without it every
-    * [[bpeEncode]] call above the vocab gate built a FRESH
-    * localCheckpoint cascade whose final truncated-lineage cache can
-    * never be released (the returned plan reads it lazily), so bench
-    * repeats and long-lived sessions accumulated stranded block-manager
-    * storage one cascade per call.
-    */
-  private val bpeSegs = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, Long), DataFrame]
-
   /** Bench hook: train the default merge table so timed q_bpe_* runs
     * measure the query, the shared training cost being its own named
     * entry (the Similarity prebuild convention).
@@ -318,9 +291,17 @@ object Assembly {
     bpeMerges(s, d, BpeMerges, BpeDriverMaxVocab); ()
   }
 
+  /** Trained merge table per (session, dir, rounds, gate), memoized in
+    * [[graft.SessionCache]]: the merge table IS the tokenizer model, and
+    * without the memo every consumer ([[qBpeMerges]], [[qBpeEncode]],
+    * bench repeats) re-runs the full corpus scan + merge loop. The GATE
+    * is part of the key on purpose: the dual-path spec forces the
+    * distributed loop with gate 0 and must not be handed the driver
+    * loop's cached result.
+    */
   private[graft] def bpeMerges(s: SparkSession, d: String, nMerges: Int,
       maxDriverVocab: Long): Seq[(Int, String, String, String, Long)] =
-    bpeModels.getOrElseUpdate((s, d, nMerges, maxDriverVocab), {
+    SessionCache(s, d, ("bpe_merges", nMerges, maxDriverVocab)) {
       // the ONE corpus pass: word-frequency table (O(vocabulary) rows)
       val vocab0 = Tables.documents(s, d)
         .repartition(s.sparkContext.defaultParallelism, col("doc_id"))
@@ -335,9 +316,9 @@ object Assembly {
       val merges =
         if (vocab0.count() <= maxDriverVocab) driverLoop(vocab0, nMerges)
         else distributedLoop(vocab0, nMerges)
-      vocab0.unpersist()
+      SessionCache.release(vocab0)
       merges
-    })
+    }
 
   /** The in-driver merge loop — the [[bpeTrain]] small-vocab fast path.
     * Same argmax order and greedy replace as the distributed form.
@@ -396,11 +377,11 @@ object Assembly {
         val prev = vocab
         vocab = vocab.withColumn("syms", mergeFold(l, r))
           .localCheckpoint()
-        prev.unpersist()
+        SessionCache.release(prev)
         rank += 1
       }
     }
-    if (vocab ne vocab0) vocab.unpersist()
+    SessionCache.release(vocab)
     merges.result()
   }
 
@@ -505,7 +486,10 @@ object Assembly {
       .select(col("source"),
         explode(filter(split(Text.norm(col("text")), " "), t => t =!= ""))
           .as("word"))
-    val segmented: DataFrame = bpeSegs.getOrElseUpdate((s, d, maxDriverVocab), {
+    // the (word, n_bpe) dictionary per (session, dir, gate); above the
+    // gate the returned plan reads the cascade's final checkpoint lazily,
+    // so the SessionCache entry owns it and frees it when dropped
+    val segmented: DataFrame = SessionCache(s, d, ("bpe_segs", maxDriverVocab)) {
       val vocab = words.select("word").distinct().localCheckpoint()
       val nVocab = vocab.count()
       if (nVocab <= maxDriverVocab) {
@@ -514,7 +498,7 @@ object Assembly {
           StructField("word", StringType, nullable = false),
           StructField("n_bpe", LongType, nullable = false)))
         val collected = vocab.collect().map(_.getString(0))
-        vocab.unpersist()
+        SessionCache.release(vocab)
         val rows = collected.map { w =>
           var syms = codePointSyms(w)
           for ((l, r) <- merges) syms = mergeLocal(syms, l, r)
@@ -531,17 +515,12 @@ object Assembly {
         for ((l, r) <- merges) {
           val prev = seg
           seg = seg.withColumn("syms", mergeFold(l, r)).localCheckpoint()
-          prev.unpersist()
+          SessionCache.release(prev)
         }
-        vocab.unpersist()
-        // the final checkpointed segmentation stays cached: the returned
-        // plan reads it lazily and a truncated-lineage cache cannot be
-        // recomputed once released — which is WHY the dictionary is
-        // memoized above (one cascade per (session, dir, gate), released
-        // only by clearBpeCache), not rebuilt per call
+        SessionCache.release(vocab)
         seg.select(col("word"), size(col("syms")).cast("long").as("n_bpe"))
       }
-    })
+    }
     words.join(segmented, Seq("word"))
       .groupBy("source")
       .agg(count(lit(1)).as("n_words"),

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Q, Tables}
+import graft.{Q, SessionCache, Tables}
 import graft.functions.Det._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -334,17 +334,6 @@ object Ingest {
       |                        ROWS UNBOUNDED PRECEDING) AS session_no
       |  FROM x)""".stripMargin
 
-  /** Memoized per-event session frame, per (session, dir): THREE
-    * consumers derive from it ([[qSessionize]], [[qSessionStats]] through
-    * the sessionizer, [[qSessionLedger]]), each of which would otherwise
-    * re-pay the full keyed window pass over the event log — at lake scale
-    * the session frame is a shared materialization exactly like
-    * Similarity's indexes. Entries persist for the session; call
-    * [[clearSessionCache]] if a dir's files are rewritten.
-    */
-  private val sessionCache = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, String), org.apache.spark.sql.DataFrame]
-
   /** Force the memoized session-frame build (Bench times this as its own
     * named entry so the first session consumer's min-of-3 doesn't
     * silently exclude the one-time window pass from the reported total).
@@ -353,21 +342,16 @@ object Ingest {
     sessionizedEvents(s, d); ()
   }
 
-  /** Unpersist and forget every memoized session frame. */
-  def clearSessionCache(): Unit = {
-    sessionCache.values.foreach(df => try df.unpersist() catch { case _: Exception => () })
-    sessionCache.clear()
-  }
-
   /** Per-event session assignment: (user_id, event_id, tus, session_no).
-    * One keyed window shuffle — paid ONCE per (session, dir) via the
-    * memoized cache; everything downstream aggregates on the same
-    * (user_id) clustering, reading the narrow 4-long cached frame.
+    * One keyed window shuffle, persisted once per (session, dir) in
+    * [[graft.SessionCache]]: [[qSessionize]], [[qSessionStats]] and
+    * [[qSessionLedger]] aggregate the narrow 4-long cached frame on the
+    * same (user_id) clustering instead of re-paying the window pass.
     */
   private def sessionizedEvents(s: org.apache.spark.sql.SparkSession, d: String) =
-    sessionCache.getOrElseUpdate((s, d), {
+    SessionCache.persisted(s, d, "session_frame") {
       val w = Window.partitionBy("user_id").orderBy("tus", "event_id")
-      val df = Tables.events(s, d)
+      Tables.events(s, d)
         .select(col("user_id"), col("event_id"), unix_micros(col("ts")).as("tus"))
         .withColumn("new_sess",
           when(lag(col("tus"), 1).over(w).isNull ||
@@ -375,10 +359,7 @@ object Ingest {
         .withColumn("session_no",
           sum(col("new_sess")).over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
         .select("user_id", "event_id", "tus", "session_no")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      df.count() // materialize eagerly so join planning sees real stats
-      df
-    })
+    }
 
   /** Gap-based sessionization (30-min inactivity) via gaps-and-islands —
     * the batch twin of the stateful streaming sessionizer. Timestamp

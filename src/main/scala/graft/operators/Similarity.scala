@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Q, Tables}
+import graft.{Q, SessionCache, Tables}
 import graft.functions.GraftFunctions
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -22,37 +22,8 @@ import org.apache.spark.sql.functions._
   */
 object Similarity {
 
-  /** Memoized materialized indexes, per (session, dir, name): every
-    * similarity op consumes its index from 2-4 aliased subtrees (self-join
-    * sides + cardinalities), which defeats exchange reuse — persisting the
-    * index once is the same "build the index, then join it" design you
-    * would run at 100 TB. Entries live for the session; call
-    * [[clearIndexCache]] if the underlying files at a dir are rewritten
-    * (the cache serves the data as first read).
-    */
-  private val indexCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String, String), DataFrame]
-
-  private def materialized(s: SparkSession, d: String, key: String)
-      (build: => DataFrame): DataFrame =
-    indexCache.getOrElseUpdate((s, d, key), {
-      val df = build.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      df.count() // materialize eagerly: downstream join planning then sees real
-      df         // cached-size stats (an unmaterialized cache plans as huge)
-    })
-
-  /** Unpersist and forget every memoized index (e.g. after rewriting the
-    * parquet inputs of a dir, or to release a finished session's caches).
-    */
-  def clearIndexCache(): Unit = {
-    indexCache.values.foreach(df => try df.unpersist() catch { case _: Exception => })
-    indexCache.clear()
-    ivfModels.clear()
-    pqModels.clear()
-    lshBitsCache.clear()
-    quantizedCounts.clear()
-    geomStats.clear()
-  }
+  // Shared indexes persist through SessionCache.persisted: each op reads
+  // its index from 2-4 aliased subtrees, which defeats exchange reuse.
 
   /** Build every shared similarity index for (session, dir) in dependency
     * order, timing each — Bench runs this BEFORE its timed query loop so
@@ -134,7 +105,7 @@ object Similarity {
     * the InMemoryRelation, never re-evaluating the shingling pipeline.
     */
   private[graft] def shingles(s: SparkSession, d: String): DataFrame =
-    materialized(s, d, "shingles")(
+    SessionCache.persisted(s, d, "shingles")(
       docShingleHashes(s, d)
         .select(col("doc_id"), explode(col("hs")).as("sh_h"))
         .distinct())
@@ -310,7 +281,7 @@ object Similarity {
     * half the rows, and the cached table halves.
     */
   private def keptPairStats(s: SparkSession, d: String): DataFrame =
-    materialized(s, d, "shingle_pair_stats")(
+    SessionCache.persisted(s, d, "shingle_pair_stats")(
       shinglePairStats(keptShingles(s, d), directed = false))
 
   /** The DIRECTED (a ≠ b, both orders) view over [[keptPairStats]]:
@@ -429,7 +400,7 @@ object Similarity {
     * cached still re-ran the collect_set + intersect pass per consumer).
     */
   private def minhashPairs(s: SparkSession, d: String): DataFrame =
-    materialized(s, d, "minhash_pairs")(minhashPairsPlan(s, d))
+    SessionCache.persisted(s, d, "minhash_pairs")(minhashPairsPlan(s, d))
 
   /** Per-document shingle-hash ARRAYS — the zero-shuffle feed of the
     * MinHash pipeline: shingling, hashing, the 32 permutation minima and
@@ -576,18 +547,19 @@ object Similarity {
   }
 
   private def docShingleHashes(s: SparkSession, d: String): DataFrame =
-    materialized(s, d, "doc_shingle_hashes")(
+    SessionCache.persisted(s, d, "doc_shingle_hashes")(
       shingleHashesOf(Tables.documents(s, d)))
 
   // bands materialized: the bucket self-join reads it from two aliased
   // sides — without it the signature pass runs twice
   private def minhashBands(s: SparkSession, d: String): DataFrame =
-    materialized(s, d, "minhash_bands")(bandsOf(docShingleHashes(s, d)))
+    SessionCache.persisted(s, d, "minhash_bands")(
+      bandsOf(docShingleHashes(s, d)))
 
   // candidates materialized: consumed three times downstream (two id-side
   // semi-joins + the final pair filter); it is tiny (collision pairs only)
   private def minhashCandidates(s: SparkSession, d: String): DataFrame =
-    materialized(s, d, "minhash_candidates") {
+    SessionCache.persisted(s, d, "minhash_candidates") {
       val bands = minhashBands(s, d)
       bands.select(col("doc_id").as("id_a"), col("band"), col("bhash"))
         .join(bands.select(col("doc_id").as("id_b"), col("band"), col("bhash")),
@@ -716,7 +688,7 @@ object Similarity {
   }
 
   private def simhashFingerprints(s: SparkSession, d: String): DataFrame =
-    materialized(s, d, "simhash_fp") {
+    SessionCache.persisted(s, d, "simhash_fp") {
       withSimhashFp(Tables.documents(s, d)
         // small single-file inputs scan as ONE partition; spread rows so
         // the fingerprint map runs at full parallelism (no-op at lake scale)
@@ -855,7 +827,7 @@ object Similarity {
     "transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * 10000) AS BIGINT))"
 
   private[graft] def quantized(s: SparkSession, d: String): DataFrame =
-    materialized(s, d, "quantized") {
+    SessionCache.persisted(s, d, "quantized") {
       GraftFunctions.register(s)
       Tables.embeddings(s, d)
         // the embeddings lake is ONE parquet file: a 200k-vector corpus
@@ -1140,29 +1112,23 @@ object Similarity {
   private def bankDots(bits: Int): Column =
     call_function("graft_matvec_q", typedlit(hyperplanesFor(bits)), col("qv"))
 
-  /** Memoized non-null (indexed) vector count per (session, dir) — the
-    * similarity family's n. Six operators consult it per invocation
-    * (budget/K laws, empty-lake gates, the geometry dispatch), each
-    * re-running a count job off the materialized quantized cache that
-    * repeats every bench run (r14, guide §1.2: don't re-compute what a
-    * model-sized memo already holds). Model-class metadata like
-    * [[lshBitsCache]]; [[clearIndexCache]] forgets it with the rest.
+  /** Non-null (indexed) vector count per (session, dir) — the similarity
+    * family's n — memoized in [[graft.SessionCache]]. Six operators consult
+    * it per invocation (budget/K laws, empty-lake gates, the geometry
+    * dispatch), each re-running a count job off the materialized quantized
+    * cache that repeats every bench run (r14, guide §1.2: don't re-compute
+    * what a model-sized memo already holds).
     */
-  private val quantizedCounts =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), Long]
   private[graft] def nQuantized(s: SparkSession, d: String): Long =
-    quantizedCounts.getOrElseUpdate((s, d),
+    SessionCache(s, d, "n_quantized")(
       quantized(s, d).filter(col("qv").isNotNull).count())
 
   /** Bucket width for (session, dir) = [[lshBitsFor]] of the indexed
-    * (non-null) vector count, memoized beside the index it shapes (the
-    * count is a cheap job off the materialized quantized cache);
-    * [[clearIndexCache]] forgets it with the rest.
+    * (non-null) vector count, memoized in [[graft.SessionCache]] beside
+    * the index it shapes.
     */
-  private val lshBitsCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), Int]
   private def lshBits(s: SparkSession, d: String): Int =
-    lshBitsCache.getOrElseUpdate((s, d), lshBitsFor(nQuantized(s, d)))
+    SessionCache(s, d, "lsh_bits")(lshBitsFor(nQuantized(s, d)))
 
   // materialized: the probe side and the corpus side both read the
   // bucket table, and the 256 hyperplane dots per vector should run
@@ -1174,7 +1140,7 @@ object Similarity {
   // candidates). Dropping it here covers every consumer: shortlists
   // only ever emit vec_ids that are in the bucket table.
   private[graft] def lshBuckets(s: SparkSession, d: String): DataFrame =
-    materialized(s, d, "lsh_buckets") {
+    SessionCache.persisted(s, d, "lsh_buckets") {
       GraftFunctions.register(s)
       val bits = lshBits(s, d)
       quantized(s, d).filter(col("qv").isNotNull)
@@ -1270,17 +1236,6 @@ object Similarity {
   private val IvfK = 16
   private val IvfProbe = 2
 
-  /** Driver-held IVF model per (session, dir): K centroids as quantized
-    * integer vectors plus their squared norms — K×64 longs, the same
-    * "tiny broadcast model" footprint as [[hyperplanes]]. Built
-    * deterministically: seeds = the K lowest vec_ids, then ONE Lloyd
-    * refinement with exact integer sums and floor division (bit-identical
-    * at any parallelism). At 100 TB the model would be trained on a sample
-    * and broadcast exactly like this.
-    */
-  private val ivfModels = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, Int), Array[(Int, Array[Long], Long)]]
-
   /** Array of (squared-distance, cid) structs to every centroid —
     * lexicographic struct ordering makes array_min/array_sort a
     * deterministic argmin with cid as the tie-break. The model ships as
@@ -1327,6 +1282,14 @@ object Similarity {
       qv: Column): Column =
     try_element_at(centTopK(model, qv, 1), lit(1))
 
+  /** Driver-held IVF model per (session, dir), memoized in
+    * [[graft.SessionCache]]: K centroids as quantized integer vectors plus
+    * their squared norms — K×64 longs, the same "tiny broadcast model"
+    * footprint as [[hyperplanesFor]]. Built deterministically: seeds = the
+    * K lowest vec_ids, then ONE Lloyd refinement with exact integer sums
+    * and floor division (bit-identical at any parallelism). At 100 TB the
+    * model would be trained on a sample and broadcast exactly like this.
+    */
   private[graft] def ivfModel(s: SparkSession, d: String): Array[(Int, Array[Long], Long)] =
     ivfModelK(s, d, IvfK)
 
@@ -1338,7 +1301,7 @@ object Similarity {
     */
   private[graft] def ivfModelK(s: SparkSession, d: String,
       k: Int): Array[(Int, Array[Long], Long)] =
-    ivfModels.getOrElseUpdate((s, d, k), {
+    SessionCache(s, d, ("ivf_model", k)) {
       val q = quantized(s, d).filter(col("qv").isNotNull)
       val seeds = q.orderBy("vec_id").limit(k)
         .select("qv").collect().map(_.getSeq[Long](0).toArray)
@@ -1366,7 +1329,7 @@ object Similarity {
           (cid, c, c.map(x => x * x).sum)
         }
       }
-    })
+    }
 
   /** Every non-null vector's nearest-centroid assignment (vec_id, cid) —
     * the written IVF index; shared by [[qAnnIvf]] and [[qEmbedClusters]].
@@ -1379,7 +1342,7 @@ object Similarity {
   private def ivfAssignedK(s: SparkSession, d: String, k: Int,
       cacheKey: String): DataFrame = {
     val model = ivfModelK(s, d, k)
-    materialized(s, d, cacheKey) {
+    SessionCache.persisted(s, d, cacheKey) {
       quantized(s, d).filter(col("qv").isNotNull)
         .withColumn("cid", centArgmin(model, col("qv")))
         .select("vec_id", "cid")
@@ -1623,7 +1586,7 @@ object Similarity {
     */
   private[graft] val PqShortlist = 50
 
-  /** Driver-held PQ codebook per (session, dir):
+  /** Driver-held PQ codebook per (session, dir), in [[graft.SessionCache]]:
     * model(j)(k) = (centroid of block j code k, its squared norm).
     * Built deterministically like [[ivfModelK]]: per block, seeds = the
     * [[PqCodes]] lowest vec_ids' sub-vectors, then ONE Lloyd refinement
@@ -1632,12 +1595,9 @@ object Similarity {
     * same broadcast-model footprint family as [[hyperplanes]]/IVF; a
     * lake-scale build trains on a sample exactly like this.
     */
-  private val pqModels = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), Array[Array[(Array[Long], Long)]]]
-
   private[graft] def pqModel(s: SparkSession, d: String)
       : Array[Array[(Array[Long], Long)]] =
-    pqModels.getOrElseUpdate((s, d), {
+    SessionCache(s, d, "pq_model") {
       GraftFunctions.register(s)
       val q = quantized(s, d).filter(col("qv").isNotNull)
       val seeds = q.orderBy("vec_id").limit(PqCodes)
@@ -1683,7 +1643,7 @@ object Similarity {
           }
         }
       }
-    })
+    }
 
   /** The written PQ index: (vec_id, codes[8], n2pq) — codes are the
     * per-block argmin codewords, n2pq the reconstruction's exact squared
@@ -1693,7 +1653,7 @@ object Similarity {
     */
   private[graft] def pqCodesFrame(s: SparkSession, d: String): DataFrame = {
     val model = pqModel(s, d)
-    materialized(s, d, "pq_codes") {
+    SessionCache.persisted(s, d, "pq_codes") {
       GraftFunctions.register(s)
       // one codegen'd kernel per row: all PqBlocks argmins + the exact
       // reconstruction norm ([[graft.functions.PqCodesQ]]) — replaces a
@@ -1985,7 +1945,7 @@ object Similarity {
   private[graft] def ivfMembersKnnK(s: SparkSession, d: String,
       k: Int): DataFrame = {
     val model = ivfModelK(s, d, k)
-    materialized(s, d, "ivf_members_knn") {
+    SessionCache.persisted(s, d, "ivf_members_knn") {
       quantized(s, d).filter(col("qv").isNotNull)
         .withColumn("cid", centArgmin(model, col("qv")))
         .select("cid", "vec_id", "label", "qv", "n2")
@@ -2231,19 +2191,16 @@ object Similarity {
     t - (2.30753 + 0.27061 * t) / (1.0 + 0.99229 * t + 0.04481 * t * t)
   }
 
-  /** Memoized [[knnGeometryStats]] per (session, dir) — the probe is a
-    * corpus-geometry MODEL (three scalars), the same class as the IVF
-    * centroids / PQ codebook / [[lshBitsCache]]: deterministic from the
-    * corpus, model-sized, and consulted by every [[knnGraph]] invocation
-    * plus the bench's quadratic-skip policy. Re-running the S·n probe
-    * join per call re-measured an unchanged corpus (r14, guide §1.2);
-    * [[clearIndexCache]] forgets it with the rest.
+  /** [[knnGeometryStatsUncached]] per (session, dir), memoized in
+    * [[graft.SessionCache]] — the probe is a corpus-geometry MODEL (three
+    * scalars), the same class as the IVF centroids / PQ codebook / LSH
+    * width: deterministic from the corpus, model-sized, and consulted by
+    * every [[knnGraph]] invocation plus the bench's quadratic-skip policy.
+    * Re-running the S·n probe join per call re-measured an unchanged
+    * corpus (r14, guide §1.2).
     */
-  private val geomStats = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), (Double, Double, Double)]
-
   private[graft] def knnGeometryStats(s: SparkSession, d: String): (Double, Double, Double) =
-    geomStats.getOrElseUpdate((s, d), knnGeometryStatsUncached(s, d))
+    SessionCache(s, d, "knn_geometry")(knnGeometryStatsUncached(s, d))
 
   private[graft] def knnGeometryStatsUncached(s: SparkSession, d: String): (Double, Double, Double) = {
     GraftFunctions.register(s)
@@ -2436,7 +2393,8 @@ object Similarity {
   // memoizing the label table means repeat calls (specs, Explain,
   // re-runs, both consumers) pay it once
   private[graft] def dedupClusterLabels(s: SparkSession, d: String): DataFrame =
-    materialized(s, d, "dedup_cluster_labels")(components(minhashPairs(s, d)))
+    SessionCache.persisted(s, d, "dedup_cluster_labels")(
+      components(minhashPairs(s, d)))
 
   /** Near-dup cross-source exposure — the near-dup-tier complement of
     * [[graft.operators.TextOps.qSourceOverlap]]'s exact matrix (exact
@@ -2544,7 +2502,8 @@ object Similarity {
     * the closure as a cache hit instead of re-running pointer jumping.
     */
   private[graft] def ngramClusterLabels(s: SparkSession, d: String): DataFrame =
-    materialized(s, d, "ngram_cluster_labels")(components(ngramPairs(s, d)))
+    SessionCache.persisted(s, d, "ngram_cluster_labels")(
+      components(ngramPairs(s, d)))
 
   val qDedupClustersNgram: Q = Q(
     "q_dedup_clusters_ngram",

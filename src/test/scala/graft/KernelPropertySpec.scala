@@ -24,7 +24,8 @@ import org.scalacheck.util.Pretty
   *     every generated row — nulls, invalid UTF-8 and all.
   *  2. Kernel ≡ the spelling it replaced, for the kernels whose class doc
   *     names one: the regex/`split` forms for TokenCounts, CjkProbe,
-  *     RepeatedRun and BlockCounts, the `from_json` form for JsonIntField
+  *     RepeatedRun, BlockCounts, NormKernel and GramHashKernel, the
+  *     `from_json` form for JsonIntField
   *     (evaluated as analyzed Catalyst expressions, no job per case), and
   *     a plain Scala reference for the vector kernels.
   *
@@ -296,10 +297,10 @@ class KernelPropertySpec extends SparkSpec {
 
   private val t = col("t")
 
-  // TokenCounts and CjkProbe run against their spelling on valid UTF-8
-  // only: their class docs state the malformed-UTF-8 caveat (the regex
-  // side decodes malformed bytes to U+FFFD); the other text kernels agree
-  // on invalid bytes too.
+  // TokenCounts, CjkProbe, NormKernel and GramHashKernel run against their
+  // spelling on valid UTF-8 only: their class docs state the
+  // malformed-UTF-8 caveat (the regex/split side decodes malformed bytes
+  // to U+FFFD); the other text kernels agree on invalid bytes too.
 
   test("TokenCounts ≡ the split/regexp_count forms it replaced (valid UTF-8)") {
     againstSpelling(TokenCounts(str), valid = true, 4,
@@ -324,6 +325,36 @@ class KernelPropertySpec extends SparkSpec {
     againstSpelling(BlockCounts(str, Literal.create(words, ArrayType(StringType))),
       valid = false, 2,
       size(filter(toks, w => w =!= "")), size(filter(toks, w => w.isin(words: _*))))
+  }
+
+  test("NormKernel ≡ Text.normRegex (valid UTF-8)") {
+    againstSpelling(NormText(str), valid = true, 1, graft.operators.Text.normRegex(t))
+  }
+
+  // GramHashKernel against the per-position concat_ws + xxhash64 lambda it
+  // replaced, over split tokens (keepEmpty) or filter(split) (dropEmpty).
+  // The generator's whitespace runs and leading/trailing spaces leave
+  // empty tokens between kept ones, so dropEmpty takes the scratch-buffer
+  // path as well as the in-place one. Valid UTF-8 only: split decodes
+  // malformed bytes to U+FFFD, the kernel hashes the bytes as they are.
+  Seq(true, false).foreach { keepEmpty =>
+    test(s"GramHashKernel ≡ the transform/concat_ws/xxhash64 spelling (keepEmpty = $keepEmpty)") {
+      val w = if (keepEmpty) "split(t, ' ')" else "filter(split(t, ' '), x -> x <> '')"
+      val ns = Seq(1, 2, 3, 5)
+      val paths = ns.map { n =>
+        val gram = (0 until n).map(j => s"get($w, i + $j)").mkString(", ")
+        (kernelOf(GramHashes(str, Literal(n), Literal(keepEmpty))),
+          spelling(expr(s"CASE WHEN t IS NULL THEN NULL WHEN size($w) >= $n " +
+            s"THEN transform(sequence(0, size($w) - $n), " +
+            s"i -> xxhash64(concat_ws(' ', $gram))) ELSE array() END")))
+      }
+      check(Prop.forAllNoShrink(Gen.choose(0, ns.size - 1), orNull(text(valid = true))) {
+        (i, in) =>
+          val s = in.asInstanceOf[UTF8String]
+          val (kernel, reference) = paths(i)
+          agree(Seq(kernel(s)), reference(s), s"n = ${ns(i)} on <$s>")
+      })
+    }
   }
 
   test("JsonIntField ≡ the dup-key guarded from_json form") {

@@ -1,0 +1,118 @@
+package graft
+
+import graft.operators.{Assembly, Similarity, TextOps}
+import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
+
+/** The session registry ([[SessionCache]]): a lake rewritten under a live
+  * session is re-read with no clear call, an unchanged lake is a hit by
+  * reference, [[SessionCache.clear]] leaves no persistent RDD behind, and
+  * no module keeps a memo of its own.
+  */
+class SessionCacheSpec extends SparkSpec {
+  import spark.implicits._
+
+  private def lake(): String =
+    java.nio.file.Files.createTempDirectory("graft_session_cache").toString
+
+  /** Writes a table the way an outside writer would: into a side dir,
+    * then swapped in with a rename. A Spark overwrite of the path itself
+    * would also refresh, in place, the file index of any cached plan
+    * that reads it — and so hide a stale listing from this spec.
+    */
+  private def land(dir: String, table: String, df: org.apache.spark.sql.DataFrame): Unit = {
+    val side = s"$dir/_side_$table"
+    df.write.parquet(side)
+    val target = java.nio.file.Paths.get(dir, s"$table.parquet")
+    if (java.nio.file.Files.exists(target)) {
+      val old = java.nio.file.Files.walk(target)
+      try old.sorted(java.util.Comparator.reverseOrder()).forEach(java.nio.file.Files.delete(_))
+      finally old.close()
+    }
+    java.nio.file.Files.move(java.nio.file.Paths.get(side), target)
+  }
+
+  private def writeDocs(dir: String, texts: Seq[String]): Unit =
+    land(dir, "documents", texts.zipWithIndex
+      .map { case (t, i) => (i.toLong, t, "en", s"src${i % 2}", t.length.toLong) }
+      .toDF("doc_id", "text", "lang", "source", "n_chars"))
+
+  private def writeEmbeddings(dir: String, n: Long): Unit =
+    land(dir, "embeddings", GenData.embeddingsDf(spark, n))
+
+  private def bucketTotal(dir: String): Long =
+    TextOps.sourceBucketCounts(spark, dir).agg(sum("c")).head().getLong(0)
+
+  test("a lake rewritten under a live session is re-read with no clear call") {
+    val dir = lake()
+    writeDocs(dir, Seq("ab ab ab", "ab cd"))
+    writeEmbeddings(dir, 20)
+    assert(Tables.documents(spark, dir).count() == 2)
+    val merges = Assembly.bpeMerges(spark, dir, 5, Assembly.BpeDriverMaxVocab)
+    assert(merges.head._2 == "a" && merges.head._3 == "b")
+    assert(Similarity.nQuantized(spark, dir) == 20)
+    assert(bucketTotal(dir) == 2)
+
+    writeDocs(dir, Seq("xy xy xy zz", "xy", "zz zz"))
+    writeEmbeddings(dir, 30)
+    assert(Tables.documents(spark, dir).count() == 3)
+    val fresh = Assembly.bpeMerges(spark, dir, 5, Assembly.BpeDriverMaxVocab)
+    assert(fresh.head._2 == "x" && fresh.head._3 == "y", fresh)
+    assert(Similarity.nQuantized(spark, dir) == 30)
+    // a plan-keyed inline persist over the rewritten table is fresh too
+    assert(bucketTotal(dir) == 3)
+  }
+
+  test("an unchanged lake is a hit by reference") {
+    val dir = lake()
+    writeDocs(dir, Seq("ab ab ab", "ab cd"))
+    writeEmbeddings(dir, 20)
+    val docs = Tables.documents(spark, dir)
+    val q = Similarity.quantized(spark, dir)
+    val merges = Assembly.bpeMerges(spark, dir, 5, Assembly.BpeDriverMaxVocab)
+    // files the fingerprint skips: hidden names and non-table directories
+    spark.range(3).write.parquet(s"$dir/results/q_x")
+    java.nio.file.Files.createFile(java.nio.file.Paths.get(dir, "_SUCCESS"))
+    assert(Tables.documents(spark, dir) eq docs)
+    assert(Similarity.quantized(spark, dir) eq q)
+    assert(Assembly.bpeMerges(spark, dir, 5, Assembly.BpeDriverMaxVocab) eq merges)
+  }
+
+  test("SessionCache.clear() leaves no persistent RDD behind") {
+    val dir = lake()
+    writeDocs(dir, Seq("the slow big merge", "a big slow merge of the slow", "merge big"))
+    writeEmbeddings(dir, 40)
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    Similarity.lshBuckets(spark, dir).count()
+    // gate 0: the distributed localCheckpoint cascade
+    Assembly.bpeEncode(spark, dir, maxDriverVocab = 0L).collect()
+    assert((sc.getPersistentRDDs.keySet -- before).nonEmpty, "the builds persisted nothing")
+    SessionCache.clear()
+    val left = sc.getPersistentRDDs.filter { case (id, _) => !before(id) }
+    assert(left.isEmpty, s"left behind: ${left.values.mkString(", ")}")
+  }
+
+  test("no module keeps a concurrent.TrieMap memo outside SessionCache") {
+    // the one exception: a width-keyed constant table that touches no
+    // session or lake
+    val allowed = Set(("Similarity.scala", "hyperplaneBanks"))
+    val decl = raw"val\s+(\w+)\s*=\s*(?:scala\.collection\.concurrent\.)?TrieMap".r
+    val root = java.nio.file.Paths.get("src/main/scala")
+    assert(java.nio.file.Files.isDirectory(root), s"run from the repo root: $root")
+    val files = {
+      val it = java.nio.file.Files.walk(root)
+      try it.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+      finally it.close()
+    }
+    val offenders = files.filterNot(_.getFileName.toString == "SessionCache.scala").flatMap { f =>
+      val src = new String(java.nio.file.Files.readAllBytes(f), "UTF-8")
+      val name = f.getFileName.toString
+      val declared = decl.findAllMatchIn(src).map(_.group(1)).toList
+      val uses = "TrieMap".r.findAllMatchIn(src).size
+      declared.filterNot(v => allowed((name, v))).map(v => s"$name: $v") ++
+        (if (uses > declared.size) Seq(s"$name: TrieMap outside a val declaration") else Nil)
+    }
+    assert(offenders.isEmpty, offenders.mkString("; "))
+  }
+}

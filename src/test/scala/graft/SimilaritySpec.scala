@@ -1342,6 +1342,6 @@ class SimilaritySpec extends SparkSpec {
     // floor: the registered qAnnLsh spec pins ≥ 0.8 in the 8-bit regime;
     // the width step must not collapse it (multiprobe compensation claim)
     assert(recall >= 0.8, f"9-bit recall $recall%.3f below floor")
-    Similarity.clearIndexCache()
+    SessionCache.clear()
   }
 }

@@ -531,7 +531,6 @@ class StreamingSpec extends SparkSpec {
         concat(lit("src"), col("doc_id") % 2).as("source"),
         length(col("text")).cast("long").as("n_chars"))
       .write.parquet(s"$lakeDir/documents.parquet")
-    graft.operators.Similarity.clearIndexCache()
     val staged = graft.operators.Curation.stagedFlags(spark, lakeDir).collect()
       .map(r => r.getAs[Long]("doc_id") ->
         Option(r.getAs[java.lang.Integer]("dropped_at")).map(_.toInt)).toMap
