@@ -9,16 +9,17 @@ import org.apache.logging.log4j.core.config.Property
 
 /** In-context codegen-fallback detector (r13 verdict item 3).
   *
-  * KernelCodegenSpec proves each kernel's OWN code string Janino-compiles
+  * KernelCodegenSpec proves each kernel's OWN code Janino-compiles
   * standalone, but a WholeStageCodegen context (splitExpressions,
   * subexpression elimination) can still mangle the surrounding generated
   * code, and Spark then falls back — interpreted expression eval or a
   * non-codegen plan — with only a WARN/ERROR log line while results stay
   * correct and tests stay green (the r12 `||`-margin incident ran a 10×
-  * slower kernel for most of a round this way; kernels now keep every
-  * loop in a Scala static core, so their own fragments are one static
-  * call each, and KernelCodegenSpec fails any that is not — the context
-  * mangling stays this guard's job). This guard turns those
+  * slower kernel for most of a round this way). Kernels no longer write
+  * generated code at all: each is replaced by Spark's `StaticInvoke` of
+  * a Scala static core, and KernelCodegenSpec fails any replacement that
+  * is not one static call — the context mangling stays this guard's
+  * job. This guard turns those
   * log lines into a hard signal: a log4j2 appender on the root logger
   * records every occurrence of the three fallback messages Spark 4.1
   * emits (string constants verified against the shipped jars):

@@ -1,32 +1,73 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, GraftSqlBridge, SparkSession}
 import org.apache.spark.sql.catalyst.{FunctionIdentifier, InternalRow}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, ExpressionInfo, TernaryExpression, UnaryExpression}
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult.{DataTypeMismatch, TypeCheckSuccess}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, ExpressionInfo, Literal, RuntimeReplaceable}
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, BinaryType, BooleanType, DataType, IntegerType, LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{ArrayType, BinaryType, BooleanType, DataType, IntegerType, LongType, ObjectType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Native Catalyst expressions (with whole-stage codegen) for graft's hot
-  * paths — per SURVEY §4.7: no UDFs in hot loops; a codegen'd Expression
-  * keeps the similarity joins inside WholeStageCodegen where a Scala UDF
-  * would box every row.
+/** Native Catalyst kernels for graft's hot paths — per SURVEY §4.7: no
+  * UDFs in hot loops; a kernel keeps the similarity joins inside
+  * WholeStageCodegen where a Scala UDF would box every row.
   *
   * One implementation per kernel: its loops live in a Scala static core
-  * (an `XxxKernel` object) that `nullSafeEval` calls and `doGenCode` emits
-  * as one static call, so the eval paths cannot drift (KernelCodegenSpec
-  * fails a kernel that loops in generated Java). A core returns null
-  * (boxed, for primitive results) where the kernel yields SQL NULL.
+  * (an `XxxKernel` object), and one wrapper serves every kernel.
+  * [[GraftKernel]] type-checks a call against its row of the
+  * [[GraftFunctions]] table and is replaced, before optimization, by a
+  * `StaticInvoke` of the core — the interpreted and the generated path
+  * call the same method, so they cannot drift (KernelCodegenSpec fails a
+  * kernel whose generated code loops). A core returns null (boxed, for
+  * primitive results) where the kernel yields SQL NULL; a NULL argument
+  * yields NULL without calling it.
   */
 
-/** Static cores of the exact-long vector kernels [[DotQ]], [[SimHash64]],
-  * [[MatVecQ]], [[CentTopKQ]] and [[PqCodesQ]], plus the model fold their
-  * foldable matrix arguments share.
+/** A foldable model argument, folded once at plan time into the
+  * primitive form its core reads, and passed to the core as a literal.
+  * A wrapper canonicalizes to its replacement, so exchange reuse and
+  * CacheManager matching compare these holders: two are equal exactly
+  * when their folded contents are, as two equal source literals always
+  * fold to equal contents.
+  */
+final class Folded[+T <: AnyRef](val value: T) extends Serializable {
+  @transient private lazy val hash = java.util.Arrays.deepHashCode(Array[AnyRef](value))
+  override def hashCode: Int = hash
+  override def equals(o: Any): Boolean = o match {
+    case f: Folded[_] => java.util.Objects.deepEquals(value, f.value)
+    case _ => false
+  }
+  override def toString: String = s"folded ${value.getClass.getSimpleName}"
+}
+
+object Folded {
+  /** The holder literal of a folded value; a NULL model (null `v`) stays
+    * a NULL argument, so its rows null-propagate like any other.
+    */
+  def literal(v: AnyRef): Literal =
+    Literal(if (v == null) null else new Folded(v), ObjectType(classOf[Folded[_]]))
+}
+
+/** Static cores of the exact-long vector kernels — dot, simHash64,
+  * matVec, centTopK and pqCodes — plus the model folds their foldable
+  * matrix arguments share.
   */
 object VecKernel {
 
-  /** Null when the lengths differ (see [[DotQ]]). */
+  /** Exact integer dot product of two ArrayType(LongType) columns — the
+    * inner kernel of the quantized-embedding similarity operators
+    * (SURVEY §2.5 #39-41). Inputs are embeddings quantized to integer
+    * units (round(x·10⁴)), so the product is exact, order-independent,
+    * and bit-identical to the DuckDB oracle's list_dot_product at any
+    * parallelism.
+    *
+    * Mismatched lengths return null — a truncated "plausible" dot product
+    * would mask malformed vectors (and DuckDB's list_dot_product errors on
+    * the same input, so silence here would also split the engines). Null
+    * ELEMENTS remain a precondition: graft quantizes from non-null floats.
+    */
   def dot(x: ArrayData, y: ArrayData): java.lang.Long = {
     val n = x.numElements()
     if (n != y.numElements()) return null
@@ -36,6 +77,15 @@ object VecKernel {
     acc
   }
 
+  /** 64-bit SimHash fingerprint of a token-hash array (SURVEY §2.5 #38):
+    * bit b of the result is set iff more input hashes have bit b set than
+    * clear (ties → 0, matching `sum(±1) > 0`). As a per-row expression over
+    * `array_distinct(transform(tokens, xxhash64))`, the whole fingerprint
+    * stage is embarrassingly parallel — no token explode, no distinct
+    * shuffle, no 64-column aggregate; only the band join that follows
+    * shuffles, which is the shape that scales to 100 TB. Equivalent by spec
+    * to the 64-aggregate DataFrame formulation it replaced.
+    */
   def simHash64(a: ArrayData): Long = {
     val n = a.numElements()
     val cnt = new Array[Int](64)
@@ -55,30 +105,74 @@ object VecKernel {
     fp
   }
 
-  /** Row dots of a folded model; null when `x` mismatches a non-empty
-    * model's width (see [[MatVecQ]]).
+  /** Exact integer matrix–vector product: the dot of `vec`
+    * (ArrayType(LongType)) against EVERY row of a foldable matrix literal
+    * (ArrayType(ArrayType(LongType))) in one codegen'd pass, returning
+    * array<long> of the row dots. This is the bulk form of [[dot]] for
+    * model-against-row evaluation (LSH hyperplane banks, centroid tables):
+    * shipping a K-row model as K separate array literals with one dot each
+    * makes the analyzed tree O(K·D) nodes — at K=256, D=64 that cost tens
+    * of seconds of driver-side analysis + codegen per plan. Here the model
+    * folds ONCE into a primitive long[][] held in the codegen references
+    * array, and the per-row work is identical arithmetic to K dot calls
+    * (exact, order-independent, bit-identical to the oracle at any
+    * parallelism).
+    *
+    * Null vec → null (like dot); a vec whose length differs from the
+    * matrix row width → null (a truncated "plausible" result would mask
+    * malformed vectors). The matrix argument must be foldable (checked
+    * at analysis) and uniform — enforced at plan time by [[foldMatrix]],
+    * since a jagged model is a construction bug, not a data condition.
     */
-  def matVec(model: Array[Array[Long]], x: ArrayData): ArrayData = {
-    if (model.nonEmpty && x.numElements() != model(0).length) return null
-    val out = new Array[Long](model.length)
+  def matVec(model: Folded[Array[Array[Long]]], x: ArrayData): ArrayData = {
+    val m = model.value
+    if (m.nonEmpty && x.numElements() != m(0).length) return null
+    val out = new Array[Long](m.length)
     var j = 0
-    while (j < model.length) { out(j) = dotRow(model(j), x, 0); j += 1 }
+    while (j < m.length) { out(j) = dotRow(m(j), x, 0); j += 1 }
     ArrayData.toArrayData(out)
   }
 
-  /** The `bd.length` nearest model rows by `norms(j) − 2·⟨x, row j⟩`, cid
-    * ascending on ties (see [[CentTopKQ]]). `bd`/`bc` are caller-owned
-    * scratch slots — the codegen path passes per-task arrays, so a row
-    * allocates only its result.
+  /** Bounded top-k nearest-centroid selection in ONE codegen'd kernel
+    * (SURVEY §2.5 #41/41f): for a quantized vector `vec` against a foldable
+    * centroid matrix `mat` (rows indexed by cid), return the cids of the
+    * `k` nearest rows by squared distance, ascending, cid as the
+    * tie-break — exactly the head of
+    * `array_sort(transform(cents, c -> struct(dist, cid)))` and, at k = 1,
+    * exactly `array_min(...).cid`. The distance ranked is
+    * `‖c‖² − 2·⟨vec, c⟩`: the per-row `‖vec‖²` shift is constant across
+    * centroids, so ordering AND ties are bit-identical to the full
+    * `‖vec‖² + ‖c‖² − 2·⟨vec, c⟩` form (exact long arithmetic throughout).
+    *
+    * Why a kernel and not `transform` + `array_sort`/`array_min`:
+    * higher-order functions evaluate their lambda INTERPRETED per element —
+    * at K = ⌈6·√n⌉ lists that is K boxed struct allocations + an
+    * interpreted dot per row, then a full K·log K sort to keep 1–32 heads
+    * (measured ~22 % of the sf10 bench wall across the IVF family). Here
+    * the model folds once into a primitive long[][] (+ precomputed row
+    * norms) in the codegen references array — the [[matVec]] rule — and
+    * the per-row work is K primitive dots + a bounded insertion into k
+    * slots, inside whole-stage codegen. (The round-5
+    * matVec-inside-lambda rewrite was 6× SLOWER because element_at over
+    * the kernel output re-evaluated per lambda element; this form has no
+    * lambda at all.)
+    *
+    * Null vec → null; vec length ≠ model width → null (the [[matVec]]
+    * malformed-vector rule). `k` must be a foldable positive int; fewer
+    * than k centroids return all of them, an empty model returns an empty
+    * array.
     */
-  def centTopK(model: Array[Array[Long]], norms: Array[Long], x: ArrayData,
-      bd: Array[Long], bc: Array[Int]): ArrayData = {
-    if (model.nonEmpty && x.numElements() != model(0).length) return null
-    val k = bd.length
+  def centTopK(model: Folded[Array[Array[Long]]], norms: Folded[Array[Long]],
+      x: ArrayData, k: Int): ArrayData = {
+    val m = model.value
+    val nm = norms.value
+    if (m.nonEmpty && x.numElements() != m(0).length) return null
+    val bd = new Array[Long](k)
+    val bc = new Array[Int](k)
     var filled = 0
     var j = 0
-    while (j < model.length) {
-      val dist = norms(j) - 2L * dotRow(model(j), x, 0)
+    while (j < m.length) {
+      val dist = nm(j) - 2L * dotRow(m(j), x, 0)
       if (filled < k || dist < bd(filled - 1)) {
         var p = if (filled < k) filled else k - 1
         while (p > 0 && dist < bd(p - 1)) {
@@ -92,28 +186,48 @@ object VecKernel {
     ArrayData.toArrayData(java.util.Arrays.copyOf(bc, filled))
   }
 
-  /** struct(codes, n2pq) of the nearest codeword per block, smaller code
-    * on ties; null when `x` is not blocks·subdim long (see [[PqCodesQ]]).
+  /** Product-quantization encoder in ONE codegen'd kernel (SURVEY §2.5
+    * #41e): for a quantized vector against a foldable 3-level codebook
+    * `cents[block][code][dim]`, return
+    * `struct(codes: array<int>, n2pq: long)` — per block, the code of the
+    * nearest codeword to that block's coordinate slice of the vector
+    * (squared distance, smaller code as the tie-break — the same exact-long
+    * `‖c‖² − 2·⟨sub, c⟩` ranking as [[centTopK]], the block-constant
+    * `‖sub‖²` dropped), plus the reconstruction's exact squared norm
+    * `Σ_j ‖c_{j,code_j}‖²` (blocks are orthogonal coordinate slices, so
+    * the sum IS the reconstructed vector's norm). Replaces a nested
+    * `transform(sequence(...), j -> array_min(transform(...)))` whose
+    * lambdas evaluated INTERPRETED per (block × codeword) with boxed
+    * structs and per-block array slices, plus a second interpreted
+    * `aggregate` for the norm.
+    *
+    * Null vec → null; vec length ≠ blocks·subdim → null. Codebook must be
+    * foldable and rectangular (uniform codes per block, uniform dims per
+    * codeword) — enforced at plan time by [[foldCodebook]]. An empty
+    * codebook has width 0, so every non-empty vector mismatches → null
+    * (callers guard emptiness).
     */
-  def pqCodes(book: Array[Array[Array[Long]]], norms: Array[Array[Long]],
-      x: ArrayData): InternalRow = {
-    val subDim = if (book.isEmpty) 0 else book(0)(0).length
-    if (x.numElements() != book.length * subDim) return null
-    val codes = new Array[Int](book.length)
+  def pqCodes(book: Folded[Array[Array[Array[Long]]]],
+      norms: Folded[Array[Array[Long]]], x: ArrayData): InternalRow = {
+    val b = book.value
+    val nm = norms.value
+    val subDim = if (b.isEmpty) 0 else b(0)(0).length
+    if (x.numElements() != b.length * subDim) return null
+    val codes = new Array[Int](b.length)
     var n2pq = 0L
     var j = 0
-    while (j < book.length) {
-      val block = book(j)
+    while (j < b.length) {
+      val block = b(j)
       var best = 0L
       var bestC = -1
       var c = 0
       while (c < block.length) {
-        val dist = norms(j)(c) - 2L * dotRow(block(c), x, j * subDim)
+        val dist = nm(j)(c) - 2L * dotRow(block(c), x, j * subDim)
         if (bestC < 0 || dist < best) { best = dist; bestC = c }
         c += 1
       }
       codes(j) = bestC
-      n2pq += norms(j)(bestC)
+      n2pq += nm(j)(bestC)
       j += 1
     }
     InternalRow(ArrayData.toArrayData(codes), n2pq)
@@ -131,19 +245,16 @@ object VecKernel {
   def rows(m: ArrayData): Array[Array[Long]] =
     Array.tabulate(m.numElements())(j => m.getArray(j).toLongArray())
 
+  /** Squared norm of each row. */
+  def norms(m: Array[Array[Long]]): Array[Long] = m.map(_.map(x => x * x).sum)
+
   /** Folds a foldable ArrayType(ArrayType(LongType)) model once at plan
-    * time. A foldable NULL folds to an EMPTY model instead of NPE-ing:
-    * doGenCode forces the fold while building the codegen references
-    * array, BEFORE the per-row null check runs — the interpreted path
-    * null-propagates first and never sees the hazard, and a crash that
-    * exists only under codegen is the worst kind of divergence. Rows with
-    * a null model never reach the core either way, so the empty model is
-    * inert. A jagged model is a construction bug, so it fails here.
+    * time; a NULL model folds to null. A jagged model is a construction
+    * bug, so it fails here.
     */
   def foldMatrix(mat: Expression, fn: String): Array[Array[Long]] = {
-    require(mat.foldable, s"$fn: matrix argument must be foldable")
     val raw = mat.eval()
-    if (raw == null) Array.empty
+    if (raw == null) null
     else {
       val m = rows(raw.asInstanceOf[ArrayData])
       require(m.forall(_.length == m(0).length),
@@ -151,43 +262,36 @@ object VecKernel {
       m
     }
   }
-}
 
-/** Exact integer dot product of two ArrayType(LongType) columns — the inner
-  * kernel of the quantized-embedding similarity operators (SURVEY §2.5
-  * #39-41). Inputs are embeddings quantized to integer units (round(x·10⁴)),
-  * so the product is exact, order-independent, and bit-identical to the
-  * DuckDB oracle's list_dot_product at any parallelism.
-  */
-case class DotQ(left: Expression, right: Expression)
-    extends BinaryExpression with ExpectsInputTypes {
-
-  override def inputTypes =
-    Seq(ArrayType(LongType), ArrayType(LongType))
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = true
-
-  /** Mismatched lengths return null — a truncated "plausible" dot product
-    * would mask malformed vectors (and DuckDB's list_dot_product errors on
-    * the same input, so silence here would also split the engines). Null
-    * ELEMENTS remain a precondition: graft quantizes from non-null floats.
+  /** Folds a foldable codebook [block][code][dim] once at plan time; a
+    * NULL codebook folds to null.
     */
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    VecKernel.dot(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val dot = ctx.freshName("dot")
-      s"java.lang.Long $dot = graft.functions.VecKernel.dot($a, $b); " +
-        s"${ev.isNull} = $dot == null; if ($dot != null) ${ev.value} = $dot.longValue();"
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): DotQ =
-    copy(left = newLeft, right = newRight)
+  def foldCodebook(cents: Expression): Array[Array[Array[Long]]] = {
+    val raw = cents.eval()
+    if (raw == null) null
+    else {
+      val m = raw.asInstanceOf[ArrayData]
+      val blocks = Array.tabulate(m.numElements())(j => rows(m.getArray(j)))
+      // a zero-codeword first block would make the rectangularity
+      // predicate itself throw a raw AIOOBE (blocks(0)(0)) — guard the
+      // shape explicitly so future callers get the intended message
+      require(blocks.isEmpty || blocks(0).nonEmpty,
+        "graft_pq_codes: codebook blocks must have at least one codeword")
+      require(blocks.forall(b => b.length == blocks(0).length &&
+        b.forall(_.length == blocks(0)(0).length)),
+        "graft_pq_codes: codebook must be rectangular")
+      blocks
+    }
+  }
 }
 
-/** Static core of [[RollingHash]]. */
+/** Polynomial rolling hash over the bytes of an (ASCII-normalized) string:
+  * h = fold(0, b => (h·31 + b) mod 1e9+7). Document fingerprinting kernel
+  * (SURVEY §2.5 #45; reference deep_analysis duplicate detection works on
+  * whole-content equality — the rolling hash is the scale-friendly stand-in
+  * that also supports windowed/chunked fingerprints). The DuckDB oracle
+  * mirrors it with list_reduce over ascii codes, so it is exactly checkable.
+  */
 object RollingHashKernel {
   def eval(s: UTF8String): Long = {
     val bytes = s.getBytes
@@ -201,278 +305,11 @@ object RollingHashKernel {
   }
 }
 
-/** Polynomial rolling hash over the bytes of an (ASCII-normalized) string:
-  * h = fold(0, b => (h·31 + b) mod 1e9+7). Document fingerprinting kernel
-  * (SURVEY §2.5 #45; reference deep_analysis duplicate detection works on
-  * whole-content equality — the rolling hash is the scale-friendly stand-in
-  * that also supports windowed/chunked fingerprints). The DuckDB oracle
-  * mirrors it with list_reduce over ascii codes, so it is exactly checkable.
-  */
-case class RollingHash(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes {
-
-  override def inputTypes = Seq(StringType)
-  override def dataType: DataType = LongType
-
-  override protected def nullSafeEval(input: Any): Any =
-    RollingHashKernel.eval(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.RollingHashKernel.eval($c);")
-
-  override protected def withNewChildInternal(newChild: Expression): RollingHash =
-    copy(child = newChild)
-}
-
-/** 64-bit SimHash fingerprint of a token-hash array (SURVEY §2.5 #38):
-  * bit b of the result is set iff more input hashes have bit b set than
-  * clear (ties → 0, matching `sum(±1) > 0`). As a per-row expression over
-  * `array_distinct(transform(tokens, xxhash64))`, the whole fingerprint
-  * stage is embarrassingly parallel — no token explode, no distinct
-  * shuffle, no 64-column aggregate; only the band join that follows
-  * shuffles, which is the shape that scales to 100 TB. Equivalent by spec
-  * to the 64-aggregate DataFrame formulation it replaced.
-  */
-case class SimHash64(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes {
-
-  override def inputTypes = Seq(ArrayType(LongType))
-  override def dataType: DataType = LongType
-
-  override protected def nullSafeEval(input: Any): Any =
-    VecKernel.simHash64(input.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = graft.functions.VecKernel.simHash64($a);")
-
-  override protected def withNewChildInternal(newChild: Expression): SimHash64 =
-    copy(child = newChild)
-}
-
-/** Exact integer matrix–vector product: the dot of `vec`
-  * (ArrayType(LongType)) against EVERY row of a foldable matrix literal
-  * (ArrayType(ArrayType(LongType))) in one codegen'd pass, returning
-  * array<long> of the row dots. This is the bulk form of [[DotQ]] for
-  * model-against-row evaluation (LSH hyperplane banks, centroid tables):
-  * shipping a K-row model as K separate array literals with one DotQ each
-  * makes the analyzed tree O(K·D) nodes — at K=256, D=64 that cost tens
-  * of seconds of driver-side analysis + codegen per plan. Here the model
-  * folds ONCE into a primitive long[][] held in the codegen references
-  * array, and the per-row work is identical arithmetic to K DotQ calls
-  * (exact, order-independent, bit-identical to the oracle at any
-  * parallelism).
-  *
-  * Null vec → null (like DotQ); a vec whose length differs from the
-  * matrix row width → null (a truncated "plausible" result would mask
-  * malformed vectors). The matrix argument must be foldable and uniform —
-  * enforced at plan time by [[VecKernel.foldMatrix]], since a jagged model
-  * is a construction bug, not a data condition.
-  */
-case class MatVecQ(mat: Expression, vec: Expression)
-    extends BinaryExpression with ExpectsInputTypes {
-
-  override def left: Expression = mat
-  override def right: Expression = vec
-  override def inputTypes =
-    Seq(ArrayType(ArrayType(LongType)), ArrayType(LongType))
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = true
-
-  /** The folded model: evaluated once at plan time, shared by every row. */
-  @transient private lazy val model: Array[Array[Long]] =
-    VecKernel.foldMatrix(mat, "graft_matvec_q")
-
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    VecKernel.matVec(model, b.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val modelRef = ctx.addReferenceObj("matvecModel", model, "long[][]")
-    nullSafeCodeGen(ctx, ev, (_, b) =>
-      s"${ev.value} = graft.functions.VecKernel.matVec($modelRef, $b); " +
-        s"${ev.isNull} = ${ev.value} == null;")
-  }
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): MatVecQ =
-    copy(mat = newLeft, vec = newRight)
-}
-
-/** Bounded top-k nearest-centroid selection in ONE codegen'd kernel
-  * (SURVEY §2.5 #41/41f): for a quantized vector `vec` against a foldable
-  * centroid matrix `mat` (rows indexed by cid), return the cids of the
-  * `k` nearest rows by squared distance, ascending, cid as the
-  * tie-break — exactly the head of
-  * `array_sort(transform(cents, c -> struct(dist, cid)))` and, at k = 1,
-  * exactly `array_min(...).cid`. The distance ranked is
-  * `‖c‖² − 2·⟨vec, c⟩`: the per-row `‖vec‖²` shift is constant across
-  * centroids, so ordering AND ties are bit-identical to the full
-  * `‖vec‖² + ‖c‖² − 2·⟨vec, c⟩` form (exact long arithmetic throughout).
-  *
-  * Why an Expression and not `transform` + `array_sort`/`array_min`:
-  * higher-order functions evaluate their lambda INTERPRETED per element —
-  * at K = ⌈6·√n⌉ lists that is K boxed struct allocations + an
-  * interpreted dot per row, then a full K·log K sort to keep 1–32 heads
-  * (measured ~22 % of the sf10 bench wall across the IVF family). Here
-  * the model folds once into a primitive long[][] (+ precomputed row
-  * norms) in the codegen references array — the [[MatVecQ]] rule — and
-  * the per-row work is K primitive dots + a bounded insertion into k
-  * per-task scratch slots, inside whole-stage codegen. (The round-5
-  * MatVecQ-inside-lambda rewrite was 6× SLOWER because element_at over
-  * the kernel output re-evaluated per lambda element; this form has no
-  * lambda at all.)
-  *
-  * Null vec → null; vec length ≠ model width → null (the [[MatVecQ]]
-  * malformed-vector rule). `k` must be a foldable positive int; fewer
-  * than k centroids return all of them, an empty model returns an empty
-  * array.
-  */
-case class CentTopKQ(mat: Expression, vec: Expression, k: Expression)
-    extends TernaryExpression with ExpectsInputTypes {
-
-  override def first: Expression = mat
-  override def second: Expression = vec
-  override def third: Expression = k
-  override def inputTypes =
-    Seq(ArrayType(ArrayType(LongType)), ArrayType(LongType), IntegerType)
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def nullable: Boolean = true
-
-  /** Folded model + per-row squared norms, shared by every row (forced
-    * while building the codegen references array — before any row runs —
-    * so a malformed foldable argument fails at plan time, not mid-task).
-    */
-  @transient private lazy val model: Array[Array[Long]] =
-    VecKernel.foldMatrix(mat, "graft_cent_topk")
-  @transient private lazy val norms: Array[Long] =
-    model.map(_.map(x => x * x).sum)
-  @transient private lazy val kVal: Int = {
-    require(k.foldable, "graft_cent_topk: k must be foldable")
-    val v = k.eval().asInstanceOf[Int]
-    require(v >= 1, s"graft_cent_topk: k must be >= 1, got $v")
-    v
-  }
-
-  override protected def nullSafeEval(matV: Any, vecV: Any, kV: Any): Any =
-    VecKernel.centTopK(model, norms, vecV.asInstanceOf[ArrayData],
-      new Array[Long](kVal), new Array[Int](kVal))
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val modelRef = ctx.addReferenceObj("centTopkModel", model, "long[][]")
-    val normsRef = ctx.addReferenceObj("centTopkNorms", norms, "long[]")
-    // per-task scratch slots (k longs + k ints), not per-row allocations
-    val bd = ctx.addMutableState("long[]", "centTopkBd",
-      v => s"$v = new long[$kVal];")
-    val bc = ctx.addMutableState("int[]", "centTopkBc",
-      v => s"$v = new int[$kVal];")
-    nullSafeCodeGen(ctx, ev, (_, b, _) =>
-      s"${ev.value} = graft.functions.VecKernel.centTopK(" +
-        s"$modelRef, $normsRef, $b, $bd, $bc); ${ev.isNull} = ${ev.value} == null;")
-  }
-
-  override protected def withNewChildrenInternal(
-      newFirst: Expression, newSecond: Expression,
-      newThird: Expression): CentTopKQ =
-    copy(mat = newFirst, vec = newSecond, k = newThird)
-}
-
-/** Product-quantization encoder in ONE codegen'd kernel (SURVEY §2.5
-  * #41e): for a quantized vector against a foldable 3-level codebook
-  * `cents[block][code][dim]`, return
-  * `struct(codes: array<int>, n2pq: long)` — per block, the code of the
-  * nearest codeword to that block's coordinate slice of the vector
-  * (squared distance, smaller code as the tie-break — the same exact-long
-  * `‖c‖² − 2·⟨sub, c⟩` ranking as [[CentTopKQ]], the block-constant
-  * `‖sub‖²` dropped), plus the reconstruction's exact squared norm
-  * `Σ_j ‖c_{j,code_j}‖²` (blocks are orthogonal coordinate slices, so
-  * the sum IS the reconstructed vector's norm). Replaces a nested
-  * `transform(sequence(...), j -> array_min(transform(...)))` whose
-  * lambdas evaluated INTERPRETED per (block × codeword) with boxed
-  * structs and per-block array slices, plus a second interpreted
-  * `aggregate` for the norm.
-  *
-  * Null vec → null; vec length ≠ blocks·subdim → null. Codebook must be
-  * foldable and rectangular (uniform codes per block, uniform dims per
-  * codeword) — enforced at plan time. An empty codebook has width 0, so
-  * every non-empty vector mismatches → null (callers guard emptiness).
-  */
-case class PqCodesQ(cents: Expression, vec: Expression)
-    extends BinaryExpression with ExpectsInputTypes {
-
-  override def left: Expression = cents
-  override def right: Expression = vec
-  override def inputTypes =
-    Seq(ArrayType(ArrayType(ArrayType(LongType))), ArrayType(LongType))
-  override def dataType: DataType = StructType(Seq(
-    StructField("codes", ArrayType(IntegerType, containsNull = false), nullable = false),
-    StructField("n2pq", LongType, nullable = false)))
-  override def nullable: Boolean = true
-
-  /** Folded codebook [block][code][dim] + per-codeword squared norms
-    * [block][code] (forced while building the codegen references array —
-    * a malformed foldable codebook fails at plan time).
-    */
-  @transient private lazy val book: Array[Array[Array[Long]]] = {
-    require(cents.foldable, "graft_pq_codes: codebook argument must be foldable")
-    val raw = cents.eval()
-    if (raw == null) Array.empty
-    else {
-      val m = raw.asInstanceOf[ArrayData]
-      val blocks = Array.tabulate(m.numElements())(j => VecKernel.rows(m.getArray(j)))
-      // a zero-codeword first block would make the rectangularity
-      // predicate itself throw a raw AIOOBE (blocks(0)(0)) — guard the
-      // shape explicitly so future callers get the intended message
-      require(blocks.isEmpty || blocks(0).nonEmpty,
-        "graft_pq_codes: codebook blocks must have at least one codeword")
-      require(blocks.forall(b => b.length == blocks(0).length &&
-        b.forall(_.length == blocks(0)(0).length)),
-        "graft_pq_codes: codebook must be rectangular")
-      blocks
-    }
-  }
-  @transient private lazy val norms: Array[Array[Long]] =
-    book.map(_.map(_.map(x => x * x).sum))
-
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    VecKernel.pqCodes(book, norms, b.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val bookRef = ctx.addReferenceObj("pqBook", book, "long[][][]")
-    val normsRef = ctx.addReferenceObj("pqNorms", norms, "long[][]")
-    nullSafeCodeGen(ctx, ev, (_, b) =>
-      s"${ev.value} = graft.functions.VecKernel.pqCodes($bookRef, $normsRef, $b); " +
-        s"${ev.isNull} = ${ev.value} == null;")
-  }
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): PqCodesQ =
-    copy(cents = newLeft, vec = newRight)
-}
-
-/** Static core of [[RepeatedRun]]: one byte scan with early exit. */
-object RepeatedRunKernel {
-  def eval(s: UTF8String): Boolean = {
-    val bs = s.getBytes
-    val allowed = RepeatedRun.Allowed
-    var run = 1
-    var i = 1
-    while (i < bs.length) {
-      if (bs(i) == bs(i - 1)) {
-        run += 1
-        if (run >= RepeatedRun.MinRun && allowed(bs(i) & 0xff)) return true
-      } else run = 1
-      i += 1
-    }
-    false
-  }
-}
-
 /** Repeated-character-run detector (SURVEY §2.3 #26): true iff the string
-  * contains ≥ [[RepeatedRun.MinRun]] CONSECUTIVE occurrences of one
+  * contains ≥ [[MinRun]] CONSECUTIVE occurrences of one
   * enumerated ASCII character — exactly the language of the oracle's
   * backref-free alternation `a{5,}|b{5,}|…` (built from the same
-  * [[RepeatedRun.Alnum]]/[[RepeatedRun.Punct]] definition, so the two
+  * [[Alnum]]/[[Punct]] definition, so the two
   * cannot drift). The regex form costs an 87-branch alternation NFA per
   * row on the Spark side (~7× the pre-promotion scan, the one real r3
   * bench regression); this kernel is ONE O(len) byte scan with early
@@ -483,24 +320,7 @@ object RepeatedRunKernel {
   * byte can only occur as that ASCII character, and a 5-byte run of it is
   * precisely a 5-char run in the decoded string.
   */
-case class RepeatedRun(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes {
-
-  override def inputTypes = Seq(StringType)
-  override def dataType: DataType = BooleanType
-
-  override protected def nullSafeEval(input: Any): Any =
-    RepeatedRunKernel.eval(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.RepeatedRunKernel.eval($c);")
-
-  override protected def withNewChildInternal(newChild: Expression): RepeatedRun =
-    copy(child = newChild)
-}
-
-object RepeatedRun {
+object RepeatedRunKernel {
   /** Run length that flags (the reference's `(.)\1{4,}` = 5 total). */
   val MinRun = 5
 
@@ -520,10 +340,68 @@ object RepeatedRun {
     (Alnum ++ Punct).foreach(c => a(c.toInt) = true)
     a
   }
+
+  /** One byte scan with early exit. */
+  def eval(s: UTF8String): Boolean = {
+    val bs = s.getBytes
+    val allowed = Allowed
+    var run = 1
+    var i = 1
+    while (i < bs.length) {
+      if (bs(i) == bs(i - 1)) {
+        run += 1
+        if (run >= MinRun && allowed(bs(i) & 0xff)) return true
+      } else run = 1
+      i += 1
+    }
+    false
+  }
 }
 
-/** Static core of [[TokenCounts]]: one pass for n_bpe / n_punct / n_upper
-  * over the full string, one for n_ws over the space-trimmed region.
+/** The corpus token-budget and quality counters in ONE byte scan
+  * (SURVEY §2.5 #44 / §2.3 quality family):
+  * `struct(n_ws: int, n_bpe: int, n_punct: int, n_upper: int)` over a
+  * string —
+  *
+  *  - `n_ws` = the whitespace token count, exactly
+  *    `size(split(trim(text), '[ \\t\\n\\r\\f]+'))` with the empty-trim
+  *    → 0 special case (Python str.split semantics as spelled by the
+  *    engine-shared [[graft.operators.Text.wordCount]]): space-only trim
+  *    (Spark/DuckDB `trim` strips 0x20 only), then split-with-empties —
+  *    the count is (whitespace runs inside the trimmed region) + 1, so a
+  *    leading `\t` after trim still contributes the leading empty part
+  *    both regex engines keep.
+  *  - `n_bpe` = the BPE-ish segmentation count, exactly
+  *    `regexp_count(text, '[a-zA-Z]+|[0-9]|[^a-zA-Z0-9 \\t\\n\\r\\f]')`:
+  *    one token per ASCII-letter RUN, per digit, and per other
+  *    non-whitespace CODE POINT (both java.util.regex and DuckDB's RE2
+  *    match a negated class per code point, which a UTF-8 scan counts as
+  *    leading bytes — continuation bytes 0x80–0xBF never start a token).
+  *  - `n_punct` = exactly
+  *    `regexp_count(text, '[^a-zA-Z0-9 \\t\\n\\r\\f]')`: one per
+  *    non-alphanumeric non-whitespace CODE POINT (the punctuation-ratio
+  *    numerator of the quality score).
+  *  - `n_upper` = exactly `regexp_count(text, '[A-Z]')` (the caps-ratio
+  *    numerator) — ASCII-only by the quality contract.
+  *
+  * The alternation branches are disjoint character sets, so the regex's
+  * leftmost-longest walk and this single-pass scan count identical
+  * tokens. Why a kernel: the regex forms cost a per-row NFA walk
+  * plus (for n_ws) materializing every split token into an array just to
+  * take its size — q_token_count was the second-steepest non-output-law
+  * bench entry at sf10 (53.5 s, exponent 1.31) for what is one O(bytes)
+  * scan. Results stay oracle-hash-checked against the unchanged DuckDB
+  * regex SQL, and a spec pins kernel ≡ regex forms on the real corpus +
+  * crafted edges.
+  *
+  * Malformed-UTF-8 caveat (the [[NormKernel]] convention): the regex forms
+  * decode through java.lang.String, which turns each malformed sequence
+  * into one U+FFFD code point; the kernel counts lead bytes, so a stray
+  * continuation byte counts nothing and a truncated sequence counts once.
+  * Valid UTF-8 — every lake this engine reads or writes — is identical.
+  *
+  * One pass for n_bpe / n_punct / n_upper over the full string, one for
+  * n_ws over the space-trimmed region.
   */
 object TokenCountsKernel {
   def eval(s: UTF8String): InternalRow = {
@@ -569,71 +447,35 @@ object TokenCountsKernel {
   }
 }
 
-/** The corpus token-budget and quality counters in ONE byte scan
-  * (SURVEY §2.5 #44 / §2.3 quality family):
-  * `struct(n_ws: int, n_bpe: int, n_punct: int, n_upper: int)` over a
-  * string —
+/** Per-list stopword-hit counts over an already-LOWERCASED string in one
+  * byte scan (SURVEY §2.3 lang-ID / quality family): for a foldable
+  * `lists` argument (array of word lists, each word nonempty [a-z]+),
+  * returns `array<int>` where element l is exactly
+  * `regexp_count(' ' || regexp_replace(lowered, '[^a-z]+', ' ') || ' ',
+  * ' (w_l1|w_l2|…) ')` — the engine-shared padded-stopword-density rule.
   *
-  *  - `n_ws` = the whitespace token count, exactly
-  *    `size(split(trim(text), '[ \\t\\n\\r\\f]+'))` with the empty-trim
-  *    → 0 special case (Python str.split semantics as spelled by the
-  *    engine-shared [[graft.operators.Text.wordCount]]): space-only trim
-  *    (Spark/DuckDB `trim` strips 0x20 only), then split-with-empties —
-  *    the count is (whitespace runs inside the trimmed region) + 1, so a
-  *    leading `\t` after trim still contributes the leading empty part
-  *    both regex engines keep.
-  *  - `n_bpe` = the BPE-ish segmentation count, exactly
-  *    `regexp_count(text, '[a-zA-Z]+|[0-9]|[^a-zA-Z0-9 \\t\\n\\r\\f]')`:
-  *    one token per ASCII-letter RUN, per digit, and per other
-  *    non-whitespace CODE POINT (both java.util.regex and DuckDB's RE2
-  *    match a negated class per code point, which a UTF-8 scan counts as
-  *    leading bytes — continuation bytes 0x80–0xBF never start a token).
-  *  - `n_punct` = exactly
-  *    `regexp_count(text, '[^a-zA-Z0-9 \\t\\n\\r\\f]')`: one per
-  *    non-alphanumeric non-whitespace CODE POINT (the punctuation-ratio
-  *    numerator of the quality score).
-  *  - `n_upper` = exactly `regexp_count(text, '[A-Z]')` (the caps-ratio
-  *    numerator) — ASCII-only by the quality contract.
+  * Equivalence: in the padded form, tokens are maximal [a-z] runs with
+  * single-space boundaries (the replace collapses every non-[a-z] run,
+  * the concat pads the ends), and the pattern ` (w…) ` consumes BOTH
+  * spaces, so of two ADJACENT stopword tokens only the first matches
+  * (the second lost its leading space). That is precisely an
+  * alternating walk over the [a-z]-run token stream: a token counts
+  * for list l iff it equals one of l's words AND the previous token did
+  * not count for l. Prefix/suffix containment can't false-match (the
+  * trailing-space requirement forces whole-token equality), and both
+  * engines' regexes agree because only exact token matches succeed
+  * (leftmost-first vs leftmost-longest is moot). Taking the LOWERED
+  * string as input (not lowering inside) keeps Spark's ICU `lower()`
+  * upstream and shared — the kernel replaces only the regexp_replace
+  * materialization and the per-list NFA walks.
   *
-  * The alternation branches are disjoint character sets, so the regex's
-  * leftmost-longest walk and this single-pass scan count identical
-  * tokens. Why an Expression: the regex forms cost a per-row NFA walk
-  * plus (for n_ws) materializing every split token into an array just to
-  * take its size — q_token_count was the second-steepest non-output-law
-  * bench entry at sf10 (53.5 s, exponent 1.31) for what is one O(bytes)
-  * scan. Results stay oracle-hash-checked against the unchanged DuckDB
-  * regex SQL, and a spec pins kernel ≡ regex forms on the real corpus +
-  * crafted edges.
-  *
-  * Malformed-UTF-8 caveat (the [[NormKernel]] convention): the regex forms
-  * decode through java.lang.String, which turns each malformed sequence
-  * into one U+FFFD code point; the kernel counts lead bytes, so a stray
-  * continuation byte counts nothing and a truncated sequence counts once.
-  * Valid UTF-8 — every lake this engine reads or writes — is identical.
-  */
-case class TokenCounts(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes {
-
-  override def inputTypes = Seq(StringType)
-  override def dataType: DataType = StructType(
-    Seq("n_ws", "n_bpe", "n_punct", "n_upper").map(StructField(_, IntegerType, nullable = false)))
-
-  override protected def nullSafeEval(input: Any): Any =
-    TokenCountsKernel.eval(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.TokenCountsKernel.eval($c);")
-
-  override protected def withNewChildInternal(newChild: Expression): TokenCounts =
-    copy(child = newChild)
-}
-
-/** Static core of [[StopCounts]]: the alternating padded-token walk (see
-  * the class doc for the regex-equivalence argument).
+  * Null lowered → null; a null lists argument yields a NULL result
+  * (StaticInvoke null propagation short-circuits before the core
+  * sees it) — only an empty list LITERAL yields an empty array.
   */
 object StopCountsKernel {
-  def eval(s: UTF8String, words: Array[Array[Array[Byte]]]): ArrayData = {
+  def eval(s: UTF8String, lists: Folded[Array[Array[Array[Byte]]]]): ArrayData = {
+    val words = lists.value
     val bs = s.getBytes
     val n = words.length
     val counts = new Array[Int](n)
@@ -673,51 +515,13 @@ object StopCountsKernel {
     }
     ArrayData.toArrayData(counts)
   }
-}
 
-/** Per-list stopword-hit counts over an already-LOWERCASED string in one
-  * byte scan (SURVEY §2.3 lang-ID / quality family): for a foldable
-  * `lists` argument (array of word lists, each word nonempty [a-z]+),
-  * returns `array<int>` where element l is exactly
-  * `regexp_count(' ' || regexp_replace(lowered, '[^a-z]+', ' ') || ' ',
-  * ' (w_l1|w_l2|…) ')` — the engine-shared padded-stopword-density rule.
-  *
-  * Equivalence: in the padded form, tokens are maximal [a-z] runs with
-  * single-space boundaries (the replace collapses every non-[a-z] run,
-  * the concat pads the ends), and the pattern ` (w…) ` consumes BOTH
-  * spaces, so of two ADJACENT stopword tokens only the first matches
-  * (the second lost its leading space). That is precisely an
-  * alternating walk over the [a-z]-run token stream: a token counts
-  * for list l iff it equals one of l's words AND the previous token did
-  * not count for l. Prefix/suffix containment can't false-match (the
-  * trailing-space requirement forces whole-token equality), and both
-  * engines' regexes agree because only exact token matches succeed
-  * (leftmost-first vs leftmost-longest is moot). Taking the LOWERED
-  * string as input (not lowering inside) keeps Spark's ICU `lower()`
-  * upstream and shared — the kernel replaces only the regexp_replace
-  * materialization and the per-list NFA walks.
-  *
-  * Null lowered → null; a null lists argument yields a NULL result
-  * (BinaryExpression null propagation short-circuits before this class
-  * sees it) — only an empty list LITERAL yields an empty array.
-  */
-case class StopCounts(lowered: Expression, lists: Expression)
-    extends BinaryExpression with ExpectsInputTypes {
-
-  override def left: Expression = lowered
-  override def right: Expression = lists
-  override def inputTypes =
-    Seq(StringType, ArrayType(ArrayType(StringType)))
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def nullable: Boolean = true
-
-  /** Folded word lists as byte arrays (forced while building the codegen
-    * references array — malformed words fail at plan time).
+  /** Folds the foldable word lists once at plan time, as byte arrays; a
+    * NULL argument folds to null. Malformed words fail here.
     */
-  @transient private lazy val words: Array[Array[Array[Byte]]] = {
-    require(lists.foldable, "graft_stop_counts: lists argument must be foldable")
+  def foldWords(lists: Expression): Array[Array[Array[Byte]]] = {
     val raw = lists.eval()
-    if (raw == null) Array.empty
+    if (raw == null) null
     else {
       val m = raw.asInstanceOf[ArrayData]
       Array.tabulate(m.numElements()) { l =>
@@ -731,22 +535,20 @@ case class StopCounts(lowered: Expression, lists: Expression)
       }
     }
   }
-
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    StopCountsKernel.eval(a.asInstanceOf[UTF8String], words)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val wordsRef = ctx.addReferenceObj("stopWords", words, "byte[][][]")
-    nullSafeCodeGen(ctx, ev, (a, _) =>
-      s"${ev.value} = graft.functions.StopCountsKernel.eval($a, $wordsRef);")
-  }
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): StopCounts =
-    copy(lowered = newLeft, lists = newRight)
 }
 
-/** Static core of [[CjkProbe]]: a byte scan with early exit. */
+/** CJK-presence probe (SURVEY §2.3 lang-ID): true iff the string contains
+  * a code point in [U+4E00, U+9FFF] — exactly `rlike '[一-鿿]'` (both
+  * engines' regex classes range over code points), as a byte scan with
+  * early exit: only 3-byte UTF-8 sequences with leading byte 0xE4–0xE9
+  * can encode the range, so ASCII-heavy corpora scan at memory speed.
+  *
+  * Malformed-UTF-8 caveat (the [[NormKernel]] convention): the kernel
+  * reads the two bytes after a 0xE4–0xE9 lead without checking that they
+  * are continuation bytes, so a malformed sequence can decode into the
+  * range where the regex (which sees U+FFFD) does not match. Valid UTF-8
+  * is identical.
+  */
 object CjkKernel {
   def eval(s: UTF8String): Boolean = {
     val bs = s.getBytes
@@ -763,46 +565,6 @@ object CjkKernel {
   }
 }
 
-/** CJK-presence probe (SURVEY §2.3 lang-ID): true iff the string contains
-  * a code point in [U+4E00, U+9FFF] — exactly `rlike '[一-鿿]'` (both
-  * engines' regex classes range over code points), as a byte scan with
-  * early exit: only 3-byte UTF-8 sequences with leading byte 0xE4–0xE9
-  * can encode the range, so ASCII-heavy corpora scan at memory speed.
-  *
-  * Malformed-UTF-8 caveat (the [[NormKernel]] convention): the kernel
-  * reads the two bytes after a 0xE4–0xE9 lead without checking that they
-  * are continuation bytes, so a malformed sequence can decode into the
-  * range where the regex (which sees U+FFFD) does not match. Valid UTF-8
-  * is identical.
-  */
-case class CjkProbe(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes {
-
-  override def inputTypes = Seq(StringType)
-  override def dataType: DataType = BooleanType
-
-  override protected def nullSafeEval(input: Any): Any =
-    CjkKernel.eval(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.CjkKernel.eval($c);")
-
-  override protected def withNewChildInternal(newChild: Expression): CjkProbe =
-    copy(child = newChild)
-}
-
-/** Static core of [[BloomContains]]: string items probe with
-  * mightContainBinary over the UTF-8 bytes, long items with
-  * mightContainLong.
-  */
-object BloomKernel {
-  def eval(f: org.apache.spark.util.sketch.BloomFilter, item: UTF8String): Boolean =
-    f.mightContainBinary(item.getBytes)
-  def eval(f: org.apache.spark.util.sketch.BloomFilter, item: Long): Boolean =
-    f.mightContainLong(item)
-}
-
 /** Bloom-filter membership test against a FOLDABLE serialized
   * `org.apache.spark.util.sketch.BloomFilter` (BinaryType literal): the
   * map-side prefilter of the scale-adaptive joins. A bloom over K items at
@@ -814,69 +576,58 @@ object BloomKernel {
   * prefilter semantics-preserving.
   *
   * The sketch deserializes ONCE at plan time and rides the codegen
-  * references array (same pattern as [[MatVecQ]]'s model). Bytes are
-  * matched with `mightContainBinary(utf8)`, which is bit-identical to the
-  * builder's `putString`/UTF-8 path.
+  * references array (same pattern as [[VecKernel.matVec]]'s model). Bytes
+  * are matched with `mightContainBinary(utf8)`, which is bit-identical to
+  * the builder's `putString`/UTF-8 path; long items probe with
+  * mightContainLong — the exact dual of the builder's putLong for a long
+  * column (r14: the decontamination gate sketches gram HASHES instead of
+  * gram strings).
   */
-case class BloomContains(bloom: Expression, item: Expression)
-    extends BinaryExpression {
+object BloomKernel {
+  def eval(f: org.apache.spark.util.sketch.BloomFilter, item: UTF8String): Boolean =
+    f.mightContainBinary(item.getBytes)
+  def eval(f: org.apache.spark.util.sketch.BloomFilter, item: Long): Boolean =
+    f.mightContainLong(item)
 
-  override def left: Expression = bloom
-  override def right: Expression = item
-  // long items probe with mightContainLong — the exact dual of the
-  // builder's putLong for a long column (r14: the decontamination gate
-  // sketches gram HASHES instead of gram strings). Hand-rolled type
-  // check: TypeCollection is private[sql], so ExpectsInputTypes can't
-  // spell "string or long".
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-    if (bloom.dataType != BinaryType)
-      TypeCheckResult.TypeCheckFailure(
-        s"graft_bloom_contains: bloom must be BINARY, got ${bloom.dataType}")
-    else if (item.dataType != StringType && item.dataType != LongType)
-      TypeCheckResult.TypeCheckFailure(
-        s"graft_bloom_contains: item must be STRING or BIGINT, got ${item.dataType}")
-    else TypeCheckResult.TypeCheckSuccess
-  }
-  override def dataType: DataType = BooleanType
-
-  /** A foldable NULL bloom folds to an inert empty filter instead of
-    * NPE-ing in readFrom at codegen time (the MatVecQ null-model rule):
-    * rows never reach it — nullSafeCodeGen propagates the null bloom —
-    * but doGenCode forces this lazy while registering the reference
-    * object, before any row runs.
+  /** The foldable serialized sketch, deserialized once at plan time as a
+    * literal of the public `BloomFilter` type (generated code cannot name
+    * the package-private implementation class); a NULL bloom stays NULL.
+    * The filter compares by content, as the holder rule requires.
     */
-  @transient private lazy val filter: org.apache.spark.util.sketch.BloomFilter = {
-    require(bloom.foldable, "graft_bloom_contains: bloom argument must be foldable")
+  def foldFilter(bloom: Expression): Literal = {
     val raw = bloom.eval()
-    if (raw == null) org.apache.spark.util.sketch.BloomFilter.create(1)
-    else org.apache.spark.util.sketch.BloomFilter.readFrom(
-      new java.io.ByteArrayInputStream(raw.asInstanceOf[Array[Byte]]))
+    Literal(
+      if (raw == null) null
+      else org.apache.spark.util.sketch.BloomFilter.readFrom(
+        new java.io.ByteArrayInputStream(raw.asInstanceOf[Array[Byte]])),
+      ObjectType(classOf[org.apache.spark.util.sketch.BloomFilter]))
   }
-
-  override protected def nullSafeEval(a: Any, b: Any): Any = b match {
-    case v: Long => BloomKernel.eval(filter, v)
-    case s: UTF8String => BloomKernel.eval(filter, s)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("bloomFilter", filter,
-      classOf[org.apache.spark.util.sketch.BloomFilter].getName)
-    nullSafeCodeGen(ctx, ev, (_, b) =>
-      s"${ev.value} = graft.functions.BloomKernel.eval($ref, $b);")
-  }
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): BloomContains =
-    copy(bloom = newLeft, item = newRight)
 }
 
-/** Static core of [[BlockCounts]]: the fold-compare token walk (see the
-  * class doc), struct(n_tok, n_blocked).
+/** Token + blocklist-membership counts in one byte scan (SURVEY §2.4 #43h
+  * blocklist filter; shared by q_blocklist_scan, q_doc_features,
+  * q_datacard and q_release_gate through TextOps.blocklistFlags): for a
+  * foldable word list, returns struct(n_tok, n_blocked) ≡
+  * (`size(filter(split(norm, ' '), t -> t <> ''))`,
+  *  `size(filter(split(norm, ' '), t -> t IN (words)))`)
+  * where norm is the canonical Text.norm
+  * (`regexp_replace(translate(trim(text), A-Z, a-z), '[ \t\n\r\f]+', ' ')`).
+  *
+  * Equivalence: norm's collapse maps every maximal [ \t\n\r\f]+ run to one
+  * space, so split-on-space tokens ≠ '' are exactly the maximal non-ws
+  * runs of the folded text; trim only strips leading/trailing SPACES,
+  * whose split artifacts are empty tokens the filter drops — so the scan
+  * can walk the RAW bytes: find maximal non-ws runs, fold A-Z→a-z per
+  * byte during comparison (translate is ASCII-only by the Text.norm
+  * contract; non-ASCII bytes pass through both sides untouched), count
+  * every run and the runs byte-equal to a word. Replaces one regex NFA
+  * walk, a per-row token-array materialization and TWO interpreted HOF
+  * lambda filters. Null text → null struct (split(null) → null → the
+  * sizes are null under sizeOfNull=false, same propagation).
   */
 object BlockCountsKernel {
-  def eval(s: UTF8String, words: Array[Array[Byte]]): InternalRow = {
+  def eval(s: UTF8String, wordList: Folded[Array[Array[Byte]]]): InternalRow = {
+    val words = wordList.value
     @inline def ws(c: Int): Boolean =
       c == ' ' || c == '\t' || c == '\n' || c == '\r' || c == '\f'
     val bs = s.getBytes
@@ -912,46 +663,13 @@ object BlockCountsKernel {
     }
     InternalRow(tok, blocked)
   }
-}
 
-/** Token + blocklist-membership counts in one byte scan (SURVEY §2.4 #43h
-  * blocklist filter; shared by q_blocklist_scan, q_doc_features,
-  * q_datacard and q_release_gate through TextOps.blocklistFlags): for a
-  * foldable word list, returns struct(n_tok, n_blocked) ≡
-  * (`size(filter(split(norm, ' '), t -> t <> ''))`,
-  *  `size(filter(split(norm, ' '), t -> t IN (words)))`)
-  * where norm is the canonical Text.norm
-  * (`regexp_replace(translate(trim(text), A-Z, a-z), '[ \t\n\r\f]+', ' ')`).
-  *
-  * Equivalence: norm's collapse maps every maximal [ \t\n\r\f]+ run to one
-  * space, so split-on-space tokens ≠ '' are exactly the maximal non-ws
-  * runs of the folded text; trim only strips leading/trailing SPACES,
-  * whose split artifacts are empty tokens the filter drops — so the scan
-  * can walk the RAW bytes: find maximal non-ws runs, fold A-Z→a-z per
-  * byte during comparison (translate is ASCII-only by the Text.norm
-  * contract; non-ASCII bytes pass through both sides untouched), count
-  * every run and the runs byte-equal to a word. Replaces one regex NFA
-  * walk, a per-row token-array materialization and TWO interpreted HOF
-  * lambda filters. Null text → null struct (split(null) → null → the
-  * sizes are null under sizeOfNull=false, same propagation).
-  */
-case class BlockCounts(text: Expression, words: Expression)
-    extends BinaryExpression with ExpectsInputTypes {
-
-  override def left: Expression = text
-  override def right: Expression = words
-  override def inputTypes = Seq(StringType, ArrayType(StringType))
-  override def dataType: DataType = StructType(
-    Seq("n_tok", "n_blocked").map(StructField(_, IntegerType, nullable = false)))
-  override def nullable: Boolean = true
-
-  /** Folded word list as byte arrays (forced while building the codegen
-    * references array — a malformed foldable list fails at plan time).
+  /** Folds the foldable word list once at plan time, as byte arrays; a
+    * NULL list folds to null. An empty word fails here.
     */
-  @transient private lazy val wordBytes: Array[Array[Byte]] = {
-    require(words.foldable, "graft_block_counts: words argument must be foldable")
+  def foldWords(words: Expression): Array[Array[Byte]] = {
     val raw = words.eval()
-    if (raw == null) Array.empty
+    if (raw == null) null
     else {
       val m = raw.asInstanceOf[ArrayData]
       Array.tabulate(m.numElements()) { w =>
@@ -961,24 +679,11 @@ case class BlockCounts(text: Expression, words: Expression)
       }
     }
   }
-
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    BlockCountsKernel.eval(a.asInstanceOf[UTF8String], wordBytes)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val wordsRef = ctx.addReferenceObj("blockWords", wordBytes, "byte[][]")
-    nullSafeCodeGen(ctx, ev, (a, _) =>
-      s"${ev.value} = graft.functions.BlockCountsKernel.eval($a, $wordsRef);")
-  }
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): BlockCounts =
-    copy(text = newLeft, words = newRight)
 }
 
-/** Shared byte-scan core of [[PiiCounts]] / [[PiiRedact]] — ONE
-  * implementation serving BOTH eval paths: `nullSafeEval` calls it and
-  * `doGenCode` emits a static call to the same methods, so an interpreted
+/** Shared byte-scan core of `graft_pii_counts` / `graft_pii_redact` —
+  * ONE implementation serving BOTH eval paths: the interpreted path and
+  * the generated code call the same methods, so an interpreted
   * fallback cannot silently diverge or decelerate (the `||`-margin trap
   * class is structurally impossible here: no per-byte logic lives in
   * generated strings).
@@ -1307,8 +1012,14 @@ object PiiKernel {
     (nm.toLong << 32) | (delta.toLong & 0xffffffffL)
   }
 
-  /** struct(n_email, n_ipv4, n_phone, n_idrun, n_pii, n_redactions,
-    * redact_delta) — the counts half; no output string is built.
+  /** PII counts in one kernel pass (SURVEY §2.4 #44e/#44j, the
+    * q_doc_features residual named by the r12 bench): struct(n_email,
+    * n_ipv4, n_phone, n_idrun, n_pii, n_redactions, redact_delta) ≡ the
+    * four `regexp_count(text, P)` columns, their sum, `regexp_count(text,
+    * PiiAll)`, and `length(text) − length(regexp_replace(text, PiiAll,
+    * '[PII]'))` — see the object doc for the per-pattern equivalence
+    * arguments. Null text → null struct (regexp_count's null
+    * propagation). The counts half; no output string is built.
     */
   def counts(s: UTF8String): InternalRow = {
     val bs = s.getBytes
@@ -1321,7 +1032,11 @@ object PiiKernel {
       e, i, p, d, e + i + p + d, (m >>> 32).toInt, m & 0xffffffffL)
   }
 
-  /** struct(clean, n_redactions) — the rewrite half. */
+  /** PII redaction rewrite in one kernel pass (SURVEY §2.4 #44j):
+    * struct(clean, n_redactions) ≡ (`regexp_replace(text, PiiAll, '[PII]')`,
+    * `regexp_count(text, PiiAll)`) — the alternation scan run once per row
+    * with the output buffer attached. Null text → null. The rewrite half.
+    */
   def redact(s: UTF8String): InternalRow = {
     val bs = s.getBytes
     val out = new Array[Byte](bs.length)
@@ -1332,66 +1047,10 @@ object PiiKernel {
   }
 }
 
-/** PII counts in one kernel pass (SURVEY §2.4 #44e/#44j, the q_doc_features
-  * residual named by the r12 bench): struct(n_email, n_ipv4, n_phone,
-  * n_idrun, n_pii, n_redactions, redact_delta) ≡ the four
-  * `regexp_count(text, P)` columns, their sum, `regexp_count(text,
-  * PiiAll)`, and `length(text) − length(regexp_replace(text, PiiAll,
-  * '[PII]'))` — see [[PiiKernel]] for the per-pattern equivalence
-  * arguments. Null text → null struct (regexp_count's null propagation).
-  */
-case class PiiCounts(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes {
-
-  override def inputTypes = Seq(StringType)
-  override def dataType: DataType = {
-    val it = IntegerType
-    StructType(Seq(
-      StructField("n_email", it, nullable = false),
-      StructField("n_ipv4", it, nullable = false),
-      StructField("n_phone", it, nullable = false),
-      StructField("n_idrun", it, nullable = false),
-      StructField("n_pii", it, nullable = false),
-      StructField("n_redactions", it, nullable = false),
-      StructField("redact_delta", LongType, nullable = false)))
-  }
-
-  override protected def nullSafeEval(input: Any): Any =
-    PiiKernel.counts(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.PiiKernel.counts($c);")
-
-  override protected def withNewChildInternal(newChild: Expression): PiiCounts =
-    copy(child = newChild)
-}
-
-/** PII redaction rewrite in one kernel pass (SURVEY §2.4 #44j):
-  * struct(clean, n_redactions) ≡ (`regexp_replace(text, PiiAll, '[PII]')`,
-  * `regexp_count(text, PiiAll)`) — the alternation scan of [[PiiKernel]]
-  * run once per row with the output buffer attached. Null text → null.
-  */
-case class PiiRedact(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes {
-
-  override def inputTypes = Seq(StringType)
-  override def dataType: DataType = StructType(Seq(
-    StructField("clean", StringType, nullable = false),
-    StructField("n_redactions", IntegerType, nullable = false)))
-
-  override protected def nullSafeEval(input: Any): Any =
-    PiiKernel.redact(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.PiiKernel.redact($c);")
-
-  override protected def withNewChildInternal(newChild: Expression): PiiRedact =
-    copy(child = newChild)
-}
-
-/** Static core of [[NormText]] — the canonical content normalization
+/** The shared content normalization as one kernel pass, registered as
+  * `graft_norm`; built by [[graft.operators.Text.norm]] so every
+  * consumer — batch and streaming — switches with the definition. It is
+  * the canonical content normalization
   * `regexp_replace(translate(trim(text), 'A-Z', 'a-z'), '[ \t\n\r\f]+', ' ')`
   * fused into ONE byte scan with one output allocation (r14, guide §1.2
   * per-task work: the regex form paid a per-row NFA walk plus two
@@ -1452,29 +1111,10 @@ object NormKernel {
   }
 }
 
-/** The shared content normalization as one kernel pass (see [[NormKernel]]
-  * for the equivalence argument). Registered as `graft_norm`; built
-  * directly by [[graft.operators.Text.norm]] so every consumer — batch
-  * and streaming — switches with the definition.
-  */
-case class NormText(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes {
-
-  override def inputTypes = Seq(StringType)
-  override def dataType: DataType = StringType
-
-  override protected def nullSafeEval(input: Any): Any =
-    NormKernel.norm(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.NormKernel.norm($c);")
-
-  override protected def withNewChildInternal(newChild: Expression): NormText =
-    copy(child = newChild)
-}
-
-/** Static core of [[GramHashes]] — positional word-n-gram xxhash64 arrays
+/** Positional word-n-gram hash array:
+  * `graft_gram_hashes(text, n, keepEmpty)` ≡ the xxhash64-of-concat_ws
+  * forms over split tokens, element-for-element. n and keepEmpty must be
+  * foldable. Positional word-n-gram xxhash64 arrays
   * over a string, in ONE pass with no per-position string materialization
   * (r14, guide §1.2 per-task work). Replaces the
   * `transform(sequence(0, size(w)-n), i -> xxhash64(concat_ws(' ',
@@ -1606,36 +1246,9 @@ object GramHashKernel {
   }
 }
 
-/** Positional word-n-gram hash array (see [[GramHashKernel]]):
-  * `graft_gram_hashes(text, n, keepEmpty)` ≡ the xxhash64-of-concat_ws
-  * forms over split tokens, element-for-element. n and keepEmpty must be
-  * foldable.
-  */
-case class GramHashes(text: Expression, n: Expression, keepEmpty: Expression)
-    extends TernaryExpression with ExpectsInputTypes {
-
-  require(n.foldable && keepEmpty.foldable,
-    "graft_gram_hashes: n and keepEmpty must be foldable")
-
-  override def first: Expression = text
-  override def second: Expression = n
-  override def third: Expression = keepEmpty
-  override def inputTypes = Seq(StringType, IntegerType, BooleanType)
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  override protected def nullSafeEval(t: Any, nn: Any, ke: Any): Any =
-    GramHashKernel.hashes(t.asInstanceOf[UTF8String],
-      nn.asInstanceOf[Int], ke.asInstanceOf[Boolean])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (t, nn, ke) =>
-      s"${ev.value} = graft.functions.GramHashKernel.hashes($t, $nn, $ke);")
-
-  override protected def withNewChildrenInternal(f: Expression, s: Expression,
-      t: Expression): GramHashes = copy(text = f, n = s, keepEmpty = t)
-}
-
-/** Static core of [[JsonIntField]] — strict single-pass extraction of one
+/** Strict integral top-level JSON field extraction as one kernel pass:
+  * `graft_json_int(json, key)` — key must be foldable. A strict
+  * single-pass extraction of one
   * integral top-level field from a JSON payload, replacing TWO Jackson
   * parses per row in q_props_extract (the duplicate-key map parse plus
   * the typed struct parse — measured 2.7 s EACH per 1M-event scan at
@@ -1898,37 +1511,9 @@ object JsonIntKernel {
   }
 }
 
-/** Strict integral top-level JSON field extraction as one kernel pass
-  * (see [[JsonIntKernel]] for the contract and its empirical pins).
-  * `graft_json_int(json, key)` — key must be foldable.
-  */
-case class JsonIntField(json: Expression, key: Expression)
-    extends BinaryExpression with ExpectsInputTypes {
-
-  require(key.foldable, "graft_json_int: key argument must be foldable")
-
-  override def left: Expression = json
-  override def right: Expression = key
-  override def inputTypes = Seq(StringType, StringType)
-  override def dataType: DataType = IntegerType
-  override def nullable: Boolean = true
-
-  override protected def nullSafeEval(j: Any, k: Any): Any =
-    JsonIntKernel.eval(j.asInstanceOf[UTF8String], k.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (j, k) => {
-      val v = ctx.freshName("jsonInt")
-      s"java.lang.Integer $v = graft.functions.JsonIntKernel.eval($j, $k); " +
-        s"${ev.isNull} = $v == null; if ($v != null) ${ev.value} = $v.intValue();"
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): JsonIntField =
-    copy(json = newLeft, key = newRight)
-}
-
-/** Static core of [[MinhashBands]] — banded MinHash signatures of a
+/** Banded MinHash signature hashes: `graft_minhash_bands(hs, k, rows)` ≡
+  * the nested-transform spelling, element-for-element. k and rows must be
+  * foldable, rows must divide k. Banded MinHash signatures of a
   * shingle-hash array in ONE primitive pass (r15, guide §1.2). Replaces
   * the `transform(sequence(0, K-1), i -> array_min(transform(hs, h ->
   * xxhash64(i, h))))` + per-band `xxhash64(sig[4b], ..)` spelling, whose
@@ -1940,7 +1525,7 @@ case class JsonIntField(json: Expression, key: Expression)
   * folds XXH64.hashInt(i, 42) then XXH64.hashLong(h, ·) — this kernel
   * calls the SAME static functions in the same order, with the hashInt
   * prefix precomputed once per i (it is constant across rows). The band
-  * hash folds hashLong over the [[rows]] signature minima from seed 42,
+  * hash folds hashLong over the `rows` signature minima from seed 42,
   * exactly `xxhash64(sig[rb], .., sig[rb+rows-1])`. Empty hs: the old
   * form's array_min over an empty transform is NULL per lane, and
   * XxHash64 skips null children, so every band hashes to the bare seed —
@@ -1999,36 +1584,9 @@ object MinhashBandKernel {
   }
 }
 
-/** Banded MinHash signature hashes (see [[MinhashBandKernel]]):
-  * `graft_minhash_bands(hs, k, rows)` ≡ the nested-transform spelling,
-  * element-for-element. k and rows must be foldable, rows must divide k.
-  */
-case class MinhashBands(hs: Expression, k: Expression, rows: Expression)
-    extends TernaryExpression with ExpectsInputTypes {
-
-  require(k.foldable && rows.foldable,
-    "graft_minhash_bands: k and rows must be foldable")
-
-  override def first: Expression = hs
-  override def second: Expression = k
-  override def third: Expression = rows
-  override def inputTypes = Seq(ArrayType(LongType), IntegerType, IntegerType)
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  override protected def nullSafeEval(a: Any, kk: Any, rr: Any): Any =
-    MinhashBandKernel.bands(
-      a.asInstanceOf[ArrayData],
-      kk.asInstanceOf[Int], rr.asInstanceOf[Int])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, kk, rr) =>
-      s"${ev.value} = graft.functions.MinhashBandKernel.bands($a, $kk, $rr);")
-
-  override protected def withNewChildrenInternal(f: Expression, s: Expression,
-      t: Expression): MinhashBands = copy(hs = f, k = s, rows = t)
-}
-
-/** Static core of [[RepStats]] — every per-document repetition signal of
+/** One-pass per-document repetition stats: `graft_rep_stats(text)` →
+  * struct(n_words, n_distinct, top_c, n_bigrams, top_bg_c). Null text →
+  * null row (split's propagation). Every per-document repetition signal of
   * q_repetition_stats in ONE pass over the normalized text (r15, guide
   * §2.3/§1.2): word total/distinct/top-count and bigram total/top-count.
   * Replaces two corpus explodes + two (doc, gram) hash aggregates + one
@@ -2080,33 +1638,11 @@ object RepStatsKernel {
   }
 }
 
-/** One-pass per-document repetition stats (see [[RepStatsKernel]]):
-  * `graft_rep_stats(text)` → struct(n_words, n_distinct, top_c,
-  * n_bigrams, top_bg_c). Null text → null row (split's propagation).
-  */
-case class RepStats(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes {
-
-  override def inputTypes = Seq(StringType)
-  override def dataType: DataType = StructType(Seq(
-    StructField("n_words", LongType, nullable = false),
-    StructField("n_distinct", LongType, nullable = false),
-    StructField("top_c", LongType, nullable = false),
-    StructField("n_bigrams", LongType, nullable = true),
-    StructField("top_bg_c", LongType, nullable = true)))
-
-  override protected def nullSafeEval(input: Any): Any =
-    RepStatsKernel.eval(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.RepStatsKernel.eval($c);")
-
-  override protected def withNewChildInternal(newChild: Expression): RepStats =
-    copy(child = newChild)
-}
-
-/** Static core of [[CoverMask]] — the covered-position accounting and
+/** One-pass covered-position accounting + corpus rebuild:
+  * `graft_cover_mask(text, ps, n)` → struct(n_tokens, n_covered, clean).
+  * `ps` must be the ASCENDING matched-gram start positions (pass an empty
+  * array, not null, for documents with no matches); n must be foldable.
+  * The covered-position accounting and
   * corpus rebuild of q_substring_dedup in ONE pass over the normalized
   * text plus the document's SORTED matched-gram start positions (r15,
   * guide §2.3 — ship intervals, not positions). Replaces: the ×n
@@ -2184,126 +1720,186 @@ object CoverMaskKernel {
   }
 }
 
-/** One-pass covered-position accounting + corpus rebuild (see
-  * [[CoverMaskKernel]]): `graft_cover_mask(text, ps, n)` →
-  * struct(n_tokens, n_covered, clean). `ps` must be the ASCENDING
-  * matched-gram start positions (pass an empty array, not null, for
-  * documents with no matches); n must be foldable.
+/** One row of the kernel table: everything Catalyst needs to type-check
+  * a graft function and replace it with a static call into its core.
+  *
+  * @param args        (name, expected type) per argument; also the arity
+  * @param core        the object whose `method` runs per row
+  * @param returnsNull the core may return null (boxed, for a primitive
+  *                    result) on non-null arguments; otherwise a row is
+  *                    null exactly when an argument is
+  * @param accepts     further types an argument accepts as is (no
+  *                    implicit cast)
+  * @param foldable    arguments that must be foldable, checked at analysis
+  * @param fold        the core's arguments from the checked children:
+  *                    folds a foldable model once into its holder literal
+  *                    and validates foldable values
   */
-case class CoverMask(text: Expression, ps: Expression, n: Expression)
-    extends TernaryExpression with ExpectsInputTypes {
+final case class KernelDef(
+    name: String,
+    args: Seq[(String, DataType)],
+    dataType: DataType,
+    core: Class[_],
+    method: String,
+    returnsNull: Boolean = false,
+    accepts: Map[String, Seq[DataType]] = Map.empty,
+    foldable: Set[String] = Set.empty,
+    fold: Seq[Expression] => Seq[Expression] = identity)
 
-  require(n.foldable, "graft_cover_mask: n must be foldable")
+/** The one Catalyst wrapper of every graft kernel. A call type-checks
+  * against its [[KernelDef]] row — input types, foldable arguments — and
+  * prints, and names its unaliased column, by its SQL name; before
+  * optimization it is replaced by a `StaticInvoke` of the row's core,
+  * which runs on both eval paths and is a single static call in
+  * generated code. A NULL argument yields NULL without calling the core.
+  */
+case class GraftKernel(name: String, children: Seq[Expression])
+    extends RuntimeReplaceable with ExpectsInputTypes {
 
-  override def first: Expression = text
-  override def second: Expression = ps
-  override def third: Expression = n
-  override def inputTypes = Seq(StringType, ArrayType(IntegerType), IntegerType)
-  override def dataType: DataType = StructType(Seq(
-    StructField("n_tokens", LongType, nullable = false),
-    StructField("n_covered", LongType, nullable = false),
-    StructField("clean", StringType, nullable = false)))
+  private lazy val kernel = GraftFunctions.byName(name)
 
-  override protected def nullSafeEval(tt: Any, pp: Any, nn: Any): Any =
-    CoverMaskKernel.eval(tt.asInstanceOf[UTF8String],
-      pp.asInstanceOf[ArrayData],
-      nn.asInstanceOf[Int])
+  override def prettyName: String = name
+  override def inputTypes =
+    kernel.args.map { case (a, t) => GraftSqlBridge.anyOf(t +: kernel.accepts.getOrElse(a, Nil)) }
+  override def dataType: DataType = kernel.dataType
+  override def nullable: Boolean = kernel.returnsNull || children.exists(_.nullable)
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (tt, pp, nn) =>
-      s"${ev.value} = graft.functions.CoverMaskKernel.eval($tt, $pp, $nn);")
+  override def checkInputDataTypes(): TypeCheckResult = super.checkInputDataTypes() match {
+    case TypeCheckSuccess =>
+      kernel.args.map(_._1).zip(children).collectFirst {
+        case (arg, c) if kernel.foldable(arg) && !c.foldable =>
+          DataTypeMismatch("NON_FOLDABLE_INPUT", Map("inputName" -> s"`$arg`",
+            "inputType" -> s""""${c.dataType.sql}"""", "inputExpr" -> s""""${c.sql}""""))
+      }.getOrElse(TypeCheckSuccess)
+    case failure => failure
+  }
 
-  override protected def withNewChildrenInternal(f: Expression, s: Expression,
-      t: Expression): CoverMask = copy(text = f, ps = s, n = t)
+  override lazy val replacement: Expression = StaticInvoke(kernel.core,
+    kernel.dataType, kernel.method, kernel.fold(children),
+    returnNullable = kernel.returnsNull)
+
+  override protected def stringArgs: Iterator[Any] = children.iterator
+  override protected def withNewChildrenInternal(
+      newChildren: IndexedSeq[Expression]): GraftKernel = copy(children = newChildren)
 }
 
-/** Runtime registration of graft's native expressions so operators can use
-  * them via `call_function` on any already-built session (Verify, Bench,
-  * specs). Idempotent — re-registering replaces the same builder.
+/** graft's native function surface: the kernel table, the by-name
+  * builder, and runtime registration so operators can use the kernels via
+  * `call_function` on any already-built session (Verify, Bench, specs).
+  * Registration is idempotent — re-registering replaces the same builder.
   * [[graft.plans.GraftExtensions]] consumes the same [[GraftFunctions.all]]
   * list for the session-build path, so the two cannot drift.
   */
 object GraftFunctions {
-  private def info(name: String, clazz: Class[_]) =
-    new ExpressionInfo(clazz.getCanonicalName, name)
-
-  /** Builder with arity validation — a wrong-arity SQL call must surface
-    * as a clear analysis-time error naming the function, not an opaque
-    * IndexOutOfBoundsException from inside the registry.
-    */
-  private def arity(name: String, n: Int)(
-      build: Seq[Expression] => Expression): Seq[Expression] => Expression =
-    children => {
-      if (children.size != n) throw new org.apache.spark.sql.AnalysisException(
-        errorClass = "WRONG_NUM_ARGS.WITHOUT_SUGGESTION",
-        messageParameters = Map(
-          "functionName" -> name, "expectedNum" -> n.toString,
-          "actualNum" -> children.size.toString, "docroot" -> ""))
-      build(children)
-    }
+  private val LongVec = ArrayType(LongType)
+  private val LongMatrix = ArrayType(LongVec)
+  private val Longs = ArrayType(LongType, containsNull = false)
+  private val Ints = ArrayType(IntegerType, containsNull = false)
+  private def struct(fields: (String, DataType)*): StructType =
+    StructType(fields.map { case (n, t) => StructField(n, t, nullable = false) })
 
   /** The single source of truth for graft's native function surface. */
+  val table: Seq[KernelDef] = Seq(
+    KernelDef("graft_dot_q", Seq("x" -> LongVec, "y" -> LongVec), LongType,
+      VecKernel.getClass, "dot", returnsNull = true),
+    KernelDef("graft_rolling_hash", Seq("text" -> StringType), LongType,
+      RollingHashKernel.getClass, "eval"),
+    KernelDef("graft_simhash64", Seq("hashes" -> LongVec), LongType,
+      VecKernel.getClass, "simHash64"),
+    KernelDef("graft_matvec_q", Seq("model" -> LongMatrix, "vec" -> LongVec), Longs,
+      VecKernel.getClass, "matVec", returnsNull = true, foldable = Set("model"),
+      fold = c => Seq(Folded.literal(VecKernel.foldMatrix(c(0), "graft_matvec_q")), c(1))),
+    KernelDef("graft_bloom_contains",
+      Seq("bloom" -> BinaryType, "item" -> StringType), BooleanType,
+      BloomKernel.getClass, "eval", accepts = Map("item" -> Seq(LongType)),
+      foldable = Set("bloom"),
+      fold = c => Seq(BloomKernel.foldFilter(c(0)), c(1))),
+    KernelDef("graft_repeated_run", Seq("text" -> StringType), BooleanType,
+      RepeatedRunKernel.getClass, "eval"),
+    KernelDef("graft_cent_topk",
+      Seq("model" -> LongMatrix, "vec" -> LongVec, "k" -> IntegerType), Ints,
+      VecKernel.getClass, "centTopK", returnsNull = true, foldable = Set("model", "k"),
+      fold = { c =>
+        val k = c(2).eval()
+        require(k != null && k.asInstanceOf[Int] >= 1, s"graft_cent_topk: k must be >= 1, got $k")
+        val m = VecKernel.foldMatrix(c(0), "graft_cent_topk")
+        Seq(Folded.literal(m), Folded.literal(if (m == null) null else VecKernel.norms(m)),
+          c(1), c(2))
+      }),
+    KernelDef("graft_pq_codes", Seq("cents" -> ArrayType(LongMatrix), "vec" -> LongVec),
+      struct("codes" -> Ints, "n2pq" -> LongType),
+      VecKernel.getClass, "pqCodes", returnsNull = true, foldable = Set("cents"),
+      fold = { c =>
+        val b = VecKernel.foldCodebook(c(0))
+        Seq(Folded.literal(b), Folded.literal(if (b == null) null else b.map(VecKernel.norms)),
+          c(1))
+      }),
+    KernelDef("graft_token_counts", Seq("text" -> StringType),
+      struct("n_ws" -> IntegerType, "n_bpe" -> IntegerType, "n_punct" -> IntegerType,
+        "n_upper" -> IntegerType),
+      TokenCountsKernel.getClass, "eval"),
+    KernelDef("graft_stop_counts",
+      Seq("lowered" -> StringType, "lists" -> ArrayType(ArrayType(StringType))), Ints,
+      StopCountsKernel.getClass, "eval", returnsNull = true, foldable = Set("lists"),
+      fold = c => Seq(c(0), Folded.literal(StopCountsKernel.foldWords(c(1))))),
+    KernelDef("graft_cjk", Seq("text" -> StringType), BooleanType,
+      CjkKernel.getClass, "eval"),
+    KernelDef("graft_pii_counts", Seq("text" -> StringType),
+      struct("n_email" -> IntegerType, "n_ipv4" -> IntegerType, "n_phone" -> IntegerType,
+        "n_idrun" -> IntegerType, "n_pii" -> IntegerType, "n_redactions" -> IntegerType,
+        "redact_delta" -> LongType),
+      PiiKernel.getClass, "counts"),
+    KernelDef("graft_pii_redact", Seq("text" -> StringType),
+      struct("clean" -> StringType, "n_redactions" -> IntegerType),
+      PiiKernel.getClass, "redact"),
+    KernelDef("graft_block_counts",
+      Seq("text" -> StringType, "words" -> ArrayType(StringType)),
+      struct("n_tok" -> IntegerType, "n_blocked" -> IntegerType),
+      BlockCountsKernel.getClass, "eval", returnsNull = true, foldable = Set("words"),
+      fold = c => Seq(c(0), Folded.literal(BlockCountsKernel.foldWords(c(1))))),
+    KernelDef("graft_norm", Seq("text" -> StringType), StringType,
+      NormKernel.getClass, "norm"),
+    KernelDef("graft_json_int", Seq("json" -> StringType, "key" -> StringType), IntegerType,
+      JsonIntKernel.getClass, "eval", returnsNull = true, foldable = Set("key")),
+    KernelDef("graft_gram_hashes",
+      Seq("text" -> StringType, "n" -> IntegerType, "keep_empty" -> BooleanType), Longs,
+      GramHashKernel.getClass, "hashes", foldable = Set("n", "keep_empty")),
+    KernelDef("graft_minhash_bands",
+      Seq("hs" -> LongVec, "k" -> IntegerType, "rows" -> IntegerType), Longs,
+      MinhashBandKernel.getClass, "bands", foldable = Set("k", "rows")),
+    KernelDef("graft_rep_stats", Seq("text" -> StringType),
+      StructType(struct("n_words" -> LongType, "n_distinct" -> LongType, "top_c" -> LongType) ++
+        Seq("n_bigrams", "top_bg_c").map(StructField(_, LongType, nullable = true))),
+      RepStatsKernel.getClass, "eval"),
+    KernelDef("graft_cover_mask",
+      Seq("text" -> StringType, "ps" -> ArrayType(IntegerType), "n" -> IntegerType),
+      struct("n_tokens" -> LongType, "n_covered" -> LongType, "clean" -> StringType),
+      CoverMaskKernel.getClass, "eval", foldable = Set("n")))
+
+  lazy val byName: Map[String, KernelDef] = table.map(k => k.name -> k).toMap
+
+  /** The by-name builder, with arity validation — a wrong-arity call must
+    * surface as a clear analysis-time error naming the function, not an
+    * opaque IndexOutOfBoundsException from inside the registry.
+    */
+  def kernel(name: String, args: Expression*): GraftKernel = {
+    val n = byName(name).args.size
+    if (args.size != n) throw new org.apache.spark.sql.AnalysisException(
+      errorClass = "WRONG_NUM_ARGS.WITHOUT_SUGGESTION",
+      messageParameters = Map(
+        "functionName" -> name, "expectedNum" -> n.toString,
+        "actualNum" -> args.size.toString, "docroot" -> ""))
+    GraftKernel(name, args.toIndexedSeq)
+  }
+
+  /** [[kernel]] over columns, for operators that need no registry handle. */
+  def call(name: String, args: Column*): Column =
+    GraftSqlBridge.column(kernel(name, args.map(GraftSqlBridge.expression): _*))
+
   val all: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] =
-    Seq(
-      (FunctionIdentifier("graft_dot_q"), info("graft_dot_q", classOf[DotQ]),
-        arity("graft_dot_q", 2)(c => DotQ(c(0), c(1)))),
-      (FunctionIdentifier("graft_rolling_hash"),
-        info("graft_rolling_hash", classOf[RollingHash]),
-        arity("graft_rolling_hash", 1)(c => RollingHash(c.head))),
-      (FunctionIdentifier("graft_simhash64"),
-        info("graft_simhash64", classOf[SimHash64]),
-        arity("graft_simhash64", 1)(c => SimHash64(c.head))),
-      (FunctionIdentifier("graft_matvec_q"),
-        info("graft_matvec_q", classOf[MatVecQ]),
-        arity("graft_matvec_q", 2)(c => MatVecQ(c(0), c(1)))),
-      (FunctionIdentifier("graft_bloom_contains"),
-        info("graft_bloom_contains", classOf[BloomContains]),
-        arity("graft_bloom_contains", 2)(c => BloomContains(c(0), c(1)))),
-      (FunctionIdentifier("graft_repeated_run"),
-        info("graft_repeated_run", classOf[RepeatedRun]),
-        arity("graft_repeated_run", 1)(c => RepeatedRun(c.head))),
-      (FunctionIdentifier("graft_cent_topk"),
-        info("graft_cent_topk", classOf[CentTopKQ]),
-        arity("graft_cent_topk", 3)(c => CentTopKQ(c(0), c(1), c(2)))),
-      (FunctionIdentifier("graft_pq_codes"),
-        info("graft_pq_codes", classOf[PqCodesQ]),
-        arity("graft_pq_codes", 2)(c => PqCodesQ(c(0), c(1)))),
-      (FunctionIdentifier("graft_token_counts"),
-        info("graft_token_counts", classOf[TokenCounts]),
-        arity("graft_token_counts", 1)(c => TokenCounts(c.head))),
-      (FunctionIdentifier("graft_stop_counts"),
-        info("graft_stop_counts", classOf[StopCounts]),
-        arity("graft_stop_counts", 2)(c => StopCounts(c(0), c(1)))),
-      (FunctionIdentifier("graft_cjk"),
-        info("graft_cjk", classOf[CjkProbe]),
-        arity("graft_cjk", 1)(c => CjkProbe(c.head))),
-      (FunctionIdentifier("graft_pii_counts"),
-        info("graft_pii_counts", classOf[PiiCounts]),
-        arity("graft_pii_counts", 1)(c => PiiCounts(c.head))),
-      (FunctionIdentifier("graft_pii_redact"),
-        info("graft_pii_redact", classOf[PiiRedact]),
-        arity("graft_pii_redact", 1)(c => PiiRedact(c.head))),
-      (FunctionIdentifier("graft_block_counts"),
-        info("graft_block_counts", classOf[BlockCounts]),
-        arity("graft_block_counts", 2)(c => BlockCounts(c(0), c(1)))),
-      (FunctionIdentifier("graft_norm"),
-        info("graft_norm", classOf[NormText]),
-        arity("graft_norm", 1)(c => NormText(c.head))),
-      (FunctionIdentifier("graft_json_int"),
-        info("graft_json_int", classOf[JsonIntField]),
-        arity("graft_json_int", 2)(c => JsonIntField(c(0), c(1)))),
-      (FunctionIdentifier("graft_gram_hashes"),
-        info("graft_gram_hashes", classOf[GramHashes]),
-        arity("graft_gram_hashes", 3)(c => GramHashes(c(0), c(1), c(2)))),
-      (FunctionIdentifier("graft_minhash_bands"),
-        info("graft_minhash_bands", classOf[MinhashBands]),
-        arity("graft_minhash_bands", 3)(c => MinhashBands(c(0), c(1), c(2)))),
-      (FunctionIdentifier("graft_rep_stats"),
-        info("graft_rep_stats", classOf[RepStats]),
-        arity("graft_rep_stats", 1)(c => RepStats(c.head))),
-      (FunctionIdentifier("graft_cover_mask"),
-        info("graft_cover_mask", classOf[CoverMask]),
-        arity("graft_cover_mask", 3)(c => CoverMask(c(0), c(1), c(2)))))
+    table.map(k => (FunctionIdentifier(k.name),
+      new ExpressionInfo(classOf[GraftKernel].getCanonicalName, k.name),
+      (c: Seq[Expression]) => kernel(k.name, c: _*)))
 
   def register(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry

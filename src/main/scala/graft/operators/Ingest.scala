@@ -522,11 +522,7 @@ object Ingest {
     // integral-only typing, Jackson-defaults acceptance grammar — is
     // pinned payload-class-by-payload-class against the exact two-parse
     // form it replaces (JsonIntKernel spec + the crafted-lake props spec)
-    import org.apache.spark.sql.GraftSqlBridge
-    val k = GraftSqlBridge.column(graft.functions.JsonIntField(
-      GraftSqlBridge.expression(col("props")),
-      org.apache.spark.sql.catalyst.expressions.Literal.create("k",
-        org.apache.spark.sql.types.StringType)))
+    val k = graft.functions.GraftFunctions.call("graft_json_int", col("props"), lit("k"))
     Tables.events(s, d)
       .select(col("event_type"), k.as("k"))
       .groupBy("event_type")

@@ -505,10 +505,10 @@ object Profiling {
     * engines compute the identical backref-free enumerated-run language,
     * which is hash-exact. The ORACLE runs it as the alternation
     * `a{5,}|b{5,}|…`; the SPARK side runs the codegen'd
-    * [[graft.functions.RepeatedRun]] kernel — one O(len) byte scan with
+    * [[graft.functions.RepeatedRunKernel]] — one O(len) byte scan with
     * early exit, replacing the 87-branch alternation NFA per row the r3
     * promotion paid (~7× the pre-promotion scan). Both derive from ONE
-    * char-set definition (RepeatedRun.Alnum/Punct) so they cannot drift;
+    * char-set definition (RepeatedRunKernel.Alnum/Punct) so they cannot drift;
     * a spec pins kernel ≡ regex on crafted strings AND corpus-wide.
     * The DOCUMENTED narrowing vs the true backref: only the enumerated
     * characters are detected — a run of an unlisted character
@@ -516,12 +516,12 @@ object Profiling {
     * unflagged. The synthetic corpus itself contains no 5+ run at any SF.
     */
   private[graft] val RepeatRunPattern: String = {
-    import graft.functions.RepeatedRun
-    val alnum = RepeatedRun.Alnum.map(c => s"$c{${RepeatedRun.MinRun},}")
+    import graft.functions.RepeatedRunKernel
+    val alnum = RepeatedRunKernel.Alnum.map(c => s"$c{${RepeatedRunKernel.MinRun},}")
     // punctuation via single-char classes — identical semantics in Java
-    // regex and RE2 without per-engine escaping rules (see RepeatedRun.Punct
+    // regex and RE2 without per-engine escaping rules (see RepeatedRunKernel.Punct
     // for the exclusions)
-    val punct = RepeatedRun.Punct.map(c => s"[$c]{${RepeatedRun.MinRun},}")
+    val punct = RepeatedRunKernel.Punct.map(c => s"[$c]{${RepeatedRunKernel.MinRun},}")
     (alnum ++ punct).mkString("|")
   }
 

@@ -15,7 +15,7 @@ import org.apache.spark.sql.functions._
   * - Embedding ops are quantized to integer units (round(x·10⁴)) so every
   *   dot product is exact integer arithmetic — bit-identical to the DuckDB
   *   oracle at any parallelism — evaluated by the codegen'd
-  *   [[graft.functions.DotQ]] kernel (stays inside WholeStageCodegen).
+  *   [[graft.functions.VecKernel.dot]] kernel (stays inside WholeStageCodegen).
   * - The brute-force variants are guarded correctness baselines: neardup is
   *   blocked by the label column; top-k broadcasts a tiny query set and
   *   scans the corpus once.
@@ -430,11 +430,8 @@ object Similarity {
     * `size(w) >= 3` doc filter: grams ≥ 1 ⇔ split tokens ≥ 3.
     */
   private def shingleHashesOf(docs: DataFrame): DataFrame = {
-    import org.apache.spark.sql.GraftSqlBridge
-    import org.apache.spark.sql.catalyst.expressions.Literal
-    val hs = GraftSqlBridge.column(graft.functions.GramHashes(
-      GraftSqlBridge.expression(Text.norm(col("text"))),
-      Literal(3), Literal(true)))
+    val hs = GraftFunctions.call("graft_gram_hashes",
+      Text.norm(col("text")), lit(3), lit(true))
     docs
       .repartition(docs.sparkSession.sparkContext.defaultParallelism, col("doc_id"))
       .select(col("doc_id"), hs.as("hs"))
@@ -455,11 +452,8 @@ object Similarity {
     // calls the same XXH64 static functions in the same fold order, so
     // every band hash is bit-identical (build_minhash_bands sf10:
     // 19.5 → 4.0 s). Kernel INLINE in the generator (CLAUDE.md rule).
-    import org.apache.spark.sql.GraftSqlBridge
-    import org.apache.spark.sql.catalyst.expressions.Literal
-    val bands = GraftSqlBridge.column(graft.functions.MinhashBands(
-      GraftSqlBridge.expression(col("hs")),
-      Literal(MinhashK), Literal(BandRows)))
+    val bands = GraftFunctions.call("graft_minhash_bands",
+      col("hs"), lit(MinhashK), lit(BandRows))
     sh.select(col("doc_id"), posexplode(bands).as(Seq("band", "bhash")))
   }
 
@@ -580,7 +574,7 @@ object Similarity {
     * and exact Hamming ≤ 3 via bit_count(xor) within buckets.
     *
     * The fingerprint is ONE per-row codegen'd expression
-    * ([[graft.functions.SimHash64]]) over the doc's distinct token hashes
+    * ([[graft.functions.VecKernel.simHash64]]) over the doc's distinct token hashes
     * — no token explode, no distinct shuffle, no 64-column aggregate (the
     * previous formulation shuffled twice before banding). The signature
     * stage is embarrassingly parallel; only the band join shuffles. The
@@ -1248,7 +1242,7 @@ object Similarity {
     * distance, cid) — the r12 bounded-selection replacement for the
     * centDists `transform` + `array_min`/`slice(array_sort(...))` forms
     * that every argmin/probe site used through r11. Bit-identical by
-    * construction — [[graft.functions.CentTopKQ]] ranks
+    * construction — [[graft.functions.VecKernel.centTopK]] ranks
     * `‖c‖² − 2·⟨qv, c⟩`, the same exact-long distance minus the per-row
     * constant `‖qv‖²`, with the same cid tie-break — and ~K× cheaper in
     * constants: higher-order functions evaluate their lambda INTERPRETED
@@ -1260,7 +1254,7 @@ object Similarity {
     * than the transform form because Spark does not hoist loop-invariant
     * subtrees out of lambda bodies — the dedicated expression sidesteps
     * lambdas entirely.) Model rows ship once as a codegen reference
-    * object (the [[graft.functions.MatVecQ]] typedlit rule); cid = row index,
+    * object (the [[graft.functions.VecKernel.matVec]] typedlit rule); cid = row index,
     * which the model array satisfies by construction (asserted here — a
     * permuted model would silently mis-assign).
     */
@@ -1613,7 +1607,7 @@ object Similarity {
           }
         // one Lloyd pass, all blocks in one job: nearest-seed code per
         // (vector, block) — all PqBlocks argmins in one codegen'd
-        // kernel call ([[graft.functions.PqCodesQ]]) — then exact
+        // kernel call ([[graft.functions.VecKernel.pqCodes]]) — then exact
         // per-position integer means. The posexplode generator child
         // stays the INLINE slice transform (the CLAUDE.md generator
         // rule); the codes array rides alongside as a plain projection
@@ -1656,7 +1650,7 @@ object Similarity {
     SessionCache.persisted(s, d, "pq_codes") {
       GraftFunctions.register(s)
       // one codegen'd kernel per row: all PqBlocks argmins + the exact
-      // reconstruction norm ([[graft.functions.PqCodesQ]]) — replaces a
+      // reconstruction norm ([[graft.functions.VecKernel.pqCodes]]) — replaces a
       // nested transform/array_min whose lambdas ran interpreted per
       // (block × codeword) plus a second interpreted aggregate for n2pq
       quantized(s, d).filter(col("qv").isNotNull)

@@ -10,20 +10,15 @@ import org.apache.spark.sql.functions._
 private[graft] object Text {
 
   /** Word count matching Python's str.split() (empty → 0) — the
-    * [[graft.functions.TokenCounts]] byte-scan kernel's n_ws field
+    * [[graft.functions.TokenCountsKernel]] byte-scan kernel's n_ws field
     * (spec-pinned ≡ the r11-and-earlier
     * `when(trim(c) === "", 0).otherwise(size(split(trim(c), ws+)))`
     * regex form, which materialized every split token into an array
     * only to take its size). Built as a direct Catalyst expression so
     * callers need no function-registry session handle.
     */
-  def wordCount(c: Column): Column = {
-    import org.apache.spark.sql.GraftSqlBridge
-    GraftSqlBridge.column(
-      org.apache.spark.sql.catalyst.expressions.GetStructField(
-        graft.functions.TokenCounts(GraftSqlBridge.expression(c)),
-        0, Some("n_ws")))
-  }
+  def wordCount(c: Column): Column =
+    graft.functions.GraftFunctions.call("graft_token_counts", c).getField("n_ws")
 
   private val AsciiUpper = "ABCDEFGHIJKLMNOPQRSTUVWXYZ"
   private val AsciiLower = "abcdefghijklmnopqrstuvwxyz"
@@ -50,9 +45,7 @@ private[graft] object Text {
     // regexp_replace(translate(trim(c), A-Z, a-z), '[ \t\n\r\f]+', ' '):
     // byte-identical on valid UTF-8 (equivalence argument + spec pin at
     // the kernel), built directly so callers need no registry handle
-    import org.apache.spark.sql.GraftSqlBridge
-    GraftSqlBridge.column(
-      graft.functions.NormText(GraftSqlBridge.expression(c)))
+    graft.functions.GraftFunctions.call("graft_norm", c)
   }
 
   /** The pre-kernel regex spelling of [[norm]] (spec use: the kernel's

@@ -10,8 +10,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 /** Text-analysis operators for the LLM-training-data pipeline (SURVEY §2.5):
   * exact dedup, language ID, quality scoring, token counting, and document
   * fingerprinting. All hot-path expressions are built-in `functions._`
-  * (codegen'd); the rolling-hash fingerprint is a native Catalyst
-  * Expression ([[graft.functions.RollingHash]]) — no UDFs anywhere.
+  * (codegen'd); the rolling-hash fingerprint is a native graft kernel
+  * ([[graft.functions.RollingHashKernel]]) — no UDFs anywhere.
   *
   * The reference corpus analyzers (src/analysis/data_quality_analyzer.py,
   * deep_analysis.py) motivate the flags/ratios; the dedup/fingerprint/
@@ -646,7 +646,7 @@ object TextOps {
   }
 
   /** Document fingerprinting: md5 of the normalized text plus the native
-    * codegen'd polynomial rolling hash ([[graft.functions.RollingHash]])
+    * codegen'd polynomial rolling hash ([[graft.functions.RollingHashKernel]])
     * over the ASCII-projected text; the oracle mirrors the hash with a
     * list_reduce over ascii codes.
     */
@@ -816,7 +816,7 @@ object TextOps {
   /** Eval-doc-count threshold for the bloom tier: above the broadcast
     * cutoff but below this, a serialized bloom over the eval vocabulary
     * (~1.2 bytes/n-gram at 1% fp — ~50× smaller than the strings) rides
-    * the plan as a literal into [[graft.functions.BloomContains]] and
+    * the plan as a literal into [[graft.functions.BloomKernel]] and
     * prunes ~99% of train n-grams MAP-SIDE before the exact sort-merge
     * semi-join; only bloom survivors (true hits + ~1% fp) ever shuffle.
     * Sizing arithmetic behind the cutoff: the sketch is sized at 512
@@ -2015,12 +2015,8 @@ object TextOps {
     * [[graft.functions.GramHashKernel]]) — built directly, no registry
     * handle needed.
     */
-  private def gramHashes(text: Column, n: Int): Column = {
-    import org.apache.spark.sql.GraftSqlBridge
-    import org.apache.spark.sql.catalyst.expressions.Literal
-    GraftSqlBridge.column(graft.functions.GramHashes(
-      GraftSqlBridge.expression(text), Literal(n), Literal(false)))
-  }
+  private def gramHashes(text: Column, n: Int): Column =
+    GraftFunctions.call("graft_gram_hashes", text, lit(n), lit(false))
 
   /** Bench hook: materialize the dup-span gram counts for (s, d) so the
     * timed q_dup_spans runs measure the query, with the shared build cost

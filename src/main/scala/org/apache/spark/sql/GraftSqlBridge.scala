@@ -21,4 +21,10 @@ object GraftSqlBridge {
     classic.ExpressionUtils.column(e)
   def expression(c: Column): org.apache.spark.sql.catalyst.expressions.Expression =
     classic.ExpressionUtils.expression(c)
+
+  /** An expected input type accepting any of `ts` as is, with no implicit
+    * cast (`AbstractDataType` and `TypeCollection` are `private[sql]`).
+    */
+  def anyOf(ts: Seq[types.DataType]): types.AbstractDataType =
+    if (ts.size == 1) ts.head else types.TypeCollection(ts: _*)
 }

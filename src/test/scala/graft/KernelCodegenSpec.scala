@@ -12,16 +12,17 @@ import org.apache.spark.unsafe.types.UTF8String
   * 5): Spark compiles a kernel's generated code with Janino at runtime,
   * and a malformed code string (the `||`-margin trap) only produces a
   * WARN before falling back to interpreted eval — tests stay green while
-  * the kernel runs 10× slow. This spec Janino-compiles an UnsafeProjection
-  * over ONE exemplar of every registered graft function (bypassing
-  * `CodeGeneratorWithInterpretedFallback`, so a compile error FAILS
-  * instead of falling back), then evaluates it on a sample row and an
-  * all-null row so the compiled path actually executes and must match
-  * interpreted eval. It also pins the kernel convention: each kernel's
-  * own generated fragment is one static call into a Scala core in
-  * `graft.functions` — no loops in generated Java, no `|`-leading lines.
-  * A kernel added to GraftFunctions without an exemplar here fails the
-  * coverage test by name.
+  * the kernel runs 10× slow. This spec builds ONE exemplar of every
+  * registered graft function by name and Janino-compiles an
+  * UnsafeProjection over its replacement — the `StaticInvoke` a query
+  * runs — bypassing `CodeGeneratorWithInterpretedFallback`, so a compile
+  * error FAILS instead of falling back; then it evaluates it on a sample
+  * row and an all-null row so the compiled path actually executes and
+  * must match interpreted eval. It also pins the kernel convention: each
+  * replacement's generated fragment is one static call into a Scala core
+  * in `graft.functions` — no loops in generated Java, no `|`-leading
+  * lines. A kernel added to the GraftFunctions table without an exemplar
+  * here fails the coverage test by name.
   */
 class KernelCodegenSpec extends org.scalatest.funsuite.AnyFunSuite {
 
@@ -45,44 +46,49 @@ class KernelCodegenSpec extends org.scalatest.funsuite.AnyFunSuite {
     Literal.create(bos.toByteArray, BinaryType)
   }
 
-  /** (input row types, exemplar) per registered function name. */
-  private val exemplars: Map[String, (Seq[Any], Expression)] = {
+  /** (input row, arguments) per registered function name. */
+  private val exemplarArgs: Map[String, (Seq[Any], Seq[Expression])] = {
     def utf8(s: String) = UTF8String.fromString(s)
     def arr(xs: Long*) = org.apache.spark.sql.catalyst.util.ArrayData
       .toArrayData(xs.toArray)
     val text = Seq[Any](utf8("the quick brown fox, id 4111111111111111"))
     Map(
       "graft_dot_q" -> ((Seq(arr(1L, 2L, 3L), arr(4L, 5L, 6L)),
-        DotQ(vecL, ref(ArrayType(LongType), 1)))),
-      "graft_rolling_hash" -> ((text, RollingHash(str))),
-      "graft_simhash64" -> ((Seq(arr(1L, 2L, 3L)), SimHash64(vecL))),
-      "graft_matvec_q" -> ((Seq(arr(1L, 2L, 3L)), MatVecQ(matLit, vecL))),
-      "graft_bloom_contains" -> ((text, BloomContains(bloomLit, str))),
-      "graft_repeated_run" -> ((text, RepeatedRun(str))),
-      "graft_cent_topk" -> ((Seq(arr(1L, 2L, 3L)),
-        CentTopKQ(matLit, vecL, Literal(2)))),
-      "graft_pq_codes" -> ((Seq(arr(1L, 2L, 3L, 4L)), PqCodesQ(bookLit, vecL))),
-      "graft_token_counts" -> ((text, TokenCounts(str))),
-      "graft_stop_counts" -> ((text, StopCounts(str, listsLit))),
-      "graft_cjk" -> ((text, CjkProbe(str))),
-      "graft_pii_counts" -> ((text, PiiCounts(str))),
-      "graft_pii_redact" -> ((text, PiiRedact(str))),
-      "graft_block_counts" -> ((text, BlockCounts(str,
+        Seq(vecL, ref(ArrayType(LongType), 1)))),
+      "graft_rolling_hash" -> ((text, Seq(str))),
+      "graft_simhash64" -> ((Seq(arr(1L, 2L, 3L)), Seq(vecL))),
+      "graft_matvec_q" -> ((Seq(arr(1L, 2L, 3L)), Seq(matLit, vecL))),
+      "graft_bloom_contains" -> ((text, Seq(bloomLit, str))),
+      "graft_repeated_run" -> ((text, Seq(str))),
+      "graft_cent_topk" -> ((Seq(arr(1L, 2L, 3L)), Seq(matLit, vecL, Literal(2)))),
+      "graft_pq_codes" -> ((Seq(arr(1L, 2L, 3L, 4L)), Seq(bookLit, vecL))),
+      "graft_token_counts" -> ((text, Seq(str))),
+      "graft_stop_counts" -> ((text, Seq(str, listsLit))),
+      "graft_cjk" -> ((text, Seq(str))),
+      "graft_pii_counts" -> ((text, Seq(str))),
+      "graft_pii_redact" -> ((text, Seq(str))),
+      "graft_block_counts" -> ((text, Seq(str,
         Literal.create(Seq("slow", "big", "merge"), ArrayType(StringType))))),
-      "graft_norm" -> ((Seq[Any](utf8("  The\tQuick \n Brown  ")),
-        NormText(str))),
+      "graft_norm" -> ((Seq[Any](utf8("  The\tQuick \n Brown  ")), Seq(str))),
       "graft_json_int" -> ((Seq[Any](utf8("""{"a": [1, {"x": 2}], "k": 37}""")),
-        JsonIntField(str, Literal.create("k", StringType)))),
-      "graft_gram_hashes" -> ((text,
-        GramHashes(str, Literal(3), Literal(false)))),
+        Seq(str, Literal.create("k", StringType)))),
+      "graft_gram_hashes" -> ((text, Seq(str, Literal(3), Literal(false)))),
       "graft_minhash_bands" -> ((Seq(arr(11L, 22L, 33L)),
-        MinhashBands(vecL, Literal(32), Literal(4)))),
-      "graft_rep_stats" -> ((text, RepStats(str))),
+        Seq(vecL, Literal(32), Literal(4)))),
+      "graft_rep_stats" -> ((text, Seq(str))),
       "graft_cover_mask" -> ((Seq[Any](utf8("a b c d e f g"),
         org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(Array(1)),
         null),
-        CoverMask(str, ref(ArrayType(IntegerType), 1), Literal(5)))))
+        Seq(str, ref(ArrayType(IntegerType), 1), Literal(5)))))
   }
+
+  /** (input row, the kernel's replacement) per registered function name:
+    * the static call both eval paths run.
+    */
+  private val exemplars: Map[String, (Seq[Any], Expression)] =
+    exemplarArgs.map { case (name, (input, args)) =>
+      name -> ((input, GraftFunctions.kernel(name, args: _*).replacement))
+    }
 
   test("exemplar list covers every registered graft function") {
     val registered = GraftFunctions.all.map(_._1.funcName).toSet
@@ -112,12 +118,15 @@ class KernelCodegenSpec extends org.scalatest.funsuite.AnyFunSuite {
     }
   }
 
-  /** The kernel's own fragment (children are bound references and
-    * literals) breaks the convention: no static core call, a loop in
-    * generated Java, or a line the Block formatter would margin-strip.
+  /** The kernel's own code (children are bound references and literals)
+    * breaks the convention: no static core call, a loop in generated
+    * Java, or a line the Block formatter would margin-strip. Its own code
+    * is the fragment plus the helper functions it adds — a call with many
+    * arguments evaluates them in a split-out function.
     */
   private def conventionBreaks(e: Expression): Seq[String] = {
-    val code = e.genCode(new CodegenContext).code.code
+    val ctx = new CodegenContext
+    val code = e.genCode(ctx).code.code + ctx.declareAddedFunctions()
     Seq(
       "no graft.functions static call" ->
         """graft\.functions\.\w+\.\w+\(""".r.findFirstIn(code).isEmpty,

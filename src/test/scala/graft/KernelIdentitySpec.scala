@@ -1,7 +1,7 @@
 package graft
 
-import org.apache.spark.sql.{GraftSqlBridge, Row}
-import org.apache.spark.sql.catalyst.expressions.Literal
+import graft.functions.GraftFunctions
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 
 /** r15 kernel-identity pins — each new kernel against the exact Spark
@@ -14,8 +14,7 @@ class KernelIdentitySpec extends SparkSpec {
   import spark.implicits._
 
   private def bandsKernel(c: org.apache.spark.sql.Column) =
-    GraftSqlBridge.column(graft.functions.MinhashBands(
-      GraftSqlBridge.expression(c), Literal(32), Literal(4)))
+    GraftFunctions.call("graft_minhash_bands", c, lit(32), lit(4))
 
   private val bandsOld =
     "transform(sequence(0, 7), b -> xxhash64(sig[4*b], sig[4*b+1], sig[4*b+2], sig[4*b+3]))"
@@ -26,8 +25,8 @@ class KernelIdentitySpec extends SparkSpec {
     val docs = Tables.documents(spark, sfDir).filter(col("text").isNotNull)
     val hs = operators.Text.norm(col("text"))
     // the pipeline's own shingle-hash arrays (keepEmpty mode)
-    val withHs = docs.select(GraftSqlBridge.column(graft.functions.GramHashes(
-      GraftSqlBridge.expression(hs), Literal(3), Literal(true))).as("hs"))
+    val withHs = docs.select(
+      GraftFunctions.call("graft_gram_hashes", hs, lit(3), lit(true)).as("hs"))
       .filter(size(col("hs")) > 0)
     val both = withHs
       .withColumn("sig", expr(sigOld))
@@ -72,8 +71,7 @@ class KernelIdentitySpec extends SparkSpec {
         (r.getLong(1), r.getLong(2), r.getLong(3),
           if (r.isNullAt(4)) null else r.getLong(4),
           if (r.isNullAt(5)) null else r.getLong(5))).toMap
-    def gh(n: Int) = GraftSqlBridge.column(graft.functions.GramHashes(
-      GraftSqlBridge.expression(norm), Literal(n), Literal(false)))
+    def gh(n: Int) = GraftFunctions.call("graft_gram_hashes", norm, lit(n), lit(false))
     val wc = df.select(col("id"), explode(gh(1)).as("g"))
       .groupBy("id", "g").agg(count(lit(1)).as("c"))
       .groupBy("id").agg(sum("c").as("nw"), count(lit(1)).as("nd"),

@@ -18,22 +18,23 @@ import org.scalacheck.util.Pretty
 
 /** Differential property suite for graft's native kernels.
   *
-  *  1. Interpreted ≡ codegen, every registered kernel: the same expression
+  *  1. Interpreted ≡ codegen, every registered kernel: the same
+  *     replacement (the static core call a query runs, built by name)
   *     through `eval` and through a Janino-compiled
   *     `GenerateUnsafeProjection` (no interpreted fallback) must agree on
   *     every generated row — nulls, invalid UTF-8 and all.
-  *  2. Kernel ≡ the spelling it replaced, for the kernels whose class doc
-  *     names one: the regex/`split` forms for TokenCounts, CjkProbe,
-  *     RepeatedRun, BlockCounts, NormKernel and GramHashKernel, the
-  *     `from_json` form for JsonIntField
+  *  2. Kernel ≡ the spelling it replaced, for the kernels whose core doc
+  *     names one: the regex/`split` forms for graft_token_counts,
+  *     graft_cjk, graft_repeated_run, graft_block_counts, NormKernel and
+  *     GramHashKernel, the `from_json` form for graft_json_int
   *     (evaluated as analyzed Catalyst expressions, no job per case), and
   *     a plain Scala reference for the vector kernels.
   *
   * Generators mix ASCII words, whitespace runs, punctuation, multi-byte
   * and supplementary code points, CJK range boundaries, invalid and
   * overlong UTF-8, empty strings, nulls and long documents; vectors come
-  * with mismatched lengths and small coordinates so `CentTopKQ` /
-  * `PqCodesQ` rank ties. Fixed seed, 200 cases per property.
+  * with mismatched lengths and small coordinates so `centTopK` /
+  * `pqCodes` rank ties. Fixed seed, 200 cases per property.
   */
 class KernelPropertySpec extends SparkSpec {
 
@@ -124,6 +125,10 @@ class KernelPropertySpec extends SparkSpec {
   private val str = ref(StringType)
   private val vecL = ref(ArrayType(LongType))
 
+  /** The kernel `name` over `args`, as the static call it is replaced with. */
+  private def byName(name: String, args: Expression*): Expression =
+    GraftFunctions.kernel(name, args: _*).replacement
+
   private val bloomLit = {
     val bf = org.apache.spark.util.sketch.BloomFilter.create(64, 0.01)
     Seq("the", "slow", "日本語").foreach(bf.putString)
@@ -174,54 +179,54 @@ class KernelPropertySpec extends SparkSpec {
     val dims = Seq(0, 1, 3, 8)
     val words = Seq(Seq("slow", "big", "merge"), Seq("the", "é", "a1"))
     Seq(
-      "graft_dot_q" -> Seq(Variant(DotQ(vecL, ref(ArrayType(LongType), 1)),
+      "graft_dot_q" -> Seq(Variant(byName("graft_dot_q", vecL, ref(ArrayType(LongType), 1)),
         for (d <- Gen.oneOf(dims); a <- vecFor(d); b <- vecFor(d);
              na <- orNull(Gen.const(arr(a))); nb <- orNull(Gen.const(arr(b))))
         yield Seq(na, nb))),
-      "graft_rolling_hash" -> Seq(Variant(RollingHash(str), anyText)),
-      "graft_simhash64" -> Seq(Variant(SimHash64(vecL),
+      "graft_rolling_hash" -> Seq(Variant(byName("graft_rolling_hash", str), anyText)),
+      "graft_simhash64" -> Seq(Variant(byName("graft_simhash64", vecL),
         orNull(Gen.choose(0, 40).flatMap(longs(_, Long.MaxValue)).map(arr)).map(Seq(_)))),
-      "graft_matvec_q" -> (mats.map(m => Variant(MatVecQ(matLit(m), vecL),
+      "graft_matvec_q" -> (mats.map(m => Variant(byName("graft_matvec_q", matLit(m), vecL),
         vecRow(if (m.isEmpty) 3 else m(0).length))) :+
-        Variant(MatVecQ(Literal.create(null, matType), vecL), vecRow(3))),
+        Variant(byName("graft_matvec_q", Literal.create(null, matType), vecL), vecRow(3))),
       "graft_bloom_contains" -> Seq(
-        Variant(BloomContains(bloomLit, str), anyText),
-        Variant(BloomContains(bloomLit, ref(LongType)),
+        Variant(byName("graft_bloom_contains", bloomLit, str), anyText),
+        Variant(byName("graft_bloom_contains", bloomLit, ref(LongType)),
           orNull(Gen.oneOf(Gen.choose(-50L, 50L), Gen.long)).map(Seq(_))),
-        Variant(BloomContains(Literal.create(null, BinaryType), str), anyText)),
-      "graft_repeated_run" -> Seq(Variant(RepeatedRun(str), anyText)),
+        Variant(byName("graft_bloom_contains", Literal.create(null, BinaryType), str), anyText)),
+      "graft_repeated_run" -> Seq(Variant(byName("graft_repeated_run", str), anyText)),
       "graft_cent_topk" -> (for (m <- mats; k <- Seq(1, 2, 3, 8)) yield
-        Variant(CentTopKQ(matLit(m), vecL, Literal(k)),
+        Variant(byName("graft_cent_topk", matLit(m), vecL, Literal(k)),
           vecRow(if (m.isEmpty) 3 else m(0).length))),
-      "graft_pq_codes" -> (books.map(b => Variant(PqCodesQ(bookLit(b), vecL),
+      "graft_pq_codes" -> (books.map(b => Variant(byName("graft_pq_codes", bookLit(b), vecL),
         vecRow(b.length * b(0)(0).length))) :+
-        Variant(PqCodesQ(Literal.create(null, bookType), vecL), vecRow(2))),
-      "graft_token_counts" -> Seq(Variant(TokenCounts(str), anyText)),
+        Variant(byName("graft_pq_codes", Literal.create(null, bookType), vecL), vecRow(2))),
+      "graft_token_counts" -> Seq(Variant(byName("graft_token_counts", str), anyText)),
       "graft_stop_counts" -> Seq(
-        Variant(StopCounts(str, Literal.create(
+        Variant(byName("graft_stop_counts", str, Literal.create(
           graft.operators.TextOps.stopwordLists.map(_._2), ArrayType(ArrayType(StringType)))),
           anyText),
-        Variant(StopCounts(str, Literal.create(Seq.empty[Seq[String]],
+        Variant(byName("graft_stop_counts", str, Literal.create(Seq.empty[Seq[String]],
           ArrayType(ArrayType(StringType)))), anyText)),
-      "graft_cjk" -> Seq(Variant(CjkProbe(str), anyText)),
-      "graft_pii_counts" -> Seq(Variant(PiiCounts(str), anyText)),
-      "graft_pii_redact" -> Seq(Variant(PiiRedact(str), anyText)),
+      "graft_cjk" -> Seq(Variant(byName("graft_cjk", str), anyText)),
+      "graft_pii_counts" -> Seq(Variant(byName("graft_pii_counts", str), anyText)),
+      "graft_pii_redact" -> Seq(Variant(byName("graft_pii_redact", str), anyText)),
       "graft_block_counts" -> words.map(ws =>
-        Variant(BlockCounts(str, Literal.create(ws, ArrayType(StringType))), anyText)),
-      "graft_norm" -> Seq(Variant(NormText(str), anyText)),
+        Variant(byName("graft_block_counts", str, Literal.create(ws, ArrayType(StringType))), anyText)),
+      "graft_norm" -> Seq(Variant(byName("graft_norm", str), anyText)),
       "graft_json_int" -> Seq("k", "a", "").map(k =>
-        Variant(JsonIntField(str, Literal.create(k, StringType)),
+        Variant(byName("graft_json_int", str, Literal.create(k, StringType)),
           orNull(jsonDoc.map(UTF8String.fromBytes)).map(Seq(_)))),
       "graft_gram_hashes" -> (for (n <- Seq(1, 2, 3); ke <- Seq(true, false))
-        yield Variant(GramHashes(str, Literal(n), Literal(ke)), anyText)),
+        yield Variant(byName("graft_gram_hashes", str, Literal(n), Literal(ke)), anyText)),
       "graft_minhash_bands" -> Seq((8, 2), (32, 4)).map { case (k, r) =>
-        Variant(MinhashBands(vecL, Literal(k), Literal(r)),
+        Variant(byName("graft_minhash_bands", vecL, Literal(k), Literal(r)),
           orNull(Gen.choose(0, 30).flatMap(longs(_, Long.MaxValue)).map(arr))
             .map(Seq(_)))
       },
-      "graft_rep_stats" -> Seq(Variant(RepStats(str), anyText)),
+      "graft_rep_stats" -> Seq(Variant(byName("graft_rep_stats", str), anyText)),
       "graft_cover_mask" -> Seq(1, 3, 5).map(n =>
-        Variant(CoverMask(str, ref(ArrayType(IntegerType), 1), Literal(n)),
+        Variant(byName("graft_cover_mask", str, ref(ArrayType(IntegerType), 1), Literal(n)),
           for (t <- orNull(text(valid = false));
                ps <- Gen.listOf(Gen.choose(0, 40)))
           yield Seq(t, ArrayData.toArrayData(ps.sorted.toArray)))))
@@ -298,12 +303,12 @@ class KernelPropertySpec extends SparkSpec {
   private val t = col("t")
 
   // TokenCounts, CjkProbe, NormKernel and GramHashKernel run against their
-  // spelling on valid UTF-8 only: their class docs state the
+  // spelling on valid UTF-8 only: their core docs state the
   // malformed-UTF-8 caveat (the regex/split side decodes malformed bytes
   // to U+FFFD); the other text kernels agree on invalid bytes too.
 
   test("TokenCounts ≡ the split/regexp_count forms it replaced (valid UTF-8)") {
-    againstSpelling(TokenCounts(str), valid = true, 4,
+    againstSpelling(byName("graft_token_counts", str), valid = true, 4,
       when(trim(t) === "", 0).otherwise(size(split(trim(t), "[ \\t\\n\\r\\f]+"))),
       regexp_count(t, lit("[a-zA-Z]+|[0-9]|[^a-zA-Z0-9 \\t\\n\\r\\f]")),
       regexp_count(t, lit("[^a-zA-Z0-9 \\t\\n\\r\\f]")),
@@ -311,24 +316,24 @@ class KernelPropertySpec extends SparkSpec {
   }
 
   test("CjkProbe ≡ rlike '[一-鿿]' (valid UTF-8)") {
-    againstSpelling(CjkProbe(str), valid = true, 1, t.rlike("[一-鿿]"))
+    againstSpelling(byName("graft_cjk", str), valid = true, 1, t.rlike("[一-鿿]"))
   }
 
   test("RepeatedRun ≡ rlike over the enumerated run pattern") {
-    againstSpelling(RepeatedRun(str), valid = false, 1,
+    againstSpelling(byName("graft_repeated_run", str), valid = false, 1,
       t.rlike(graft.operators.Profiling.RepeatRunPattern))
   }
 
   test("BlockCounts ≡ the split+filter forms over the regex norm") {
     val words = graft.operators.TextOps.Blocklist
     val toks = split(graft.operators.Text.normRegex(t), " ")
-    againstSpelling(BlockCounts(str, Literal.create(words, ArrayType(StringType))),
+    againstSpelling(byName("graft_block_counts", str, Literal.create(words, ArrayType(StringType))),
       valid = false, 2,
       size(filter(toks, w => w =!= "")), size(filter(toks, w => w.isin(words: _*))))
   }
 
   test("NormKernel ≡ Text.normRegex (valid UTF-8)") {
-    againstSpelling(NormText(str), valid = true, 1, graft.operators.Text.normRegex(t))
+    againstSpelling(byName("graft_norm", str), valid = true, 1, graft.operators.Text.normRegex(t))
   }
 
   // GramHashKernel against the per-position concat_ws + xxhash64 lambda it
@@ -343,7 +348,7 @@ class KernelPropertySpec extends SparkSpec {
       val ns = Seq(1, 2, 3, 5)
       val paths = ns.map { n =>
         val gram = (0 until n).map(j => s"get($w, i + $j)").mkString(", ")
-        (kernelOf(GramHashes(str, Literal(n), Literal(keepEmpty))),
+        (kernelOf(byName("graft_gram_hashes", str, Literal(n), Literal(keepEmpty))),
           spelling(expr(s"CASE WHEN t IS NULL THEN NULL WHEN size($w) >= $n " +
             s"THEN transform(sequence(0, size($w) - $n), " +
             s"i -> xxhash64(concat_ws(' ', $gram))) ELSE array() END")))
@@ -364,7 +369,7 @@ class KernelPropertySpec extends SparkSpec {
         when(size(keys) =!= size(array_distinct(keys)), lit(null))
           .otherwise(from_json(t, StructType(Seq(StructField(key, IntegerType))))
             .getField(key)))
-      val kernel = kernelOf(JsonIntField(str, Literal.create(key, StringType)))
+      val kernel = kernelOf(byName("graft_json_int", str, Literal.create(key, StringType)))
       check(Prop.forAllNoShrink(orNull(jsonDoc.map(UTF8String.fromBytes))) { in =>
         val s = in.asInstanceOf[UTF8String]
         agree(Seq(kernel(s)), reference(s), s"key $key on <$s>")
@@ -380,7 +385,7 @@ class KernelPropertySpec extends SparkSpec {
     a.indices.map(i => (a(i) - b(off + i)) * (a(i) - b(off + i))).sum
 
   test("DotQ ≡ Scala dot, null on length mismatch") {
-    val kernel = DotQ(vecL, ref(ArrayType(LongType), 1))
+    val kernel = byName("graft_dot_q", vecL, ref(ArrayType(LongType), 1))
     check(Prop.forAllNoShrink(Gen.choose(0, 8).flatMap(d =>
         Gen.zip(vecFor(d), vecFor(d)))) { case (a, b) =>
       val expect = if (a.length != b.length) null else dot(a, b)
@@ -390,7 +395,7 @@ class KernelPropertySpec extends SparkSpec {
   }
 
   test("RollingHash ≡ Scala fold over the bytes") {
-    val kernel = kernelOf(RollingHash(str))
+    val kernel = kernelOf(byName("graft_rolling_hash", str))
     check(Prop.forAllNoShrink(text(valid = false)) { s =>
       val expect = s.getBytes.foldLeft(0L)((h, b) => (h * 31L + (b & 0xffL)) % 1000000007L)
       agree(kernel(s), expect, s"<$s>")
@@ -398,7 +403,7 @@ class KernelPropertySpec extends SparkSpec {
   }
 
   test("SimHash64 ≡ Scala per-bit majority") {
-    val kernel = kernelOf(SimHash64(vecL))
+    val kernel = kernelOf(byName("graft_simhash64", vecL))
     check(Prop.forAllNoShrink(Gen.choose(0, 40).flatMap(n =>
         Gen.listOfN(n, Gen.oneOf(Gen.long, Gen.choose(-3L, 3L))))) { hs =>
       val expect = (0 until 64).foldLeft(0L) { (fp, b) =>
@@ -413,7 +418,7 @@ class KernelPropertySpec extends SparkSpec {
 
   test("MatVecQ ≡ Scala row dots, null on width mismatch") {
     mats.foreach { m =>
-      val kernel = kernelOf(MatVecQ(matLit(m), vecL))
+      val kernel = kernelOf(byName("graft_matvec_q", matLit(m), vecL))
       check(Prop.forAllNoShrink(vecFor(width(m))) { x =>
         val expect = if (m.nonEmpty && x.length != m(0).length) null
           else m.toSeq.map(dot(_, x))
@@ -424,7 +429,7 @@ class KernelPropertySpec extends SparkSpec {
 
   test("CentTopKQ ≡ Scala full-distance sort, cid tie-break") {
     for (m <- mats; k <- Seq(1, 2, 3, 8)) {
-      val kernel = kernelOf(CentTopKQ(matLit(m), vecL, Literal(k)))
+      val kernel = kernelOf(byName("graft_cent_topk", matLit(m), vecL, Literal(k)))
       check(Prop.forAllNoShrink(vecFor(width(m))) { x =>
         val expect = if (m.nonEmpty && x.length != m(0).length) null
           else m.indices.sortBy(j => (sq(m(j), x, 0), j)).take(k)
@@ -436,7 +441,7 @@ class KernelPropertySpec extends SparkSpec {
   test("PqCodesQ ≡ Scala per-block argmin, smaller code on ties") {
     books.foreach { b =>
       val sub = b(0)(0).length
-      val kernel = kernelOf(PqCodesQ(bookLit(b), vecL))
+      val kernel = kernelOf(byName("graft_pq_codes", bookLit(b), vecL))
       check(Prop.forAllNoShrink(vecFor(b.length * sub)) { x =>
         val expect = if (x.length != b.length * sub) null else {
           val codes = b.indices.map(j =>

@@ -64,7 +64,7 @@ class PlanAuditSpec extends SparkSpec {
     // the r12 kernel is ~20× the regex path at sf10 — a revert to
     // regexp_count / split-for-size must fail here, not in a bench
     val p = plan("q_token_count")
-    assert(p.contains("graft_token_counts") || p.contains("tokencounts"),
+    assert(p.contains("TokenCountsKernel"),
       "q_token_count must run the TokenCounts kernel:\n" + p)
     assert(!p.contains("regexp_count") && !p.contains("RegExpCount"),
       "regex tokenizer resurfaced in q_token_count:\n" + p)
@@ -77,9 +77,8 @@ class PlanAuditSpec extends SparkSpec {
     // here. q_ann_ivf's plan embeds both the assignment build and the
     // probe side.
     val p = plan("q_ann_ivf")
-    assert(p.contains("centtopkq") || p.contains("graft_cent_topk")
-      || p.contains("CentTopKQ"),
-      "IVF paths must run the CentTopKQ kernel:\n" + p)
+    assert(p.contains("VecKernel.centTopK"),
+      "IVF paths must run the centTopK kernel:\n" + p)
     assert(!p.contains("array_sort") && !p.contains("sort_array"),
       "full-K sort resurfaced in the IVF probe path:\n" + p)
   }
@@ -369,7 +368,7 @@ class PlanAuditSpec extends SparkSpec {
     // revert to the regexp_replace/regexp_count forms is a ~10x bench
     // regression that must fail HERE (the r12 silent-fallback class)
     val p = plan("q_pii_redact")
-    val kernels = "piiredact".r.findAllIn(p.toLowerCase).length
+    val kernels = "PiiKernel.redact".r.findAllIn(p).length
     assert(kernels == 1,
       s"expected ONE redaction kernel in the plan, found $kernels:\n" + p)
     assert(!p.contains("regexp_replace") && !p.contains("RegExpReplace")
@@ -384,14 +383,14 @@ class PlanAuditSpec extends SparkSpec {
     // chain must fail here, not in a bench
     Seq("q_pii_scan", "q_doc_features", "q_release_gate").foreach { q =>
       val p = plan(q)
-      assert(p.toLowerCase.contains("piicounts"),
+      assert(p.contains("PiiKernel.counts"),
         s"$q must run the PiiCounts kernel:\n" + p)
       assert(!p.contains("regexp_count") && !p.contains("RegExpCount"),
         s"regex PII forms resurfaced in $q:\n" + p)
     }
     // the scan's two-stage projection keeps the kernel single-evaluated
-    val scan = plan("q_pii_scan").toLowerCase
-    assert("piicounts".r.findAllIn(scan).length == 1,
+    val scan = plan("q_pii_scan")
+    assert("PiiKernel.counts".r.findAllIn(scan).length == 1,
       "q_pii_scan must evaluate the counts kernel once:\n" + scan)
   }
 
@@ -400,12 +399,12 @@ class PlanAuditSpec extends SparkSpec {
     // revert of these to the padded-regex forms passes every oracle and
     // only shows as a 10x bench delta
     val lang = plan("q_lang_id")
-    assert(lang.toLowerCase.contains("stopcounts"),
+    assert(lang.contains("StopCountsKernel"),
       "q_lang_id must run the StopCounts kernel:\n" + lang)
-    assert(lang.toLowerCase.contains("cjkprobe"),
+    assert(lang.contains("CjkKernel"),
       "q_lang_id must run the CjkProbe kernel:\n" + lang)
     val qual = plan("q_quality_score")
-    assert(qual.toLowerCase.contains("stopcounts"),
+    assert(qual.contains("StopCountsKernel"),
       "q_quality_score must run the StopCounts kernel:\n" + qual)
     Seq("q_lang_id" -> lang, "q_quality_score" -> qual).foreach { case (q, p) =>
       assert(!p.contains("regexp_count") && !p.contains("RegExpCount")
@@ -423,14 +422,14 @@ class PlanAuditSpec extends SparkSpec {
     Seq("q_blocklist_scan", "q_doc_features", "q_datacard",
       "q_release_gate").foreach { q =>
       val p = plan(q).toLowerCase
-      assert(p.contains("blockcounts"),
+      assert(p.contains("blockcountskernel"),
         s"$q must run the BlockCounts kernel:\n" + p)
       assert(!p.contains("lambdafunction"),
         s"interpreted HOF lambdas resurfaced in $q:\n" + p)
     }
     // q_seq_pack's n_tok rides the TokenCounts kernel, not split+filter
     val sp = plan("q_seq_pack").toLowerCase
-    assert(sp.contains("tokencounts") && !sp.contains("lambdafunction"),
+    assert(sp.contains("tokencountskernel") && !sp.contains("lambdafunction"),
       "q_seq_pack must count tokens via the kernel:\n" + sp)
   }
 
@@ -439,7 +438,7 @@ class PlanAuditSpec extends SparkSpec {
     // only transform( allowed is the cheap float->long quantization —
     // an array_min(transform(...)) encoder revert must fail here
     val p = plan("q_ann_pq")
-    assert(p.toLowerCase.contains("pqcodesq"),
+    assert(p.contains("VecKernel.pqCodes"),
       "PQ paths must run the PqCodesQ encoder kernel:\n" + p)
     assert(!p.contains("array_min"),
       "interpreted per-block argmin lambdas resurfaced in the PQ encoder:\n" + p)
@@ -479,7 +478,7 @@ class PlanAuditSpec extends SparkSpec {
     // named projected column triggers the InferFiltersFromGenerate
     // re-evaluation hazard (CLAUDE.md)
     val gen = p.split("\n").filter(_.contains("Generate"))
-    assert(gen.exists(_.toLowerCase.contains("gramhashes")),
+    assert(gen.exists(_.contains("GramHashKernel")),
       "gram hashes must be built inside the generator:\n" + p)
     // the shipped default is the AQE-skew-splittable df JOIN-BACK — a
     // hot-gram window partition cannot be skew-split, so no window may
@@ -507,7 +506,7 @@ class PlanAuditSpec extends SparkSpec {
     // GramHashes kernel, r14 — the InferFiltersFromGenerate
     // re-evaluation hazard, CLAUDE.md)
     assert(p.split("\n").filter(_.contains("Generate"))
-      .exists(_.toLowerCase.contains("gramhashes")),
+      .exists(_.contains("GramHashKernel")),
       "gram hashes must be built inside the generator:\n" + p)
     // a boilerplate gram is a hot key: the dup decision joins back on
     // the gram hash (AQE-skew-splittable) — no window may touch grams
@@ -708,7 +707,7 @@ class PlanAuditSpec extends SparkSpec {
     // cost); a revert passes every oracle and only shows as a bench
     // delta, so the Jackson marker is banned here
     val p = plan("q_props_extract")
-    assert(p.toLowerCase.contains("jsonintfield"),
+    assert(p.contains("JsonIntKernel"),
       "q_props_extract must run the JsonIntField kernel:\n" + p)
     assert(!p.contains("from_json") && !p.contains("JsonToStructs"),
       "Jackson parses resurfaced in q_props_extract:\n" + p)
@@ -723,7 +722,7 @@ class PlanAuditSpec extends SparkSpec {
     Seq("q_dedup_exact", "q_source_dedup", "q_line_dedup", "q_fingerprint")
       .foreach { q =>
         val p = plan(q)
-        assert(p.toLowerCase.contains("normtext"),
+        assert(p.contains("NormKernel"),
           s"$q must run the NormText kernel:\n" + p)
       }
     // these three have NO other regex in their plans, so the ban is exact

@@ -67,6 +67,16 @@ class TextOpsSpec extends SparkSpec {
       spark.sql("SELECT graft_rolling_hash('a', 'b')").collect()
     }
     assert(e2.getMessage.contains("graft_rolling_hash"))
+    // a non-foldable model and an item of neither accepted type fail at
+    // analysis too, naming the function
+    val e3 = intercept[org.apache.spark.sql.AnalysisException] {
+      spark.sql("SELECT graft_matvec_q(m, array(1L)) FROM VALUES (array(array(1L))) AS t(m)")
+    }
+    assert(e3.getMessage.contains("graft_matvec_q"), e3.getMessage)
+    val e4 = intercept[org.apache.spark.sql.AnalysisException] {
+      spark.sql("SELECT graft_bloom_contains(X'00', 1)")
+    }
+    assert(e4.getMessage.contains("graft_bloom_contains"), e4.getMessage)
   }
 
   test("rolling hash expression matches a reference fold") {
@@ -296,7 +306,7 @@ class TextOpsSpec extends SparkSpec {
     val shuffled = TextOps.decontaminate(spark, sfDir,
       maxBroadcastEvalDocs = 0L, maxBloomEvalDocs = 0L)
     assert(!shuffled.queryExecution.executedPlan.toString
-      .toLowerCase.contains("bloomcontains"),
+      .contains("BloomKernel"),
       "forced sort-merge tier must not apply the bloom prefilter")
     // the forced branch must really drop the broadcast hint on the
     // N-GRAM joins (the vocab-sized ones). The final doc_id outer join of
@@ -323,7 +333,7 @@ class TextOpsSpec extends SparkSpec {
     val bloomed = TextOps.decontaminate(spark, sfDir,
       maxBroadcastEvalDocs = 0L, maxBloomEvalDocs = Long.MaxValue)
     val plan = bloomed.queryExecution.executedPlan.toString
-    assert(plan.toLowerCase.contains("bloomcontains"),
+    assert(plan.contains("BloomKernel"),
       s"bloom tier must apply the BloomContains prefilter:\n$plan")
     assert(!plan.linesIterator.exists(l =>
       l.contains("BroadcastHashJoin") && l.contains("[ng#")),
