@@ -403,11 +403,16 @@ object Bench {
         .filter(q => only.isEmpty || only(q._1))
     stampStorage("after_builds")
     val diskStamps = scala.collection.mutable.LinkedHashMap.empty[String, (Double, Double)]
+    // Janino compiles over an entry's runs: a warm entry should compile
+    // only on its first run
+    val compileStamps = scala.collection.mutable.Map.empty[String, Long]
     val results = timed.zipWithIndex.map { case ((name, _), i) =>
       if (simNames(name)) stampStorage(name)
       val d0 = diskSnap()
+      val c0 = CodegenGuard.compiles
       val ts = Seq.fill(Runs)(timeOnce(name))
       diskDelta(d0, diskSnap()).foreach(diskStamps(name) = _)
+      compileStamps(name) = CodegenGuard.compiles - c0
       val r =
         if (ts.exists(_ < 0)) (name, -1.0, -1.0)
         else {
@@ -419,8 +424,8 @@ object Bench {
       // stderr instead of losing everything to the JSON-at-end contract
       val io = diskStamps.get(name)
         .map { case (mb, aw) => f" w_mb=$mb%.0f w_await=$aw%.1fms" }.getOrElse("")
-      System.err.println(
-        f"[bench] ${i + 1}/${timed.size} $name min=${r._2}%.3f med=${r._3}%.3f$io")
+      System.err.println(f"[bench] ${i + 1}/${timed.size} $name min=${r._2}%.3f " +
+        f"med=${r._3}%.3f$io compiles=${compileStamps(name)}")
       r
     }
 
@@ -443,7 +448,8 @@ object Bench {
         val io = diskStamps.get(k).map { case (mb, aw) =>
           ",\"w_mb\":" + f3(mb) + ",\"w_await_ms\":" + f3(aw)
         }.getOrElse("")
-        s"\"" + k + "\":{\"min\":" + f3(mn) + ",\"med\":" + f3(md) + io + "}"
+        val cc = compileStamps.get(k).map(n => s",\"compiles\":$n").getOrElse("")
+        s"\"" + k + "\":{\"min\":" + f3(mn) + ",\"med\":" + f3(md) + io + cc + "}"
       }.mkString("{", ",", "}")
     // headline per-entry numbers are the MINIMA; build entries ride the
     // same map so the driver's per-query listing shows them
@@ -492,16 +498,20 @@ object Bench {
         s""""reasons":$reasonsJson,"contended":$contended}"""
     // the fallback count rides the artifact (see CodegenGuard: a kernel
     // silently running interpreted must never hide inside a slow number);
-    // the lines themselves go to stderr for diagnosis
+    // the lines themselves go to stderr for diagnosis. The compile counts
+    // beside it show a session re-running Janino on classes it evicted.
     val codegenFallbacks = CodegenGuard.report("bench")
+    val codegenJson = s""""codegen_fallbacks":$codegenFallbacks,""" +
+      s""""codegen_compiles":${CodegenGuard.compiles},""" +
+      s""""codegen_compile_ms":${f3(CodegenGuard.compileMs)}"""
     val storageJson = storageStamps
       .map { case (k, (mem, disk)) =>
         s"\"" + k + s"\":{\"mem\":$mem,\"disk\":$disk}"
       }.mkString("{", ",", "}")
     val json =
-      s"""{"detail":$detail,"runs":$Runs,"queries":$qs,"stream":$streamJson,"storage_mem_bytes":$storageJson,"skipped_quadratic":$skippedJson,"skipped_output_law":$skippedOutputJson,"quad_cap_vectors":$KnnQuadCap,"n_vectors":$nVec,"preflight":$preflightJson,"codegen_fallbacks":$codegenFallbacks,"sf":"$sfDir","metric":"total","unit":"sec","failed":$failed,"value":${f3(total)}}"""
+      s"""{"detail":$detail,"runs":$Runs,"queries":$qs,"stream":$streamJson,"storage_mem_bytes":$storageJson,"skipped_quadratic":$skippedJson,"skipped_output_law":$skippedOutputJson,"quad_cap_vectors":$KnnQuadCap,"n_vectors":$nVec,"preflight":$preflightJson,$codegenJson,"sf":"$sfDir","metric":"total","unit":"sec","failed":$failed,"value":${f3(total)}}"""
     val summary =
-      s"""{"metric":"total","value":${f3(total)},"unit":"sec","failed":$failed,"skipped_quadratic":$skippedJson,"skipped_output_law":$skippedOutputJson,"contended":$contended,"codegen_fallbacks":$codegenFallbacks,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${f3(total)},"unit":"sec","failed":$failed,"skipped_quadratic":$skippedJson,"skipped_output_law":$skippedOutputJson,"contended":$contended,$codegenJson,"sf":"$sfDir"}"""
     // belt and braces for the driver handoff: the line on stdout (the
     // contract) AND the same JSON at a fixed path, immune to interleaved
     // log lines or tail truncation

@@ -6,6 +6,8 @@ import org.apache.logging.log4j.{Level, LogManager}
 import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
 import org.apache.logging.log4j.core.appender.AbstractAppender
 import org.apache.logging.log4j.core.config.Property
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 
 /** In-context codegen-fallback detector (r13 verdict item 3).
   *
@@ -40,10 +42,27 @@ import org.apache.logging.log4j.core.config.Property
   * the artifact JSON so a fallback can never hide inside a slow number.
   * Local mode runs executors in this JVM, so executor-side fallbacks
   * route to the same log4j context.
+  *
+  * It also counts Janino compiles: the number Spark's
+  * `CodegenMetrics.METRIC_COMPILATION_TIME` histogram has recorded and
+  * their total time (`CodeGenerator.compileTime`) since `install`/`clear`.
+  * A warm session that keeps compiling is evicting generated classes it
+  * will need again (see `Sessions.CodegenCacheEntries`).
   */
 object CodegenGuard {
   private val hits = new ConcurrentLinkedQueue[String]()
   @volatile private var installed = false
+  // (compiles, compile ns) at the last install/clear
+  @volatile private var mark = (0L, 0L)
+
+  /** JVM-wide (compiles, compile ns). `CodeGenerator` sizes its class cache
+    * from the conf active when it initializes, so it is not touched before
+    * the first compile: guards install before the session is built.
+    */
+  private def totals: (Long, Long) = {
+    val n = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    (n, if (n == 0) 0L else CodeGenerator.compileTime)
+  }
 
   private val Needles = Seq(
     "Failed to compile the generated Java code",
@@ -71,11 +90,21 @@ object CodegenGuard {
       Guard.start()
       ctx.getConfiguration.getRootLogger.addAppender(Guard, Level.WARN, null)
       ctx.updateLoggers()
+      mark = totals
       installed = true
     }
   }
 
-  def clear(): Unit = hits.clear()
+  def clear(): Unit = {
+    hits.clear()
+    mark = totals
+  }
+
+  /** Generated classes Janino compiled since install/clear. */
+  def compiles: Long = totals._1 - mark._1
+
+  /** Their total compile time in ms. */
+  def compileMs: Double = (totals._2 - mark._2) / 1e6
 
   /** Distinct captured fallback lines since install/clear. */
   def violations: Seq[String] = {
@@ -83,11 +112,14 @@ object CodegenGuard {
     hits.iterator().asScala.toSeq.distinct
   }
 
-  /** Print violations (if any) to stderr with a greppable marker and
-    * return the distinct count — callers decide the failure mode (Verify
-    * exits non-zero, Bench stamps the artifact).
+  /** Print the compile counts and the violations (if any) to stderr with a
+    * greppable marker and return the distinct violation count — callers
+    * decide the failure mode (Verify exits non-zero, Bench stamps the
+    * artifact).
     */
   def report(context: String): Int = {
+    System.err.println(
+      f"[codegen-guard] $context: $compiles%d compile(s), $compileMs%.1f ms in Janino")
     val v = violations
     if (v.nonEmpty) {
       System.err.println(

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.internal.StaticSQLConf
 
 /** The one SparkSession recipe every driver main shares. Verify and Bench
   * MUST run under identical semantics — correctness validated under one
@@ -9,11 +10,26 @@ import org.apache.spark.sql.SparkSession
   */
 object Sessions {
 
+  /** Spark's generated-class cache cap (`spark.sql.codegen.cache.maxEntries`,
+    * default 100). The cap is a static conf, read once per JVM when
+    * `CodeGenerator` initializes at the first code generation, so it can
+    * only be set here, before the session exists. The whole registry
+    * compiles 1,862 classes (Verify at sf0.01; an entry is keyed by class
+    * loader too, and local mode compiles each class under the application
+    * class loader and again under the executor's) and the 17-query
+    * analyst mix about 151, so at 100 every round of warm queries evicted
+    * the classes the next round needed and re-ran Janino on each call.
+    * 4,096 is about twice the registry's working set, so a session
+    * compiles each class once.
+    */
+  val CodegenCacheEntries = 4096
+
   def build(cores: String, shufflePartitions: String): SparkSession = {
     val b = SparkSession.builder()
       .withExtensions(new graft.plans.GraftExtensions)
       .master(s"local[$cores]")
       .config("spark.sql.shuffle.partitions", shufflePartitions)
+      .config(StaticSQLConf.CODEGEN_CACHE_MAX_ENTRIES.key, CodegenCacheEntries.toLong)
     // SPARK_GRAFT_INIT_PARTITIONS (opt-in, study knob): AQE wide-start.
     // At sf10 the ANN collision joins push ~5e9 narrow rows through a
     // shuffle; at the fixed 32 partitions that is ~4 GB/partition — a

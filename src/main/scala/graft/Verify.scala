@@ -46,7 +46,8 @@ object Verify {
     spark.stop()
     // the in-context fallback gate (r13 verdict item 3): every registered
     // query just ran — if ANY tripped a codegen fallback, fail the whole
-    // run loudly instead of leaving a WARN in a log nobody reads
+    // run loudly instead of leaving a WARN in a log nobody reads. The
+    // report also prints the run's Janino compile count and time.
     if (CodegenGuard.report("verify") > 0) sys.exit(2)
   }
 }

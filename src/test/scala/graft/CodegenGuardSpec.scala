@@ -14,7 +14,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * `CodeGeneratorWithInterpretedFallback`, the same production path a
   * mangled WholeStageCodegen context takes.
   */
-class CodegenGuardSpec extends org.scalatest.funsuite.AnyFunSuite {
+class CodegenGuardSpec extends SparkSpec {
 
   /** Interpreted eval works; generated code is not Java. */
   private case class BrokenKernel(child: Expression) extends UnaryExpression {

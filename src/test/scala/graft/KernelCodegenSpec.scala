@@ -24,7 +24,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * lines. A kernel added to the GraftFunctions table without an exemplar
   * here fails the coverage test by name.
   */
-class KernelCodegenSpec extends org.scalatest.funsuite.AnyFunSuite {
+class KernelCodegenSpec extends SparkSpec {
 
   private def ref(dt: DataType, ord: Int = 0): Expression =
     BoundReference(ord, dt, nullable = true)
