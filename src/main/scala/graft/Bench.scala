@@ -12,11 +12,11 @@ import org.apache.spark.sql.SparkSession
   *  - every query runs THREE times; the JSON carries per-query min AND
   *    median (`detail`), and the headline `queries` map + total quote the
   *    MINIMA — the defensible lower-bound estimator under throttling.
-  *  - the shared similarity index builds run BEFORE the timed loop as
-  *    their own named `build_*` entries (Similarity.prebuildIndexes), so
-  *    query times stop depending on which consumer runs first
-  *    alphabetically. Build entries are included in the total (the work
-  *    is real; it is just attributed honestly).
+  *  - the shared builds ([[SparkEntry.builds]]) run BEFORE the timed
+  *    loop as their own named `build_*` entries, so query times stop
+  *    depending on which consumer runs first alphabetically. Build
+  *    entries are included in the total (the work is real; it is just
+  *    attributed honestly).
   *
   * Each query is forced through a `noop` sink, not `count()`: under a
   * count, Catalyst prunes every unreferenced aggregate expression and
@@ -251,7 +251,7 @@ object Bench {
     // SPARK_GRAFT_STREAMS_ONLY=1 runs JUST the streaming-sink section (a
     // before/after store-layout study re-measures 7 sinks in minutes
     // instead of paying the full batch protocol to reach them); batch
-    // warmups, prebuilds and the timed registry are all skipped.
+    // warmups, shared builds and the timed registry are all skipped.
     val streamsOnly = sys.env.get("SPARK_GRAFT_STREAMS_ONLY").contains("1")
     warm("icu")(Warm.icu(spark))
     warm("entry")(SparkEntry.entry(spark).count())
@@ -270,55 +270,37 @@ object Bench {
       .foreach(t => warm(t)(Tables.table(spark, sfDir, t).count()))
     warm("events")(Tables.events(spark, sfDir).count())
 
-    // shared index builds, timed as their own named entries (a failed
-    // build reports -1 like a failed query and its consumers then pay —
-    // and expose — the cost themselves)
-    def timedBuild(name: String)(body: => Unit): Seq[(String, Double)] = {
+    // a failed query or build reports -1, never a bogus elapsed time;
+    // Throwable so a codegen/linkage Error cannot abort the run and lose
+    // the JSON line
+    def elapsed(name: String)(body: => Any): Double = {
       val t0 = System.nanoTime()
-      try {
-        body
-        val dt = (System.nanoTime() - t0) / 1e9
-        System.err.println(f"[bench] $name done in $dt%.3f s")
-        Seq(name -> dt)
-      }
+      try { body; (System.nanoTime() - t0) / 1e9 }
       catch { case t: Throwable =>
-        System.err.println(s"[bench] $name FAILED: ${t.getMessage}")
-        Seq(name -> -1.0)
-      }
+        System.err.println(s"[bench] $name FAILED: ${t.getMessage}"); -1.0 }
     }
-    // SPARK_GRAFT_SKIP_BUILDS=1 skips the shared prebuilds (subset
+    def timeOnce(name: String): Double = elapsed(name)(force(name))
+
+    // SPARK_GRAFT_SKIP_BUILDS=1 skips the shared builds (subset
     // studies of NON-similarity entries at large SF — paying 15 min of
     // ANN index builds to time six relational queries measures nothing;
     // a similarity entry run this way pays — and exposes — its build
     // cost inside its own timing, which the JSON's missing build_*
     // entries make visible)
     val skipBuilds = sys.env.get("SPARK_GRAFT_SKIP_BUILDS").contains("1")
+    // every shared build, timed in table order as its own named entry, so
+    // its cost does not land on whichever consumer query runs first
+    // alphabetically. Each build is isolated: a failed one reports its
+    // -1 and the rest still run (its consumers then pay — and expose —
+    // the cost themselves)
     val builds: Seq[(String, Double)] =
       if (streamsOnly || skipBuilds) Seq.empty
-      else (try operators.Similarity.prebuildIndexes(spark, sfDir)
-       catch { case t: Throwable =>
-         System.err.println(s"[bench] prebuild FAILED: ${t.getMessage}")
-         Seq("build_failed" -> -1.0)
-       }) ++
-        timedBuild("build_session_frame")(
-          operators.Ingest.prebuildSessionFrame(spark, sfDir)) ++
-        timedBuild("build_sample_selection")(
-          operators.Labeling.prebuildSelection(spark, sfDir)) ++
-        timedBuild("build_dup_span_counts")(
-          operators.TextOps.prebuildDupSpanCounts(spark, sfDir)) ++
-        timedBuild("build_token_counts")(
-          operators.TextOps.prebuildTokenCounts(spark, sfDir)) ++
-        timedBuild("build_bpe_merges")(
-          operators.Assembly.prebuildBpeMerges(spark, sfDir))
+      else SparkEntry.builds.map { case (name, build) =>
+        val dt = elapsed(name)(build(spark, sfDir))
+        if (dt >= 0) System.err.println(f"[bench] $name done in $dt%.3f s")
+        name -> dt
+      }
 
-    // a failed query reports -1, never a bogus elapsed time; Throwable so
-    // a codegen/linkage Error cannot abort the run and lose the JSON line
-    def timeOnce(name: String): Double = {
-      val t0 = System.nanoTime()
-      try { force(name); (System.nanoTime() - t0) / 1e9 }
-      catch { case t: Throwable =>
-        System.err.println(s"[bench] $name FAILED: ${t.getMessage}"); -1.0 }
-    }
     // SPARK_GRAFT_RUNS overrides the per-query repeat count (default 3 —
     // the driver protocol): the sf1 scaling study runs each query twice
     // (its quadratic-fallback entries are minutes each; min-of-2 under
@@ -361,7 +343,7 @@ object Bench {
       }
     // SPARK_GRAFT_ONLY=comma,separated,names restricts the timed registry
     // (the sf10+ heavy-family studies, where timing all 138 queries at
-    // full repeat count is days of wall). Prebuilds still run — their
+    // full repeat count is days of wall). Shared builds still run — their
     // cost is part of any similarity-family number — and the streaming
     // section is skipped (a family subset is a batch study). Unset =
     // the driver protocol, unchanged.

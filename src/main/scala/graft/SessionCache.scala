@@ -8,8 +8,10 @@ import scala.util.control.NonFatal
 
 /** The one session-scoped memo registry: every value derived from a lake
   * dir and reused across queries (resolved tables, similarity indexes and
-  * models, the session frame, the tier selection, BPE models) lives here,
-  * keyed by (session, dir, key).
+  * models, the session frame, the tier selection, TextOps' count tables
+  * and quality histogram, BPE models) lives here, keyed by (session, dir,
+  * key), and no frame is persisted outside it for longer than one call.
+  * The builds Bench prices are listed once, in [[SparkEntry.builds]].
   *
   * Invalidation is automatic: each entry keeps the [[fingerprint]] of its
   * dir at build time and every lookup recomputes it, so a rewritten table
@@ -73,22 +75,16 @@ object SessionCache {
     case _ =>
   }
 
-  /** Drops every entry of (s, dir) built under another fingerprint, then
-    * refreshes Spark's cache for the tables that changed: a re-resolved
-    * table's file index equals the old one (same root path), so a plan
-    * persisted inline (TextOps' shared histograms) would otherwise keep
-    * serving the old files' rows.
+  /** Drops every entry of (s, dir) built under another fingerprint.
+    * Every frame shared across queries is an entry (none is persisted
+    * outside the registry), so this also drops each CacheManager entry
+    * whose plan read the old files.
     */
-  private def invalidate(s: SparkSession, dir: String, fp: Fingerprint): Unit = {
-    val stale = entries.filter { case ((s1, d1, _), e) =>
-      (s1 eq s) && d1 == dir && e.fingerprint != fp
+  private def invalidate(s: SparkSession, dir: String, fp: Fingerprint): Unit =
+    entries.foreach { case (k @ (s1, d1, _), e) =>
+      if ((s1 eq s) && d1 == dir && e.fingerprint != fp && entries.remove(k, e))
+        release(e.value)
     }
-    stale.foreach { case (k, e) => if (entries.remove(k, e)) release(e.value) }
-    stale.values.map(_.fingerprint).toSet
-      .flatMap((old: Fingerprint) => old.diff(fp) ++ fp.diff(old))
-      .map(_._1.takeWhile(_ != '/'))
-      .foreach(table => s.catalog.refreshByPath(s"$dir/$table"))
-  }
 
   /** (path under `dir`, length, mtime) of each data file: top-level files
     * and everything inside `*.parquet` table dirs. `_`/`.` names are

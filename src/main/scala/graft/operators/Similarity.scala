@@ -24,59 +24,7 @@ object Similarity {
 
   // Shared indexes persist through SessionCache.persisted: each op reads
   // its index from 2-4 aliased subtrees, which defeats exchange reuse.
-
-  /** Build every shared similarity index for (session, dir) in dependency
-    * order, timing each — Bench runs this BEFORE its timed query loop so
-    * a shared build's cost is its own named entry instead of landing on
-    * whichever consumer query runs first alphabetically (the r4
-    * q_dedup_clusters-vs-q_ngram_jaccard attribution ambiguity). Names
-    * are stable bench keys; a build that is already cached times as ~0.
-    */
-  def prebuildIndexes(s: SparkSession, d: String): Seq[(String, Double)] = {
-    // per-build isolation: one failing build reports ITS -1 entry and the
-    // rest still run — aborting mid-sequence would both drop the already-
-    // measured entries and push the skipped builds' costs onto consumers'
-    // first runs, which min-of-3 then EXCLUDES from the total (a failed
-    // build would silently deflate the bench instead of surfacing)
-    def timed(name: String)(body: => Any): (String, Double) =
-      try {
-        val t0 = System.nanoTime(); body
-        val dt = (System.nanoTime() - t0) / 1e9
-        System.err.println(f"[bench] $name done in $dt%.3f s")
-        (name, dt)
-      } catch { case t: Throwable =>
-        System.err.println(s"[bench] $name FAILED: ${t.getMessage}")
-        (name, -1.0)
-      }
-    Seq(
-      timed("build_quantized")(quantized(s, d)),
-      timed("build_lsh_buckets")(lshBuckets(s, d)),
-      timed("build_ivf_assign")(
-        if (ivfModel(s, d).nonEmpty) ivfAssigned(s, d) else ()),
-      timed("build_pq_codes")(
-        if (pqModel(s, d).nonEmpty) pqCodesFrame(s, d) else ()),
-      timed("build_knn_ivf_assign") {
-        // r15: the knn-K index materializes LIST-RESIDENT (vectors on the
-        // list rows — see ivfMembersKnnK); same assignment pass, same
-        // bench entry name so round-over-round comparison holds
-        val n = nQuantized(s, d)
-        if (n > 0) ivfMembersKnnK(s, d, knnIvfK(n)) else ()
-      },
-      // the geometry-dispatch probe model, paid once as its own named
-      // entry (the ivfModel convention) instead of inside every
-      // q_knn_graph run — and the bench's own quadratic-skip policy
-      // reads the same memo
-      timed("build_knn_geometry")(knnGeometryStats(s, d)),
-      timed("build_shingle_cache")(docShingleHashes(s, d)),
-      timed("build_minhash_bands")(minhashBands(s, d)),
-      timed("build_minhash_candidates")(minhashCandidates(s, d)),
-      timed("build_minhash_pairs")(minhashPairs(s, d)),
-      timed("build_ngram_postings")(shingles(s, d)),
-      timed("build_ngram_pairs")(keptPairStats(s, d)),
-      timed("build_simhash_fp")(simhashFingerprints(s, d)),
-      timed("build_dedup_clusters")(dedupClusterLabels(s, d)),
-      timed("build_ngram_clusters")(ngramClusterLabels(s, d)))
-  }
+  // Bench prices each one as a row of graft.SparkEntry.builds.
 
   // (r14) The 3-gram string-array expression over split tokens and its
   // `tokenized` front are retired: [[shingleHashesOf]] computes the same
@@ -280,7 +228,7 @@ object Similarity {
     * at sf0.1), the pair aggregate and both cardinality joins process
     * half the rows, and the cached table halves.
     */
-  private def keptPairStats(s: SparkSession, d: String): DataFrame =
+  private[graft] def keptPairStats(s: SparkSession, d: String): DataFrame =
     SessionCache.persisted(s, d, "shingle_pair_stats")(
       shinglePairStats(keptShingles(s, d), directed = false))
 
@@ -399,7 +347,7 @@ object Similarity {
     * exact-verification join is materialized too (candidates alone being
     * cached still re-ran the collect_set + intersect pass per consumer).
     */
-  private def minhashPairs(s: SparkSession, d: String): DataFrame =
+  private[graft] def minhashPairs(s: SparkSession, d: String): DataFrame =
     SessionCache.persisted(s, d, "minhash_pairs")(minhashPairsPlan(s, d))
 
   /** Per-document shingle-hash ARRAYS — the zero-shuffle feed of the
@@ -494,20 +442,8 @@ object Similarity {
     * the pairs(old)∪increment identity.
     */
   def minhashIncrement(oldDocs: DataFrame, newDocs: DataFrame): DataFrame = {
-    val old = oldDocs.join(newDocs.select("doc_id"), Seq("doc_id"), "left_anti")
-    val shOld = shingleHashesOf(old)
-    val shNew = shingleHashesOf(newDocs)
-    val bNew = bandsOf(shNew)
-    val bAll = bandsOf(shOld).unionByName(bNew)
-    // one side is always NEW; normalize to id_a < id_b, dedup multi-band
-    val candidates = bNew.select(col("doc_id").as("id_n"), col("band"), col("bhash"))
-      .join(bAll.select(col("doc_id").as("id_o"), col("band"), col("bhash")),
-        Seq("band", "bhash"))
-      .filter(col("id_n") =!= col("id_o"))
-      .select(least(col("id_n"), col("id_o")).as("id_a"),
-        greatest(col("id_n"), col("id_o")).as("id_b"))
-      .distinct()
-    verifyPairs(candidates, shOld.unionByName(shNew))
+    val (shOld, shNew) = incrementShingles(oldDocs, newDocs)
+    incrementPairs(shOld, shNew)
   }
 
   /** Scoped form of [[minhashIncrement]] (the Store.loadJsonlLenientScoped
@@ -522,37 +458,51 @@ object Similarity {
   def minhashIncrementScoped[T](oldDocs: DataFrame, newDocs: DataFrame)
       (f: DataFrame => T): T = {
     val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    // new-version-wins on re-ingested doc_ids, like [[minhashIncrement]]
-    val old = oldDocs.join(newDocs.select("doc_id"), Seq("doc_id"), "left_anti")
-    val shOld = shingleHashesOf(old).persist(lvl)
-    val shNew = shingleHashesOf(newDocs).persist(lvl)
-    try {
-      val bNew = bandsOf(shNew)
-      val bAll = bandsOf(shOld).unionByName(bNew)
-      val candidates = bNew.select(col("doc_id").as("id_n"), col("band"), col("bhash"))
-        .join(bAll.select(col("doc_id").as("id_o"), col("band"), col("bhash")),
-          Seq("band", "bhash"))
-        .filter(col("id_n") =!= col("id_o"))
-        .select(least(col("id_n"), col("id_o")).as("id_a"),
-          greatest(col("id_n"), col("id_o")).as("id_b"))
-        .distinct()
-      f(verifyPairs(candidates, shOld.unionByName(shNew)))
-    } finally { shOld.unpersist(); shNew.unpersist() }
+    val (old, fresh) = incrementShingles(oldDocs, newDocs)
+    val shOld = old.persist(lvl)
+    val shNew = fresh.persist(lvl)
+    try f(incrementPairs(shOld, shNew))
+    finally { shOld.unpersist(); shNew.unpersist() }
   }
 
-  private def docShingleHashes(s: SparkSession, d: String): DataFrame =
+  /** Shingle-hash frames of the old and new slices, new-version-wins on
+    * re-ingested doc_ids (the old slice is anti-joined against the new
+    * slice's ids).
+    */
+  private def incrementShingles(oldDocs: DataFrame, newDocs: DataFrame)
+      : (DataFrame, DataFrame) = {
+    val old = oldDocs.join(newDocs.select("doc_id"), Seq("doc_id"), "left_anti")
+    (shingleHashesOf(old), shingleHashesOf(newDocs))
+  }
+
+  /** The band join of the new slice against both slices, verified. */
+  private def incrementPairs(shOld: DataFrame, shNew: DataFrame): DataFrame = {
+    val bNew = bandsOf(shNew)
+    val bAll = bandsOf(shOld).unionByName(bNew)
+    // one side is always NEW; normalize to id_a < id_b, dedup multi-band
+    val candidates = bNew.select(col("doc_id").as("id_n"), col("band"), col("bhash"))
+      .join(bAll.select(col("doc_id").as("id_o"), col("band"), col("bhash")),
+        Seq("band", "bhash"))
+      .filter(col("id_n") =!= col("id_o"))
+      .select(least(col("id_n"), col("id_o")).as("id_a"),
+        greatest(col("id_n"), col("id_o")).as("id_b"))
+      .distinct()
+    verifyPairs(candidates, shOld.unionByName(shNew))
+  }
+
+  private[graft] def docShingleHashes(s: SparkSession, d: String): DataFrame =
     SessionCache.persisted(s, d, "doc_shingle_hashes")(
       shingleHashesOf(Tables.documents(s, d)))
 
   // bands materialized: the bucket self-join reads it from two aliased
   // sides — without it the signature pass runs twice
-  private def minhashBands(s: SparkSession, d: String): DataFrame =
+  private[graft] def minhashBands(s: SparkSession, d: String): DataFrame =
     SessionCache.persisted(s, d, "minhash_bands")(
       bandsOf(docShingleHashes(s, d)))
 
   // candidates materialized: consumed three times downstream (two id-side
   // semi-joins + the final pair filter); it is tiny (collision pairs only)
-  private def minhashCandidates(s: SparkSession, d: String): DataFrame =
+  private[graft] def minhashCandidates(s: SparkSession, d: String): DataFrame =
     SessionCache.persisted(s, d, "minhash_candidates") {
       val bands = minhashBands(s, d)
       bands.select(col("doc_id").as("id_a"), col("band"), col("bhash"))
@@ -681,7 +631,7 @@ object Similarity {
     fp.select(col("*"), explode(array(keys: _*)).as("hk"))
   }
 
-  private def simhashFingerprints(s: SparkSession, d: String): DataFrame =
+  private[graft] def simhashFingerprints(s: SparkSession, d: String): DataFrame =
     SessionCache.persisted(s, d, "simhash_fp") {
       withSimhashFp(Tables.documents(s, d)
         // small single-file inputs scan as ONE partition; spread rows so
@@ -1330,7 +1280,7 @@ object Similarity {
     * Narrow per-row argmin over the typedlit model; co-partitioned with
     * the corpus, nothing shuffles.
     */
-  private def ivfAssigned(s: SparkSession, d: String): DataFrame =
+  private[graft] def ivfAssigned(s: SparkSession, d: String): DataFrame =
     ivfAssignedK(s, d, IvfK, "ivf_assign")
 
   private def ivfAssignedK(s: SparkSession, d: String, k: Int,
@@ -1514,8 +1464,8 @@ object Similarity {
     * ([[TopK.perKey]]); the index paths are the production point-query
     * plans themselves (bucketed/listed, broadcast probes); the
     * truth⋈answer match is a semi-join over ≤ 5·S rows. The truth
-    * frame persists inline (tiny; 4 consumers would otherwise re-run
-    * the linear scan each).
+    * frame is a [[graft.SessionCache]] entry (tiny; 4 consumers would
+    * otherwise re-run the linear scan each, and repeat runs share it).
     */
   val qAnnHealth: Q = Q.rowsOnly("q_ann_health") { (s, d) =>
     import graft.functions.Det.exactDiv
@@ -1536,9 +1486,9 @@ object Similarity {
         .select(col("query_id"), col("vec_id"),
           cosine(call_function("graft_dot_q", col("qq"), col("qv")),
             col("n2q"), col("n2")).as("c"))
-      val truth = TopK.perKey(scored, Seq("query_id"), "c", "vec_id", 5)
-        .select(col("query_id"), col("vec_id").as("nid"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val truth = SessionCache.persisted(s, d, "ann_health_truth")(
+        TopK.perKey(scored, Seq("query_id"), "c", "vec_id", 5)
+          .select(col("query_id"), col("vec_id").as("nid")))
       def statsFor(name: String, approx: DataFrame): DataFrame = {
         val t = truth
           .agg(countDistinct(col("query_id")).as("n_queries"),

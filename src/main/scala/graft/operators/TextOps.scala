@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Q, Tables}
+import graft.{Q, SessionCache, Tables}
 import graft.functions.Det._
 import graft.functions.GraftFunctions
 import org.apache.spark.sql.expressions.Window
@@ -631,7 +631,7 @@ object TextOps {
     // rule, applied proactively; same hashed-postings collision premise
     // as [[qDupSpans]]). The string side tokenizes once for tf; df
     // rides the prepaid build_token_counts cache.
-    val df = tokenCounts(Tables.documents(s, d))
+    val df = tokenCounts(s, d)
       .groupBy("h").agg(count(lit(1)).as("df"))
     // r15: bounded-heap top-5 per doc (TopK.perKey) instead of a full
     // per-partition sort under row_number — the rn ≤ 5 row SET is
@@ -1408,7 +1408,7 @@ object TextOps {
     * (salted md5 + one string compare, codegen'd) — no doc-grain shuffle
     * at all, and the final rollup is again map-side-combined source
     * grain. Two corpus scans total; a lake deployment that materializes
-    * per-doc token counts (the [[prebuildTokenCounts]] pattern) pays the
+    * per-doc token counts (the [[tokenCounts]] pattern) pays the
     * text parse once.
     */
   val qMixApply: Q = Q(
@@ -1496,23 +1496,22 @@ object TextOps {
     * operators derive from ([[qQualityKs]] — the drift statistic;
     * [[qScoreCalibrate]] — the percentile map): ONE corpus evaluation of
     * the quality regexes, collapsed to ≤ #sources × [[BudgetBlocks]]+2
-    * rows and persisted inline (the [[dupSpanCounts]] contract — the
-    * b-IS-NOT-NULL filter pushes BELOW the aggregate in the scored-
-    * histogram branch, so the consumers' exchanges stop canonicalizing
-    * equal and ReuseExchange alone re-scans the corpus once per
-    * consumer; measured 12 scans on the KS query). CacheManager dedupes
-    * repeat calls by canonicalized plan, so every consumer — including a
-    * different operator in the same session — shares one entry
-    * (plan-guarded). NULL-score docs ride along with b = NULL:
-    * unassessed ≠ low-quality, and each consumer decides their
-    * treatment explicitly.
+    * rows and persisted once per (session, dir) in [[graft.SessionCache]]
+    * (the [[dupSpanCounts]] contract — the b-IS-NOT-NULL filter pushes
+    * BELOW the aggregate in the scored-histogram branch, so the
+    * consumers' exchanges stop canonicalizing equal and ReuseExchange
+    * alone re-scans the corpus once per consumer; measured 12 scans on
+    * the KS query). Every consumer — including a different operator in
+    * the same session — reads the one entry (plan-guarded). NULL-score
+    * docs ride along with b = NULL: unassessed ≠ low-quality, and each
+    * consumer decides their treatment explicitly.
     */
   private[graft] def sourceBucketCounts(s: SparkSession, d: String): DataFrame =
-    qualityScored(Tables.documents(s, d))
-      .select(col("source"),
-        floor(col("quality_score") * BudgetBlocks).cast("int").as("b"))
-      .groupBy("source", "b").agg(count(lit(1)).as("c"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    SessionCache.persisted(s, d, "source_bucket_counts")(
+      qualityScored(Tables.documents(s, d))
+        .select(col("source"),
+          floor(col("quality_score") * BudgetBlocks).cast("int").as("b"))
+        .groupBy("source", "b").agg(count(lit(1)).as("c")))
 
   /** Per-source token-count histogram in POWER-OF-TWO buckets — the
     * context-length planning view ([[Profiling.qLengthHistogram]] buckets
@@ -1959,42 +1958,30 @@ object TextOps {
        |    AND COALESCE(n_ngrams, 0) > 0) AS mostly_dup
        |FROM documents d LEFT JOIN perdoc USING (doc_id)
        |ORDER BY d.doc_id""".stripMargin
-  ) { (s, d) => dupSpansOf(Tables.documents(s, d), useWindow = false) }
+  ) { (s, d) =>
+    dupSpansFrom(Tables.documents(s, d), dupSpanCounts(s, d), useWindow = false)
+  }
 
-  /** Both physical strategies of the dup-span accounting, shared so the
-    * spec pins them identical on the real corpus AND a crafted
-    * boilerplate-heavy one:
-    *
-    *  - join-back (`useWindow = false`, the SHIPPED default): document
-    *    frequency as a map-side-combined aggregate over the (doc, gram)
-    *    counts, joined back on the gram hash. A boilerplate gram is a hot
-    *    JOIN key — and skewed join partitions split at runtime under AQE,
-    *    where a hot WINDOW partition is an un-splittable serialization
-    *    point. The (doc, gram) subtree feeds both the df aggregate and
-    *    the join probe side with IDENTICAL exchanges, so ReuseExchange
-    *    runs the gram explode + partial aggregate once and both consumers
-    *    read the same shuffle files (plan-guarded) — the "materialize the
-    *    counts once" escape without an explicit cache.
-    *  - window (`useWindow = true`): df as COUNT(*) OVER (PARTITION BY h)
-    *    riding the gram-key shuffle — one exchange fewer, the shape a
-    *    deploy may pick on a corpus known boilerplate-free; kept as the
-    *    spec's cross-check of the shipped form.
+  /** The materialized (doc_id, gram-hash, multiplicity) table of
+    * (session, dir) that [[qDupSpans]] and [[qSubstringDedup]] read,
+    * persisted once in [[graft.SessionCache]]: the join-back form
+    * consumes it from TWO subtrees (df aggregate + join probe side), and
+    * without materialization Catalyst prunes the branches differently
+    * (the df branch loses `m`), the exchanges stop canonicalizing equal,
+    * and the corpus gets tokenized + gram-exploded TWICE (measured —
+    * stage reuse does NOT rescue it). At lake scale this is the escape's
+    * own premise — "materialize the counts once" — and the cached bytes
+    * are the same narrow rows the window form shuffles. Bench pre-pays it
+    * as the named `build_dup_span_counts` entry.
     */
-  /** The materialized (doc_id, gram-hash, multiplicity) table both
-    * [[dupSpansOf]] strategies read. Persisted MEMORY_AND_DISK: the
-    * join-back form consumes it from TWO subtrees (df aggregate + join
-    * probe side), and without materialization Catalyst prunes the
-    * branches differently (the df branch loses `m`), the exchanges stop
-    * canonicalizing equal, and the corpus gets tokenized + gram-exploded
-    * TWICE (measured — stage reuse does NOT rescue it). Spark's
-    * CacheManager keys on the canonicalized plan, so repeat calls over
-    * the same input share one entry (the [[Similarity]] index-cache
-    * lifecycle); at lake scale this is the escape's own premise —
-    * "materialize the counts once" — and the cached bytes are the same
-    * narrow rows the window form shuffles. Bench pre-pays it as the
-    * named `build_dup_span_counts` entry.
+  private[graft] def dupSpanCounts(s: SparkSession, d: String): DataFrame =
+    SessionCache.persisted(s, d, "dup_span_counts")(
+      dupSpanCountsOf(Tables.documents(s, d)))
+
+  /** The uncached (doc_id, gram-hash, multiplicity) plan over any
+    * document frame.
     */
-  private def dupSpanCounts(docs: DataFrame): DataFrame = {
+  private def dupSpanCountsOf(docs: DataFrame): DataFrame = {
     // doc_id-hash spread: the single-file testdata scan's parallelism
     // guard (a multi-split lake scan replaces it), as in qDecontaminate.
     // r14: the tokenize → 5-gram concat → xxhash64 chain is ONE
@@ -2008,7 +1995,6 @@ object TextOps {
         col("doc_id"))
       .select(col("doc_id"), explode(gramHashes(norm, DupSpanN)).as("h"))
       .groupBy("doc_id", "h").agg(count(lit(1)).as("m"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
   }
 
   /** dropEmpty positional gram hashes of a text column (see
@@ -2018,16 +2004,31 @@ object TextOps {
   private def gramHashes(text: Column, n: Int): Column =
     GraftFunctions.call("graft_gram_hashes", text, lit(n), lit(false))
 
-  /** Bench hook: materialize the dup-span gram counts for (s, d) so the
-    * timed q_dup_spans runs measure the query, with the shared build cost
-    * as its own named entry (the Similarity prebuild convention).
+  /** [[dupSpansFrom]] over any document frame, counted by the uncached
+    * plan (the spec's strategy cross-check on crafted corpora).
     */
-  def prebuildDupSpanCounts(s: SparkSession, d: String): Unit = {
-    dupSpanCounts(Tables.documents(s, d)).count(); ()
-  }
+  private[graft] def dupSpansOf(docs: DataFrame, useWindow: Boolean): DataFrame =
+    dupSpansFrom(docs, dupSpanCountsOf(docs), useWindow)
 
-  private[graft] def dupSpansOf(docs: DataFrame, useWindow: Boolean): DataFrame = {
-    val cnt = dupSpanCounts(docs)
+  /** Both physical strategies of the dup-span accounting, shared so the
+    * spec pins them identical on the real corpus AND a crafted
+    * boilerplate-heavy one:
+    *
+    *  - join-back (`useWindow = false`, the SHIPPED default): document
+    *    frequency as a map-side-combined aggregate over the (doc, gram)
+    *    counts, joined back on the gram hash. A boilerplate gram is a hot
+    *    JOIN key — and skewed join partitions split at runtime under AQE,
+    *    where a hot WINDOW partition is an un-splittable serialization
+    *    point. The (doc, gram) counts `cnt` feed both the df aggregate
+    *    and the join probe side; over the materialized [[dupSpanCounts]]
+    *    both read the one cached table (plan-guarded).
+    *  - window (`useWindow = true`): df as COUNT(*) OVER (PARTITION BY h)
+    *    riding the gram-key shuffle — one exchange fewer, the shape a
+    *    deploy may pick on a corpus known boilerplate-free; kept as the
+    *    spec's cross-check of the shipped form.
+    */
+  private def dupSpansFrom(docs: DataFrame, cnt: DataFrame,
+      useWindow: Boolean): DataFrame = {
     val flagged =
       if (useWindow)
         cnt.withColumn("nd", count(lit(1)).over(Window.partitionBy("h")))
@@ -2118,7 +2119,7 @@ object TextOps {
     val docs = Tables.documents(s, d)
     // duplicated-gram roster off the ONE materialized count table (its
     // per-(doc, gram) grain makes COUNT the document frequency)
-    val dup = dupSpanCounts(docs).groupBy("h")
+    val dup = dupSpanCounts(s, d).groupBy("h")
       .agg(count(lit(1)).as("nd"))
       .filter(col("nd") >= DupSpanMinDocs).select("h")
     // positioned gram hashes: ONE GramHashKernel pass (r14 — bit-identical
@@ -2398,7 +2399,7 @@ object TextOps {
        |FROM documents d LEFT JOIN per USING (doc_id)
        |ORDER BY d.doc_id""".stripMargin
   ) { (s, d) =>
-    val cnt = tokenCounts(Tables.documents(s, d))
+    val cnt = tokenCounts(s, d)
     val cf = cnt.groupBy("h").agg(sum("m").as("cf"))
     val per = cnt.join(cf, "h").groupBy("doc_id").agg(
       sum(col("m")).as("n_tokens"),
@@ -2414,29 +2415,21 @@ object TextOps {
       .orderBy("doc_id")
   }
 
-  /** The materialized (doc_id, token-hash, multiplicity) table
-    * [[qFamiliarity]]'s two consumers read — the 1-gram twin of
-    * [[dupSpanCounts]], same persistence rationale (without it the
-    * differently-pruned cf/probe branches tokenize the corpus twice),
-    * same CacheManager plan-dedupe lifecycle, same named
-    * `build_token_counts` bench entry.
+  /** The materialized (doc_id, token-hash, multiplicity) table of
+    * (session, dir) that [[qFamiliarity]]'s two consumers and
+    * [[qTfidfTerms]]' df read — the 1-gram twin of [[dupSpanCounts]], same
+    * persistence rationale (without it the differently-pruned cf/probe
+    * branches tokenize the corpus twice), same [[graft.SessionCache]]
+    * lifecycle, named `build_token_counts` in the bench.
     */
-  private def tokenCounts(docs: DataFrame): DataFrame =
-    docs
-      .repartition(docs.sparkSession.sparkContext.defaultParallelism,
-        col("doc_id"))
-      .select(col("doc_id"),
-        explode(filter(split(norm, " "), t => t =!= "")).as("tok"))
-      .groupBy(col("doc_id"), xxhash64(col("tok")).as("h"))
-      .agg(count(lit(1)).as("m"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-
-  /** Bench hook: materialize the familiarity token counts for (s, d) —
-    * the [[prebuildDupSpanCounts]] convention.
-    */
-  def prebuildTokenCounts(s: SparkSession, d: String): Unit = {
-    tokenCounts(Tables.documents(s, d)).count(); ()
-  }
+  private[graft] def tokenCounts(s: SparkSession, d: String): DataFrame =
+    SessionCache.persisted(s, d, "token_counts")(
+      Tables.documents(s, d)
+        .repartition(s.sparkContext.defaultParallelism, col("doc_id"))
+        .select(col("doc_id"),
+          explode(filter(split(norm, " "), t => t =!= "")).as("tok"))
+        .groupBy(col("doc_id"), xxhash64(col("tok")).as("h"))
+        .agg(count(lit(1)).as("m")))
 
   /** Per-document feature frame for quality-classifier training — the
     * featurization pass behind a FineWeb-Edu-style learned quality

@@ -47,18 +47,14 @@ object IngestStream {
     * 3): the rule ships HERE, beside the sinks it sizes — the bench
     * reads it from this object, and a library consumer starting any
     * [[IngestStream]] sink under [[withStatePartitions]] inherits the
-    * same sizing instead of the 32-near-empty-commit default.
-    * `SPARK_GRAFT_STREAM_PARTITIONS` overrides for studies. Results are
+    * same sizing instead of the 32-near-empty-commit default. Results are
     * partitioning-independent (state keying is by hash, unchanged); only
     * the commit/task fan-out changes.
     */
   def statePartitionsFor(spark: org.apache.spark.sql.SparkSession,
       rowsPerTrigger: Int): Int =
-    sys.env.get("SPARK_GRAFT_STREAM_PARTITIONS")
-      .flatMap(v => scala.util.Try(v.toInt).toOption).filter(_ > 0)
-      .getOrElse(math.max(1, math.min(
-        spark.sparkContext.defaultParallelism,
-        rowsPerTrigger / RowsPerStatePartition + 1)))
+    math.max(1, math.min(spark.sparkContext.defaultParallelism,
+      rowsPerTrigger / RowsPerStatePartition + 1))
 
   /** Run `body` (typically: build + start one streaming sink) with
     * `spark.sql.shuffle.partitions` set to [[statePartitionsFor]]'s

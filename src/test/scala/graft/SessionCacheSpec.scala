@@ -6,8 +6,9 @@ import scala.jdk.CollectionConverters._
 
 /** The session registry ([[SessionCache]]): a lake rewritten under a live
   * session is re-read with no clear call, an unchanged lake is a hit by
-  * reference, [[SessionCache.clear]] leaves no persistent RDD behind, and
-  * no module keeps a memo of its own.
+  * reference, [[SessionCache.clear]] leaves no persistent RDD behind, no
+  * frame is persisted outside it beyond one scoped call, and no module
+  * keeps a memo of its own.
   */
 class SessionCacheSpec extends SparkSpec {
   import spark.implicits._
@@ -59,7 +60,7 @@ class SessionCacheSpec extends SparkSpec {
     val fresh = Assembly.bpeMerges(spark, dir, 5, Assembly.BpeDriverMaxVocab)
     assert(fresh.head._2 == "x" && fresh.head._3 == "y", fresh)
     assert(Similarity.nQuantized(spark, dir) == 30)
-    // a plan-keyed inline persist over the rewritten table is fresh too
+    // the shared quality histogram over the rewritten table is fresh too
     assert(bucketTotal(dir) == 3)
   }
 
@@ -93,19 +94,63 @@ class SessionCacheSpec extends SparkSpec {
     assert(left.isEmpty, s"left behind: ${left.values.mkString(", ")}")
   }
 
+  test("SessionCache.clear() releases the frames the queries share") {
+    val dir = lake()
+    writeDocs(dir, Seq("the slow big merge of the day", "a big slow merge of the slow day",
+      "merge big slow day of the merge", "the day"))
+    writeEmbeddings(dir, 40)
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    Seq("q_quality_ks", "q_dup_spans", "q_familiarity", "q_ann_health")
+      .foreach(q => SparkEntry.queries(q)(spark, dir).collect())
+    assert(sc.getPersistentRDDs.keys.exists(!before(_)), "the queries persisted nothing")
+    SessionCache.clear()
+    val left = sc.getPersistentRDDs.filter { case (id, _) => !before(id) }
+    assert(left.isEmpty, s"left behind: ${left.values.mkString(", ")}")
+  }
+
+  private def mainSources(): List[java.nio.file.Path] = {
+    val root = java.nio.file.Paths.get("src/main/scala")
+    assert(java.nio.file.Files.isDirectory(root), s"run from the repo root: $root")
+    val it = java.nio.file.Files.walk(root)
+    try it.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+    finally it.close()
+  }
+
+  test("no frame is persisted outside SessionCache but in a scoped try/finally") {
+    // (file, enclosing object member) of each persist that is released
+    // in a finally (or by the caller's scoped wrapper) before it returns
+    val allowed = Set(
+      ("Similarity.scala", "components"),
+      ("Similarity.scala", "knnGeometryStatsUncached"),
+      ("Similarity.scala", "minhashIncrementScoped"),
+      ("IngestStream.scala", "neardupBatch"),
+      ("IngestStream.scala", "curationLoop"),
+      ("IngestStream.scala", "alertsSink"),
+      ("IngestStream.scala", "driftSink"),
+      ("Store.scala", "appendDeduped"),
+      ("Store.scala", "loadJsonlLenient"))
+    // members are declared at the object's two-space indent
+    val member = raw"(?m)^  (?:[\w\[\]]+ )*(?:def|val) (\w+)".r
+    val offenders = mainSources().filterNot(_.getFileName.toString == "SessionCache.scala")
+      .flatMap { f =>
+        val src = new String(java.nio.file.Files.readAllBytes(f), "UTF-8")
+        val name = f.getFileName.toString
+        raw"\.persist\(|\.cache\(\)".r.findAllMatchIn(src).map { m =>
+          val owner = member.findAllMatchIn(src.substring(0, m.start)).toList
+            .lastOption.fold("<top level>")(_.group(1))
+          (name, owner)
+        }.filterNot(allowed).map { case (n, o) => s"$n: $o" }
+      }
+    assert(offenders.isEmpty, offenders.distinct.mkString("; "))
+  }
+
   test("no module keeps a concurrent.TrieMap memo outside SessionCache") {
     // the one exception: a width-keyed constant table that touches no
     // session or lake
     val allowed = Set(("Similarity.scala", "hyperplaneBanks"))
     val decl = raw"val\s+(\w+)\s*=\s*(?:scala\.collection\.concurrent\.)?TrieMap".r
-    val root = java.nio.file.Paths.get("src/main/scala")
-    assert(java.nio.file.Files.isDirectory(root), s"run from the repo root: $root")
-    val files = {
-      val it = java.nio.file.Files.walk(root)
-      try it.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
-      finally it.close()
-    }
-    val offenders = files.filterNot(_.getFileName.toString == "SessionCache.scala").flatMap { f =>
+    val offenders = mainSources().filterNot(_.getFileName.toString == "SessionCache.scala").flatMap { f =>
       val src = new String(java.nio.file.Files.readAllBytes(f), "UTF-8")
       val name = f.getFileName.toString
       val declared = decl.findAllMatchIn(src).map(_.group(1)).toList
