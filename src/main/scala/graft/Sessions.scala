@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.internal.StaticSQLConf
+import org.apache.spark.sql.internal.{SQLConf, StaticSQLConf}
 
 /** The one SparkSession recipe every driver main shares. Verify and Bench
   * MUST run under identical semantics — correctness validated under one
@@ -39,11 +39,29 @@ object Sessions {
       // row-group size; sub-16 MB files still read as one task each.
       .config("spark.sql.files.maxPartitionBytes", "16m")
       .config("spark.sql.session.timeZone", "UTC")
+      // lower/upper/initcap through the JVM's case mapping instead of
+      // ICU's, without ICU's seconds-long JVM-global case-map init
+      // (CaseMapSpec pins the strings). Non-ASCII text then maps under
+      // the JVM's default locale: a Turkish, Azeri or Lithuanian one
+      // maps I and İ differently.
+      .config(SQLConf.ICU_CASE_MAPPINGS_ENABLED.key, "false")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
+    quietUnpartitionedWindows()
     s
   }
+
+  /** Silence WindowExec's "No Partition Defined for Window operation"
+    * WARN, raised on every execution of an unpartitioned window. Every
+    * such window in the registry sits over an Aggregate or a Limit
+    * (WindowGuardSpec checks the optimized plans), so the WARN names no
+    * large single-partition sort, and a run logs it thousands of times.
+    */
+  def quietUnpartitionedWindows(): Unit =
+    org.apache.logging.log4j.core.config.Configurator.setLevel(
+      "org.apache.spark.sql.execution.window.WindowExec",
+      org.apache.logging.log4j.Level.ERROR)
 
   /** SPARK_GRAFT_CPUS-sized session (default local[32], 32 shuffle parts). */
   def buildDefault(): SparkSession = {

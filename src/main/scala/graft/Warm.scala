@@ -6,13 +6,11 @@ import org.apache.spark.sql.functions._
 /** One-time JVM warm-up helpers shared by the driver mains. */
 object Warm {
 
-  /** Pre-pay the ICU case-mapping initialization. The first task that
-    * evaluates `lower()`/`upper()` under the default collation loads
-    * `CollationAwareUTF8String` — a JVM-global static init that builds the
-    * ICU case maps (seconds of CPU, worse on a cold file cache) while every
-    * sibling task blocks on the class-init lock. Running one tiny job here
-    * moves that cost out of the first real query; on a multi-executor
-    * cluster the same line belongs in an executor-startup hook.
+  /** Pre-pay the session's first job: task launch, the first code
+    * generation and the first class loading of the string case-mapping
+    * path, so none of it lands on the first real query. (With ICU case
+    * maps off — [[Sessions.build]] — there is no multi-second ICU init
+    * left to pay; the name is kept for the harnesses that time it.)
     */
   def icu(spark: SparkSession): Unit = {
     // the case expressions must (a) depend on a non-constant column and

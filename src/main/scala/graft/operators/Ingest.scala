@@ -1034,8 +1034,8 @@ object Ingest {
   /** The run-grain observation rows the alert rules read: [[runCountsWith]]
     * cells (plus the null-props count, in the same pass) with the derived
     * duration/inserted columns. `runKey` is the one mode difference —
-    * batch groups by [[runIdCol]], the streaming twin by a day-tumbling
-    * event-time window.
+    * batch groups by [[runIdCol]], the [[graft.streaming.IngestStream
+    * .alertsSink]] run loop by a day-tumbling event-time window.
     */
   private[graft] def alertRunRows(events: org.apache.spark.sql.DataFrame,
       runKey: org.apache.spark.sql.Column): org.apache.spark.sql.DataFrame =
@@ -1046,79 +1046,32 @@ object Ingest {
       .withColumn("duration_us", col("ended_us") - col("started_us"))
       .withColumn("inserted", col("fetched") - col("skipped"))
 
-  /** THE rolling-moment definitions (name → aggregate), in one place:
-    * [[withAlertBaseline]] windows them, [[alertBaselineNext]] aggregates
-    * them globally, [[alertBaseline]] selects them, and the streaming
-    * twin's fallback resolution iterates [[AlertMoments]] (DERIVED from
-    * this seq, never hand-spelled) — adding a moment for a new rule
-    * updates every site or none (the silent-drift surface a per-site
-    * spelling would reopen).
-    */
-  private def alertMomentAggs: Seq[(String, org.apache.spark.sql.Column)] = {
-    def dec(c: org.apache.spark.sql.Column) =
-      c.cast(org.apache.spark.sql.types.DecimalType(38, 0))
-    Seq(
-      "n5" -> count(lit(1)),
-      "sum5" -> sum("inserted"),
-      "sumdur5" -> sum("duration_us"),
-      "f5" -> sum("fetched"),
-      "nulls5" -> sum("nulls_props"),
-      "sumsq5" -> sum(dec(col("inserted")) * col("inserted")))
-  }
-
-  private[graft] lazy val AlertMoments: Seq[String] =
-    alertMomentAggs.map(_._1)
-
   /** Attach the preceding-5-run baseline moments to each run row (ROWS 5
     * PRECEDING..1 PRECEDING over the run-grain aggregate — O(#runs) rows
-    * through the unpartitioned window, the qRunDeltas contract). Batch
-    * path only: streaming append mode cannot window over runs, so its
-    * twin joins the SAME columns from a static baseline frame
-    * ([[alertBaseline]]) or, in the [[graft.streaming.IngestStream
-    * .alertsSink]] run loop, windows the ADVANCING stored history.
+    * through the unpartitioned window, the qRunDeltas contract). Shared
+    * by batch [[alerts]] and the [[graft.streaming.IngestStream
+    * .alertsSink]] run loop, which windows the ADVANCING stored history
+    * (streaming append mode cannot window over runs).
     */
   private[graft] def withAlertBaseline(runs: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame = {
+    def dec(c: org.apache.spark.sql.Column) =
+      c.cast(org.apache.spark.sql.types.DecimalType(38, 0))
     val w5 = Window.orderBy("run_id").rowsBetween(-5, -1)
-    alertMomentAggs.foldLeft(runs) { case (df, (name, agg)) =>
-      df.withColumn(name, agg.over(w5))
-    }
-  }
-
-  /** run_id → preceding-5 baseline moments over the batch event log — the
-    * static frame the STREAMING alert twin broadcast-joins (the
-    * continuous-mode monitor evaluating each closing run against its
-    * stored run history, monitor.get_recent_health_reports:463).
-    */
-  def alertBaseline(events: org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame =
-    withAlertBaseline(alertRunRows(events, runIdCol))
-      .select(("run_id" +: AlertMoments).map(col): _*)
-
-  /** The baseline a run arriving AFTER the stored history would see: ONE
-    * row with the rolling moments over the LAST ≤5 stored runs — the
-    * reference monitor reading its latest get_recent_health_reports
-    * before evaluating a NEW run. [[alertBaseline]]'s per-run rows only
-    * cover run_ids already in the lake (each anchored at its own
-    * position), so without this row the streaming twin's window rules
-    * would silently never fire for any run newer than the capture — the
-    * production cadence. Over an EMPTY history the aggregate still
-    * yields its one row (n5 = 0, NULL sums) — the day-one semantics.
-    */
-  def alertBaselineNext(events: org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame = {
-    val aggs = alertMomentAggs.map { case (name, agg) => agg.as(name) }
-    alertRunRows(events, runIdCol)
-      .orderBy(col("run_id").desc).limit(5)
-      .agg(aggs.head, aggs.tail: _*)
+    runs
+      .withColumn("n5", count(lit(1)).over(w5))
+      .withColumn("sum5", sum("inserted").over(w5))
+      .withColumn("sumdur5", sum("duration_us").over(w5))
+      .withColumn("f5", sum("fetched").over(w5))
+      .withColumn("nulls5", sum("nulls_props").over(w5))
+      .withColumn("sumsq5", sum(dec(col("inserted")) * col("inserted")).over(w5))
   }
 
   /** The rule stage over baseline-carrying run rows — ALL seven monitor
     * rules evaluated in one inline struct-array explode, shared verbatim
-    * by batch [[alerts]] and the streaming twin
-    * ([[graft.streaming.IngestStream.alerts]]) so the thresholds cannot
-    * drift between modes. No sort: streaming append mode forbids it;
-    * batch adds its own.
+    * by batch [[alerts]] and the [[graft.streaming.IngestStream.alertsSink]]
+    * run loop so the thresholds cannot drift between modes. No sort:
+    * streaming append mode forbids it; batch adds its own.
     */
   private[graft] def alertRuleSelect(r: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame = {

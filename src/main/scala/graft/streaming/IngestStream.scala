@@ -212,26 +212,22 @@ object IngestStream {
   def enrichWithHistory(events: Dataset[Event], history: DataFrame): DataFrame =
     events.toDF().join(broadcast(history), Seq("event_type"), "left")
 
-  /** Streaming per-(run, app) health — the monitor running in the
-    * reference's continuous mode (SURVEY #15c's twin): day-tumbling
-    * event-time windows play the scrape runs, aggregated with the SAME
-    * [[graft.operators.Ingest.runCounts]] conventions and finished by the
-    * SAME status stage ([[graft.operators.Ingest.healthStatusSelect]]) as
-    * the batch operator — one definition of skip/error/status across both
-    * modes. Emits a (run, app) health row when the watermark closes the
-    * day window (Append); callers compose the watermark upstream (via
-    * [[dedupe]], like [[windowedCounts]]). State = one counts row per
-    * open (day, app) cell — bounded by #apps per watermark horizon.
+  /** Day-run counts — the one spelling of "a run is a UTC day" that
+    * [[appHealth]], [[alertsSink]] and [[driftSink]] share: `group`
+    * aggregates by the given day-tumbling event-time window (plus its own
+    * keys), and the window becomes the `yyyy-MM-dd` run_id the batch
+    * twins key on.
     *
     * REQUIRES a UTC session (what [[graft.Sessions.buildDefault]] pins):
     * `window(ts, '1 day')` buckets by epoch-aligned UTC days while the
-    * batch twin's `date_format` uses the session timezone — in a
+    * batch twins' `date_format` uses the session timezone — in a
     * non-UTC session the two would assign boundary events to different
     * runs, so the mismatch fails loud here instead of as silently
     * diverging cells.
     */
-  private def requireUtc(df: DataFrame, opName: String): Unit = {
-    val tz = df.sparkSession.conf.get("spark.sql.session.timeZone")
+  private def dayRuns(events: DataFrame, opName: String)(
+      group: org.apache.spark.sql.Column => DataFrame): DataFrame = {
+    val tz = events.sparkSession.conf.get("spark.sql.session.timeZone")
     // normalized(): accept every UTC spelling (Etc/UTC, GMT, +00:00, Z) —
     // only a genuinely offset zone misaligns the two day groupings
     val isUtc =
@@ -242,46 +238,64 @@ object IngestStream {
         s"(got spark.sql.session.timeZone=$tz): day windows are " +
         "UTC-aligned but the batch twin's run_id follows the session " +
         "timezone")
+    group(window(col("ts"), "1 day"))
+      .withColumn("run_id", date_format(col("window.start"), "yyyy-MM-dd"))
+      .drop("window")
   }
 
-  def appHealth(events: Dataset[Event]): DataFrame = {
-    requireUtc(events.toDF(), "appHealth")
+  /** Streaming per-(run, app) health — the monitor running in the
+    * reference's continuous mode (SURVEY #15c's twin): day-tumbling
+    * event-time windows play the scrape runs ([[dayRuns]]), aggregated
+    * with the SAME [[graft.operators.Ingest.runCounts]] conventions and
+    * finished by the SAME status stage
+    * ([[graft.operators.Ingest.healthStatusSelect]]) as the batch
+    * operator — one definition of skip/error/status across both modes.
+    * Emits a (run, app) health row when the watermark closes the day
+    * window (Append); callers compose the watermark upstream (via
+    * [[dedupe]], like [[windowedCounts]]). State = one counts row per
+    * open (day, app) cell — bounded by #apps per watermark horizon.
+    */
+  def appHealth(events: Dataset[Event]): DataFrame =
     graft.operators.Ingest.healthStatusSelect(
-      graft.operators.Ingest.runCounts(events.toDF(),
-          window(col("ts"), "1 day"), col("event_type").as("app_id"))
-        .withColumn("run_id", date_format(col("window.start"), "yyyy-MM-dd"))
-        .drop("window"))
-  }
+      dayRuns(events.toDF(), "appHealth")(day =>
+        graft.operators.Ingest.runCounts(events.toDF(), day,
+          col("event_type").as("app_id"))))
+
+  /** The one per-batch body of every keyed sink: `write` runs on each
+    * NON-EMPTY micro-batch. Most triggers close no window, and an empty
+    * batch would still pay each keyed append's store-scan anti-join (a
+    * per-trigger cost that grows with the landed store on a long-lived
+    * query); an empty batch offers no keys, so skipping it leaves every
+    * sink's replay contract intact. foreachBatch bridges the stream to
+    * the batch append path — [[graft.sources.Store.appendDeduped]]'s key
+    * anti-join makes micro-batch retries and full replays no-ops per key
+    * (the INSERT OR IGNORE contract): exactly-once per key WITHOUT sink
+    * transactionality. The batch id is not read.
+    */
+  private def keyedSink(stream: DataFrame)(write: DataFrame => Unit)
+      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
+    stream.writeStream.outputMode("append").foreachBatch {
+      (batch: DataFrame, _: Long) =>
+        if (!batch.isEmpty) write(batch)
+        ()
+    }
 
   /** Continuous-mode report persistence (monitor.store_report:423 called
     * from the reference's run loop): each closing (run, app) health row
     * lands in the keyed idempotent report store as the watermark closes
-    * its day window. foreachBatch bridges the stream to the batch append
-    * path — [[graft.sources.Store.appendDeduped]]'s key anti-join makes
-    * micro-batch retries and full replays no-ops per key (the INSERT OR
-    * IGNORE contract), which is exactly-once per report WITHOUT sink
-    * transactionality. The key is the (run_id, app_id) cell encoded as
-    * one column ('|' cannot occur in a yyyy-MM-dd run id, and an app id
-    * containing '|' would need an escaped encoding — the test corpus's
-    * event types cannot).
+    * its day window ([[keyedSink]]). The key is the (run_id, app_id) cell
+    * encoded as one column ('|' cannot occur in a yyyy-MM-dd run id, and
+    * an app id containing '|' would need an escaped encoding — the test
+    * corpus's event types cannot).
     *
     * Returns the prepared writer; the caller adds its checkpoint/trigger
     * and starts it (a library does not pick checkpoint locations).
     */
   def healthReportSink(health: DataFrame, path: String)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    health
-      .withColumn("report_key", concat_ws("|", col("run_id"), col("app_id")))
-      .writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        // most triggers close no window: skip the store-scan anti-join
-        // entirely on an empty batch (its cost grows with the landed
-        // store, paid per trigger on a long-lived query otherwise)
-        if (!batch.isEmpty)
-          graft.sources.Store.appendDeduped(batch, path, "report_key")
-        ()
-      }
+    keyedSink(health.withColumn("report_key",
+        concat_ws("|", col("run_id"), col("app_id"))))(
+      graft.sources.Store.appendDeduped(_, path, "report_key"))
 
   /** Streaming NEAR-dup ingest front — the near-duplicate tier of a
     * production ingest's dedup stack ([[dedupeContent]] is the exact
@@ -334,13 +348,8 @@ object IngestStream {
     */
   def neardupSink(docs: DataFrame, storePath: String, survivorsPath: String)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    docs.writeStream.outputMode("append").foreachBatch {
-      (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty)
-          neardupBatch(batch, storePath)(out =>
-            graft.sources.Store.appendDeduped(out, survivorsPath, "doc_id"))
-        ()
-    }
+    keyedSink(docs)(neardupBatch(_, storePath)(
+      graft.sources.Store.appendDeduped(_, survivorsPath, "doc_id")))
 
   /** The near-dup front's per-batch body, factored out of [[neardupSink]]
     * so [[curationLoop]] can CHAIN the next stage onto the batch's keepers
@@ -422,111 +431,66 @@ object IngestStream {
   def curationLoop(docs: DataFrame, fpStorePath: String, lakePath: String,
       auditPath: String, watermark: String = "1 hour")
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    dedupeContent(docs, watermark)
-      // the exact front's working column: the downstream stages reserve
-      // their own working columns and the landed lake must carry the
-      // input schema
-      .drop("content_hash")
-      .writeStream.outputMode("append").foreachBatch {
-        (batch: DataFrame, _: Long) =>
-          if (!batch.isEmpty)
-            neardupBatch(batch, fpStorePath) { kept =>
-              // one materialization for the two consumers (audit + lake):
-              // foreachBatch hands over a plan, not rows, and kept chains
-              // the band join + gate projections
-              val gated = curationGate(kept).persist()
-              try {
-                graft.sources.Store.appendDeduped(gated, auditPath, "doc_id")
-                graft.sources.Store.appendDeduped(
-                  gated.filter(col("admitted"))
-                    .drop("quality_score", "blocked", "gate", "admitted"),
-                  lakePath, "doc_id")
-              } finally { gated.unpersist(); () }
-            }
-          ()
+    // the exact front's working column: the downstream stages reserve
+    // their own working columns and the landed lake must carry the
+    // input schema
+    keyedSink(dedupeContent(docs, watermark).drop("content_hash")) { batch =>
+      neardupBatch(batch, fpStorePath) { kept =>
+        // one materialization for the two consumers (audit + lake):
+        // foreachBatch hands over a plan, not rows, and kept chains
+        // the band join + gate projections
+        val gated = curationGate(kept).persist()
+        try {
+          graft.sources.Store.appendDeduped(gated, auditPath, "doc_id")
+          graft.sources.Store.appendDeduped(
+            gated.filter(col("admitted"))
+              .drop("quality_score", "blocked", "gate", "admitted"),
+            lakePath, "doc_id")
+        } finally { gated.unpersist(); () }
       }
-
-  /** Streaming threshold alerts — the monitor's evaluate_run in the
-    * reference's CONTINUOUS mode (pipeline.py run loop +
-    * monitor._detect_anomalies:276): as the watermark closes each
-    * day-run window, the closing run's counts are evaluated against ALL
-    * SEVEN rules and the firing alerts are emitted, exactly the
-    * per-run-as-runs-complete cadence the reference runs. Three shared
-    * stages with batch [[graft.operators.Ingest.alerts]], so neither the
-    * counting conventions nor the thresholds can drift between modes:
-    * the run-grain counting ([[graft.operators.Ingest.alertRunRows]] —
-    * here keyed by a day-tumbling event-time window), and the rule
-    * struct-explode ([[graft.operators.Ingest.alertRuleSelect]]).
-    *
-    * `baseline` is the rolling-5-run moment frame (run_id → n5/sum5/
-    * sumdur5/f5/nulls5/sumsq5) from the STORED run history —
-    * [[graft.operators.Ingest.alertBaseline]] over the landed lake, the
-    * monitor reading get_recent_health_reports:463 before evaluating a
-    * run; `baselineNext` is its one-row open-ended tail
-    * ([[graft.operators.Ingest.alertBaselineNext]]) — the moments a run
-    * NEWER than the stored history evaluates against (the production
-    * cadence: the stream closes runs the lake has not landed yet, so
-    * keying on the closing run's own run_id alone would silently
-    * disable every window rule for exactly the runs the monitor
-    * exists to watch). Both join stream-static broadcast (no streaming
-    * state): a stored run_id takes its own anchored row (the backfill /
-    * replay case), an unseen run_id falls back to the tail row. Over an
-    * empty day-one history the tail row carries n5 = 0/NULL sums and
-    * only the history-free count rules fire — batch's first-run
-    * semantics (spec-pinned).
-    *
-    * CONTRACT: because both frames are captured at stream construction,
-    * the tail row is the EXACT preceding-5 window only for the first
-    * run past the stored history — the second and later new runs still
-    * evaluate against it (stream-static joins cannot advance while the
-    * query runs). Deployments whose queries outlive one closing run use
-    * [[alertsSink]] — the foreachBatch run loop whose baseline advances
-    * with the store and is exact at any horizon; this transformation
-    * form exists for replay/backfill over a landed history and for
-    * composing alerts into a larger streaming plan.
-    *
-    * Input is a raw (event_id, ts, props) DataFrame, not Dataset[Event]:
-    * the null-props rate rule needs the payload column the typed event
-    * drops. State: one counts row per open day window, dropped at
-    * watermark — the [[windowedCounts]] bound.
-    */
-  def alerts(raw: DataFrame, baseline: DataFrame, baselineNext: DataFrame,
-      watermark: String = "10 minutes"): DataFrame = {
-    requireUtc(raw, "alerts")
-    val counts = graft.operators.Ingest.alertRunRows(
-        raw.withWatermark("ts", watermark), window(col("ts"), "1 day"))
-      .withColumn("run_id", date_format(col("window.start"), "yyyy-MM-dd"))
-      .drop("window")
-    val mom = graft.operators.Ingest.AlertMoments
-    val tail = baselineNext.select(mom.map(c => col(c).as(c + "_next")): _*)
-    val joined = counts
-      .join(broadcast(baseline), Seq("run_id"), "left")
-      .crossJoin(broadcast(tail))
-      // presence flag BEFORE any moment is rewritten: n5 is non-null on
-      // every stored row (it is a count), null exactly on join misses
-      .withColumn("__stored", col("n5").isNotNull)
-    val resolved = mom.foldLeft(joined) { (df, c) =>
-      df.withColumn(c,
-        when(col("__stored"), col(c)).otherwise(col(c + "_next")))
     }
-    // n5 is non-null on both resolution paths (stored rows carry a
-    // window count, the tail row a global count — even over an empty
-    // history), so no further null guard is needed
-    graft.operators.Ingest.alertRuleSelect(
-      resolved.drop(mom.map(_ + "_next") :+ "__stored": _*))
-  }
+
+  /** The run loop the two monitor sinks share ([[alertsSink]],
+    * [[driftSink]]) — per completed run, store its metrics, then evaluate
+    * against the stored history: each non-empty micro-batch of closing
+    * run rows lands keyed (`runKey`) in the run store at `runsPath`,
+    * `evaluate` runs over the UPDATED store, and its rows for the runs the
+    * batch OFFERS land keyed (`outKey`) at `outPath`. Evaluating every
+    * offered run, not just the newly-landed ones, is what makes a crash
+    * between the two appends safe: the replayed batch lands 0 run rows
+    * but re-derives the identical output, and the keyed append makes it a
+    * no-op. The batch is persisted once for its two consumers (the run
+    * append and the run-id semi-join) — foreachBatch hands over a plan,
+    * not rows.
+    */
+  private def runLoopSink(runs: DataFrame, runsPath: String, runKey: String,
+      outPath: String, outKey: String)(evaluate: DataFrame => DataFrame)
+      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
+    keyedSink(runs) { batch =>
+      val b = batch.persist()
+      try {
+        graft.sources.Store.appendDeduped(b, runsPath, runKey)
+        val fresh = evaluate(b.sparkSession.read.parquet(runsPath))
+          .join(broadcast(b.select("run_id").distinct()), Seq("run_id"))
+        graft.sources.Store.appendDeduped(fresh, outPath, outKey)
+      } finally { b.unpersist(); () }
+    }
 
   /** The reference's continuous run loop, whole (pipeline.py: per
     * completed run — store its metrics, then evaluate_run against the
-    * stored history): per micro-batch, land each CLOSING run's
-    * exact-integer observation row into the keyed metrics store, then
-    * evaluate ALL seven rules for exactly the newly-landed runs against
-    * the UPDATED store, appending the firing alerts. The stream-static
-    * [[alerts]] twin is exact only ONE run past its captured baseline
-    * (its tail row cannot advance while the query runs); this loop is
-    * exact at ANY horizon because the store advances with the stream —
-    * each new run's preceding-5 window is computed over the true landed
-    * history, however many runs have closed since the query started.
+    * stored history; monitor._detect_anomalies:276): as the watermark
+    * closes each day run ([[dayRuns]]), land the run's exact-integer
+    * observation row into the keyed metrics store, then evaluate ALL
+    * seven rules for the closing runs against the UPDATED store,
+    * appending the firing alerts ([[runLoopSink]]). Exact at ANY horizon
+    * because the store advances with the stream — each new run's
+    * preceding-5 window is computed over the true landed history, however
+    * many runs have closed since the query started. The counting
+    * ([[graft.operators.Ingest.alertRunRows]]), the rolling baseline
+    * ([[graft.operators.Ingest.withAlertBaseline]]) and the rules
+    * ([[graft.operators.Ingest.alertRuleSelect]]) are batch
+    * [[graft.operators.Ingest.alerts]]' own stages, so neither the
+    * counting conventions nor the thresholds can drift between modes.
     *
     * Replay safety is the keyed-append contract twice over: a replayed
     * run row is dropped by the metrics store's run_id anti-join, and its
@@ -537,46 +501,22 @@ object IngestStream {
     * runs), one unpartitioned window, broadcast semi-join on the new
     * run ids.
     *
+    * Input is a raw (event_id, ts, props) DataFrame, not Dataset[Event]:
+    * the null-props rate rule needs the payload column the typed event
+    * drops. State: one counts row per open day window, dropped at
+    * watermark — the [[windowedCounts]] bound.
+    *
     * Returns the prepared writer; the caller adds checkpoint/trigger.
     */
   def alertsSink(raw: DataFrame, metricsPath: String, alertsPath: String,
       watermark: String = "10 minutes")
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    requireUtc(raw, "alertsSink")
-    val counts = graft.operators.Ingest.alertRunRows(
-        raw.withWatermark("ts", watermark), window(col("ts"), "1 day"))
-      .withColumn("run_id", date_format(col("window.start"), "yyyy-MM-dd"))
-      .drop("window")
-    counts.writeStream.outputMode("append").foreachBatch {
-      (batch: DataFrame, _: Long) =>
-        val s = batch.sparkSession
-        // the whole body is guarded: most triggers close no window, and
-        // an empty batch would still pay a store-scan anti-join + a rule
-        // evaluation that emits nothing (per-trigger cost growing with
-        // the landed store). An empty batch offers no runs, so the
-        // crash-replay contract below is unaffected by the skip.
-        if (!batch.isEmpty) {
-          // one materialization for the batch's three consumers (the
-          // metrics append, the run-id semi-join) — foreachBatch hands
-          // over a plan, not rows
-          val b = batch.persist()
-          try {
-            graft.sources.Store.appendDeduped(b, metricsPath, "run_id")
-            // evaluate for every run the batch OFFERS, not just newly-
-            // landed ones: if a prior attempt crashed between the two
-            // appends, the replayed batch lands 0 metrics rows but must
-            // still (re)evaluate — the alert store's keyed anti-join
-            // makes re-evaluation a no-op
-            val hist = s.read.parquet(metricsPath)
-            val fired = graft.operators.Ingest.alertRuleSelect(
-                graft.operators.Ingest.withAlertBaseline(hist))
-              .join(broadcast(b.select("run_id").distinct()), Seq("run_id"))
-              .withColumn("alert_key",
-                concat_ws("|", col("run_id"), col("metric"), col("level")))
-            graft.sources.Store.appendDeduped(fired, alertsPath, "alert_key")
-          } finally { b.unpersist(); () }
-        }
-        ()
+    import graft.operators.Ingest.{alertRuleSelect, alertRunRows, withAlertBaseline}
+    runLoopSink(
+      dayRuns(raw, "alertsSink")(alertRunRows(raw.withWatermark("ts", watermark), _)),
+      metricsPath, "run_id", alertsPath, "alert_key") { hist =>
+      alertRuleSelect(withAlertBaseline(hist)).withColumn("alert_key",
+        concat_ws("|", col("run_id"), col("metric"), col("level")))
     }
   }
 
@@ -586,17 +526,12 @@ object IngestStream {
     * each day run, land the run's per-type counts into the keyed count
     * store, then recompute the total-variation drift row for exactly the
     * closing runs against the UPDATED store, appending to the drift
-    * report. The TV arithmetic is [[graft.operators.Ingest.driftOf]] —
-    * the batch operator's own definition over the store's (run, type)
-    * counts — so batch and stream cannot disagree about the rule
-    * (spec-pinned run-for-run).
-    *
-    * Exactly-once is the keyed-append contract twice over (the
-    * [[alertsSink]] shape): replayed count rows drop on the
-    * (run_id|event_type) key, replayed drift rows on run_id. Evaluation
-    * covers every run the batch OFFERS (not only newly-landed rows), so
-    * a crash between the two appends re-derives the identical drift row
-    * and the keyed append makes it a no-op.
+    * report ([[runLoopSink]]). The TV arithmetic is
+    * [[graft.operators.Ingest.driftOf]] — the batch operator's own
+    * definition over the store's (run, type) counts — so batch and stream
+    * cannot disagree about the rule (spec-pinned run-for-run). Replayed
+    * count rows drop on the (run_id|event_type) key, replayed drift rows
+    * on run_id.
     *
     * Ordering caveat (the [[neardupSink]] honesty rule): a run's drift
     * row is computed when its window CLOSES, against whatever earlier
@@ -615,31 +550,12 @@ object IngestStream {
   def driftSink(events: Dataset[Event], countsPath: String,
       driftPath: String, watermark: String = "10 minutes")
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    requireUtc(events.toDF(), "driftSink")
-    val counts = events
-      .withWatermark("ts", watermark)
-      .groupBy(window(col("ts"), "1 day"), col("event_type"))
-      .agg(count(lit(1)).as("c"))
-      .withColumn("run_id", date_format(col("window.start"), "yyyy-MM-dd"))
-      .drop("window")
-    counts.writeStream.outputMode("append").foreachBatch {
-      (batch: DataFrame, _: Long) =>
-        val s = batch.sparkSession
-        if (!batch.isEmpty) {
-          val b = batch.persist()
-          try {
-            graft.sources.Store.appendDeduped(
-              b.withColumn("count_key",
-                concat_ws("|", col("run_id"), col("event_type"))),
-              countsPath, "count_key")
-            val hist = s.read.parquet(countsPath)
-              .select("run_id", "event_type", "c")
-            val fresh = graft.operators.Ingest.driftOf(hist)
-              .join(broadcast(b.select("run_id").distinct()), Seq("run_id"))
-            graft.sources.Store.appendDeduped(fresh, driftPath, "run_id")
-          } finally { b.unpersist(); () }
-        }
-        ()
+    val counts = dayRuns(events.toDF(), "driftSink")(day =>
+        events.withWatermark("ts", watermark)
+          .groupBy(day, col("event_type")).agg(count(lit(1)).as("c")))
+      .withColumn("count_key", concat_ws("|", col("run_id"), col("event_type")))
+    runLoopSink(counts, countsPath, "count_key", driftPath, "run_id") { hist =>
+      graft.operators.Ingest.driftOf(hist.select("run_id", "event_type", "c"))
     }
   }
 

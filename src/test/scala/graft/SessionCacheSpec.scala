@@ -126,8 +126,7 @@ class SessionCacheSpec extends SparkSpec {
       ("Similarity.scala", "minhashIncrementScoped"),
       ("IngestStream.scala", "neardupBatch"),
       ("IngestStream.scala", "curationLoop"),
-      ("IngestStream.scala", "alertsSink"),
-      ("IngestStream.scala", "driftSink"),
+      ("IngestStream.scala", "runLoopSink"),
       ("Store.scala", "appendDeduped"),
       ("Store.scala", "loadJsonlLenient"))
     // members are declared at the object's two-space indent

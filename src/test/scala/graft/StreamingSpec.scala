@@ -119,64 +119,6 @@ class StreamingSpec extends SparkSpec {
       r.getAs[String]("level"), r.getAs[Double]("threshold"),
       r.getAs[Double]("actual"))
 
-  test("streaming alerts fire identically to the batch rules on closed runs") {
-    import spark.implicits._
-    implicit val sql = spark.sqlContext
-    val days = alertCorpus()
-    val rows = days.flatten
-    val batchDf = rows.toDF("event_id", "ts", "props")
-    def key(r: org.apache.spark.sql.Row) = alertKey(r)
-    val batch = graft.operators.Ingest.alerts(batchDf).collect().map(key).toSet
-    // several distinct rules must actually fire for this test to mean much
-    assert(batch.map(_._2).size >= 5, s"crafted corpus too tame: $batch")
-    // the stored-history baseline the continuous monitor would read
-    val baseline = graft.operators.Ingest.alertBaseline(batchDf)
-    val baselineNext = graft.operators.Ingest.alertBaselineNext(batchDf)
-    val mem = MemoryStream[(Long, Timestamp, String)]
-    val sentinel = Seq((7777L, new Timestamp(
-      java.sql.Timestamp.valueOf("2024-03-20 00:00:00").getTime), "{}"))
-    val got = runToCompletion(
-      IngestStream.alerts(mem.toDF().toDF("event_id", "ts", "props"),
-        baseline, baselineNext),
-      "alerts_stream", mem,
-      Seq(rows.take(400), rows.drop(400), sentinel)).map(key).toSet
-    // every crafted run closes (the sentinel's own never does; it is not
-    // in the batch frame either) → the streamed alert set IS the batch set
-    assert(got == batch, s"streaming alerts diverged:\n got=$got\n exp=$batch")
-
-    // THE production cadence: the lake has landed days 1-8, the stream
-    // closes a NEW day 9 the stored history has never seen — the window
-    // rules must fire off the open-ended tail baseline (the latest-5
-    // stored reports), exactly as batch computes day 9's preceding-5
-    // window over days 4-8
-    val hist = days.take(8).flatten.toDF("event_id", "ts", "props")
-    val memNew = MemoryStream[(Long, Timestamp, String)]
-    val gotNew = runToCompletion(
-      IngestStream.alerts(memNew.toDF().toDF("event_id", "ts", "props"),
-        graft.operators.Ingest.alertBaseline(hist),
-        graft.operators.Ingest.alertBaselineNext(hist)),
-      "alerts_stream_newrun", memNew, Seq(days(8), sentinel)).map(key).toSet
-    val batchDay9 = batch.filter(_._1 == "2024-02-09")
-    assert(batchDay9.nonEmpty, "crafted day 9 must fire window rules in batch")
-    assert(gotNew == batchDay9,
-      s"new-run alerts diverged:\n got=$gotNew\n exp=$batchDay9")
-
-    // day-one continuous mode: NO stored history yet → every run
-    // evaluates like batch's first run — exactly the history-free rules
-    // (error_rate, dedup_rate) fire, none of the rolling-window ones
-    val empty = batchDf.limit(0)
-    val memEmpty = MemoryStream[(Long, Timestamp, String)]
-    val gotEmpty = runToCompletion(
-      IngestStream.alerts(memEmpty.toDF().toDF("event_id", "ts", "props"),
-        graft.operators.Ingest.alertBaseline(empty),
-        graft.operators.Ingest.alertBaselineNext(empty)),
-      "alerts_stream_dayone", memEmpty, Seq(rows, sentinel)).map(key).toSet
-    val historyFree = batch.filter(a =>
-      a._2 == "error_rate" || a._2 == "dedup_rate")
-    assert(gotEmpty == historyFree,
-      s"day-one alerts diverged:\n got=$gotEmpty\n exp=$historyFree")
-  }
-
   test("alertsSink run loop: exact at any horizon; replay is a per-key no-op") {
     import spark.implicits._
     implicit val sql = spark.sqlContext
@@ -184,24 +126,26 @@ class StreamingSpec extends SparkSpec {
     val rows = days.flatten
     val batch = graft.operators.Ingest.alerts(
       rows.toDF("event_id", "ts", "props")).collect().map(alertKey).toSet
+    // several distinct rules must actually fire for this test to mean much
+    assert(batch.map(_._2).size >= 5, s"crafted corpus too tame: $batch")
     val base = java.nio.file.Files.createTempDirectory("graft_alertsink")
     val metricsPath = base.resolve("metrics").toString
     val alertsPath = base.resolve("alerts").toString
     val sentinel = Seq((7777L, new Timestamp(
       java.sql.Timestamp.valueOf("2024-03-20 00:00:00").getTime), "{}"))
-    def runOnce(): Unit = {
+    def stream(metricsPath: String, alertsPath: String,
+        batches: Seq[Seq[(Long, Timestamp, String)]]): Unit = {
       val mem = MemoryStream[(Long, Timestamp, String)]
       val query = IngestStream.alertsSink(
         mem.toDF().toDF("event_id", "ts", "props"),
         metricsPath, alertsPath).start()
-      // three micro-batch groups: runs close across DIFFERENT batches, so
-      // later runs' preceding-5 windows span runs landed by EARLIER
-      // batches — the multi-horizon exactness the stream-static twin
-      // cannot provide past its first new run
-      try Seq(rows.take(400), rows.slice(400, 800), rows.drop(800) ++ sentinel)
-        .foreach { b => mem.addData(b); query.processAllAvailable() }
+      try batches.foreach { b => mem.addData(b); query.processAllAvailable() }
       finally query.stop()
     }
+    // three micro-batch groups: runs close across DIFFERENT batches, so
+    // later runs' preceding-5 windows span runs landed by EARLIER batches
+    def runOnce(): Unit = stream(metricsPath, alertsPath,
+      Seq(rows.take(400), rows.slice(400, 800), rows.drop(800) ++ sentinel))
     runOnce()
     def storedAlerts = spark.read.parquet(alertsPath).drop("alert_key")
     assert(storedAlerts.collect().map(alertKey).toSet == batch,
@@ -214,6 +158,23 @@ class StreamingSpec extends SparkSpec {
     assert(storedAlerts.collect().map(alertKey).toSet == batch,
       "replay changed the landed alert set")
     assert(spark.read.parquet(metricsPath).count() == days.size)
+
+    // a new run past the landed history: one query lands days 1-8, a
+    // later query closes day 9 — its preceding-5 window (days 4-8) comes
+    // from the store the earlier query left, and only day 9's alerts land
+    val later = java.nio.file.Files.createTempDirectory("graft_alertsink_later")
+    val laterMetrics = later.resolve("metrics").toString
+    val day9Alerts = later.resolve("alerts").toString
+    stream(laterMetrics, later.resolve("alerts_1_8").toString,
+      Seq(days.take(8).flatten, sentinel))
+    stream(laterMetrics, day9Alerts, Seq(days(8), sentinel))
+    val batchDay9 = batch.filter(_._1 == "2024-02-09")
+    assert(batchDay9.exists(_._2 == "props_null_rate"),
+      s"crafted day 9 must fire a window rule in batch: $batchDay9")
+    val gotDay9 = spark.read.parquet(day9Alerts).drop("alert_key")
+      .collect().map(alertKey).toSet
+    assert(gotDay9 == batchDay9,
+      s"new-run alerts diverged:\n got=$gotDay9\n exp=$batchDay9")
   }
 
   test("driftSink run loop: TV drift rows equal the batch rule; replay is a per-key no-op") {
