@@ -465,9 +465,9 @@ object TokenCountsKernel {
   * trailing-space requirement forces whole-token equality), and both
   * engines' regexes agree because only exact token matches succeed
   * (leftmost-first vs leftmost-longest is moot). Taking the LOWERED
-  * string as input (not lowering inside) keeps Spark's ICU `lower()`
-  * upstream and shared — the kernel replaces only the regexp_replace
-  * materialization and the per-list NFA walks.
+  * string as input (not lowering inside) keeps the case fold
+  * (`Text.asciiLower`) upstream and shared — the kernel replaces only
+  * the regexp_replace materialization and the per-list NFA walks.
   *
   * Null lowered → null; a null lists argument yields a NULL result
   * (StaticInvoke null propagation short-circuits before the core

@@ -4,7 +4,8 @@ import graft.{Q, SessionCache, Tables}
 import graft.functions.Det._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import scala.jdk.CollectionConverters._
 
 /** Corpus-assembly operators — the "write the training run's input" end of
   * the pipeline (SURVEY §2.5): deterministic epoch shuffling with
@@ -157,6 +158,12 @@ object Assembly {
       s"$outDir/manifest")
   }
 
+  /** The words of [[Text.norm]]'s text, minus split's phantom "" tokens
+    * (see qRepetitionStats) — the tokenizer [[qPairCounts]] and BPE share.
+    */
+  private def words(text: Column): Column =
+    filter(split(Text.norm(text), " "), t => t =!= "")
+
   /** How many top pairs [[qPairCounts]] emits. */
   private[graft] val PairTopK = 100
 
@@ -190,9 +197,7 @@ object Assembly {
     // guard (a multi-split lake scan replaces it), as in dupSpanCounts
     val toks = Tables.documents(s, d)
       .repartition(s.sparkContext.defaultParallelism, col("doc_id"))
-      // phantom ""-token guard: see qRepetitionStats
-      .select(filter(split(Text.norm(col("text")), " "), t => t =!= "")
-        .as("w"))
+      .select(words(col("text")).as("w"))
     toks.filter(size(col("w")) >= 2)
       // array expr INLINE in the generator (CLAUDE.md invariant); get()
       // not w[i] so index lambdas never evaluate before their size guard
@@ -215,15 +220,15 @@ object Assembly {
     */
   private[graft] val BpeEow = "</w>"
 
-  /** Vocabulary-count gate between [[bpeTrain]]'s two physical loops:
-    * at or below it the (syms, freq) table collects to the driver and
-    * the merge loop runs locally (how production tokenizer trainers
-    * work — the vocab of even a large corpus is usually O(10⁶) words);
-    * above it the loop stays distributed (a 100 TB web crawl's token
-    * set — URLs, hashes, code identifiers — is unbounded and can
-    * outgrow any driver). A cache-read COUNT of the materialized vocab
-    * decides — the [[graft.operators.Similarity]].components() adaptive
-    * precedent; both loops are spec-pinned identical.
+  /** Size gate between the two physical BPE paths, in rows of the
+    * (source, word, n) table ([[bpeWordRows]]): a word that occurs in k
+    * sources counts k times. At or below it the table collects to the
+    * driver and both training and encode run there (how production
+    * tokenizer trainers work — the vocab of even a large corpus is
+    * usually O(10⁶) words); above it both stay distributed (a 100 TB web
+    * crawl's token set — URLs, hashes, code identifiers — is unbounded
+    * and can outgrow any driver). One bounded collect, `limit(gate + 1)`,
+    * decides; both paths are spec-pinned identical.
     */
   private[graft] val BpeDriverMaxVocab = 200000L
 
@@ -232,15 +237,15 @@ object Assembly {
     * promote the most frequent pair to a new symbol → re-segment every
     * word), producing the ranked merge table a BPE tokenizer IS.
     *
-    * Scale shape (100 TB): the corpus is touched ONCE — a map-side-
-    * combined (word, freq) aggregate (the classic BPE-at-scale move:
-    * training runs on the word-frequency table, which is O(vocabulary)
-    * — millions of rows where the corpus is billions; pair counts are
-    * freq-weighted so the result is identical to training on the raw
-    * corpus). The merge loop then dispatches on the MEASURED vocab
-    * count ([[BpeDriverMaxVocab]]): small vocabularies train on the
-    * driver (model-sized data — the merge table is the model); oversized
-    * ones run the distributed loop, where each round costs one
+    * Scale shape (100 TB): the corpus is touched ONCE, for BPE training
+    * and [[bpeEncode]] together — the map-side-combined (source, word, n)
+    * table of [[wordCounts]] (the classic BPE-at-scale move: training
+    * runs on word frequencies, O(vocabulary) rows where the corpus is
+    * billions; pair counts are freq-weighted so the result is identical
+    * to training on the raw corpus). The merge loop then dispatches on
+    * the table's size ([[BpeDriverMaxVocab]]): small vocabularies train
+    * on the driver (model-sized data — the merge table is the model);
+    * oversized ones run the distributed loop, where each round costs one
     * inline-generator pair explode into a map-side-combined count (a
     * stopword pair is a hot GROUP key — absorbed by hash-aggregate
     * partials), a 1-row bounded-heap argmax collected to the driver (a
@@ -276,50 +281,67 @@ object Assembly {
       StructField("right", StringType, nullable = false),
       StructField("merged", StringType, nullable = false),
       StructField("pair_count", LongType, nullable = false)))
-    val merges = bpeMerges(s, d, nMerges, maxDriverVocab)
-    s.createDataFrame(
-      s.sparkContext.parallelize(merges.map {
-        case (rk, l, r, m, n) => org.apache.spark.sql.Row(rk, l, r, m, n)
-      }, 1), outSchema)
+    s.createDataFrame(bpeMerges(s, d, nMerges, maxDriverVocab)
+      .map { case (rk, l, r, m, n) => Row(rk, l, r, m, n) }.asJava, outSchema)
   }
+
+  /** The (source, word, n) table: how often each [[words]] word occurs
+    * in each source — BPE's one corpus pass. Training reads a word's
+    * frequency as its n summed over sources; encode reads
+    * `n_words = Σ n` and `n_bpe_tokens = Σ n·n_bpe(word)` per source.
+    */
+  private def wordCounts(s: SparkSession, d: String): DataFrame =
+    Tables.documents(s, d)
+      // doc_id-hash spread: the single-file testdata scan's parallelism
+      // guard (a multi-split lake scan replaces it), as in dupSpanCounts
+      .repartition(s.sparkContext.defaultParallelism, col("doc_id"))
+      .select(col("source"), explode(words(col("text"))).as("word"))
+      .groupBy("source", "word").agg(count(lit(1)).as("n"))
+
+  /** [[wordCounts]]' rows if at most `gate`, else None: one bounded
+    * collect, `limit(gate + 1)`, both measures the table and, under the
+    * gate, brings it to the driver for training and encode.
+    */
+  private def bpeWordRows(s: SparkSession, d: String, gate: Long)
+      : Option[Array[(String, String, Long)]] =
+    SessionCache(s, d, ("bpe_word_rows", gate)) {
+      val rows = wordCounts(s, d).limit(math.min(gate, Int.MaxValue - 1L).toInt + 1)
+        .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2)))
+      if (rows.length <= gate) Some(rows) else None
+    }
+
+  /** [[wordCounts]] localCheckpointed for the paths above the gate, which
+    * thus read the corpus twice: [[bpeWordRows]]' probe, then this.
+    */
+  private def bpeWordTable(s: SparkSession, d: String): DataFrame =
+    SessionCache(s, d, "bpe_word_table")(wordCounts(s, d).localCheckpoint())
 
   /** Trained merge table per (session, dir, rounds, gate), memoized in
     * [[graft.SessionCache]]: the merge table IS the tokenizer model, and
     * without the memo every consumer ([[qBpeMerges]], [[qBpeEncode]],
-    * bench repeats) re-runs the full corpus scan + merge loop. The GATE
-    * is part of the key on purpose: the dual-path spec forces the
-    * distributed loop with gate 0 and must not be handed the driver
-    * loop's cached result.
+    * bench repeats) re-runs the merge loop. The GATE is part of the key
+    * on purpose: the dual-path spec forces the distributed loop with
+    * gate 0 and must not be handed the driver loop's cached result.
     */
   private[graft] def bpeMerges(s: SparkSession, d: String, nMerges: Int,
       maxDriverVocab: Long): Seq[(Int, String, String, String, Long)] =
     SessionCache(s, d, ("bpe_merges", nMerges, maxDriverVocab)) {
-      // the ONE corpus pass: word-frequency table (O(vocabulary) rows)
-      val vocab0 = Tables.documents(s, d)
-        .repartition(s.sparkContext.defaultParallelism, col("doc_id"))
-        .select(explode(filter(split(Text.norm(col("text")), " "),
-          t => t =!= "")).as("word"))
-        .groupBy("word").agg(count(lit(1)).as("freq"))
-        // initial segmentation: characters + the end-of-word marker
-        .select(col("freq"), concat(
-          filter(split(col("word"), ""), c => c =!= ""),
-          array(lit(BpeEow))).as("syms"))
-        .localCheckpoint()
-      val merges =
-        if (vocab0.count() <= maxDriverVocab) driverLoop(vocab0, nMerges)
-        else distributedLoop(vocab0, nMerges)
-      SessionCache.release(vocab0)
-      merges
+      bpeWordRows(s, d, maxDriverVocab) match {
+        case Some(rows) =>
+          val freqs = rows.groupMapReduce(_._2)(_._3)(_ + _)
+          driverLoop(freqs.toArray.map { case (w, f) => (codePointSyms(w), f) }, nMerges)
+        case None =>
+          distributedLoop(bpeWordTable(s, d).groupBy("word")
+            .agg(sum(col("n")).as("freq")).select(col("freq"), wordSyms), nMerges)
+      }
     }
 
   /** The in-driver merge loop — the [[bpeTrain]] small-vocab fast path.
     * Same argmax order and greedy replace as the distributed form.
     */
-  private def driverLoop(vocab0: DataFrame, nMerges: Int)
+  private def driverLoop(vocab0: Array[(Array[String], Long)], nMerges: Int)
       : Seq[(Int, String, String, String, Long)] = {
-    var vocab: Array[(Array[String], Long)] = vocab0.collect().map(r =>
-      (r.getAs[scala.collection.Seq[String]]("syms").toArray,
-        r.getAs[Long]("freq")))
+    var vocab = vocab0
     val out = Seq.newBuilder[(Int, String, String, String, Long)]
     var rank = 0
     var exhausted = false
@@ -365,16 +387,22 @@ object Assembly {
         val (l, r, n) = (top.head.getAs[String]("l"),
           top.head.getAs[String]("r"), top.head.getAs[Long]("n"))
         merges += ((rank, l, r, l + r, n))
-        // greedy left-to-right re-segmentation of every word
-        val prev = vocab
-        vocab = vocab.withColumn("syms", mergeFold(l, r))
-          .localCheckpoint()
-        SessionCache.release(prev)
+        vocab = resegment(vocab, vocab0, l, r)
         rank += 1
       }
     }
-    SessionCache.release(vocab)
+    if (vocab ne vocab0) SessionCache.release(vocab)
     merges.result()
+  }
+
+  /** One checkpointed round of re-segmentation by (l, r); the superseded
+    * frame is released unless it is `seed`, a plan over [[bpeWordTable]].
+    */
+  private def resegment(vocab: DataFrame, seed: DataFrame, l: String, r: String)
+      : DataFrame = {
+    val next = vocab.withColumn("syms", mergeFold(l, r)).localCheckpoint()
+    if (vocab ne seed) SessionCache.release(vocab)
+    next
   }
 
   /** The greedy left-to-right merge of pair (l, r) over a `syms` array —
@@ -382,19 +410,23 @@ object Assembly {
     * distributed encode apply (accumulator tail via null-safe get(),
     * never a negative element_at — the ANSI rule).
     */
-  private def mergeFold(l: String, r: String): org.apache.spark.sql.Column = aggregate(
+  private def mergeFold(l: String, r: String): Column = aggregate(
     col("syms"), typedlit(Seq.empty[String]),
     (acc, sym) => when(
       get(acc, size(acc) - 1) === lit(l) && sym === lit(r),
       concat(slice(acc, lit(1), size(acc) - 1), array(lit(l + r))))
       .otherwise(concat(acc, array(sym))))
 
-  /** Code-POINT segmentation of a word — the driver mirror of the
-    * Spark-side `split(word, "")` (Java regex splits between code
-    * points, keeping surrogate pairs whole). `w.map(_.toString)` would
-    * split UTF-16 code units instead, so an emoji word would segment
-    * differently on the two [[bpeEncode]] gate paths and merges learned
-    * over whole-code-point symbols could never fire on the driver path.
+  /** [[codePointSyms]] in Spark: `split` on "" steps by code point. */
+  private def wordSyms: Column =
+    concat(filter(split(col("word"), ""), c => c =!= ""), array(lit(BpeEow)))
+      .as("syms")
+
+  /** Code-POINT segmentation of a word plus the end-of-word marker — the
+    * driver mirror of [[wordSyms]]. `w.map(_.toString)` would split
+    * UTF-16 code units instead, so an emoji word would segment
+    * differently on the two gate paths and merges learned over
+    * whole-code-point symbols could never fire on the driver path.
     */
   private def codePointSyms(w: String): Array[String] = {
     val out = scala.collection.mutable.ArrayBuffer.empty[String]
@@ -425,7 +457,7 @@ object Assembly {
   }
 
   /** The driver-side greedy merge — the same fold as [[mergeFold]], the
-    * shared encode of [[driverLoop]] and the driver segmentation path.
+    * shared encode of [[driverLoop]] and the driver encode path.
     */
   private def mergeLocal(syms: Array[String], l: String, r: String)
       : Array[String] = {
@@ -453,14 +485,13 @@ object Assembly {
     * (the fertility statistic of tokenizer evaluation).
     *
     * Scale shape (100 TB): tokenization is a pure function of the WORD,
-    * so the corpus never re-segments — the distinct-word table segments
-    * once (driver-side under [[BpeDriverMaxVocab]], model-sized work;
-    * above it the distributed [[mergeFold]] cascade in rank order — the
-    * training loop's own re-segmentation machinery) and the corpus
-    * joins its words to the (word, n_bpe) dictionary: broadcast under
-    * the gate (a stopword is a hot join key — a broadcast join never
-    * shuffles it), plain AQE-skew-splittable join above. One corpus
-    * scan, one map-side-combined source rollup.
+    * so the corpus never re-segments and is never re-read: encode works
+    * on training's own (source, word, n) table ([[wordCounts]]). Each
+    * distinct word segments once — driver-side under
+    * [[BpeDriverMaxVocab]] (model-sized work), above it the training
+    * loop's own distributed [[mergeFold]] cascade in rank order, joined
+    * back to the table and rolled up per source. Either way the result
+    * is one row per source, memoized per (session, dir, gate).
     */
   val qBpeEncode: Q = Q.rowsOnly("q_bpe_encode") { (s, d) => bpeEncode(s, d) }
 
@@ -471,52 +502,39 @@ object Assembly {
   def bpeEncode(s: SparkSession, d: String,
       maxDriverVocab: Long = BpeDriverMaxVocab): DataFrame = {
     import org.apache.spark.sql.types._
-    val merges = bpeMerges(s, d, BpeMerges, BpeDriverMaxVocab)
-      .sortBy(_._1).map(m => (m._2, m._3))
-    val words = Tables.documents(s, d)
-      .repartition(s.sparkContext.defaultParallelism, col("doc_id"))
-      .select(col("source"),
-        explode(filter(split(Text.norm(col("text")), " "), t => t =!= ""))
-          .as("word"))
-    // the (word, n_bpe) dictionary per (session, dir, gate); above the
-    // gate the returned plan reads the cascade's final checkpoint lazily,
-    // so the SessionCache entry owns it and frees it when dropped
-    val segmented: DataFrame = SessionCache(s, d, ("bpe_segs", maxDriverVocab)) {
-      val vocab = words.select("word").distinct().localCheckpoint()
-      val nVocab = vocab.count()
-      if (nVocab <= maxDriverVocab) {
-        // model-sized: segment every distinct word on the driver
-        val segSchema = StructType(Seq(
-          StructField("word", StringType, nullable = false),
-          StructField("n_bpe", LongType, nullable = false)))
-        val collected = vocab.collect().map(_.getString(0))
-        SessionCache.release(vocab)
-        val rows = collected.map { w =>
-          var syms = codePointSyms(w)
-          for ((l, r) <- merges) syms = mergeLocal(syms, l, r)
-          org.apache.spark.sql.Row(w, syms.length.toLong)
-        }
-        broadcast(s.createDataFrame(
-          s.sparkContext.parallelize(rows.toSeq,
-            math.max(1, rows.length / 65536)), segSchema))
-      } else {
-        // oversized vocab: the training loop's own distributed cascade
-        var seg = vocab.withColumn("syms", concat(
-          filter(split(col("word"), ""), c => c =!= ""),
-          array(lit(BpeEow)))).localCheckpoint()
-        for ((l, r) <- merges) {
-          val prev = seg
-          seg = seg.withColumn("syms", mergeFold(l, r)).localCheckpoint()
-          SessionCache.release(prev)
-        }
-        SessionCache.release(vocab)
-        seg.select(col("word"), size(col("syms")).cast("long").as("n_bpe"))
+    val schema = StructType(Seq(
+      StructField("source", StringType),
+      StructField("n_words", LongType, nullable = false),
+      StructField("n_bpe_tokens", LongType)))
+    // (source, n_words, n_bpe_tokens), a row per source
+    val counts = SessionCache(s, d, ("bpe_encode_counts", maxDriverVocab)) {
+      val merges = bpeMerges(s, d, BpeMerges, BpeDriverMaxVocab)
+        .sortBy(_._1).map(m => (m._2, m._3))
+      bpeWordRows(s, d, maxDriverVocab) match {
+        case Some(rows) =>
+          // model-sized: segment each distinct word on the driver
+          val nBpe = rows.map(_._2).distinct.map { w =>
+            w -> merges.foldLeft(codePointSyms(w)) {
+              case (syms, (l, r)) => mergeLocal(syms, l, r)
+            }.length.toLong
+          }.toMap
+          rows.groupBy(_._1).toSeq.map { case (src, rs) =>
+            Row(src, rs.map(_._3).sum, rs.map(r => r._3 * nBpe(r._2)).sum)
+          }
+        case None =>
+          // oversized: the training loop's own cascade, then the rollup
+          // joins the word table
+          val table = bpeWordTable(s, d)
+          val seed = table.select("word").distinct().select(col("word"), wordSyms)
+          val segs = merges.foldLeft(seed) { case (v, (l, r)) => resegment(v, seed, l, r) }
+          try table.join(segs.select(col("word"), size(col("syms")).as("n_bpe")), "word")
+            .groupBy("source")
+            .agg(sum(col("n")), sum(col("n") * col("n_bpe")))
+            .collect().toSeq
+          finally if (segs ne seed) SessionCache.release(segs)
       }
     }
-    words.join(segmented, Seq("word"))
-      .groupBy("source")
-      .agg(count(lit(1)).as("n_words"),
-        sum(col("n_bpe")).cast("long").as("n_bpe_tokens"))
+    s.createDataFrame(counts.asJava, schema)
       .select(col("source"), col("n_words"), col("n_bpe_tokens"),
         graft.functions.Det.exactDiv(col("n_bpe_tokens"), col("n_words"), 4)
           .as("bpe_per_word"))

@@ -446,7 +446,7 @@ object Similarity {
     incrementPairs(shOld, shNew)
   }
 
-  /** Scoped form of [[minhashIncrement]] (the Store.loadJsonlLenientScoped
+  /** Scoped form of [[minhashIncrement]] (the Store.withJsonlLenient
     * pattern): the shingle-hash frames feed BOTH the band join and the
     * verification pass from multiple aliased subtrees, so the plain form
     * re-shingles the slices per consumer (acceptable for one-shot calls;
@@ -2230,13 +2230,17 @@ object Similarity {
     * the canonical keeper in a dedup pipeline.
     *
     * Two physical strategies behind one result, picked at runtime from the
-    * materialized edge count (the near-dup pair graph is a small residue
-    * of the corpus, but nothing guarantees that at 100 TB):
+    * edge count (the near-dup pair graph is a small residue of the
+    * corpus, but nothing guarantees that at 100 TB). The count is of
+    * `pairs`, which both callers pass cached, so it reads the cache; the
+    * threshold is in directed edges, two per pair.
     *
     *  - `small` (≤ `smallThreshold` directed edges): one narrow
-    *    single-task union-find via mapPartitions — no driver collect (the
-    *    graph never leaves the executors), no per-round job scheduling.
-    *    This is the branch every realistic post-LSH residue takes.
+    *    single-task union-find via mapPartitions over each pair once — no
+    *    driver collect (the graph never leaves the executors), no
+    *    per-round job scheduling. This is the branch every realistic
+    *    post-LSH residue takes. The result is not materialized: the
+    *    caller's cache entry is its one copy.
     *  - large: min-label propagation with pointer jumping — each node
     *    repeatedly adopts the smallest label among itself and its one-hop
     *    neighbors, then jumps to its label's label (O(log diameter)
@@ -2248,18 +2252,12 @@ object Similarity {
     */
   def components(pairs: DataFrame, maxIters: Int = 20,
                  smallThreshold: Long = 2000000L): DataFrame = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    // the pair graph is read twice per round: materialize it once, or an
-    // expensive upstream (the minhash verification join) re-executes every
-    // iteration
-    val edges = pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
-      .unionByName(pairs.select(col("id_b").as("src"), col("id_a").as("dst")))
-      .persist(lvl)
-    val nEdges = edges.count()
-    if (nEdges <= smallThreshold) {
+    if (2 * pairs.count() <= smallThreshold) {
       val spark = pairs.sparkSession
       import spark.implicits._
-      val labels = edges.select(col("src"), col("dst")).as[(Long, Long)]
+      // through an RDD, so the plan a caller caches is one leaf and not
+      // the pair graph's whole lineage
+      return pairs.select(col("id_a"), col("id_b")).as[(Long, Long)].rdd
         .coalesce(1)
         .mapPartitions { it =>
           val parent = scala.collection.mutable.LongMap.empty[Long]
@@ -2278,10 +2276,13 @@ object Similarity {
           parent.keysIterator.map(x => (x, find(x))).toSeq.iterator
         }
         .toDF("id", "label")
-        .localCheckpoint() // pin: downstream consumers must not re-run UF per subtree
-      edges.unpersist()
-      return labels
     }
+    // the pair graph is read twice per round: materialize it once, or an
+    // expensive upstream (the minhash verification join) re-executes every
+    // iteration
+    val edges = pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
+      .unionByName(pairs.select(col("id_b").as("src"), col("id_a").as("dst")))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // localCheckpoint (not persist) each round: the self-referential joins
     // would otherwise double the LOGICAL plan every iteration and Catalyst
     // analysis time explodes exponentially even on a tiny graph — the

@@ -86,14 +86,14 @@ object TextOps {
     * consumers. The SQL pieces assume a frame carrying `padded`, `cjk`
     * and the `s_xx` score columns ([[langSignalsSql]] builds them).
     */
-  // lower() here (NOT Text.norm's ASCII fold) is cross-engine safe
-  // because everything outside [a-z] is stripped AFTER the fold: the
-  // known ICU-full vs utf8proc-simple divergences ('İ' → i+combining
-  // dot vs 'i', final 'Σ' → 'ς' vs 'σ') differ only in non-[a-z]
-  // codepoints, so the surviving letter sequences agree — and the
-  // stopword lists are ASCII
+  // Text.asciiLower, not lower(): everything outside [a-z] is stripped
+  // after the fold and the stopword lists are ASCII, so only A-Z → a-z
+  // matters, and lower() would make it depend on the engine and the host.
+  // Spark (ICU case maps off) lowercases a string holding any non-ASCII
+  // byte with String.toLowerCase() under the JVM's default locale: under
+  // tr-TR 'I' → dotless 'ı', which the [a-z] strip then drops
   private val paddedSql =
-    "' ' || regexp_replace(lower(text), '[^a-z]+', ' ', 'g') || ' '"
+    s"' ' || regexp_replace(${Text.asciiLowerSql("text")}, '[^a-z]+', ' ', 'g') || ' '"
   private val cjkSql = "regexp_matches(text, '[\\x{4e00}-\\x{9fff}]')"
   private val langScoresSql = stopwords.map { case (l, ws) =>
     s"len(regexp_extract_all(padded, '${stopPattern(ws)}')) AS s_$l"
@@ -120,18 +120,18 @@ object TextOps {
       stopwords.map { case (l, _) => s"s_$l" }
     require(!df.columns.exists(reserved.contains),
       s"withLangSignals reserves columns $reserved")
-    // one byte-scan kernel for all four per-list counts over the ICU-
+    // one byte-scan kernel for all four per-list counts over the ASCII-
     // lowered text (graft_stop_counts — exactly the padded regexp_count
-    // per its scaladoc; lower() stays the engine's own, shared with the
-    // r11-and-earlier form) + the CJK range probe. Replaces the padded-
-    // string materialization and four per-list NFA walks per row; the
+    // per its scaladoc; see paddedSql for the fold) + the CJK range
+    // probe. Replaces the padded-string materialization and four
+    // per-list NFA walks per row; the
     // DuckDB oracle keeps the regex spelling, so the hash gate re-proves
     // the kernel every Verify.
     GraftFunctions.register(df.sparkSession)
     var out = df
       .withColumn("cjk", call_function("graft_cjk", col("text")))
       .withColumn("sc_all", call_function("graft_stop_counts",
-        lower(col("text")), typedlit(stopwords.map(_._2))))
+        Text.asciiLower(col("text")), typedlit(stopwords.map(_._2))))
     for (((l, _), idx) <- stopwords.zipWithIndex)
       out = out.withColumn(s"s_$l", element_at(col("sc_all"), idx + 1))
     out.drop("sc_all")
@@ -279,7 +279,7 @@ object TextOps {
   private val stopScoreSql =
     s"""CASE WHEN trim(text) = '' THEN 0.0
        |       ELSE LEAST(1.0, 5.0 *
-       |         len(regexp_extract_all(' ' || regexp_replace(lower(text), '[^a-z]+', ' ', 'g') || ' ',
+       |         len(regexp_extract_all(' ' || regexp_replace(${Text.asciiLowerSql("text")}, '[^a-z]+', ' ', 'g') || ' ',
        |                                '${stopPattern(stopwords.head._2)}'))
        |         / len(string_split_regex(trim(text), '[ \\t\\n\\r\\f]+'))) END""".stripMargin
   private val punctRatioSql =
@@ -329,7 +329,7 @@ object TextOps {
       : org.apache.spark.sql.DataFrame = {
     // the three regex counters (stopword density numerator, punct/caps
     // numerators + the whitespace-token denominator) now come from two
-    // byte-scan kernels — graft_stop_counts over the ICU-lowered text and
+    // byte-scan kernels — graft_stop_counts over the ASCII-lowered text and
     // graft_token_counts over the raw text — with the DuckDB oracle
     // keeping the regex spelling (the hash gate re-proves kernel ≡ regex
     // every Verify; TextOpsSpec pins the Spark-side equivalence too).
@@ -352,7 +352,7 @@ object TextOps {
     docs
       .withColumn("q_tc", call_function("graft_token_counts", col("text")))
       .withColumn("q_sc", call_function("graft_stop_counts",
-        lower(col("text")), typedlit(Seq(stopwords.head._2))))
+        Text.asciiLower(col("text")), typedlit(Seq(stopwords.head._2))))
       .withColumn("len_score", lenScore)
       .withColumn("stop_score", stopScore)
       .withColumn("punct_ratio", punct)
@@ -848,14 +848,12 @@ object TextOps {
       if (useBroadcast) broadcast(df) else df.hint("merge")
     def ngrams(evalSide: Boolean) = {
       val base = Tables.documents(s, d).filter(if (evalSide) isEval else !isEval)
-      // eval side clusters by doc_id (its per-doc distinct and groupBys
-      // ride that partitioning); the train side needs no clustering — its
-      // doc_id-hash spread is only the single-file parallelism guard
-      // (Similarity.tokenized's pattern: a lake-scale scan is already multi-split),
-      // and the n-gram stream derived from it never shuffles
-      val spread = if (evalSide)
-        base.repartition(s.sparkContext.defaultParallelism, col("doc_id"))
-      else base.repartition(s.sparkContext.defaultParallelism, col("doc_id"))
+      // one doc_id-hash spread for both sides: the eval side's per-doc
+      // distinct and groupBys ride that partitioning; the train side needs
+      // no clustering, so there it is only the single-file parallelism
+      // guard (Similarity.tokenized's pattern: a lake-scale scan is
+      // already multi-split)
+      val spread = base.repartition(s.sparkContext.defaultParallelism, col("doc_id"))
       // ONE GramHashKernel pass (r14): the tokenize → filter → 5-gram
       // concat lambda chain ran INTERPRETED per row (higher-order
       // functions are CodegenFallback) and every downstream

@@ -64,17 +64,16 @@ object Store {
     * needs; failing the job (FAILFAST) lets one bad line kill a 100 TB
     * ingest.
     *
-    * CALLER CONTRACT: both frames read through ONE cached relation of
-    * the raw input (Spark refuses to filter on the corrupt column of a
-    * lazy json relation — it is only populated during parsing). The
-    * returned `raw` handle is that cached DataFrame: the caller MUST
-    * `raw.unpersist()` once done, or the cache lives for the session
-    * (and at lake scale caching the whole raw input is itself the
-    * dominant cost — prefer [[withJsonlLenient]], which scopes the cache
-    * to a callback and always releases it).
+    * Runs `f` over (good, bad). Both frames read through ONE cached
+    * relation of the raw input (Spark refuses to filter on the corrupt
+    * column of a lazy json relation — it is only populated during
+    * parsing), so the results must be consumed (written/counted) inside
+    * `f`: the cache is released in a finally when it returns — the
+    * pattern [[appendDeduped]] uses. At lake scale caching the whole raw
+    * input is itself the dominant cost, so no caller holds it longer.
     */
-  def loadJsonlLenient(s: SparkSession, path: String,
-      schema: StructType): (DataFrame, DataFrame, DataFrame) = {
+  def withJsonlLenient[T](s: SparkSession, path: String, schema: StructType)(
+      f: (DataFrame, DataFrame) => T): T = {
     import org.apache.spark.sql.functions.col
     val corrupt = "_corrupt_record"
     val withCorrupt = StructType(schema.fields :+
@@ -84,20 +83,9 @@ object Store {
       .option("columnNameOfCorruptRecord", corrupt)
       .json(path)
       .cache()
-    val good = raw.filter(col(corrupt).isNull).drop(corrupt)
-    val bad = raw.filter(col(corrupt).isNotNull).select(col(corrupt).as("raw"))
-    (good, bad, raw)
-  }
-
-  /** Scoped form of [[loadJsonlLenient]]: runs `f` over (good, bad) and
-    * unpersists the shared raw cache in a finally — the pattern
-    * [[appendDeduped]] uses, and the one to prefer whenever the results
-    * are consumed (written/counted) within one scope.
-    */
-  def withJsonlLenient[T](s: SparkSession, path: String, schema: StructType)(
-      f: (DataFrame, DataFrame) => T): T = {
-    val (good, bad, raw) = loadJsonlLenient(s, path, schema)
-    try f(good, bad) finally raw.unpersist()
+    try f(raw.filter(col(corrupt).isNull).drop(corrupt),
+      raw.filter(col(corrupt).isNotNull).select(col(corrupt).as("raw")))
+    finally raw.unpersist()
   }
 
   /** A named field-level validation rule: `valid` must evaluate TRUE for
@@ -157,30 +145,19 @@ object Store {
       flagged.filter(size(col("violations")) > 0))
   }
 
-  /** [[loadJsonlLenient]] + [[validSplit]] in one read: the full
-    * admission contract — `valid` rows parsed AND rule-clean, `invalid`
-    * rows parsed but rule-breaking (with `violations`), `corrupt` rows
-    * structurally unparseable (raw line). All three frames read the one
-    * cached relation; the returned `raw` handle must be unpersisted by
-    * the caller (prefer [[withJsonlValidated]], which scopes it).
-    */
-  def loadJsonlValidated(s: SparkSession, path: String, schema: StructType,
-      rules: Seq[ValidationRule])
-      : (DataFrame, DataFrame, DataFrame, DataFrame) = {
-    val (good, bad, raw) = loadJsonlLenient(s, path, schema)
-    val (valid, invalid) = validSplit(good, rules)
-    (valid, invalid, bad, raw)
-  }
-
-  /** Scoped form of [[loadJsonlValidated]]: runs `f` over (valid,
-    * invalid, corrupt) and always releases the shared raw cache.
+  /** [[withJsonlLenient]] + [[validSplit]] in one read: runs `f` over
+    * the full admission contract — `valid` rows parsed AND rule-clean,
+    * `invalid` rows parsed but rule-breaking (with `violations`),
+    * `corrupt` rows structurally unparseable (raw line). All three frames
+    * read the one cached relation, released when `f` returns.
     */
   def withJsonlValidated[T](s: SparkSession, path: String,
       schema: StructType, rules: Seq[ValidationRule])(
-      f: (DataFrame, DataFrame, DataFrame) => T): T = {
-    val (valid, invalid, corrupt, raw) = loadJsonlValidated(s, path, schema, rules)
-    try f(valid, invalid, corrupt) finally raw.unpersist()
-  }
+      f: (DataFrame, DataFrame, DataFrame) => T): T =
+    withJsonlLenient(s, path, schema) { (good, bad) =>
+      val (valid, invalid) = validSplit(good, rules)
+      f(valid, invalid, bad)
+    }
 
   /** multiLine: the writer quotes embedded newlines, so the reader must
     * parse quoted multi-line records or such rows come back malformed.

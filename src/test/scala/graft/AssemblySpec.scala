@@ -75,7 +75,7 @@ class AssemblySpec extends SparkSpec {
   }
 
   test("export shards: partitioned parquet round-trips and matches its manifest") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_shards").toString
+    val dir = tempDir("graft_shards").toString
     Assembly.exportShards(spark, sfDir, dir)
     val back = spark.read.parquet(s"$dir/shards")
     assert(back.count() == Tables.documents(spark, sfDir).count(),
@@ -106,7 +106,7 @@ class AssemblySpec extends SparkSpec {
       .groupBy(identity).view.mapValues(_.size.toLong).toMap
     val res = {
       // run the registered plan against the crafted frame via a temp dir
-      val dir = java.nio.file.Files.createTempDirectory("graft_pairs").toString
+      val dir = tempDir("graft_pairs").toString
       docs.withColumn("lang", lit("en")).withColumn("source", lit("s"))
         .withColumn("n_chars", length(col("text")).cast("long"))
         .write.mode("overwrite").parquet(s"$dir/documents.parquet")
@@ -163,7 +163,7 @@ class AssemblySpec extends SparkSpec {
         r.getAs[Long]("pair_count"))).sortBy(_._1)
 
   test("bpe training: crafted corpus — cascaded merges and ties match the reference loop") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_bpe").toString
+    val dir = tempDir("graft_bpe").toString
     // 'aaab' x3 forces (a,a) first, then the MINTED 'aa' must re-pair
     // (cascade); 'cb ca' are an all-count-1 tie resolved lexicographically
     Seq((1L, "aaab aaab aaab cb ca"), (2L, ""), (3L, null.asInstanceOf[String]))
@@ -183,14 +183,34 @@ class AssemblySpec extends SparkSpec {
       s"no merge consumed the minted symbol:\n${got.toSeq}")
   }
 
+  /** A crafted lake whose words hold a supplementary-plane character:
+    * the driver path seeds each word's symbols with its code points, the
+    * distributed path with Spark's `split(word, "")`, and the two must
+    * agree on whole code points.
+    */
+  private lazy val astralDir: String = {
+    val dir = tempDir("graft_bpe_astral").toString
+    Seq((1L, "a\uD83D\uDE00\uD83D\uDE00 a\uD83D\uDE00\uD83D\uDE00 a\uD83D\uDE00\uD83D\uDE00 \uD83D\uDE00b", "s1"),
+      (2L, "\uD83D\uDE00\uD83D\uDE00x \uD83D\uDE00b", "s2"))
+      .toDF("doc_id", "text", "source")
+      .write.parquet(s"$dir/documents.parquet")
+    dir
+  }
+
   test("bpe training: distributed and driver loops land the identical merge table") {
     // the size gate must be invisible in the result — force the
     // distributed path (gate 0) and compare with the gated default
-    val dist = Assembly.bpeTrain(spark, sfDir, maxDriverVocab = 0L)
-      .collect().map(r => (r.getInt(0), r.getString(1), r.getString(2),
-        r.getString(3), r.getLong(4))).sortBy(_._1)
-    assert(dist.toSeq == gotMerges(sfDir).toSeq,
-      "physical strategy changed the merge table")
+    for (dir <- Seq(sfDir, astralDir)) {
+      val dist = Assembly.bpeTrain(spark, dir, maxDriverVocab = 0L)
+        .collect().map(r => (r.getInt(0), r.getString(1), r.getString(2),
+          r.getString(3), r.getLong(4))).sortBy(_._1)
+      assert(dist.toSeq == gotMerges(dir).toSeq,
+        s"$dir: physical strategy changed the merge table")
+    }
+    // (U+1F600, U+1F600) occurs 3× in 'a' + 2 + 2 and once in 2 + 2 + 'x':
+    // a whole-code-point pair, so it wins round 0 with count 4
+    val smile = "\uD83D\uDE00"
+    assert(gotMerges(astralDir).head == ((0, smile, smile, smile + smile, 4L)))
   }
 
   test("bpe encode: source stats match a driver recompute; both segmentation paths identical") {
@@ -235,6 +255,42 @@ class AssemblySpec extends SparkSpec {
     // the vocab-size gate must be invisible in the result
     assert(rows(Assembly.bpeEncode(spark, sfDir, maxDriverVocab = 0L)) == got,
       "distributed segmentation diverged from the driver path")
+    val (astralDriver, astralDist) = (Assembly.bpeEncode(spark, astralDir),
+      Assembly.bpeEncode(spark, astralDir, maxDriverVocab = 0L))
+    assert(rows(astralDist) == rows(astralDriver),
+      "supplementary-plane words segment differently on the two paths")
+    assert(astralDist.schema == astralDriver.schema)
+  }
+
+  test("bpe encode: a cold run over a fresh lake reads documents.parquet once") {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val dir = tempDir("graft_bpe_scans").toString
+    Tables.documents(spark, sfDir).write.parquet(s"$dir/documents.parquet")
+    val scans = new java.util.concurrent.atomic.AtomicInteger()
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val markerCol = "graft_bpe_scan_marker"
+    object Plans extends AdaptiveSparkPlanHelper
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        if (qe.analyzed.output.exists(_.name == markerCol)) drained.countDown()
+        else scans.addAndGet(Plans.collectWithSubqueries(qe.executedPlan) {
+          case scan: FileSourceScanExec
+              if scan.relation.location.rootPaths.exists(_.toString.contains(dir)) => scan
+        }.size)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      val out = Assembly.bpeEncode(spark, dir).collect()
+      assert(out.nonEmpty)
+      // listener events arrive in order: once the marker query's has,
+      // every scan of the encode has been counted
+      spark.range(1).toDF(markerCol).collect()
+      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS))
+    } finally spark.listenerManager.unregister(listener)
+    assert(scans.get == 1, s"${scans.get} scans of $dir/documents.parquet")
   }
 
   test("bpe training: real corpus matches the reference loop end-to-end") {

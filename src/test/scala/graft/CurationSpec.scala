@@ -153,7 +153,7 @@ class CurationSpec extends SparkSpec {
 
   test("release gate: integer-exact boundary decisions, outage fail, vacuous pass on empty lake") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_gate").toString
+    val dir = tempDir("graft_gate").toString
     // 10 docs, 8 distinct contents → dup rate EXACTLY 0.2000 = the bar:
     // the ≤ decision must pass via integer cross-multiply, never a
     // rounded-double compare. One blocklisted doc → 10% > 2% fails.
@@ -186,7 +186,7 @@ class CurationSpec extends SparkSpec {
       "a single-source corpus is 100% capture")
     // empty lake: every check passes vacuously (the gate blocks PROVEN
     // violations; volume checks belong to ingest monitoring)
-    val empty = java.nio.file.Files.createTempDirectory("graft_gate_e").toString
+    val empty = tempDir("graft_gate_e").toString
     spark.read.parquet(s"$dir/documents.parquet").limit(0)
       .write.parquet(s"$empty/documents.parquet")
     spark.read.parquet(s"$dir/events.parquet").limit(0)

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 /** Every registered operator must plan and execute against an empty (but
   * schema-correct) dataset — the day-one state of any new lake — without
   * throwing. Empty-input results may legitimately be empty.
@@ -9,7 +7,7 @@ import java.nio.file.Files
 class EdgeCaseSpec extends SparkSpec {
 
   private lazy val emptyDir: String = {
-    val dir = Files.createTempDirectory("graft_empty").toString
+    val dir = tempDir("graft_empty").toString
     Seq("region", "nation", "customer", "supplier", "part", "orders",
       "lineitem", "documents", "embeddings").foreach { t =>
       Tables.table(spark, sfDir, t).limit(0)
@@ -31,7 +29,7 @@ class EdgeCaseSpec extends SparkSpec {
 
   private lazy val nullyDir: String = {
     import org.apache.spark.sql.functions._
-    val dir = Files.createTempDirectory("graft_nully").toString
+    val dir = tempDir("graft_nully").toString
     Seq("region", "nation", "customer", "supplier", "part", "orders",
       "lineitem").foreach { t =>
       Tables.table(spark, sfDir, t).limit(50)
@@ -91,7 +89,7 @@ class EdgeCaseSpec extends SparkSpec {
     // groupBy/window/join on those columns. The full registry must still
     // plan and execute (the sf0.1-scale skewed lake additionally goes
     // through the full Verify + DuckDB oracle gate out-of-band — §8).
-    val dir = Files.createTempDirectory("graft_skewed").toString
+    val dir = tempDir("graft_skewed").toString
     GenData.write(spark, dir, 0.001, skew = true)
     // the skew is real, not a no-op flag
     val ev = spark.read.parquet(s"$dir/events.parquet")

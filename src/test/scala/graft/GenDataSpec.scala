@@ -11,8 +11,8 @@ import org.apache.spark.sql.functions._
 class GenDataSpec extends SparkSpec {
 
   test("generated lake: driver-schema compatible, deterministic, in-contract") {
-    val d1 = java.nio.file.Files.createTempDirectory("graft_gen1").toString
-    val d2 = java.nio.file.Files.createTempDirectory("graft_gen2").toString
+    val d1 = tempDir("graft_gen1").toString
+    val d2 = tempDir("graft_gen2").toString
     GenData.write(spark, d1, 0.001)
     GenData.write(spark, d2, 0.001)
     val tables = Seq("region", "nation", "customer", "supplier", "part",

@@ -73,7 +73,7 @@ class IngestSpec extends SparkSpec {
     val ev = props.zipWithIndex.map { case (p, i) =>
       (i.toLong, ts(i), i.toLong % 3, "click", 1.0, p)
     }.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-    val dir = java.nio.file.Files.createTempDirectory("graft_props").toString
+    val dir = tempDir("graft_props").toString
     ev.write.parquet(s"$dir/events.parquet")
     // extract: the dup-key payload must read NULL k (Spark's struct parse
     // takes the LAST instance, DuckDB's path extract the FIRST — neither
@@ -251,7 +251,7 @@ class IngestSpec extends SparkSpec {
 
   test("health reports: store is idempotent, backfill fills exactly the gaps") {
     import org.apache.spark.sql.functions._
-    val dir = java.nio.file.Files.createTempDirectory("graft_health").toString
+    val dir = tempDir("graft_health").toString
     val path = s"$dir/metrics"
     val ev = Tables.events(spark, sfDir)
     val runs = Ingest.healthReport(ev).collect()
@@ -348,7 +348,7 @@ class IngestSpec extends SparkSpec {
       .zipWithIndex.map { case (p, i) =>
         (i.toLong, ts, i.toLong, "t", 1.0, p)
       }
-    val dir = java.nio.file.Files.createTempDirectory("graft_props").toString
+    val dir = tempDir("graft_props").toString
     rows.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
     val got = Ingest.qPropsSchema.run(spark, dir).collect()
@@ -416,7 +416,7 @@ class IngestSpec extends SparkSpec {
           i.toLong, et, 1.0, "{}")
       }
     }
-    val dir = java.nio.file.Files.createTempDirectory("graft_drift").toString
+    val dir = tempDir("graft_drift").toString
     (day(1, Seq("a" -> 4, "b" -> 6)) ++ day(2, Seq("a" -> 2, "b" -> 2, "c" -> 4)) ++
       day(3, Seq("b" -> 5)))
       .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
@@ -440,7 +440,7 @@ class IngestSpec extends SparkSpec {
     val rows = Seq(1, 2, 5, 6, 10).zipWithIndex.map { case (day, i) =>
       (i.toLong, ts(day), 1L, "t", 1.0, "{}")
     }
-    val dir = java.nio.file.Files.createTempDirectory("graft_gaps").toString
+    val dir = tempDir("graft_gaps").toString
     rows.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
     val got = Ingest.qCoverageGaps.run(spark, dir).collect()

@@ -129,7 +129,7 @@ class LabelingSpec extends SparkSpec {
 
   test("export splits: partitioned JSONL round-trips and matches its metadata") {
     import org.apache.spark.sql.functions.col
-    val dir = java.nio.file.Files.createTempDirectory("graft_export").toString
+    val dir = tempDir("graft_export").toString
     Labeling.exportSplits(spark, sfDir, dir)
     val back = spark.read.json(s"$dir/dataset")
     assert(back.count() == Tables.documents(spark, sfDir).count(),
@@ -211,7 +211,7 @@ class LabelingSpec extends SparkSpec {
 
   test("queue seeding: selection lands pending with priorities; re-seed is a no-op") {
     import org.apache.spark.sql.functions.col
-    val dir = java.nio.file.Files.createTempDirectory("graft_seed").toString
+    val dir = tempDir("graft_seed").toString
     val queuePath = s"$dir/label_queue.parquet"
     // the sampler's selection, as (review_id -> tier) ground truth
     val want = Labeling.qSampleTiers.run(spark, sfDir).collect()

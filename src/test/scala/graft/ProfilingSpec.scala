@@ -136,7 +136,7 @@ class ProfilingSpec extends SparkSpec {
 
   test("embed profile: crafted NaN/zero/null/ragged vectors land in the right exclusive buckets") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_embp").toString
+    val dir = tempDir("graft_embp").toString
     Seq(
       (1L, Option(Seq[java.lang.Float](1.0f, 2.0f)), 0),
       (2L, Option.empty[Seq[java.lang.Float]], 0), // null vector
@@ -176,7 +176,7 @@ class ProfilingSpec extends SparkSpec {
     // mean 10/3 rows/key
     val rows = (Seq.fill(6)(1L) ++ Seq.fill(3)(2L) ++ Seq(3L))
       .zipWithIndex.map { case (u, i) => (i.toLong, ts, u, "t", 1.0, "{}") }
-    val dir = java.nio.file.Files.createTempDirectory("graft_skew").toString
+    val dir = tempDir("graft_skew").toString
     rows.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
     val got = Profiling.qSkewKeys.run(spark, dir).collect()

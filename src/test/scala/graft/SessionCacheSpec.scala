@@ -14,7 +14,7 @@ class SessionCacheSpec extends SparkSpec {
   import spark.implicits._
 
   private def lake(): String =
-    java.nio.file.Files.createTempDirectory("graft_session_cache").toString
+    tempDir("graft_session_cache").toString
 
   /** Writes a table the way an outside writer would: into a side dir,
     * then swapped in with a rename. A Spark overwrite of the path itself
@@ -117,6 +117,22 @@ class SessionCacheSpec extends SparkSpec {
     finally it.close()
   }
 
+  /** (file, enclosing object member) of each match of `call` under
+    * `src/main/scala`, SessionCache.scala excepted; members are declared
+    * at the object's two-space indent.
+    */
+  private def callSites(call: scala.util.matching.Regex): List[(String, String)] = {
+    val member = raw"(?m)^  (?:[\w\[\]]+ )*(?:def|val) (\w+)".r
+    mainSources().filterNot(_.getFileName.toString == "SessionCache.scala").flatMap { f =>
+      val src = new String(java.nio.file.Files.readAllBytes(f), "UTF-8")
+      call.findAllMatchIn(src).map { m =>
+        val owner = member.findAllMatchIn(src.substring(0, m.start)).toList
+          .lastOption.fold("<top level>")(_.group(1))
+        (f.getFileName.toString, owner)
+      }
+    }
+  }
+
   test("no frame is persisted outside SessionCache but in a scoped try/finally") {
     // (file, enclosing object member) of each persist that is released
     // in a finally (or by the caller's scoped wrapper) before it returns
@@ -128,19 +144,24 @@ class SessionCacheSpec extends SparkSpec {
       ("IngestStream.scala", "curationLoop"),
       ("IngestStream.scala", "runLoopSink"),
       ("Store.scala", "appendDeduped"),
-      ("Store.scala", "loadJsonlLenient"))
-    // members are declared at the object's two-space indent
-    val member = raw"(?m)^  (?:[\w\[\]]+ )*(?:def|val) (\w+)".r
-    val offenders = mainSources().filterNot(_.getFileName.toString == "SessionCache.scala")
-      .flatMap { f =>
-        val src = new String(java.nio.file.Files.readAllBytes(f), "UTF-8")
-        val name = f.getFileName.toString
-        raw"\.persist\(|\.cache\(\)".r.findAllMatchIn(src).map { m =>
-          val owner = member.findAllMatchIn(src.substring(0, m.start)).toList
-            .lastOption.fold("<top level>")(_.group(1))
-          (name, owner)
-        }.filterNot(allowed).map { case (n, o) => s"$n: $o" }
-      }
+      ("Store.scala", "withJsonlLenient"))
+    val offenders = callSites(raw"\.persist\(|\.cache\(\)".r).filterNot(allowed)
+      .map { case (n, o) => s"$n: $o" }
+    assert(offenders.isEmpty, offenders.distinct.mkString("; "))
+  }
+
+  test("localCheckpoint only cuts the lineage of an iterative loop") {
+    // a checkpoint is one more job and a block-manager copy: only a loop
+    // that would otherwise re-plan every earlier round pays for one
+    val allowed = Set(
+      // label propagation's per-round label table
+      ("Similarity.scala", "components"),
+      // each round of the distributed BPE training loop and encode cascade
+      ("Assembly.scala", "resegment"),
+      // the word table both distributed BPE loops start from
+      ("Assembly.scala", "bpeWordTable"))
+    val offenders = callSites(raw"\.localCheckpoint\(".r).filterNot(allowed)
+      .map { case (n, o) => s"$n: $o" }
     assert(offenders.isEmpty, offenders.distinct.mkString("; "))
   }
 

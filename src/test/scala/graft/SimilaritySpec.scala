@@ -207,7 +207,7 @@ class SimilaritySpec extends SparkSpec {
       }
       (id, emb, c)
     }
-    val dir = java.nio.file.Files.createTempDirectory("graft_clustered").toString
+    val dir = tempDir("graft_clustered").toString
     rows.toDF("vec_id", "embedding", "label")
       .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
     // driver-side exact brute force (same quantization as the operator)
@@ -283,7 +283,7 @@ class SimilaritySpec extends SparkSpec {
     // read an n=20000 isotropic corpus as clustered (gap ≈ 0.30) and
     // routed it to the IVF path whose recall there is the documented
     // 0.37. The null-model rule must hold the route at ANY n.
-    val dir = java.nio.file.Files.createTempDirectory("graft_bigiso").toString
+    val dir = tempDir("graft_bigiso").toString
     GenData.embeddingsDf(spark, 20000)
       .write.parquet(s"$dir/embeddings.parquet")
     val (t5, p90, p50) = Similarity.knnGeometryStats(spark, dir)
@@ -309,7 +309,7 @@ class SimilaritySpec extends SparkSpec {
 
   test("containment: catches a wholly-embedded doc Jaccard misses; superset of jaccard pairs") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_contain").toString
+    val dir = tempDir("graft_contain").toString
     // doc 1 is a verbatim PREFIX of doc 2 (a quoted post inside a long
     // wrapper): every 3-gram of 1 appears in 2 → containment(1→2) = 1.0,
     // while Jaccard(1,2) = 8/28 ≈ 0.29 — below the 0.5 near-dup bar
@@ -655,7 +655,7 @@ class SimilaritySpec extends SparkSpec {
     }.toMap
     assert(got == expect, s"increment assignment diverged:\n$got\nvs\n$expect")
     // the written index: first append lands all, replay is a per-key no-op
-    val path = java.nio.file.Files.createTempDirectory("graft_ivfinc")
+    val path = tempDir("graft_ivfinc")
       .resolve("index").toString
     Similarity.ivfIndexAppend(spark, sfDir, newVecs, path)
     assert(spark.read.parquet(path).count() == base.length.toLong)
@@ -726,7 +726,7 @@ class SimilaritySpec extends SparkSpec {
     // 5 vectors < 16 seeds: the codebook trains at width 5 and every
     // stride (codes frame n2lut, query LUTs) must follow the ACTUAL
     // width — a hard-coded 16 reads the wrong block's norms or overruns
-    val dir = java.nio.file.Files.createTempDirectory("graft_pqsmall").toString
+    val dir = tempDir("graft_pqsmall").toString
     val rnd = new scala.util.Random(7)
     (0 until 5).map(i =>
       (i.toLong, Array.fill(64)(rnd.nextFloat() - 0.5f).toSeq, i % 2))
@@ -996,7 +996,7 @@ class SimilaritySpec extends SparkSpec {
       }
       (id, emb, c)
     }
-    val dir = java.nio.file.Files.createTempDirectory("graft_propagate").toString
+    val dir = tempDir("graft_propagate").toString
     rows.toDF("vec_id", "embedding", "label")
       .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
     val got = Similarity.qLabelPropagate.run(spark, dir).collect()
@@ -1051,7 +1051,7 @@ class SimilaritySpec extends SparkSpec {
 
   test("shingle df profile: crafted boilerplate corpus lands exact pair-work accounting") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_dfprof").toString
+    val dir = tempDir("graft_dfprof").toString
     // 20 copies of one boilerplate gram (df=20 > cap 16), one gram shared
     // by 3 docs (df=3), two unique grams (df=1)
     val docs =
@@ -1155,7 +1155,7 @@ class SimilaritySpec extends SparkSpec {
       }
       (id, emb, c)
     }
-    val dir = java.nio.file.Files.createTempDirectory("graft_annhealth").toString
+    val dir = tempDir("graft_annhealth").toString
     rows.toDF("vec_id", "embedding", "label")
       .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
     val got = Similarity.qAnnHealth.run(spark, dir).collect()
@@ -1254,7 +1254,7 @@ class SimilaritySpec extends SparkSpec {
     // and the operator must agree on it — including hamming 0, where a
     // near-dup's fp may coincide with its base and cost a distinct fp).
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_nofp").toString
+    val dir = tempDir("graft_nofp").toString
     val n = 900
     def toks(i: Int): Seq[String] = (0 until 60).map(j => s"t${i}_$j")
     val base = (0 until n).map(i => (i.toLong, toks(i).mkString(" ")))
@@ -1301,7 +1301,7 @@ class SimilaritySpec extends SparkSpec {
     // bank is actually in use (bucket ids past the 8-bit ceiling), and
     // pins recall@5 of the production point-query path against an exact
     // driver-side brute force over a hash-picked probe sample.
-    val dir = java.nio.file.Files.createTempDirectory("graft_width9").toString
+    val dir = tempDir("graft_width9").toString
     val n = 70000L
     GenData.embeddingsDf(spark, n).write.parquet(s"$dir/embeddings.parquet")
     assert(Similarity.lshBitsFor(n) == 9)

@@ -1,14 +1,12 @@
 package graft
 
-import java.nio.file.Files
-
 import graft.sources.Store
 import org.apache.spark.sql.functions._
 
 class StoreSpec extends SparkSpec {
 
   private def tmp(name: String): String =
-    Files.createTempDirectory(s"graft_$name").resolve("out").toString
+    tempDir(s"graft_$name").resolve("out").toString
 
   // ordered limit: an unordered limit(200) has no determinism guarantee
   // across evaluations, so round-trip comparisons could select different
@@ -36,26 +34,19 @@ class StoreSpec extends SparkSpec {
     java.nio.file.Files.write(
       java.nio.file.Paths.get(path, "part-corrupt.json"),
       badLines.mkString("\n").getBytes("UTF-8"))
-    val (good, bad, raw) = Store.loadJsonlLenient(spark, path, df.schema)
-    // every original row parses; blank lines are skipped by the reader,
-    // the three malformed payloads land in quarantine with their raw text
-    assert(good.count() == df.count())
-    assert(good.exceptAll(df).isEmpty && df.exceptAll(good).isEmpty)
-    val quarantined = bad.collect().map(_.getString(0)).toSet
-    assert(quarantined.size == 3, s"got $quarantined")
-    assert(quarantined.contains("{not json at all"))
-    // the shared cache is the caller's to release (the documented contract)
-    assert(raw.storageLevel.useMemory, "raw handle should be the cached relation")
-    raw.unpersist()
-    assert(!raw.storageLevel.useMemory)
-    // scoped variant: same split, cache auto-released (compare against
-    // the pre-call persistent set — the shared test session legitimately
-    // holds other caches, e.g. memoized similarity indexes)
+    // compare against the pre-call persistent set — the shared test
+    // session legitimately holds other caches, e.g. memoized similarity
+    // indexes
     val before = spark.sparkContext.getPersistentRDDs.keySet
-    val nGood = Store.withJsonlLenient(spark, path, df.schema) { (g, b) =>
-      assert(b.count() == 3); g.count()
+    Store.withJsonlLenient(spark, path, df.schema) { (good, bad) =>
+      // every original row parses; blank lines are skipped by the reader,
+      // the three malformed payloads land in quarantine with their raw text
+      assert(good.count() == df.count())
+      assert(good.exceptAll(df).isEmpty && df.exceptAll(good).isEmpty)
+      val quarantined = bad.collect().map(_.getString(0)).toSet
+      assert(quarantined.size == 3, s"got $quarantined")
+      assert(quarantined.contains("{not json at all"))
     }
-    assert(nGood == df.count())
     assert(spark.sparkContext.getPersistentRDDs.keySet == before,
       "withJsonlLenient leaked a cached relation")
   }
@@ -236,7 +227,7 @@ class StoreSpec extends SparkSpec {
     // must treat it as a FRESH sink — a schemaless CSV read over zero
     // data files throws on schema inference and would wedge every retry
     // of exactly the crash-recovery append this function exists for
-    val dir = java.nio.file.Files.createTempDirectory("graft_wedge").toString
+    val dir = tempDir("graft_wedge").toString
     val path = s"$dir/sink"
     java.nio.file.Files.createDirectories(
       java.nio.file.Paths.get(path, "_temporary"))
@@ -255,7 +246,7 @@ class StoreSpec extends SparkSpec {
 
   test("compact refuses a Hive-partitioned layout instead of silently flattening it") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_cpart").toString
+    val dir = tempDir("graft_cpart").toString
     graft.sources.Store.writePartitioned(
       Seq((1L, "a"), (2L, "b")).toDF("id", "day"), s"$dir/lake", Seq("day"))
     val e = intercept[IllegalArgumentException] {

@@ -128,7 +128,7 @@ class StreamingSpec extends SparkSpec {
       rows.toDF("event_id", "ts", "props")).collect().map(alertKey).toSet
     // several distinct rules must actually fire for this test to mean much
     assert(batch.map(_._2).size >= 5, s"crafted corpus too tame: $batch")
-    val base = java.nio.file.Files.createTempDirectory("graft_alertsink")
+    val base = tempDir("graft_alertsink")
     val metricsPath = base.resolve("metrics").toString
     val alertsPath = base.resolve("alerts").toString
     val sentinel = Seq((7777L, new Timestamp(
@@ -162,7 +162,7 @@ class StreamingSpec extends SparkSpec {
     // a new run past the landed history: one query lands days 1-8, a
     // later query closes day 9 — its preceding-5 window (days 4-8) comes
     // from the store the earlier query left, and only day 9's alerts land
-    val later = java.nio.file.Files.createTempDirectory("graft_alertsink_later")
+    val later = tempDir("graft_alertsink_later")
     val laterMetrics = later.resolve("metrics").toString
     val day9Alerts = later.resolve("alerts").toString
     stream(laterMetrics, later.resolve("alerts_1_8").toString,
@@ -207,7 +207,7 @@ class StreamingSpec extends SparkSpec {
         col("event_type")).agg(count(lit(1)).as("c")))
       .collect().map(keyOf).toSet
     assert(batch.exists(_._4.contains(0.25)), s"hand TV missing: $batch")
-    val base = java.nio.file.Files.createTempDirectory("graft_driftsink")
+    val base = tempDir("graft_driftsink")
     val countsPath = base.resolve("counts").toString
     val driftPath = base.resolve("drift").toString
     val sentinel = Seq(Event(99999L, new Timestamp(
@@ -246,7 +246,7 @@ class StreamingSpec extends SparkSpec {
       Event(5, dayTs(1, 10), 1, "appC", 1.0))
     val d2 = Seq(Event(7, dayTs(2, 5), 1, "appC", 1.0))
     val sentinel = Seq(Event(11, dayTs(40, 0), 1, "appZ", 1.0))
-    val path = java.nio.file.Files.createTempDirectory("graft_hrsink")
+    val path = tempDir("graft_hrsink")
       .resolve("reports").toString
     def runOnce(): Unit = {
       val mem = MemoryStream[Event]
@@ -282,8 +282,8 @@ class StreamingSpec extends SparkSpec {
       .map(r => (r.getLong(0), ts(r.getLong(0)), r.getAs[String]("text")))
       .sortBy(_._1)
     val (b1, b2) = docs.splitAt(docs.length / 2)
-    val storeDir = java.nio.file.Files.createTempDirectory("graft_ndstore").toString
-    val survDir = java.nio.file.Files.createTempDirectory("graft_ndsurv").toString
+    val storeDir = tempDir("graft_ndstore").toString
+    val survDir = tempDir("graft_ndsurv").toString
     def runOnce(): Unit = {
       val mem = MemoryStream[(Long, Timestamp, String)]
       val q = IngestStream.neardupSink(
@@ -320,9 +320,9 @@ class StreamingSpec extends SparkSpec {
       .map(r => (r.getLong(0), ts(r.getLong(0)), r.getAs[String]("text")))
       .sortBy(_._1)
     val (b1, b2) = docs.splitAt(docs.length / 2)
-    val storeDir = java.nio.file.Files.createTempDirectory("graft_ndck_store").toString
-    val survDir = java.nio.file.Files.createTempDirectory("graft_ndck_surv").toString
-    val ckDir = java.nio.file.Files.createTempDirectory("graft_ndck_ck").toString
+    val storeDir = tempDir("graft_ndck_store").toString
+    val survDir = tempDir("graft_ndck_surv").toString
+    val ckDir = tempDir("graft_ndck_ck").toString
     // ONE MemoryStream across both query incarnations (the established
     // checkpoint-restart pattern here: a fresh stream could not serve
     // the checkpointed offsets)
@@ -354,8 +354,8 @@ class StreamingSpec extends SparkSpec {
   test("streaming near-dup front: out-of-order arrival lands (documented best-effort)") {
     import spark.implicits._
     implicit val sql = spark.sqlContext
-    val storeDir = java.nio.file.Files.createTempDirectory("graft_ndo_store").toString
-    val survDir = java.nio.file.Files.createTempDirectory("graft_ndo_surv").toString
+    val storeDir = tempDir("graft_ndo_store").toString
+    val survDir = tempDir("graft_ndo_surv").toString
     val mem = MemoryStream[(Long, Timestamp, String)]
     val q = IngestStream.neardupSink(
       mem.toDF().toDF("doc_id", "ts", "text"), storeDir, survDir).start()
@@ -486,7 +486,7 @@ class StreamingSpec extends SparkSpec {
     val sentinel = Seq((9999L, dayTs(40, 0), salad(9999)))
     val allDocs = day1 ++ day2 ++ sentinel
     // ---- batch side: the same corpus as a lake dir ----
-    val lakeDir = java.nio.file.Files.createTempDirectory("graft_loop_lake").toString
+    val lakeDir = tempDir("graft_loop_lake").toString
     allDocs.toDF("doc_id", "ts", "text")
       .select(col("doc_id"), col("text"), lit("en").as("lang"),
         concat(lit("src"), col("doc_id") % 2).as("source"),
@@ -502,7 +502,7 @@ class StreamingSpec extends SparkSpec {
       s"corpus must cover all 5 stages: $staged")
     val expectedClean = staged.collect { case (id, None) => id }.toSet
     // ---- streaming side: ONE stream, one checkpoint root, 4 queries ----
-    val root = java.nio.file.Files.createTempDirectory("graft_runloop")
+    val root = tempDir("graft_runloop")
     def p(n: String) = root.resolve(n).toString
     val mem = MemoryStream[(Long, Timestamp, String)]
     def docsDf = mem.toDF().toDF("doc_id", "ts", "text")
@@ -636,7 +636,7 @@ class StreamingSpec extends SparkSpec {
     // as Tables.events), aggregate in Complete mode, compare to the batch op
     val raw = spark.read.parquet(s"$sfDir/events.parquet")
     // the file source streams a directory: stage the table as one
-    val dir = java.nio.file.Files.createTempDirectory("graft_stream").toString
+    val dir = tempDir("graft_stream").toString
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$sfDir/events.parquet"),
       java.nio.file.Paths.get(s"$dir/events.parquet"))
@@ -657,8 +657,8 @@ class StreamingSpec extends SparkSpec {
     import spark.implicits._
     implicit val sql = spark.sqlContext
     val mem = MemoryStream[Event]
-    val outDir = java.nio.file.Files.createTempDirectory("graft_sink").toString
-    val ckDir = java.nio.file.Files.createTempDirectory("graft_ck").toString
+    val outDir = tempDir("graft_sink").toString
+    val ckDir = tempDir("graft_ck").toString
     def run(batches: Seq[Seq[Event]]): Unit = {
       val q = IngestStream.windowedCounts(IngestStream.dedupe(mem.toDS()))
         .writeStream.format("parquet").option("path", outDir)

@@ -549,7 +549,7 @@ class TextOpsSpec extends SparkSpec {
     // of exactly 20 tokens does NOT flag; 1 of 19 does).
     val boundaryNot = (Seq("slow") ++ Seq.fill(19)("ok")).mkString(" ")
     val boundaryYes = (Seq("slow") ++ Seq.fill(18)("ok")).mkString(" ")
-    val dir = java.nio.file.Files.createTempDirectory("graft_blocklist").toString
+    val dir = tempDir("graft_blocklist").toString
     Seq(
       (1L, "s1", "slow slow BIG  merge"), // 4 tokens, 4 blocked (normalized)
       (2L, "s2", boundaryNot),
@@ -630,7 +630,7 @@ class TextOpsSpec extends SparkSpec {
     def md5hex(s: String): String =
       java.security.MessageDigest.getInstance("MD5").digest(s.getBytes("UTF-8"))
         .map("%02x".format(_)).mkString
-    val dir = java.nio.file.Files.createTempDirectory("graft_subdedup").toString
+    val dir = tempDir("graft_subdedup").toString
     // docs 1,2 share a 7-word banner: its three 5-grams are duplicated,
     // covering exactly banner positions 0..6 in BOTH docs; each doc's
     // 3-word unique tail survives. The gram bridging banner→tail is
@@ -688,7 +688,7 @@ class TextOpsSpec extends SparkSpec {
     def md5hex(s: String): String =
       java.security.MessageDigest.getInstance("MD5").digest(s.getBytes("UTF-8"))
         .map("%02x".format(_)).mkString
-    val dir = java.nio.file.Files.createTempDirectory("graft_linededup").toString
+    val dir = tempDir("graft_linededup").toString
     Seq(
       // 'shared header' occurs at (1,0) — kept there, removed everywhere
       // after, INCLUDING the same doc's later position
@@ -734,7 +734,7 @@ class TextOpsSpec extends SparkSpec {
   test("familiarity: crafted corpus pins mean_cf, min_cf and the rare fraction") {
     import spark.implicits._
     // cf: common = 2+1+3 = 6, rareword = 1, unique1 = 1
-    val dir = java.nio.file.Files.createTempDirectory("graft_familiar").toString
+    val dir = tempDir("graft_familiar").toString
     Seq(
       (1L, "s", "common common rareword"),
       (2L, "s", "common unique1"),
@@ -790,7 +790,7 @@ class TextOpsSpec extends SparkSpec {
     // crafted corpus: cross-source dups charge the source holding the
     // LATER copy; null text counts but never enters dedup accounting
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_srcdedup").toString
+    val dir = tempDir("graft_srcdedup").toString
     Seq((1L, "s1", "a b"), (2L, "s2", "A  b"), (3L, "s1", "c"),
       (4L, "s2", null.asInstanceOf[String]), (5L, "s3", "a b"))
       .toDF("doc_id", "source", "text")
@@ -824,7 +824,7 @@ class TextOpsSpec extends SparkSpec {
 
   test("source overlap: crafted cross-source corpus pins the matrix; within-source dups don't count") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_overlap").toString
+    val dir = tempDir("graft_overlap").toString
     // content sets: A={x,y} (y duplicated WITHIN A — distinct'd away),
     // B={x,z} (x differs only by case/whitespace — same normalized
     // hash), C={w}, plus a null doc (unassessed). Only (A,B) overlaps:
@@ -852,7 +852,7 @@ class TextOpsSpec extends SparkSpec {
     import spark.implicits._
     def md5hex(s: String) = java.security.MessageDigest.getInstance("MD5")
       .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
-    val dir = java.nio.file.Files.createTempDirectory("graft_redact").toString
+    val dir = tempDir("graft_redact").toString
     // (doc, text, expected redacted text, expected n_redactions)
     val cases = Seq(
       (1L, "contact me@x.com now", "contact [PII] now", 1),
@@ -896,7 +896,7 @@ class TextOpsSpec extends SparkSpec {
 
   test("mix temperature: exact isqrt tempering, hand-checked; zero-token source NULL boost") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_mixtemp").toString
+    val dir = tempDir("graft_mixtemp").toString
     // A: 400 tokens (x=4e6, isqrt 2000 — perfect square), B: 100 (isqrt
     // 1000), C: 0 tokens (empty text), D: 2 tokens (x=20000, isqrt 141 —
     // the non-square floor path: 141^2=19881 <= 20000 < 142^2)
@@ -968,7 +968,7 @@ class TextOpsSpec extends SparkSpec {
     assert(got.values.flatten.nonEmpty)
     // degenerate rules: zero variance → NULL; single doc → no row
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_qcorr").toString
+    val dir = tempDir("graft_qcorr").toString
     Seq((1L, "Z", "same text here ok"), (2L, "Z", "same text here ok"),
       (3L, "S", "only one document here"))
       .toDF("doc_id", "source", "text")
@@ -982,7 +982,7 @@ class TextOpsSpec extends SparkSpec {
 
   test("token hist: power-of-two buckets, exact bounds, cumulative context-fit shares") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_tokhist").toString
+    val dir = tempDir("graft_tokhist").toString
     def words(n: Int) = Seq.fill(n)("w").mkString(" ")
     Seq((1L, Option("")), (2L, Option(words(1))), (3L, Option(words(2))),
       (4L, Option(words(3))), (5L, Option(words(7))), (6L, Option(words(8))),
@@ -1024,7 +1024,7 @@ class TextOpsSpec extends SparkSpec {
 
   test("lang mix: crafted corpus lands exact per-language share arithmetic and the und/null rules") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_langmix").toString
+    val dir = tempDir("graft_langmix").toString
     Seq(
       (1L, "A", Option("the cat and dog")), // en, 4 tokens
       (2L, "B", Option("is blue")), // en, 2 tokens
@@ -1060,7 +1060,7 @@ class TextOpsSpec extends SparkSpec {
     import spark.implicits._
     def md5hex(s: String) = java.security.MessageDigest.getInstance("MD5")
       .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
-    val dir = java.nio.file.Files.createTempDirectory("graft_mixapply").toString
+    val dir = tempDir("graft_mixapply").toString
     // A: 40 docs × 10 tokens = 400 (sq 2000, sq/n = 5); B: 10 docs × 10
     // = 100 (sq 1000, sq/n = 10 → CHAMPION, keeps all); C: empty text
     // (zero tokens → NULL rate, keeps nothing); plus a null-text doc in A
@@ -1143,7 +1143,7 @@ class TextOpsSpec extends SparkSpec {
     // crafted: a source with ONE scored doc has no internal ordering —
     // pct_source NULL (not 0) while pct_global stays defined
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_cal").toString
+    val dir = tempDir("graft_cal").toString
     Seq((1L, "A", Option("good text here ok")),
       (2L, "A", Option("more good text fine")),
       (3L, "S", Option("single scored document")),
@@ -1198,7 +1198,7 @@ class TextOpsSpec extends SparkSpec {
 
   test("quality ks: disjoint distributions score 1.0; single source reports NULL") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_ks").toString
+    val dir = tempDir("graft_ks").toString
     // 'low' docs score in a strictly lower bucket than 'high' docs
     // (len_score 10/500 vs 400/500 dominates); one null-text doc per
     // source stays out of the distribution but lands in n_null
@@ -1218,7 +1218,7 @@ class TextOpsSpec extends SparkSpec {
     assert(got("low").getAs[Int]("peak_bucket") ==
       got("high").getAs[Int]("peak_bucket"))
 
-    val single = java.nio.file.Files.createTempDirectory("graft_ks1").toString
+    val single = tempDir("graft_ks1").toString
     Seq((1L, "only", "some text here"), (2L, "only", "more text there"))
       .toDF("doc_id", "source", "text")
       .write.mode("overwrite").parquet(s"$single/documents.parquet")
@@ -1317,5 +1317,31 @@ class TextOpsSpec extends SparkSpec {
           s"dropEmpty gram drift on '$t' n=$n")
       }
     }
+  }
+
+  test("stopword fronts: counts do not depend on the JVM locale") {
+    import spark.implicits._
+    // a non-ASCII byte sends a string through the JVM's own case map:
+    // under tr-TR String.toLowerCase() maps 'I' to dotless '\u0131',
+    // which the [a-z] strip drops
+    val docs = Seq((1L, "THIS IS caf\u00e9"), (2L, "DIE KATZE IST caf\u00e9"),
+      (3L, "IN THE caf\u00e9")).toDF("doc_id", "text")
+    val dir = tempDir("graft_locale").toString
+    docs.withColumn("lang", lit("en")).withColumn("source", lit("s"))
+      .withColumn("n_chars", length(col("text")).cast("long"))
+      .write.parquet(s"$dir/documents.parquet")
+    def signals() = (
+      TextOps.qualityScored(docs).orderBy("doc_id").select("stop_score")
+        .collect().map(_.getDouble(0)).toSeq,
+      TextOps.predictedLang(spark, dir).collect().map(_.getString(0)).sorted.toSeq)
+    val saved = java.util.Locale.getDefault
+    try {
+      java.util.Locale.setDefault(java.util.Locale.forLanguageTag("en-US"))
+      val enUS = signals()
+      // en stop counts 1, 0, 1 over 3, 4, 3 words; de counts 'die' + 'ist'
+      assert(enUS == ((Seq(1.0, 0.0, 1.0), Seq("de", "en", "en"))))
+      java.util.Locale.setDefault(java.util.Locale.forLanguageTag("tr-TR"))
+      assert(signals() == enUS)
+    } finally java.util.Locale.setDefault(saved)
   }
 }
