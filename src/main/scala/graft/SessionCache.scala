@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.hadoop.fs.{FileStatus, Path}
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, GraftSqlBridge, SparkSession}
 import org.apache.spark.sql.execution.LogicalRDD
 import scala.collection.concurrent.TrieMap
 import scala.util.control.NonFatal
@@ -61,14 +61,17 @@ object SessionCache {
   /** Frees a DataFrame's CacheManager entry and the RDDs of the local
     * checkpoints its plan reads: `Dataset.unpersist` alone leaves a
     * `localCheckpoint`ed frame in the block manager. A memoized DataFrame
-    * owns the checkpoints in its plan; other values hold nothing.
+    * owns the checkpoints in its plan; other values hold nothing. The
+    * blocks are dropped through the SparkContext, not `RDD.unpersist`,
+    * which WARNs that a local checkpoint cannot be recomputed — true, and
+    * the point of releasing it.
     */
   def release(value: Any): Unit = value match {
     case df: Dataset[_] =>
       try {
         df.unpersist()
         df.queryExecution.logical.foreach {
-          case r: LogicalRDD => r.rdd.unpersist()
+          case r: LogicalRDD => GraftSqlBridge.unpersistRDD(r.rdd)
           case _ =>
         }
       } catch { case NonFatal(_) => }

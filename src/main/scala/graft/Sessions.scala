@@ -14,12 +14,12 @@ object Sessions {
     * default 100). The cap is a static conf, read once per JVM when
     * `CodeGenerator` initializes at the first code generation, so it can
     * only be set here, before the session exists. The whole registry
-    * compiles 1,862 classes (Verify at sf0.01; an entry is keyed by class
+    * compiles 1,675 classes (Verify at sf0.01; an entry is keyed by class
     * loader too, and local mode compiles each class under the application
     * class loader and again under the executor's) and the 17-query
     * analyst mix about 151, so at 100 every round of warm queries evicted
     * the classes the next round needed and re-ran Janino on each call.
-    * 4,096 is about twice the registry's working set, so a session
+    * 4,096 is more than twice the registry's working set, so a session
     * compiles each class once.
     */
   val CodegenCacheEntries = 4096
@@ -37,6 +37,10 @@ object Sessions {
       // scan-bound operator serializes on one core, which a real cluster
       // (thousands of files) never does. 16 MB matches GenData's
       // row-group size; sub-16 MB files still read as one task each.
+      // Spark's split (FilePartition.maxSplitBytes) is at most this and at
+      // least spark.sql.files.openCostInBytes (4 MB); a table that fits
+      // one split is planned as one partition (Tables.table), so queries
+      // over it pay no exchange.
       .config("spark.sql.files.maxPartitionBytes", "16m")
       .config("spark.sql.session.timeZone", "UTC")
       // lower/upper/initcap through the JVM's case mapping instead of

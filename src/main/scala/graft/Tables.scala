@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.{FilePartition, HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
 
 /** Loaders for the driver-generated parquet tables (see TESTDATA.md).
@@ -16,9 +17,30 @@ object Tables {
     * re-resolves it once the dir's files are rewritten:
     * `spark.read.parquet` re-lists the files and re-reads the parquet
     * footer schema on every call — a driver job per table per query.
+    *
+    * A table whose data files total at most Spark's own split size
+    * (`FilePartition.maxSplitBytes` over the files the read's index has
+    * already listed) is returned as `coalesce(1)`. It reads as one
+    * partition either way, but a `CoalesceExec(1)` reports
+    * `SinglePartition`, which satisfies every required distribution, so
+    * aggregates, windows, sorts and sort-merge joins over it plan no
+    * exchange. At that size an exchange buys no parallelism (AQE folds a
+    * sub-MB shuffle back into one partition) and costs a job and a stage
+    * boundary per query. The decision is free: no listing and no job,
+    * and filters and column pruning still push through the `Repartition`
+    * into the scan. A table above one split reads as it is, with its
+    * parallel scan. The decision is part of the cache entry, so a
+    * rewritten table is decided again on its next lookup.
     */
   def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    SessionCache(spark, dir, s"table:$name")(spark.read.parquet(s"$dir/$name.parquet"))
+    SessionCache(spark, dir, s"table:$name") {
+      val df = spark.read.parquet(s"$dir/$name.parquet")
+      val listed = df.queryExecution.analyzed.collect {
+        case LogicalRelation(r: HadoopFsRelation, _, _, _, _) => r.location.listFiles(Nil, Nil)
+      }.flatten
+      val bytes = listed.iterator.flatMap(_.files).map(_.getLen).sum
+      if (bytes <= FilePartition.maxSplitBytes(spark, listed)) df.coalesce(1) else df
+    }
 
   def region(s: SparkSession, d: String): DataFrame     = table(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame     = table(s, d, "nation")

@@ -447,12 +447,13 @@ object TokenCountsKernel {
   }
 }
 
-/** Per-list stopword-hit counts over an already-LOWERCASED string in one
-  * byte scan (SURVEY §2.3 lang-ID / quality family): for a foldable
-  * `lists` argument (array of word lists, each word nonempty [a-z]+),
-  * returns `array<int>` where element l is exactly
-  * `regexp_count(' ' || regexp_replace(lowered, '[^a-z]+', ' ') || ' ',
-  * ' (w_l1|w_l2|…) ')` — the engine-shared padded-stopword-density rule.
+/** Per-list stopword-hit counts over a string in one byte scan, with the
+  * ASCII case fold inside it (SURVEY §2.3 lang-ID / quality family): for
+  * a foldable `lists` argument (array of word lists, each word nonempty
+  * [a-z]+), returns `array<int>` where element l is exactly
+  * `regexp_count(' ' || regexp_replace(asciiLower(text), '[^a-z]+', ' ')
+  * || ' ', ' (w_l1|w_l2|…) ')` — the engine-shared padded-stopword-density
+  * rule, `asciiLower` being `Text.asciiLower` (A-Z → a-z, nothing else).
   *
   * Equivalence: in the padded form, tokens are maximal [a-z] runs with
   * single-space boundaries (the replace collapses every non-[a-z] run,
@@ -464,12 +465,13 @@ object TokenCountsKernel {
   * not count for l. Prefix/suffix containment can't false-match (the
   * trailing-space requirement forces whole-token equality), and both
   * engines' regexes agree because only exact token matches succeed
-  * (leftmost-first vs leftmost-longest is moot). Taking the LOWERED
-  * string as input (not lowering inside) keeps the case fold
-  * (`Text.asciiLower`) upstream and shared — the kernel replaces only
-  * the regexp_replace materialization and the per-list NFA walks.
+  * (leftmost-first vs leftmost-longest is moot). The fold happens in the
+  * scan: a byte in A-Z is a letter and compares as its lowercase, which
+  * is exactly `asciiLower` first, since no UTF-8 multibyte sequence holds
+  * a byte in 0x41-0x5A. So the kernel replaces the `translate` pass, the
+  * regexp_replace materialization and the per-list NFA walks.
   *
-  * Null lowered → null; a null lists argument yields a NULL result
+  * Null text → null; a null lists argument yields a NULL result
   * (StaticInvoke null propagation short-circuits before the core
   * sees it) — only an empty list LITERAL yields an empty array.
   */
@@ -484,12 +486,12 @@ object StopCountsKernel {
     var i = 0
     var done = false
     while (!done) {
-      // find the next [a-z] run [i, j)
-      while (i < bs.length && !(bs(i) >= 'a' && bs(i) <= 'z')) i += 1
+      // find the next [a-zA-Z] run [i, j)
+      while (i < bs.length && !letter(bs(i))) i += 1
       if (i >= bs.length) done = true
       else {
         var j = i
-        while (j < bs.length && bs(j) >= 'a' && bs(j) <= 'z') j += 1
+        while (j < bs.length && letter(bs(j))) j += 1
         var l = 0
         while (l < n) {
           var matched = false
@@ -500,7 +502,7 @@ object StopCountsKernel {
               val word = ws(w)
               if (word.length == j - i) {
                 var k = 0
-                while (k < word.length && word(k) == bs(i + k)) k += 1
+                while (k < word.length && word(k) == (bs(i + k) | 0x20)) k += 1
                 matched = k == word.length
               }
               w += 1
@@ -515,6 +517,8 @@ object StopCountsKernel {
     }
     ArrayData.toArrayData(counts)
   }
+
+  private def letter(b: Byte): Boolean = (b | 0x20) >= 'a' && (b | 0x20) <= 'z'
 
   /** Folds the foldable word lists once at plan time, as byte arrays; a
     * NULL argument folds to null. Malformed words fail here.
@@ -1839,7 +1843,7 @@ object GraftFunctions {
         "n_upper" -> IntegerType),
       TokenCountsKernel.getClass, "eval"),
     KernelDef("graft_stop_counts",
-      Seq("lowered" -> StringType, "lists" -> ArrayType(ArrayType(StringType))), Ints,
+      Seq("text" -> StringType, "lists" -> ArrayType(ArrayType(StringType))), Ints,
       StopCountsKernel.getClass, "eval", returnsNull = true, foldable = Set("lists"),
       fold = c => Seq(c(0), Folded.literal(StopCountsKernel.foldWords(c(1))))),
     KernelDef("graft_cjk", Seq("text" -> StringType), BooleanType,

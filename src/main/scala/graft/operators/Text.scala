@@ -29,16 +29,18 @@ private[graft] object Text {
     * share this one definition).
     *
     * Case folding is ASCII-ONLY by contract (translate, not lower()):
-    * full Unicode lowercasing is engine-divergent — Spark's lower() is
-    * ICU FULL case mapping ('İ' → i + combining dot, 2 codepoints;
-    * final 'Σ' → 'ς') while DuckDB's is the utf8proc SIMPLE 1:1 map
-    * ('İ' → 'i'; 'Σ' → 'σ') — so a corpus containing those characters
-    * would split content-identity groups differently per engine and
-    * silently break every md5-keyed dedup/gram oracle. For a CONTENT
-    * KEY, deterministic beats linguistically complete: non-ASCII case
-    * variants simply stay distinct contents. A multilingual deployment
-    * that wants full folding plugs one pinned ICU-versioned fold into
-    * BOTH sides — the contract stays "one spelling, two engines".
+    * full Unicode lowercasing is engine-divergent — Spark's lower() (ICU
+    * case maps off in [[graft.Sessions]]) is the JVM's
+    * `String.toLowerCase` under the default locale ('İ' → i + combining
+    * dot, 2 codepoints; under tr-TR 'I' → dotless 'ı') while DuckDB's is
+    * the utf8proc SIMPLE 1:1 map ('İ' → 'i') — so a corpus containing
+    * those characters would split content-identity groups differently
+    * per engine and silently break every md5-keyed dedup/gram oracle.
+    * For a CONTENT KEY, deterministic beats linguistically complete:
+    * non-ASCII case variants simply stay distinct contents. A
+    * multilingual deployment that wants full folding plugs one pinned
+    * ICU-versioned fold into BOTH sides — the contract stays "one
+    * spelling, two engines".
     */
   def norm(c: Column): Column = {
     // ONE kernel pass (graft.functions.NormKernel, r14) — replaces
@@ -55,10 +57,6 @@ private[graft] object Text {
     regexp_replace(translate(trim(c), AsciiUpper, AsciiLower),
       "[ \\t\\n\\r\\f]+", " ")
 
-  /** DuckDB mirror of [[norm]] over the `text` column — kept adjacent so
-    * the whitespace and case-fold classes cannot drift between the
-    * engines' sides.
-    */
   /** ASCII-only case maps (Column + SQL) — the [[norm]] contract's
     * building blocks, exported for flags that compare a string against
     * its own case-fold (q_quality_flags' all-caps test: full-vs-simple
@@ -72,6 +70,10 @@ private[graft] object Text {
   def asciiLowerSql(e: String): String =
     s"translate($e, '$AsciiUpper', '$AsciiLower')"
 
+  /** DuckDB mirror of [[norm]] over `expr` ([[normSql]]: over the `text`
+    * column) — kept adjacent so the whitespace and case-fold classes
+    * cannot drift between the engines' sides.
+    */
   def normSqlOf(expr: String): String =
     s"regexp_replace(translate(trim($expr), '$AsciiUpper', '$AsciiLower'), " +
       "'[ \\t\\n\\r\\f]+', ' ', 'g')"

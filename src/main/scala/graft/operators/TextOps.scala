@@ -86,12 +86,13 @@ object TextOps {
     * consumers. The SQL pieces assume a frame carrying `padded`, `cjk`
     * and the `s_xx` score columns ([[langSignalsSql]] builds them).
     */
-  // Text.asciiLower, not lower(): everything outside [a-z] is stripped
+  // Text.asciiLowerSql, not lower(): everything outside [a-z] is stripped
   // after the fold and the stopword lists are ASCII, so only A-Z → a-z
   // matters, and lower() would make it depend on the engine and the host.
   // Spark (ICU case maps off) lowercases a string holding any non-ASCII
   // byte with String.toLowerCase() under the JVM's default locale: under
-  // tr-TR 'I' → dotless 'ı', which the [a-z] strip then drops
+  // tr-TR 'I' → dotless 'ı', which the [a-z] strip then drops. The Spark
+  // side folds A-Z inside graft_stop_counts' byte scan, the same map
   private val paddedSql =
     s"' ' || regexp_replace(${Text.asciiLowerSql("text")}, '[^a-z]+', ' ', 'g') || ' '"
   private val cjkSql = "regexp_matches(text, '[\\x{4e00}-\\x{9fff}]')"
@@ -120,9 +121,9 @@ object TextOps {
       stopwords.map { case (l, _) => s"s_$l" }
     require(!df.columns.exists(reserved.contains),
       s"withLangSignals reserves columns $reserved")
-    // one byte-scan kernel for all four per-list counts over the ASCII-
-    // lowered text (graft_stop_counts — exactly the padded regexp_count
-    // per its scaladoc; see paddedSql for the fold) + the CJK range
+    // one byte-scan kernel for all four per-list counts, ASCII fold
+    // included (graft_stop_counts — exactly the padded regexp_count over
+    // asciiLower per its scaladoc; see paddedSql for the fold) + the CJK range
     // probe. Replaces the padded-string materialization and four
     // per-list NFA walks per row; the
     // DuckDB oracle keeps the regex spelling, so the hash gate re-proves
@@ -131,7 +132,7 @@ object TextOps {
     var out = df
       .withColumn("cjk", call_function("graft_cjk", col("text")))
       .withColumn("sc_all", call_function("graft_stop_counts",
-        Text.asciiLower(col("text")), typedlit(stopwords.map(_._2))))
+        col("text"), typedlit(stopwords.map(_._2))))
     for (((l, _), idx) <- stopwords.zipWithIndex)
       out = out.withColumn(s"s_$l", element_at(col("sc_all"), idx + 1))
     out.drop("sc_all")
@@ -329,8 +330,8 @@ object TextOps {
       : org.apache.spark.sql.DataFrame = {
     // the three regex counters (stopword density numerator, punct/caps
     // numerators + the whitespace-token denominator) now come from two
-    // byte-scan kernels — graft_stop_counts over the ASCII-lowered text and
-    // graft_token_counts over the raw text — with the DuckDB oracle
+    // byte-scan kernels over the raw text — graft_stop_counts (which folds
+    // A-Z itself) and graft_token_counts — with the DuckDB oracle
     // keeping the regex spelling (the hash gate re-proves kernel ≡ regex
     // every Verify; TextOpsSpec pins the Spark-side equivalence too).
     // Both kernel structs ride as working columns so each evaluates once
@@ -352,7 +353,7 @@ object TextOps {
     docs
       .withColumn("q_tc", call_function("graft_token_counts", col("text")))
       .withColumn("q_sc", call_function("graft_stop_counts",
-        Text.asciiLower(col("text")), typedlit(Seq(stopwords.head._2))))
+        col("text"), typedlit(Seq(stopwords.head._2))))
       .withColumn("len_score", lenScore)
       .withColumn("stop_score", stopScore)
       .withColumn("punct_ratio", punct)

@@ -3,11 +3,13 @@ package org.apache.spark.sql
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic.{Dataset => ClassicDataset, SparkSession => ClassicSparkSession}
 
-/** The one `private[sql]` bridge graft needs: construct a DataFrame from a
-  * custom LogicalPlan (graft.plans.TopKPerKeyNode). `Dataset.ofRows` is
-  * package-private, so this object lives in org.apache.spark.sql — the
-  * standard technique Spark extension libraries use for exactly this hook.
-  * Nothing else in graft reaches into Spark internals.
+/** The one bridge to the package-private Spark internals graft needs:
+  * construct a DataFrame from a custom LogicalPlan
+  * (graft.plans.TopKPerKeyNode), and the few `private[sql]` /
+  * `private[spark]` helpers below. `Dataset.ofRows` is package-private, so
+  * this object lives in org.apache.spark.sql — the standard technique
+  * Spark extension libraries use for exactly this hook. Nothing else in
+  * graft reaches into Spark internals.
   */
 object GraftSqlBridge {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
@@ -27,4 +29,12 @@ object GraftSqlBridge {
     */
   def anyOf(ts: Seq[types.DataType]): types.AbstractDataType =
     if (ts.size == 1) ts.head else types.TypeCollection(ts: _*)
+
+  /** Drops an RDD's blocks. `RDD.unpersist` does the same but WARNs for a
+    * locally checkpointed RDD that its lineage is gone; an owner freeing
+    * its own checkpoint expects that (`SparkContext.unpersistRDD` is
+    * `private[spark]`).
+    */
+  def unpersistRDD(rdd: org.apache.spark.rdd.RDD[_]): Unit =
+    rdd.sparkContext.unpersistRDD(rdd.id, blocking = false)
 }

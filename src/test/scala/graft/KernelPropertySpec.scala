@@ -25,7 +25,8 @@ import org.scalacheck.util.Pretty
   *     every generated row — nulls, invalid UTF-8 and all.
   *  2. Kernel ≡ the spelling it replaced, for the kernels whose core doc
   *     names one: the regex/`split` forms for graft_token_counts,
-  *     graft_cjk, graft_repeated_run, graft_block_counts, NormKernel and
+  *     graft_stop_counts (over `Text.asciiLower`), graft_cjk,
+  *     graft_repeated_run, graft_block_counts, NormKernel and
   *     GramHashKernel, the `from_json` form for graft_json_int
   *     (evaluated as analyzed Catalyst expressions, no job per case), and
   *     a plain Scala reference for the vector kernels.
@@ -334,6 +335,41 @@ class KernelPropertySpec extends SparkSpec {
 
   test("NormKernel ≡ Text.normRegex (valid UTF-8)") {
     againstSpelling(byName("graft_norm", str), valid = true, 1, graft.operators.Text.normRegex(t))
+  }
+
+  // StopCounts folds A-Z in its byte scan: over raw text it must equal the
+  // kernel over Text.asciiLower (the translate pass it absorbed, which
+  // leaves the text already folded) on any bytes, and the padded
+  // regexp_count over asciiLower on valid UTF-8. Stopwords with random
+  // letters upper-cased make case-variant hits common.
+  test("StopCounts on raw text ≡ over Text.asciiLower ≡ the padded regexp_count") {
+    val lists = graft.operators.TextOps.stopwordLists.map(_._2)
+    val lowered = graft.operators.Text.asciiLower(t)
+    val padded = concat(lit(" "), regexp_replace(lowered, "[^a-z]+", " "), lit(" "))
+    val kernel = kernelOf(byName("graft_stop_counts", str,
+      Literal.create(lists, ArrayType(ArrayType(StringType)))))
+    val reference = spelling(
+      GraftFunctions.call("graft_stop_counts", lowered, typedlit(lists)),
+      when(t.isNull, lit(null)).otherwise(array(
+        lists.map(ws => regexp_count(padded, lit(s" (${ws.mkString("|")}) "))): _*)))
+    val mixedCase = Gen.oneOf(lists.flatten).flatMap(w =>
+      Gen.listOfN(w.length, Gen.prob(0.4)).map(up =>
+        w.zip(up).map { case (c, u) => if (u) c.toUpper else c }.mkString))
+    def doc(valid: Boolean): Gen[UTF8String] = {
+      val piece = Gen.frequency(3 -> mixedCase.map(_.getBytes(UTF_8)),
+        2 -> Gen.const(Array(' '.toByte)), 4 -> validPiece.map(_.getBytes(UTF_8)))
+      val any = if (valid) piece else Gen.frequency(8 -> piece, 1 -> invalidPiece)
+      Gen.choose(0, 40).flatMap(Gen.listOfN(_, any))
+        .map(ps => UTF8String.fromBytes(ps.toArray.flatten))
+    }
+    Seq(false, true).foreach { valid =>
+      check(Prop.forAllNoShrink(orNull(doc(valid))) { in =>
+        val s = in.asInstanceOf[UTF8String]
+        val Seq(overLowered, regex) = reference(s)
+        agree(kernel(s), overLowered, s"kernel over asciiLower, <$s>") &&
+          (if (valid) agree(kernel(s), regex, s"padded regex, <$s>") else Prop.passed)
+      })
+    }
   }
 
   // GramHashKernel against the per-position concat_ws + xxhash64 lambda it

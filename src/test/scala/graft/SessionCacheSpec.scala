@@ -109,6 +109,47 @@ class SessionCacheSpec extends SparkSpec {
     assert(left.isEmpty, s"left behind: ${left.values.mkString(", ")}")
   }
 
+  test("release frees a checkpointed entry's blocks without the lineage WARN") {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    import org.apache.spark.sql.execution.LogicalRDD
+    val warns = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val appender = new AbstractAppender("graft-release-spec", null, null, false,
+        Property.EMPTY_ARRAY) {
+      override def append(ev: LogEvent): Unit = {
+        val m = ev.getMessage.getFormattedMessage
+        if (m != null && m.contains("locally checkpointed")) warns.add(m)
+      }
+    }
+    val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
+    val root = ctx.getConfiguration.getRootLogger
+    appender.start()
+    root.addAppender(appender, Level.WARN, null)
+    ctx.updateLoggers()
+    try {
+      val dir = lake()
+      writeDocs(dir, Seq("ab ab", "cd"))
+      val ckpt = SessionCache(spark, dir, "release_spec")(
+        Tables.documents(spark, dir).localCheckpoint())
+      val rdd = ckpt.queryExecution.logical.collectFirst { case r: LogicalRDD => r.rdd }.get
+      val bm = org.apache.spark.SparkEnv.get.blockManager
+      def blocks = bm.getMatchingBlockIds(_.asRDDId.exists(_.rddId == rdd.id))
+      assert(blocks.nonEmpty, "the checkpoint stored no block")
+      SessionCache.release(ckpt)
+      val deadline = System.nanoTime() + 30e9.toLong
+      while (blocks.nonEmpty && System.nanoTime() < deadline) Thread.sleep(20)
+      assert(blocks.isEmpty, s"blocks left: $blocks")
+      assert(!spark.sparkContext.getPersistentRDDs.contains(rdd.id))
+      assert(warns.isEmpty, warns.asScala.mkString("\n"))
+    } finally {
+      root.removeAppender(appender.getName)
+      ctx.updateLoggers()
+      appender.stop()
+    }
+  }
+
   private def mainSources(): List[java.nio.file.Path] = {
     val root = java.nio.file.Paths.get("src/main/scala")
     assert(java.nio.file.Files.isDirectory(root), s"run from the repo root: $root")
