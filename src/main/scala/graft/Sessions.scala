@@ -43,6 +43,10 @@ object Sessions {
       // over it pay no exchange.
       .config("spark.sql.files.maxPartitionBytes", "16m")
       .config("spark.sql.session.timeZone", "UTC")
+      // parquet TIMESTAMP(NANOS) reads as a raw long, which
+      // Tables.normalizeEventTs floors to µs (earlier testdata generations
+      // wrote events.ts that way)
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       // lower/upper/initcap through the JVM's case mapping instead of
       // ICU's, without ICU's seconds-long JVM-global case-map init
       // (CaseMapSpec pins the strings). Non-ASCII text then maps under

@@ -60,11 +60,11 @@ object Tables {
     *    generation) — Spark reads TIMESTAMP_NTZ; cast to TimestampType,
     *    exact because sessions pin spark.sql.session.timeZone=UTC
     *    ([[Sessions]]), matching DuckDB's naive reading.
+    * The nanos-as-long read is a session conf set once, in
+    * [[Sessions.build]]; reading a table changes no conf.
     */
-  def events(s: SparkSession, d: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+  def events(s: SparkSession, d: String): DataFrame =
     normalizeEventTs(table(s, d, "events"))
-  }
 
   /** The per-generation `ts` dispatch of [[events]], shared with the
     * streaming file-source path (which reads the same parquet through

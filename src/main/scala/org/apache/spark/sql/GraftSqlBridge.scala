@@ -30,6 +30,15 @@ object GraftSqlBridge {
   def anyOf(ts: Seq[types.DataType]): types.AbstractDataType =
     if (ts.size == 1) ts.head else types.TypeCollection(ts: _*)
 
+  /** A DataFrame over rows already on the driver, in Catalyst's internal
+    * form: no per-row conversion from `Row` (`LocalRelation` is
+    * `private[sql]` to build from a schema).
+    */
+  def localFrame(spark: SparkSession, schema: types.StructType,
+      rows: Seq[catalyst.InternalRow]): DataFrame =
+    ofRows(spark, catalyst.plans.logical.LocalRelation(
+      catalyst.types.DataTypeUtils.toAttributes(schema), rows))
+
   /** Drops an RDD's blocks. `RDD.unpersist` does the same but WARNs for a
     * locally checkpointed RDD that its lineage is gone; an owner freeing
     * its own checkpoint expects that (`SparkContext.unpersistRDD` is

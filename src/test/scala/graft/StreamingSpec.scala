@@ -13,11 +13,16 @@ class StreamingSpec extends SparkSpec {
 
   private def ts(minutes: Long): Timestamp = new Timestamp(minutes * 60000L)
 
+  /** A fresh checkpoint directory for one query start: a query started
+    * without one gets a temporary directory, and Spark WARNs about it.
+    */
+  private def checkpoint(): String = tempDir("graft_ck").toString
+
   private def runToCompletion[T](
       stream: org.apache.spark.sql.DataFrame, name: String,
       mem: MemoryStream[T], batches: Seq[Seq[T]]): Array[org.apache.spark.sql.Row] = {
     val query = stream.writeStream.format("memory").queryName(name)
-      .outputMode("append").start()
+      .outputMode("append").option("checkpointLocation", checkpoint()).start()
     try {
       batches.foreach { b => mem.addData(b); query.processAllAvailable() }
       // advance the watermark far enough to close all windows/sessions
@@ -138,7 +143,7 @@ class StreamingSpec extends SparkSpec {
       val mem = MemoryStream[(Long, Timestamp, String)]
       val query = IngestStream.alertsSink(
         mem.toDF().toDF("event_id", "ts", "props"),
-        metricsPath, alertsPath).start()
+        metricsPath, alertsPath).option("checkpointLocation", checkpoint()).start()
       try batches.foreach { b => mem.addData(b); query.processAllAvailable() }
       finally query.stop()
     }
@@ -215,7 +220,7 @@ class StreamingSpec extends SparkSpec {
     def runOnce(): Unit = {
       val mem = MemoryStream[Event]
       val query = IngestStream.driftSink(mem.toDS(), countsPath, driftPath)
-        .start()
+        .option("checkpointLocation", checkpoint()).start()
       // runs close across DIFFERENT micro-batches: day 3's previous-run
       // distribution was landed by an EARLIER batch — the advancing-store
       // horizon the stream-static form could not provide
@@ -251,7 +256,8 @@ class StreamingSpec extends SparkSpec {
     def runOnce(): Unit = {
       val mem = MemoryStream[Event]
       val query = IngestStream.healthReportSink(
-        IngestStream.appHealth(IngestStream.dedupe(mem.toDS())), path).start()
+        IngestStream.appHealth(IngestStream.dedupe(mem.toDS())), path)
+        .option("checkpointLocation", checkpoint()).start()
       try Seq(d1, d2, sentinel).foreach { b =>
         mem.addData(b); query.processAllAvailable()
       } finally query.stop()
@@ -287,7 +293,8 @@ class StreamingSpec extends SparkSpec {
     def runOnce(): Unit = {
       val mem = MemoryStream[(Long, Timestamp, String)]
       val q = IngestStream.neardupSink(
-        mem.toDF().toDF("doc_id", "ts", "text"), storeDir, survDir).start()
+        mem.toDF().toDF("doc_id", "ts", "text"), storeDir, survDir)
+        .option("checkpointLocation", checkpoint()).start()
       try Seq(b1, b2).foreach { b => mem.addData(b.toSeq); q.processAllAvailable() }
       finally q.stop()
     }
@@ -358,7 +365,8 @@ class StreamingSpec extends SparkSpec {
     val survDir = tempDir("graft_ndo_surv").toString
     val mem = MemoryStream[(Long, Timestamp, String)]
     val q = IngestStream.neardupSink(
-      mem.toDF().toDF("doc_id", "ts", "text"), storeDir, survDir).start()
+      mem.toDF().toDF("doc_id", "ts", "text"), storeDir, survDir)
+      .option("checkpointLocation", checkpoint()).start()
     try {
       // identical text = Hamming 0: the strongest near-dup
       mem.addData(Seq((1L, ts(100), "same exact words here")))
@@ -644,7 +652,7 @@ class StreamingSpec extends SparkSpec {
       spark.readStream.schema(raw.schema).parquet(dir)))
     val query = IngestStream.windowedCounts(stream)
       .writeStream.format("memory").queryName("file_win")
-      .outputMode("complete").start()
+      .outputMode("complete").option("checkpointLocation", checkpoint()).start()
     try query.processAllAvailable() finally query.stop()
     val streamed = spark.table("file_win")
       .orderBy("window_start", "event_type").collect()
@@ -702,7 +710,7 @@ class StreamingSpec extends SparkSpec {
       Event(204, ts(130), 2, "purchase", 5.0))  // inside u2 window
     val joined = IngestStream.followWithin24h(signupMem.toDS(), followMem.toDS())
     val query = joined.writeStream.format("memory").queryName("ss_join")
-      .outputMode("append").start()
+      .outputMode("append").option("checkpointLocation", checkpoint()).start()
     try {
       signupMem.addData(signups); query.processAllAvailable()
       followMem.addData(follows.take(2)); query.processAllAvailable()
@@ -725,7 +733,7 @@ class StreamingSpec extends SparkSpec {
       Event(2, ts(10), 11, "made_up_type", 6.0)) // no history -> null enrich
     val query = IngestStream.enrichWithHistory(mem.toDS(), history)
       .writeStream.format("memory").queryName("enriched")
-      .outputMode("append").start()
+      .outputMode("append").option("checkpointLocation", checkpoint()).start()
     try { mem.addData(events); query.processAllAvailable() } finally query.stop()
     val rows = spark.table("enriched").collect()
     assert(rows.length == 2)
@@ -761,7 +769,7 @@ class StreamingSpec extends SparkSpec {
     val mem = MemoryStream[Event]
     val q = IngestStream.queueState(mem.toDS()).toDF().writeStream
       .format("memory").queryName("queue_state_stream")
-      .outputMode("update").start()
+      .outputMode("update").option("checkpointLocation", checkpoint()).start()
     try batches.foreach { b => mem.addData(b); q.processAllAvailable() }
     finally q.stop()
     // the memory sink appends each update: per item the final state is

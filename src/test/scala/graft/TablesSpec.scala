@@ -125,4 +125,16 @@ class TablesSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       assert(docs.count() == 2000)
     }
   }
+
+  test("reading events changes no session conf") {
+    // a session without the nanos-as-long conf: Sessions.build sets it
+    // once, and a table read must leave a session's confs as they are
+    val key = "spark.sql.legacy.parquet.nanosAsLong"
+    val s = spark.newSession()
+    s.conf.unset(key)
+    val before = s.conf.getAll
+    Tables.events(s, sfDir)
+    assert(s.conf.getAll == before)
+    assert(s.conf.getOption(key) != Some("true"))
+  }
 }
