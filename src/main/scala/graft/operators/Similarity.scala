@@ -7,6 +7,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Near-duplicate detection and similarity search (SURVEY §2.5 #36-41).
   *
@@ -699,19 +700,23 @@ object Similarity {
       unionFindLabels(as.indices.iterator.map(k => (as(k), bs(k))))
     }
 
-    def shingleFrame(s: SparkSession, schema: org.apache.spark.sql.types.StructType): DataFrame =
+    // hash-partitioned by doc_id as the distributed entry is, so the
+    // postings' (doc_id, sh_h) distinct over it ([[shingles]]) plans no
+    // second exchange
+    def shingleFrame(s: SparkSession, schema: StructType): DataFrame =
       GraftSqlBridge.localFrame(s, schema, (0 until n).map(i =>
         InternalRow(if (hasId(i)) ids(i) else null, UnsafeArrayData.fromPrimitiveArray(hs(i)))))
+        .repartition(s.sparkContext.defaultParallelism, col("doc_id"))
 
-    def bandsFrame(s: SparkSession, schema: org.apache.spark.sql.types.StructType): DataFrame =
+    def bandsFrame(s: SparkSession, schema: StructType): DataFrame =
       GraftSqlBridge.localFrame(s, schema, for (i <- 0 until n; b <- bands(i).indices)
         yield InternalRow(if (hasId(i)) ids(i) else null, b, bands(i)(b)))
 
-    def candidatesFrame(s: SparkSession, schema: org.apache.spark.sql.types.StructType): DataFrame =
+    def candidatesFrame(s: SparkSession, schema: StructType): DataFrame =
       GraftSqlBridge.localFrame(s, schema, candidates.toSeq.map(p =>
         InternalRow(byRank((p >>> 32).toInt), byRank(p.toInt))))
 
-    def pairsFrame(s: SparkSession, schema: org.apache.spark.sql.types.StructType): DataFrame = {
+    def pairsFrame(s: SparkSession, schema: StructType): DataFrame = {
       val (as, bs, js) = pairs
       GraftSqlBridge.localFrame(s, schema, as.indices.map(k => InternalRow(as(k), bs(k), js(k))))
     }

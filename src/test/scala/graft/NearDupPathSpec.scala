@@ -139,7 +139,8 @@ class NearDupPathSpec extends SparkSpec {
   private val corpus: Gen[Seq[(Option[Long], String)]] = for {
     bases <- Gen.choose(2, 12).flatMap(Gen.listOfN(_, baseDoc))
     variants <- Gen.sequence[Seq[Vector[String]], Vector[String]](bases.map(b =>
-      Gen.frequency(2 -> variant(b), 1 -> Gen.const(b), 1 -> variant(b).flatMap(variant))))
+      Gen.frequency(2 -> variant(b), 1 -> Gen.const(b),
+        2 -> variant(b).flatMap(variant), 2 -> variant(b).flatMap(variant).flatMap(variant))))
     short <- Gen.listOfN(3, Gen.choose(0, 2).flatMap(Gen.listOfN(_, Gen.oneOf(vocab))))
     repeat <- Gen.choose(0, 1)
   } yield {
@@ -151,7 +152,7 @@ class NearDupPathSpec extends SparkSpec {
 
   test("driver near-dup core equals the distributed chain on generated corpora [property]") {
     val params = Test.Parameters.default
-      .withMinSuccessfulTests(12).withInitialSeed(20261019L).withWorkers(1)
+      .withMinSuccessfulTests(25).withInitialSeed(20261019L).withWorkers(1)
     var withPairs = 0
     val prop = Prop.forAllNoShrink(corpus) { docs =>
       val dir = tempDir("graft_neardup_prop").toString
@@ -162,6 +163,6 @@ class NearDupPathSpec extends SparkSpec {
     val r = Test.check(params, prop)
     SessionCache.clear()
     assert(r.passed, Pretty.pretty(Pretty.prettyTestRes(r), Pretty.Params(1)))
-    assert(withPairs >= 6, s"only $withPairs generated corpora had a near-dup pair")
+    assert(withPairs >= 12, s"only $withPairs generated corpora had a near-dup pair")
   }
 }
