@@ -38,14 +38,14 @@ object SparkEntry {
       },
       // also read by Bench's own quadratic-skip policy
       "build_knn_geometry" -> knnGeometryStats _,
-      "build_shingle_cache" -> (docShingleHashes(_, _)),
-      "build_minhash_bands" -> (minhashBands(_, _)),
-      "build_minhash_candidates" -> (minhashCandidates(_, _)),
-      "build_minhash_pairs" -> (minhashPairs(_, _)),
+      "build_shingle_cache" -> docShingleHashes _,
+      "build_minhash_bands" -> minhashBands _,
+      "build_minhash_candidates" -> minhashCandidates _,
+      "build_minhash_pairs" -> minhashPairs _,
       "build_ngram_postings" -> shingles _,
       "build_ngram_pairs" -> keptPairStats _,
       "build_simhash_fp" -> simhashFingerprints _,
-      "build_dedup_clusters" -> (dedupClusterLabels(_, _)),
+      "build_dedup_clusters" -> dedupClusterLabels _,
       "build_ngram_clusters" -> ngramClusterLabels _,
       "build_session_frame" -> Ingest.sessionizedEvents _,
       "build_sample_selection" -> Labeling.tiers _,

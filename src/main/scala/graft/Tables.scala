@@ -1,5 +1,8 @@
 package graft
 
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.datasources.{FilePartition, HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
@@ -41,6 +44,22 @@ object Tables {
       val bytes = listed.iterator.flatMap(_.files).map(_.getLen).sum
       if (bytes <= FilePartition.maxSplitBytes(spark, listed)) df.coalesce(1) else df
     }
+
+  /** A table's row count from its parquet footers, read on the driver
+    * file by file until the count passes `atMost`: exact when it is at
+    * most `atMost`, otherwise some count above it. No job, and the files
+    * are the ones [[table]]'s read has already listed.
+    */
+  def rowsUpTo(s: SparkSession, d: String, name: String, atMost: Long): Long = {
+    val conf = s.sessionState.newHadoopConf()
+    val files = table(s, d, name).inputFiles.iterator
+    var rows = 0L
+    while (rows <= atMost && files.hasNext) {
+      val footer = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(files.next()), conf))
+      try rows += footer.getRecordCount finally footer.close()
+    }
+    rows
+  }
 
   def region(s: SparkSession, d: String): DataFrame     = table(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame     = table(s, d, "nation")

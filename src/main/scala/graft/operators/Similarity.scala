@@ -333,21 +333,34 @@ object Similarity {
   private val MinhashK = 32
   private val BandRows = 4 // 8 bands × 4 rows
 
-  /** Size gate between the two physical near-dup paths, in documents with
-    * at least one shingle ([[nearDupLocal]]). At or below it the corpus's
-    * shingle-hash arrays come to the driver in one bounded collect and the
-    * whole chain (bands, candidates, exact verification, clusters) runs
-    * there on primitive arrays; above it the distributed chain runs.
-    * Driver memory is the measure: the testdata corpus averages ~55
-    * shingles per document, so 100k documents hold ~5.5M hashes (~45 MB
-    * as `long[]`) plus 8 band hashes each. The distributed chain pays
-    * about 28 jobs (persist, count and a stage boundary per entry) at
-    * any size, so the driver path wins while the data fits: sf1 (50,000
-    * documents) stays on the driver, sf10 (500,000) and any lake-scale
-    * corpus stay distributed. Rows, not bytes, as [[Assembly]]'s
-    * `BpeDriverMaxVocab`; both paths are spec-pinned identical.
+  /** Size gates between the two physical near-dup paths ([[nearDupLocal]]).
+    * At or below both, the corpus's shingle-hash arrays come to the driver
+    * in one collect and the whole chain (bands, candidates, exact
+    * verification, clusters) runs there on primitive arrays; above either,
+    * the distributed chain runs. The distributed chain pays about 28 jobs
+    * (persist, count and a stage boundary per entry) at any size, so the
+    * driver path wins while its data fits; driver memory is the measure,
+    * and it has two terms.
+    *
+    * Documents: the testdata corpus averages ~55 shingles per document, so
+    * 100k documents hold ~5.5M hashes (~45 MB as `long[]`) plus 8 band
+    * hashes each. The count is the documents' row count from their parquet
+    * footers, read before any collect, so a corpus above it pays no
+    * driver pass. sf1 (50,000 documents) stays on the driver, sf10
+    * (500,000) and any lake-scale corpus go distributed. Rows, not bytes,
+    * as [[Assembly]]'s `BpeDriverMaxVocab`.
+    *
+    * Bucket pairs: a band bucket of m rows yields m(m-1)/2 candidate pairs,
+    * so a few thousand exact copies (boilerplate pages) would build ~10^9
+    * on the driver. The sum of C(m, 2) over every band's buckets, counted
+    * from the sorted band hashes before any pair is built, is held to 1M
+    * (8 MB of packed pairs; the verified frames hold at most that many
+    * rows). Ordinary corpora sit far below it (sf1: 98 candidates); above
+    * it the distributed chain, which spreads the join and can spill, runs
+    * instead. Both paths are spec-pinned identical.
     */
   private[graft] val MinhashDriverMaxDocs = 100000L
+  private[graft] val MinhashDriverMaxPairs = 1000000L
 
   /** MinHash + LSH near-dup (rows-only; spec checks vs exact Jaccard):
     * k=32 min-hashes per doc (one pass over the shingle index, 32 partial
@@ -363,19 +376,18 @@ object Similarity {
 
   /** The verified MinHash near-dup pairs (id_a < id_b, jaccard ≥ 0.5),
     * unsorted — shared by q_dedup_minhash and the clustering pass. Above
-    * the gate the exact-verification join is materialized too
+    * the gates the exact-verification join is materialized too
     * (candidates alone being cached still re-ran the collect_set +
     * intersect pass per consumer).
     */
-  private[graft] def minhashPairs(s: SparkSession, d: String,
-      gate: Long = MinhashDriverMaxDocs): DataFrame =
-    nearDupEntry(s, d, "minhash_pairs", gate)(
+  private[graft] def minhashPairs(s: SparkSession, d: String): DataFrame =
+    nearDupEntry(s, d, "minhash_pairs")(
       nd => nd.pairsFrame(s, verifyPairs(candidatesOf(bandsOf(docShingles(s, d))),
         docShingles(s, d)).schema),
       // exact verification within buckets only ([[verifyPairs]]): the
       // candidate docs' shingle-hash SETS are per-row array_distinct over
       // the cached arrays
-      verifyPairs(minhashCandidates(s, d, gate), docShingleHashes(s, d, gate)))
+      verifyPairs(minhashCandidates(s, d), docShingleHashes(s, d)))
 
   /** Per-document shingle-hash ARRAYS — the zero-shuffle feed of the
     * MinHash pipeline: shingling, hashing, the 32 permutation minima and
@@ -520,33 +532,28 @@ object Similarity {
     verifyPairs(candidates, shOld.unionByName(shNew))
   }
 
-  /** The near-dup chain's first entry: per-document shingle-hash arrays
-    * (see [[shingleHashesOf]]). Each of the five entries (this one,
-    * [[minhashBands]], [[minhashCandidates]], [[minhashPairs]],
-    * [[dedupClusterLabels]]) is keyed by the gate, so a spec that forces
-    * the distributed path (gate 0) is never handed a driver-built frame.
+  /** Per-document shingle-hash arrays (see [[shingleHashesOf]]), persisted
+    * on both sides of the gates: the near-dup driver pass reads the
+    * documents itself, so this entry's readers are the distributed chain
+    * and the n-gram family ([[shingles]]).
     */
-  private[graft] def docShingleHashes(s: SparkSession, d: String,
-      gate: Long = MinhashDriverMaxDocs): DataFrame =
-    nearDupEntry(s, d, "doc_shingle_hashes", gate)(
-      nd => nd.shingleFrame(s, docShingles(s, d).schema), docShingles(s, d))
+  private[graft] def docShingleHashes(s: SparkSession, d: String): DataFrame =
+    SessionCache.persisted(s, d, "doc_shingle_hashes")(docShingles(s, d))
 
-  // above the gate bands are materialized: the bucket self-join reads
+  // above the gates bands are materialized: the bucket self-join reads
   // them from two aliased sides — without it the signature pass runs twice
-  private[graft] def minhashBands(s: SparkSession, d: String,
-      gate: Long = MinhashDriverMaxDocs): DataFrame =
-    nearDupEntry(s, d, "minhash_bands", gate)(
+  private[graft] def minhashBands(s: SparkSession, d: String): DataFrame =
+    nearDupEntry(s, d, "minhash_bands")(
       nd => nd.bandsFrame(s, bandsOf(docShingles(s, d)).schema),
-      bandsOf(docShingleHashes(s, d, gate)))
+      bandsOf(docShingleHashes(s, d)))
 
-  // above the gate candidates are materialized: consumed three times
+  // above the gates candidates are materialized: consumed three times
   // downstream (two id-side semi-joins + the final pair filter); it is
   // tiny (collision pairs only)
-  private[graft] def minhashCandidates(s: SparkSession, d: String,
-      gate: Long = MinhashDriverMaxDocs): DataFrame =
-    nearDupEntry(s, d, "minhash_candidates", gate)(
+  private[graft] def minhashCandidates(s: SparkSession, d: String): DataFrame =
+    nearDupEntry(s, d, "minhash_candidates")(
       nd => nd.candidatesFrame(s, candidatesOf(bandsOf(docShingles(s, d))).schema),
-      candidatesOf(minhashBands(s, d, gate)))
+      candidatesOf(minhashBands(s, d)))
 
   /** Band-bucket collisions of a bands frame as distinct (id_a < id_b). */
   private def candidatesOf(bands: DataFrame): DataFrame =
@@ -563,33 +570,49 @@ object Similarity {
   private def docShingles(s: SparkSession, d: String): DataFrame =
     shingleHashesOf(Tables.documents(s, d))
 
-  /** One entry of the near-dup chain: under the gate a local frame of the
-    * driver pass's rows ([[nearDupLocal]]), built when first called, with
-    * no job; above it `dist`, persisted and counted.
+  /** The distributed chain's five entries by cache name, unpersisted: the
+    * plans the accessors persist above the gates, for comparing the two
+    * paths on one corpus. The labels run [[components]], which is eager.
     */
-  private def nearDupEntry(s: SparkSession, d: String, name: String, gate: Long)(
+  private[graft] def nearDupDistributed(s: SparkSession, d: String): Seq[(String, DataFrame)] = {
+    val sh = docShingles(s, d)
+    val bands = bandsOf(sh)
+    val pairs = verifyPairs(candidatesOf(bands), sh)
+    Seq("doc_shingle_hashes" -> sh, "minhash_bands" -> bands,
+      "minhash_candidates" -> candidatesOf(bands), "minhash_pairs" -> pairs,
+      "dedup_cluster_labels" -> components(pairs))
+  }
+
+  /** One entry of the near-dup chain: under the gates a local frame of the
+    * driver pass's rows ([[nearDupLocal]]), built when first called, with
+    * no job; above them `dist`, persisted and counted.
+    */
+  private def nearDupEntry(s: SparkSession, d: String, name: String)(
       local: NearDupLocal => DataFrame, dist: => DataFrame): DataFrame =
-    nearDupLocal(s, d, gate) match {
-      case Some(nd) => SessionCache(s, d, (name, gate))(local(nd))
-      case None => SessionCache.persisted(s, d, (name, gate))(dist)
+    nearDupLocal(s, d) match {
+      case Some(nd) => SessionCache(s, d, name)(local(nd))
+      case None => SessionCache.persisted(s, d, name)(dist)
     }
 
-  /** The driver pass: the (doc_id, shingle hashes) rows of every document
-    * with at least one shingle if there are at most `gate` of them, else
-    * None. One bounded collect, `limit(gate + 1)`, both measures the
-    * corpus and brings its rows to the driver; the hash column is
-    * [[shingleHashCol]], the expression the distributed chain evaluates.
-    * Memoized per gate, as [[Assembly]]'s BPE word rows are.
+  /** The driver pass, or None above either gate. The documents' footer
+    * row count meets [[MinhashDriverMaxDocs]] first, with no job; under it
+    * one collect brings the (doc_id, shingle hashes) rows of every
+    * document with a shingle to the driver ([[shingleHashCol]], the
+    * expression the distributed chain evaluates), and their band buckets'
+    * pair count meets [[MinhashDriverMaxPairs]], before any pair is built.
+    * Memoized, as [[Assembly]]'s BPE word rows are.
     */
-  private def nearDupLocal(s: SparkSession, d: String, gate: Long): Option[NearDupLocal] =
-    SessionCache(s, d, ("near_dup_rows", gate)) {
-      import s.implicits._
-      val rows = Tables.documents(s, d)
-        .select(col("doc_id"), shingleHashCol.as("hs"))
-        .filter(size(col("hs")) > 0)
-        .limit(math.min(gate, Int.MaxValue - 1L).toInt + 1)
-        .as[(Option[Long], Array[Long])].collect()
-      if (rows.length <= gate) Some(new NearDupLocal(rows)) else None
+  private def nearDupLocal(s: SparkSession, d: String): Option[NearDupLocal] =
+    SessionCache(s, d, "near_dup_rows") {
+      if (Tables.rowsUpTo(s, d, "documents", MinhashDriverMaxDocs) > MinhashDriverMaxDocs) None
+      else {
+        import s.implicits._
+        val rows = Tables.documents(s, d)
+          .select(col("doc_id"), shingleHashCol.as("hs"))
+          .filter(size(col("hs")) > 0)
+          .as[(Option[Long], Array[Long])].collect()
+        Some(new NearDupLocal(rows)).filter(_.bucketPairs <= MinhashDriverMaxPairs)
+      }
     }
 
   /** The near-dup chain over the driver pass's rows, on primitive arrays.
@@ -603,16 +626,14 @@ object Similarity {
     private val hs: Array[Array[Long]] = rows.map(_._2)
     private val hasId: Array[Boolean] = rows.map(_._1.isDefined)
     private val ids: Array[Long] = rows.map(_._1.getOrElse(0L))
+    private val withId: Array[Int] = (0 until n).filter(hasId).toArray
 
     /** Distinct non-null doc_ids ascending: a pair is packed into one long
       * as rank(id_a) << 32 | rank(id_b), so sorting packed pairs sorts by
-      * (id_a, id_b). Ranks fit an int: there are at most `gate` rows.
+      * (id_a, id_b). Ranks fit an int: there are at most
+      * [[MinhashDriverMaxDocs]] rows.
       */
-    private lazy val byRank: Array[Long] = {
-      val known = Array.newBuilder[Long]
-      for (i <- 0 until n if hasId(i)) known += ids(i)
-      sortedDistinct(known.result())
-    }
+    private lazy val byRank: Array[Long] = sortedDistinct(withId.map(ids))
     private lazy val rank: Array[Int] =
       Array.tabulate(n)(i => if (hasId(i)) java.util.Arrays.binarySearch(byRank, ids(i)) else -1)
 
@@ -620,48 +641,64 @@ object Similarity {
     lazy val bands: Array[Array[Long]] = hs.map(h => graft.functions.MinhashBandKernel
       .bands(UnsafeArrayData.fromPrimitiveArray(h), MinhashK, BandRows).toLongArray())
 
+    /** Per band, the band hashes of the rows with a doc_id, sorted: each
+      * run of equal hashes is one bucket.
+      */
+    private lazy val sortedBands: Array[Array[Long]] =
+      Array.tabulate(MinhashK / BandRows) { b =>
+        val k = withId.map(i => bands(i)(b))
+        java.util.Arrays.sort(k)
+        k
+      }
+
+    /** Σ C(m, 2) over every band's buckets of m rows: the pairs
+      * [[candidates]] would build, counted without building one.
+      */
+    lazy val bucketPairs: Long = sortedBands.iterator.map { k =>
+      var (sum, lo) = (0L, 0)
+      while (lo < k.length) {
+        var hi = lo + 1
+        while (hi < k.length && k(hi) == k(lo)) hi += 1
+        sum += (hi - lo).toLong * (hi - lo - 1) / 2
+        lo = hi
+      }
+      sum
+    }.sum
+
     /** Packed (id_a, id_b) pairs that share a (band, bhash) bucket, sorted
       * and distinct. Per band, sort-based grouping: the hashes held by two
-      * or more rows, then (bucket, row) packed and sorted.
+      * or more rows, then (bucket, row) packed and sorted; each band's
+      * pairs are deduplicated before the bands merge.
       */
-    lazy val candidates: Array[Long] = {
+    lazy val candidates: Array[Long] = sortedDistinct(sortedBands.indices.toArray.flatMap { b =>
+      val k = sortedBands(b)
+      val shared = Array.newBuilder[Long]
+      var j = 1
+      while (j < k.length) {
+        if (k(j) == k(j - 1) && (j == 1 || k(j - 1) != k(j - 2))) shared += k(j)
+        j += 1
+      }
+      val hot = shared.result()
+      val members = Array.newBuilder[Long]
+      withId.foreach { i =>
+        val x = java.util.Arrays.binarySearch(hot, bands(i)(b))
+        if (x >= 0) members += x.toLong << 32 | i
+      }
+      val m = members.result()
+      java.util.Arrays.sort(m)
       val out = Array.newBuilder[Long]
-      for (b <- 0 until MinhashK / BandRows) {
-        val keys = Array.tabulate(n)(i => bands(i)(b))
-        val sorted = keys.clone()
-        java.util.Arrays.sort(sorted)
-        val shared = Array.newBuilder[Long]
-        var j = 1
-        while (j < n) {
-          if (sorted(j) == sorted(j - 1) && (j == 1 || sorted(j - 1) != sorted(j - 2)))
-            shared += sorted(j)
-          j += 1
+      var lo = 0
+      while (lo < m.length) {
+        var hi = lo + 1
+        while (hi < m.length && (m(hi) >>> 32) == (m(lo) >>> 32)) hi += 1
+        for (x <- lo until hi; y <- x + 1 until hi) {
+          val (ra, rb) = (rank(m(x).toInt), rank(m(y).toInt))
+          if (ra != rb) out += math.min(ra, rb).toLong << 32 | math.max(ra, rb)
         }
-        val hot = shared.result()
-        if (hot.nonEmpty) {
-          val members = Array.newBuilder[Long]
-          var i = 0
-          while (i < n) {
-            val k = java.util.Arrays.binarySearch(hot, keys(i))
-            if (k >= 0 && hasId(i)) members += k.toLong << 32 | i
-            i += 1
-          }
-          val m = members.result()
-          java.util.Arrays.sort(m)
-          var lo = 0
-          while (lo < m.length) {
-            var hi = lo + 1
-            while (hi < m.length && (m(hi) >>> 32) == (m(lo) >>> 32)) hi += 1
-            for (x <- lo until hi; y <- x + 1 until hi) {
-              val (ra, rb) = (rank(m(x).toInt), rank(m(y).toInt))
-              if (ra != rb) out += math.min(ra, rb).toLong << 32 | math.max(ra, rb)
-            }
-            lo = hi
-          }
-        }
+        lo = hi
       }
       sortedDistinct(out.result())
-    }
+    })
 
     /** Verified pairs (id_a, id_b, jaccard), sorted by (id_a, id_b):
       * [[verifyPairs]]' arithmetic over each candidate's row sets.
@@ -699,14 +736,6 @@ object Similarity {
       val (as, bs, _) = pairs
       unionFindLabels(as.indices.iterator.map(k => (as(k), bs(k))))
     }
-
-    // hash-partitioned by doc_id as the distributed entry is, so the
-    // postings' (doc_id, sh_h) distinct over it ([[shingles]]) plans no
-    // second exchange
-    def shingleFrame(s: SparkSession, schema: StructType): DataFrame =
-      GraftSqlBridge.localFrame(s, schema, (0 until n).map(i =>
-        InternalRow(if (hasId(i)) ids(i) else null, UnsafeArrayData.fromPrimitiveArray(hs(i)))))
-        .repartition(s.sparkContext.defaultParallelism, col("doc_id"))
 
     def bandsFrame(s: SparkSession, schema: StructType): DataFrame =
       GraftSqlBridge.localFrame(s, schema, for (i <- 0 until n; b <- bands(i).indices)
@@ -2548,7 +2577,7 @@ object Similarity {
     * smallest id of its component: union-find with path compression, each
     * root its component's minimum. The one union-find: [[components]]'
     * small branch runs it in one task, the driver near-dup path
-    * ([[dedupClusterLabels]] under the gate) on the driver.
+    * ([[dedupClusterLabels]] under the gates) on the driver.
     */
   private[graft] def unionFindLabels(edges: Iterator[(Long, Long)]): Seq[(Long, Long)] = {
     val parent = scala.collection.mutable.LongMap.empty[Long]
@@ -2577,13 +2606,12 @@ object Similarity {
   // NOTE components() is eager by nature (an iterative driver loop), so
   // the cluster consumers depart from the lazy plan-builder contract;
   // memoizing the label table means repeat calls (specs, Explain,
-  // re-runs, both consumers) pay it once. Under the gate the labels are
+  // re-runs, both consumers) pay it once. Under the gates the labels are
   // the driver pass's union-find over its verified pairs: one small local
   // frame, and the only near-dup entry the release path reads.
-  private[graft] def dedupClusterLabels(s: SparkSession, d: String,
-      gate: Long = MinhashDriverMaxDocs): DataFrame =
-    nearDupEntry(s, d, "dedup_cluster_labels", gate)(
-      _.labelsFrame(s), components(minhashPairs(s, d, gate)))
+  private[graft] def dedupClusterLabels(s: SparkSession, d: String): DataFrame =
+    nearDupEntry(s, d, "dedup_cluster_labels")(
+      _.labelsFrame(s), components(minhashPairs(s, d)))
 
   /** Near-dup cross-source exposure — the near-dup-tier complement of
     * [[graft.operators.TextOps.qSourceOverlap]]'s exact matrix (exact

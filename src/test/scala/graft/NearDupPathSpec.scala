@@ -1,28 +1,32 @@
 package graft
 
 import graft.operators.Similarity
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, Prop, Test}
 import org.scalacheck.util.Pretty
 
 /** The MinHash near-dup chain's two physical paths give the same answer.
-  * Under `Similarity.MinhashDriverMaxDocs` the five entries are built from
-  * one driver pass; gate 0 forces the distributed chain. Every spec corpus
-  * (sf0.001/sf0.01) is under the gate, so the other specs pin the driver
-  * path; this one pins the distributed path to it.
+  * Under `Similarity.MinhashDriverMaxDocs` and `MinhashDriverMaxPairs` the
+  * accessors build four of the five entries from one driver pass; every
+  * spec corpus (sf0.001/sf0.01) is under both gates, so the other specs pin
+  * the driver path. This one pins it to `Similarity.nearDupDistributed`,
+  * the distributed chain's unpersisted plans, and checks both gates.
   */
 class NearDupPathSpec extends SparkSpec {
 
-  private type Entry = (org.apache.spark.sql.SparkSession, String, Long) => DataFrame
+  /** The five accessors by cache name. */
+  private val entries: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
+    "doc_shingle_hashes" -> Similarity.docShingleHashes _,
+    "minhash_bands" -> Similarity.minhashBands _,
+    "minhash_candidates" -> Similarity.minhashCandidates _,
+    "minhash_pairs" -> Similarity.minhashPairs _,
+    "dedup_cluster_labels" -> Similarity.dedupClusterLabels _)
 
-  /** The five entries by cache name, each taking the gate. */
-  private val entries: Seq[(String, Entry)] = Seq(
-    "doc_shingle_hashes" -> (Similarity.docShingleHashes(_, _, _)),
-    "minhash_bands" -> (Similarity.minhashBands(_, _, _)),
-    "minhash_candidates" -> (Similarity.minhashCandidates(_, _, _)),
-    "minhash_pairs" -> (Similarity.minhashPairs(_, _, _)),
-    "dedup_cluster_labels" -> (Similarity.dedupClusterLabels(_, _, _)))
+  /** The distributed chain's entry `name` over `dir`. */
+  private def dist(dir: String, name: String): DataFrame =
+    Similarity.nearDupDistributed(spark, dir).toMap.apply(name)
 
   /** Rows as comparable cell lists (arrays as Seqs), in a fixed order. */
   private def cells(df: DataFrame): Seq[String] =
@@ -34,16 +38,25 @@ class NearDupPathSpec extends SparkSpec {
   private def pairSet(df: DataFrame): Set[(Long, Long)] = df.collect()
     .map(r => (r.getAs[Long]("id_a"), r.getAs[Long]("id_b"))).toSet
 
-  /** Every entry: equal schemas and equal rows on both paths. */
+  /** Built on the driver: a local frame, not a plan over the documents. */
+  private def local(df: DataFrame): Boolean = df.queryExecution.analyzed.collectFirst {
+    case r: LocalRelation => r
+  }.nonEmpty
+
+  /** The accessors took the driver path, and every entry has the
+    * distributed chain's schema and rows.
+    */
   private def samePaths(dir: String): Option[String] =
-    entries.iterator.map { case (name, entry) =>
-      val (driver, dist) = (entry(spark, dir, Similarity.MinhashDriverMaxDocs),
-        entry(spark, dir, 0L))
-      if (driver.schema != dist.schema)
-        Some(s"$name schema: ${driver.schema.simpleString} vs ${dist.schema.simpleString}")
-      else if (cells(driver) != cells(dist))
-        Some(s"$name rows: ${cells(driver).take(5)} vs ${cells(dist).take(5)}")
-      else None
+    if (!local(Similarity.dedupClusterLabels(spark, dir))) Some("driver path not taken")
+    else Similarity.nearDupDistributed(spark, dir).iterator.zip(entries.iterator).map {
+      case ((name, dist), (entryName, entry)) =>
+        val driver = entry(spark, dir)
+        if (name != entryName) Some(s"entry order: $name vs $entryName")
+        else if (driver.schema != dist.schema)
+          Some(s"$name schema: ${driver.schema.simpleString} vs ${dist.schema.simpleString}")
+        else if (cells(driver) != cells(dist))
+          Some(s"$name rows: ${cells(driver).take(5)} vs ${cells(dist).take(5)}")
+        else None
     }.collectFirst { case Some(e) => e }
 
   test("near-dup entries: the driver pass and the distributed chain agree on every entry") {
@@ -52,15 +65,15 @@ class NearDupPathSpec extends SparkSpec {
   }
 
   test("near-dup queries: q_dedup_minhash, survivors and weights are equal on both paths") {
-    val gate0 = Similarity.dedupClusterLabels(spark, sfDir, 0L)
+    val distLabels = dist(sfDir, "dedup_cluster_labels")
     val minhash = Similarity.qDedupMinhash.run(spark, sfDir)
     // ordered rows, jaccard included
     assert(minhash.collect().toSeq ==
-      Similarity.minhashPairs(spark, sfDir, 0L).orderBy("id_a", "id_b").collect().toSeq)
+      dist(sfDir, "minhash_pairs").orderBy("id_a", "id_b").collect().toSeq)
     assert(Similarity.qDedupSurvivors.run(spark, sfDir).collect().toSeq ==
-      Similarity.survivorsOverLabels(spark, sfDir, gate0).collect().toSeq)
+      Similarity.survivorsOverLabels(spark, sfDir, distLabels).collect().toSeq)
     assert(Similarity.qDedupWeights.run(spark, sfDir).collect().toSeq ==
-      Similarity.weightsOverLabels(spark, sfDir, gate0, Similarity.MemberBroadcastMaxRows)
+      Similarity.weightsOverLabels(spark, sfDir, distLabels, Similarity.MemberBroadcastMaxRows)
         .collect().toSeq)
   }
 
@@ -68,7 +81,7 @@ class NearDupPathSpec extends SparkSpec {
     // the driver path is pinned by SimilaritySpec's recall test
     val exact = Similarity.exactJaccardUnpruned(spark, sfDir).collect()
       .map(r => (r.getAs[Long]("id_a"), r.getAs[Long]("id_b"), r.getAs[Double]("jaccard")))
-    val mh = Similarity.minhashPairs(spark, sfDir, 0L).collect()
+    val mh = dist(sfDir, "minhash_pairs").collect()
       .map(r => (r.getAs[Long]("id_a"), r.getAs[Long]("id_b"), r.getAs[Double]("jaccard")))
     val exactSet = exact.map(t => (t._1, t._2)).toSet
     val found = mh.map(m => (m._1, m._2)).toSet
@@ -88,27 +101,47 @@ class NearDupPathSpec extends SparkSpec {
     val oldOnly = pairSet(Similarity.minhashIncrement(oldDocs.filter(lit(false)), oldDocs))
     val inc = Similarity.minhashIncrementScoped(oldDocs, newDocs)(pairSet)
     assert(inc.nonEmpty)
-    for (gate <- Seq(Similarity.MinhashDriverMaxDocs, 0L)) {
-      val full = pairSet(Similarity.minhashPairs(spark, sfDir, gate))
-      assert((oldOnly ++ inc) == full, s"gate $gate: old ${oldOnly.size} + inc ${inc.size} != ${full.size}")
+    for ((path, pairs) <- Seq("driver" -> Similarity.minhashPairs(spark, sfDir),
+        "distributed" -> dist(sfDir, "minhash_pairs"))) {
+      val full = pairSet(pairs)
+      assert((oldOnly ++ inc) == full, s"$path: old ${oldOnly.size} + inc ${inc.size} != ${full.size}")
     }
   }
 
-  test("the gate counts documents with a shingle: at the count the driver path runs, below it not") {
-    val dir = tempDir("graft_neardup_gate").toString
-    writeDocs(dir, Seq(Some(1L) -> "a b c d", Some(2L) -> "a b c d",
-      Some(3L) -> "a b", Some(4L) -> null))
-    def local(df: DataFrame) = df.queryExecution.analyzed.collectFirst {
-      case r: org.apache.spark.sql.catalyst.plans.logical.LocalRelation => r
-    }.nonEmpty
-    // two documents have a 3-gram: gate 2 is the driver pass, gate 1 the
-    // distributed chain, and both give the same entries
-    for (gate <- Seq(1L, 2L)) {
-      val labels = Similarity.dedupClusterLabels(spark, dir, gate)
-      assert(local(labels) == (gate == 2L), s"gate $gate")
+  test("the document gate counts document rows from the footers: at the gate the driver path runs, above it not") {
+    // two near-dup documents among one-word ones: only two rows have a
+    // shingle, yet every row counts
+    def docs(rows: Long): Seq[(Option[Long], String)] =
+      Seq(Some(1L) -> "a b c d", Some(2L) -> "a b c d", Some(3L) -> null) ++
+        (4L to rows).map(i => Some(i) -> "x")
+    for (rows <- Seq(Similarity.MinhashDriverMaxDocs, Similarity.MinhashDriverMaxDocs + 1)) {
+      val dir = tempDir("graft_neardup_gate").toString
+      writeDocs(dir, docs(rows))
+      assert(Tables.rowsUpTo(spark, dir, "documents", rows) == rows)
+      val labels = Similarity.dedupClusterLabels(spark, dir)
+      assert(local(labels) == (rows <= Similarity.MinhashDriverMaxDocs), s"$rows rows")
       assert(cells(labels) == Seq("1|1", "2|1"))
-      assert(cells(Similarity.minhashPairs(spark, dir, gate)) == Seq("1|2|1.0"))
+      assert(cells(Similarity.minhashPairs(spark, dir)) == Seq("1|2|1.0"))
     }
+    SessionCache.clear()
+  }
+
+  test("the pair gate: exact copies whose band buckets exceed it take the distributed chain") {
+    // m exact copies fill one bucket in each of the 8 bands: 8·C(m, 2)
+    // bucket pairs. The largest m at the gate runs on the driver, one more
+    // copy goes distributed; both give one cluster of every copy.
+    val cap = Similarity.MinhashDriverMaxPairs
+    val atGate = Iterator.from(2).takeWhile(m => 8L * m * (m - 1) / 2 <= cap).max
+    for (m <- Seq(atGate, atGate + 1)) {
+      val dir = tempDir("graft_neardup_copies").toString
+      writeDocs(dir, (1 to m).map(i => Some(i.toLong) -> "the same boilerplate page footer") :+
+        (Some(m + 1L) -> "one other page of text"))
+      val labels = Similarity.dedupClusterLabels(spark, dir)
+      assert(local(labels) == (m == atGate), s"$m copies")
+      assert(cells(labels) == (1 to m).map(i => s"$i|1").sorted, s"$m copies")
+      assert(Similarity.minhashPairs(spark, dir).count() == m.toLong * (m - 1) / 2)
+    }
+    SessionCache.clear()
   }
 
   // ------------------------------------------------------------ property
