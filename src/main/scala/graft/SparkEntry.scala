@@ -52,7 +52,7 @@ object SparkEntry {
       "build_dup_span_counts" -> TextOps.dupSpanCounts _,
       "build_token_counts" -> TextOps.tokenCounts _,
       "build_bpe_merges" -> ((s, d) =>
-        Assembly.bpeMerges(s, d, Assembly.BpeMerges, Assembly.BpeDriverMaxVocab)))
+        Assembly.bpeMerges(s, d, Assembly.BpeMerges)))
   }
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */

@@ -7,7 +7,7 @@ import org.apache.spark.sql.catalyst.analysis.TypeCheckResult.{DataTypeMismatch,
 import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, ExpressionInfo, Literal, RuntimeReplaceable}
 import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, BinaryType, BooleanType, DataType, IntegerType, LongType, ObjectType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{ArrayType, BooleanType, DataType, IntegerType, LongType, ObjectType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native Catalyst kernels for graft's hot paths — per SURVEY §4.7: no
@@ -566,45 +566,6 @@ object CjkKernel {
       i += 1
     }
     false
-  }
-}
-
-/** Bloom-filter membership test against a FOLDABLE serialized
-  * `org.apache.spark.util.sketch.BloomFilter` (BinaryType literal): the
-  * map-side prefilter of the scale-adaptive joins. A bloom over K items at
-  * 1% false positives is ~1.2 bytes/item — ~50× smaller than broadcasting
-  * the item strings themselves — so an existence prefilter stays
-  * broadcastable long after the exact set outgrows an executor. False
-  * positives are expected (callers follow with an exact join on the
-  * survivors); false negatives are impossible, which is what makes the
-  * prefilter semantics-preserving.
-  *
-  * The sketch deserializes ONCE at plan time and rides the codegen
-  * references array (same pattern as [[VecKernel.matVec]]'s model). Bytes
-  * are matched with `mightContainBinary(utf8)`, which is bit-identical to
-  * the builder's `putString`/UTF-8 path; long items probe with
-  * mightContainLong — the exact dual of the builder's putLong for a long
-  * column (r14: the decontamination gate sketches gram HASHES instead of
-  * gram strings).
-  */
-object BloomKernel {
-  def eval(f: org.apache.spark.util.sketch.BloomFilter, item: UTF8String): Boolean =
-    f.mightContainBinary(item.getBytes)
-  def eval(f: org.apache.spark.util.sketch.BloomFilter, item: Long): Boolean =
-    f.mightContainLong(item)
-
-  /** The foldable serialized sketch, deserialized once at plan time as a
-    * literal of the public `BloomFilter` type (generated code cannot name
-    * the package-private implementation class); a NULL bloom stays NULL.
-    * The filter compares by content, as the holder rule requires.
-    */
-  def foldFilter(bloom: Expression): Literal = {
-    val raw = bloom.eval()
-    Literal(
-      if (raw == null) null
-      else org.apache.spark.util.sketch.BloomFilter.readFrom(
-        new java.io.ByteArrayInputStream(raw.asInstanceOf[Array[Byte]])),
-      ObjectType(classOf[org.apache.spark.util.sketch.BloomFilter]))
   }
 }
 
@@ -1732,8 +1693,6 @@ object CoverMaskKernel {
   * @param returnsNull the core may return null (boxed, for a primitive
   *                    result) on non-null arguments; otherwise a row is
   *                    null exactly when an argument is
-  * @param accepts     further types an argument accepts as is (no
-  *                    implicit cast)
   * @param foldable    arguments that must be foldable, checked at analysis
   * @param fold        the core's arguments from the checked children:
   *                    folds a foldable model once into its holder literal
@@ -1746,7 +1705,6 @@ final case class KernelDef(
     core: Class[_],
     method: String,
     returnsNull: Boolean = false,
-    accepts: Map[String, Seq[DataType]] = Map.empty,
     foldable: Set[String] = Set.empty,
     fold: Seq[Expression] => Seq[Expression] = identity)
 
@@ -1763,8 +1721,7 @@ case class GraftKernel(name: String, children: Seq[Expression])
   private lazy val kernel = GraftFunctions.byName(name)
 
   override def prettyName: String = name
-  override def inputTypes =
-    kernel.args.map { case (a, t) => GraftSqlBridge.anyOf(t +: kernel.accepts.getOrElse(a, Nil)) }
+  override def inputTypes = kernel.args.map(_._2)
   override def dataType: DataType = kernel.dataType
   override def nullable: Boolean = kernel.returnsNull || children.exists(_.nullable)
 
@@ -1788,9 +1745,10 @@ case class GraftKernel(name: String, children: Seq[Expression])
 }
 
 /** graft's native function surface: the kernel table, the by-name
-  * builder, and runtime registration so operators can use the kernels via
-  * `call_function` on any already-built session (Verify, Bench, specs).
-  * Registration is idempotent — re-registering replaces the same builder.
+  * builder operators call ([[call]], which needs no registry), and runtime
+  * registration so SQL and `call_function` resolve the kernels on any
+  * already-built session. Registration is idempotent — re-registering
+  * replaces the same builder.
   * [[graft.plans.GraftExtensions]] consumes the same [[GraftFunctions.all]]
   * list for the session-build path, so the two cannot drift.
   */
@@ -1813,11 +1771,6 @@ object GraftFunctions {
     KernelDef("graft_matvec_q", Seq("model" -> LongMatrix, "vec" -> LongVec), Longs,
       VecKernel.getClass, "matVec", returnsNull = true, foldable = Set("model"),
       fold = c => Seq(Folded.literal(VecKernel.foldMatrix(c(0), "graft_matvec_q")), c(1))),
-    KernelDef("graft_bloom_contains",
-      Seq("bloom" -> BinaryType, "item" -> StringType), BooleanType,
-      BloomKernel.getClass, "eval", accepts = Map("item" -> Seq(LongType)),
-      foldable = Set("bloom"),
-      fold = c => Seq(BloomKernel.foldFilter(c(0)), c(1))),
     KernelDef("graft_repeated_run", Seq("text" -> StringType), BooleanType,
       RepeatedRunKernel.getClass, "eval"),
     KernelDef("graft_cent_topk",
@@ -1896,7 +1849,7 @@ object GraftFunctions {
     GraftKernel(name, args.toIndexedSeq)
   }
 
-  /** [[kernel]] over columns, for operators that need no registry handle. */
+  /** [[kernel]] over columns: how operators build a kernel, on any session. */
   def call(name: String, args: Column*): Column =
     GraftSqlBridge.column(kernel(name, args.map(GraftSqlBridge.expression): _*))
 

@@ -228,7 +228,8 @@ object Assembly {
     * usually O(10⁶) words); above it both stay distributed (a 100 TB web
     * crawl's token set — URLs, hashes, code identifiers — is unbounded
     * and can outgrow any driver). One bounded collect, `limit(gate + 1)`,
-    * decides; both paths are spec-pinned identical.
+    * decides; both paths are spec-pinned identical ([[bpeDistributed]]
+    * runs the far side on any corpus).
     */
   private[graft] val BpeDriverMaxVocab = 200000L
 
@@ -272,8 +273,7 @@ object Assembly {
     * loop ends with however many merges exist — the merge table is the
     * answer, not an error ([[Curation]] empty-funnel principle).
     */
-  def bpeTrain(s: SparkSession, d: String, nMerges: Int = BpeMerges,
-      maxDriverVocab: Long = BpeDriverMaxVocab): DataFrame = {
+  def bpeTrain(s: SparkSession, d: String, nMerges: Int = BpeMerges): DataFrame = {
     import org.apache.spark.sql.types._
     val outSchema = StructType(Seq(
       StructField("rank", IntegerType, nullable = false),
@@ -281,7 +281,7 @@ object Assembly {
       StructField("right", StringType, nullable = false),
       StructField("merged", StringType, nullable = false),
       StructField("pair_count", LongType, nullable = false)))
-    s.createDataFrame(bpeMerges(s, d, nMerges, maxDriverVocab)
+    s.createDataFrame(bpeMerges(s, d, nMerges)
       .map { case (rk, l, r, m, n) => Row(rk, l, r, m, n) }.asJava, outSchema)
   }
 
@@ -298,16 +298,15 @@ object Assembly {
       .select(col("source"), explode(words(col("text"))).as("word"))
       .groupBy("source", "word").agg(count(lit(1)).as("n"))
 
-  /** [[wordCounts]]' rows if at most `gate`, else None: one bounded
-    * collect, `limit(gate + 1)`, both measures the table and, under the
-    * gate, brings it to the driver for training and encode.
+  /** [[wordCounts]]' rows if at most [[BpeDriverMaxVocab]], else None:
+    * one bounded collect, `limit(gate + 1)`, both measures the table and,
+    * under the gate, brings it to the driver for training and encode.
     */
-  private def bpeWordRows(s: SparkSession, d: String, gate: Long)
-      : Option[Array[(String, String, Long)]] =
-    SessionCache(s, d, ("bpe_word_rows", gate)) {
-      val rows = wordCounts(s, d).limit(math.min(gate, Int.MaxValue - 1L).toInt + 1)
+  private def bpeWordRows(s: SparkSession, d: String): Option[Array[(String, String, Long)]] =
+    SessionCache(s, d, "bpe_word_rows") {
+      val rows = wordCounts(s, d).limit(BpeDriverMaxVocab.toInt + 1)
         .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2)))
-      if (rows.length <= gate) Some(rows) else None
+      if (rows.length <= BpeDriverMaxVocab) Some(rows) else None
     }
 
   /** [[wordCounts]] localCheckpointed for the paths above the gate, which
@@ -316,25 +315,37 @@ object Assembly {
   private def bpeWordTable(s: SparkSession, d: String): DataFrame =
     SessionCache(s, d, "bpe_word_table")(wordCounts(s, d).localCheckpoint())
 
-  /** Trained merge table per (session, dir, rounds, gate), memoized in
+  /** Trained merge table per (session, dir, rounds), memoized in
     * [[graft.SessionCache]]: the merge table IS the tokenizer model, and
     * without the memo every consumer ([[qBpeMerges]], [[qBpeEncode]],
-    * bench repeats) re-runs the merge loop. The GATE is part of the key
-    * on purpose: the dual-path spec forces the distributed loop with
-    * gate 0 and must not be handed the driver loop's cached result.
+    * bench repeats) re-runs the merge loop.
     */
-  private[graft] def bpeMerges(s: SparkSession, d: String, nMerges: Int,
-      maxDriverVocab: Long): Seq[(Int, String, String, String, Long)] =
-    SessionCache(s, d, ("bpe_merges", nMerges, maxDriverVocab)) {
-      bpeWordRows(s, d, maxDriverVocab) match {
+  private[graft] def bpeMerges(s: SparkSession, d: String, nMerges: Int)
+      : Seq[(Int, String, String, String, Long)] =
+    SessionCache(s, d, ("bpe_merges", nMerges)) {
+      bpeWordRows(s, d) match {
         case Some(rows) =>
           val freqs = rows.groupMapReduce(_._2)(_._3)(_ + _)
           driverLoop(freqs.toArray.map { case (w, f) => (codePointSyms(w), f) }, nMerges)
-        case None =>
-          distributedLoop(bpeWordTable(s, d).groupBy("word")
-            .agg(sum(col("n")).as("freq")).select(col("freq"), wordSyms), nMerges)
+        case None => distributedMerges(s, d, nMerges)
       }
     }
+
+  /** The distributed merge loop over [[bpeWordTable]]. */
+  private def distributedMerges(s: SparkSession, d: String, nMerges: Int)
+      : Seq[(Int, String, String, String, Long)] =
+    distributedLoop(bpeWordTable(s, d).groupBy("word")
+      .agg(sum(col("n")).as("freq")).select(col("freq"), wordSyms), nMerges)
+
+  /** The paths above [[BpeDriverMaxVocab]] on any corpus, unmemoized: the
+    * distributed loop's merge table and the encode rows of the distributed
+    * cascade under it, for pinning both against the driver path.
+    */
+  private[graft] def bpeDistributed(s: SparkSession, d: String)
+      : (Seq[(Int, String, String, String, Long)], DataFrame) = {
+    val merges = distributedMerges(s, d, BpeMerges)
+    (merges, encodeFrame(s, distributedEncode(s, d, merges.map(m => (m._2, m._3)))))
+  }
 
   /** The in-driver merge loop — the [[bpeTrain]] small-vocab fast path.
     * Same argmax order and greedy replace as the distributed form.
@@ -491,26 +502,15 @@ object Assembly {
     * [[BpeDriverMaxVocab]] (model-sized work), above it the training
     * loop's own distributed [[mergeFold]] cascade in rank order, joined
     * back to the table and rolled up per source. Either way the result
-    * is one row per source, memoized per (session, dir, gate).
+    * is one row per source, memoized per (session, dir).
     */
   val qBpeEncode: Q = Q.rowsOnly("q_bpe_encode") { (s, d) => bpeEncode(s, d) }
 
-  /** [[qBpeEncode]]'s implementation; `maxDriverVocab` exposed so the
-    * spec can force the distributed segmentation path (the bpeTrain
-    * dual-path contract).
-    */
-  def bpeEncode(s: SparkSession, d: String,
-      maxDriverVocab: Long = BpeDriverMaxVocab): DataFrame = {
-    import org.apache.spark.sql.types._
-    val schema = StructType(Seq(
-      StructField("source", StringType),
-      StructField("n_words", LongType, nullable = false),
-      StructField("n_bpe_tokens", LongType)))
-    // (source, n_words, n_bpe_tokens), a row per source
-    val counts = SessionCache(s, d, ("bpe_encode_counts", maxDriverVocab)) {
-      val merges = bpeMerges(s, d, BpeMerges, BpeDriverMaxVocab)
-        .sortBy(_._1).map(m => (m._2, m._3))
-      bpeWordRows(s, d, maxDriverVocab) match {
+  /** [[qBpeEncode]]'s implementation. */
+  def bpeEncode(s: SparkSession, d: String): DataFrame =
+    encodeFrame(s, SessionCache(s, d, "bpe_encode_counts") {
+      val merges = bpeMerges(s, d, BpeMerges).sortBy(_._1).map(m => (m._2, m._3))
+      bpeWordRows(s, d) match {
         case Some(rows) =>
           // model-sized: segment each distinct word on the driver
           val nBpe = rows.map(_._2).distinct.map { w =>
@@ -521,19 +521,33 @@ object Assembly {
           rows.groupBy(_._1).toSeq.map { case (src, rs) =>
             Row(src, rs.map(_._3).sum, rs.map(r => r._3 * nBpe(r._2)).sum)
           }
-        case None =>
-          // oversized: the training loop's own cascade, then the rollup
-          // joins the word table
-          val table = bpeWordTable(s, d)
-          val seed = table.select("word").distinct().select(col("word"), wordSyms)
-          val segs = merges.foldLeft(seed) { case (v, (l, r)) => resegment(v, seed, l, r) }
-          try table.join(segs.select(col("word"), size(col("syms")).as("n_bpe")), "word")
-            .groupBy("source")
-            .agg(sum(col("n")), sum(col("n") * col("n_bpe")))
-            .collect().toSeq
-          finally if (segs ne seed) SessionCache.release(segs)
+        case None => distributedEncode(s, d, merges)
       }
-    }
+    })
+
+  /** The oversized encode: the training loop's own cascade over the
+    * distinct words in rank order, then the per-source rollup joins the
+    * word table. A (source, n_words, n_bpe_tokens) row per source.
+    */
+  private def distributedEncode(s: SparkSession, d: String, merges: Seq[(String, String)])
+      : Seq[Row] = {
+    val table = bpeWordTable(s, d)
+    val seed = table.select("word").distinct().select(col("word"), wordSyms)
+    val segs = merges.foldLeft(seed) { case (v, (l, r)) => resegment(v, seed, l, r) }
+    try table.join(segs.select(col("word"), size(col("syms")).as("n_bpe")), "word")
+      .groupBy("source")
+      .agg(sum(col("n")), sum(col("n") * col("n_bpe")))
+      .collect().toSeq
+    finally if (segs ne seed) SessionCache.release(segs)
+  }
+
+  /** The encode frame over per-source (source, n_words, n_bpe_tokens) rows. */
+  private def encodeFrame(s: SparkSession, counts: Seq[Row]): DataFrame = {
+    import org.apache.spark.sql.types._
+    val schema = StructType(Seq(
+      StructField("source", StringType),
+      StructField("n_words", LongType, nullable = false),
+      StructField("n_bpe_tokens", LongType)))
     s.createDataFrame(counts.asJava, schema)
       .select(col("source"), col("n_words"), col("n_bpe_tokens"),
         graft.functions.Det.exactDiv(col("n_bpe_tokens"), col("n_words"), 4)

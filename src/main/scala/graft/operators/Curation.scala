@@ -67,9 +67,7 @@ object Curation {
     * [[qCurationFunnel]] accounting and the [[qCleanCorpus]] artifact,
     * so the counts and the corpus cannot disagree.
     */
-  private[graft] def stagedFlags(s: org.apache.spark.sql.SparkSession, d: String,
-      broadcastMaxRows: Long = Similarity.MemberBroadcastMaxRows)
-      : DataFrame = {
+  private[graft] def stagedFlags(s: org.apache.spark.sql.SparkSession, d: String): DataFrame = {
     // one scan: every per-row gate as a projection chain
     val perDoc = TextOps.blocklistFlags(TextOps.qualityScored(Tables.documents(s, d)))
       .select(col("doc_id"),
@@ -91,8 +89,8 @@ object Curation {
     // memoized+materialized), unhinted above the threshold so AQE
     // size-decides. See Similarity.MemberBroadcastMaxRows; both physical
     // forms are spec-pinned identical.
-    val gated = Similarity.gatedMemberBroadcast(s, d, broadcastMaxRows)
-    val gatedNonKeepers = gated(Similarity.dedupClusterLabels(s, d)
+    val labels = Similarity.dedupClusterLabels(s, d)
+    val gatedNonKeepers = Similarity.gatedMemberBroadcast(labels)(labels
       .filter(col("id") =!= col("label"))
       .select(col("id").as("doc_id"), lit(true).as("near_dup")))
     perDoc

@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.{Q, Tables}
 import graft.functions.Det._
+import graft.functions.GraftFunctions
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, StringType}
@@ -532,10 +533,9 @@ object Profiling {
        |FROM documents WHERE text IS NOT NULL
        |GROUP BY 1 ORDER BY has_repeated_run""".stripMargin
   ) { (s, d) =>
-    graft.functions.GraftFunctions.register(s)
     Tables.documents(s, d)
       .filter(col("text").isNotNull)
-      .select(call_function("graft_repeated_run", col("text"))
+      .select(GraftFunctions.call("graft_repeated_run", col("text"))
         .as("has_repeated_run"))
       .groupBy("has_repeated_run")
       .agg(count(lit(1)).as("n_docs"))

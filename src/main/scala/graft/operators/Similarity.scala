@@ -741,18 +741,23 @@ object Similarity {
       GraftSqlBridge.localFrame(s, schema, for (i <- 0 until n; b <- bands(i).indices)
         yield InternalRow(if (hasId(i)) ids(i) else null, b, bands(i)(b)))
 
+    // candidates, pairs and labels are a few hundred rows: planned as one
+    // partition (`Tables.table`'s reasoning), the aggregates, sorts and
+    // joins over them plan no exchange. The bands, 8 rows per document,
+    // keep the local scan's spread.
     def candidatesFrame(s: SparkSession, schema: StructType): DataFrame =
       GraftSqlBridge.localFrame(s, schema, candidates.toSeq.map(p =>
-        InternalRow(byRank((p >>> 32).toInt), byRank(p.toInt))))
+        InternalRow(byRank((p >>> 32).toInt), byRank(p.toInt)))).coalesce(1)
 
     def pairsFrame(s: SparkSession, schema: StructType): DataFrame = {
       val (as, bs, js) = pairs
       GraftSqlBridge.localFrame(s, schema, as.indices.map(k => InternalRow(as(k), bs(k), js(k))))
+        .coalesce(1)
     }
 
     def labelsFrame(s: SparkSession): DataFrame = {
       import s.implicits._
-      labels.toDF("id", "label")
+      labels.toDF("id", "label").coalesce(1)
     }
   }
 
@@ -809,7 +814,6 @@ object Similarity {
     val reserved = Seq("__hs", "fp")
     require(!docs.columns.exists(reserved.contains),
       s"withSimhashFp reserves columns $reserved")
-    GraftFunctions.register(docs.sparkSession)
     // tokens over Text.norm — the SAME canonical normalization the exact
     // content key uses, so a widened whitespace class moves the exact and
     // near-dup tiers together (the funnel's stage-1 ⊆ stage-2 premise)
@@ -819,7 +823,7 @@ object Similarity {
     docs
       .withColumn("__hs", hs)
       .filter(size(col("__hs")) >= 1) // docs with zero tokens have no signature
-      .withColumn("fp", call_function("graft_simhash64", col("__hs")))
+      .withColumn("fp", GraftFunctions.call("graft_simhash64", col("__hs")))
       .drop("__hs")
   }
 
@@ -953,7 +957,6 @@ object Similarity {
     * and the no-concentration crafted corpora).
     */
   val qDedupSimhash: Q = Q.rowsOnly("q_dedup_simhash") { (s, d) =>
-    GraftFunctions.register(s)
     val fp = simhashFingerprints(s, d)
     // size gate for the half-probe join's build side (cheap count off the
     // materialized fingerprint cache; D ≤ n so gating on n is
@@ -1034,7 +1037,6 @@ object Similarity {
 
   private[graft] def quantized(s: SparkSession, d: String): DataFrame =
     SessionCache.persisted(s, d, "quantized") {
-      GraftFunctions.register(s)
       Tables.embeddings(s, d)
         // the embeddings lake is ONE parquet file: a 200k-vector corpus
         // scans as ~3 row-group splits, and every map-only consumer of
@@ -1048,7 +1050,7 @@ object Similarity {
         .select(
           col("vec_id"), col("label"),
           expr(QuantizeExpr).as("qv"))
-        .withColumn("n2", call_function("graft_dot_q", col("qv"), col("qv")))
+        .withColumn("n2", GraftFunctions.call("graft_dot_q", col("qv"), col("qv")))
     }
 
   private val quantizedSql =
@@ -1091,7 +1093,7 @@ object Similarity {
       col("qv").as("qb"), col("n2").as("n2b"))
     a.join(b, Seq("label")).filter(col("id_a") < col("id_b"))
       .select(col("id_a"), col("id_b"),
-        cosine(call_function("graft_dot_q", col("qa"), col("qb")),
+        cosine(GraftFunctions.call("graft_dot_q", col("qa"), col("qb")),
           col("n2a"), col("n2b")).as("cosine"))
       .filter(col("cosine") >= 0.4)
       .orderBy("id_a", "id_b")
@@ -1130,7 +1132,7 @@ object Similarity {
     val scored = q.crossJoin(broadcast(queries))
       .filter(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        cosine(call_function("graft_dot_q", col("qq"), col("qv")),
+        cosine(GraftFunctions.call("graft_dot_q", col("qq"), col("qv")),
           col("n2q"), col("n2")).as("cosine"))
     TopK.perKey(scored, Seq("query_id"), "cosine", "neighbor_id", 5)
       .withColumn("rank", row_number().over(
@@ -1294,7 +1296,7 @@ object Similarity {
     // composition, r14) — no full sort of the candidate set
     val scored = candidates
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        cosine(call_function("graft_dot_q", col("qq"), col("qv")),
+        cosine(GraftFunctions.call("graft_dot_q", col("qq"), col("qv")),
           col("n2q"), col("n2")).as("cosine"))
     TopK.perKey(scored, Seq("query_id"), "cosine", "neighbor_id", 5)
       .withColumn("rank", row_number().over(
@@ -1316,7 +1318,7 @@ object Similarity {
   // 64-element array literals (one DotQ each) — an O(K·D)-node analyzed
   // tree that cost ~30 s of driver-side analysis/codegen per cold plan.
   private def bankDots(bits: Int): Column =
-    call_function("graft_matvec_q", typedlit(hyperplanesFor(bits)), col("qv"))
+    GraftFunctions.call("graft_matvec_q", typedlit(hyperplanesFor(bits)), col("qv"))
 
   /** Non-null (indexed) vector count per (session, dir) — the similarity
     * family's n — memoized in [[graft.SessionCache]]. Six operators consult
@@ -1347,7 +1349,6 @@ object Similarity {
   // only ever emit vec_ids that are in the bucket table.
   private[graft] def lshBuckets(s: SparkSession, d: String): DataFrame =
     SessionCache.persisted(s, d, "lsh_buckets") {
-      GraftFunctions.register(s)
       val bits = lshBits(s, d)
       quantized(s, d).filter(col("qv").isNotNull)
         .select(col("vec_id"), bankDots(bits).as("ds256"))
@@ -1366,7 +1367,6 @@ object Similarity {
       symmetric: Boolean = false,
       probeBits: Int = ProbeBits,
       candidateFilter: Column = lit(true)): DataFrame = {
-    GraftFunctions.register(s)
     val q = quantized(s, d)
     val bits = lshBits(s, d)
     val dots = bankDots(bits)
@@ -1474,7 +1474,7 @@ object Similarity {
       k: Int): Column = {
     require(model.iterator.zipWithIndex.forall { case ((cid, _, _), i) => cid == i },
       "centTopK: model rows must be indexed by cid")
-    call_function("graft_cent_topk",
+    GraftFunctions.call("graft_cent_topk",
       typedlit(model.toSeq.map(_._2.toSeq)), qv, lit(k))
   }
 
@@ -1572,7 +1572,6 @@ object Similarity {
     val model = ivfModel(s, d)
     require(model.nonEmpty,
       "ivfAssignIncrement: no IVF model — train on a non-empty corpus first")
-    GraftFunctions.register(s)
     newVecs.select(col("vec_id"),
         expr(QuantizeExpr).as("qv"))
       .filter(col("qv").isNotNull)
@@ -1683,7 +1682,7 @@ object Similarity {
       // qKnnJoinIvf composition, r14) — no full sort of the candidates
       val scored = candidates
         .select(col("query_id"), col("vec_id").as("neighbor_id"),
-          cosine(call_function("graft_dot_q", col("qq"), col("qv")),
+          cosine(GraftFunctions.call("graft_dot_q", col("qq"), col("qv")),
             col("n2q"), col("n2")).as("cosine"))
       TopK.perKey(scored, Seq("query_id"), "cosine", "neighbor_id", 5)
         .withColumn("rank", row_number().over(
@@ -1731,7 +1730,6 @@ object Similarity {
     */
   val qAnnHealth: Q = Q.rowsOnly("q_ann_health") { (s, d) =>
     import graft.functions.Det.exactDiv
-    GraftFunctions.register(s)
     val q = quantized(s, d).filter(col("qv").isNotNull)
     val ids = q.select(col("vec_id"))
       .orderBy(xxhash64(col("vec_id").cast("string")), col("vec_id"))
@@ -1746,7 +1744,7 @@ object Similarity {
         col("qv").as("qq"), col("n2").as("n2q"))
       val scored = q.join(broadcast(sample), col("vec_id") =!= col("query_id"))
         .select(col("query_id"), col("vec_id"),
-          cosine(call_function("graft_dot_q", col("qq"), col("qv")),
+          cosine(GraftFunctions.call("graft_dot_q", col("qq"), col("qv")),
             col("n2q"), col("n2")).as("c"))
       val truth = SessionCache.persisted(s, d, "ann_health_truth")(
         TopK.perKey(scored, Seq("query_id"), "c", "vec_id", 5)
@@ -1804,7 +1802,6 @@ object Similarity {
   private[graft] def pqModel(s: SparkSession, d: String)
       : Array[Array[(Array[Long], Long)]] =
     SessionCache(s, d, "pq_model") {
-      GraftFunctions.register(s)
       val q = quantized(s, d).filter(col("qv").isNotNull)
       val seeds = q.orderBy("vec_id").limit(PqCodes)
         .select("qv").collect().map(_.getSeq[Long](0).toArray)
@@ -1824,7 +1821,7 @@ object Similarity {
         // stays the INLINE slice transform (the CLAUDE.md generator
         // rule); the codes array rides alongside as a plain projection
         val refined = q
-          .withColumn("codes", call_function("graft_pq_codes",
+          .withColumn("codes", GraftFunctions.call("graft_pq_codes",
             typedlit(seedModel.toSeq.map(_.toSeq.map(_._1.toSeq))),
             col("qv")).getField("codes"))
           .select(col("codes"), posexplode(expr(
@@ -1860,13 +1857,12 @@ object Similarity {
   private[graft] def pqCodesFrame(s: SparkSession, d: String): DataFrame = {
     val model = pqModel(s, d)
     SessionCache.persisted(s, d, "pq_codes") {
-      GraftFunctions.register(s)
       // one codegen'd kernel per row: all PqBlocks argmins + the exact
       // reconstruction norm ([[graft.functions.VecKernel.pqCodes]]) — replaces a
       // nested transform/array_min whose lambdas ran interpreted per
       // (block × codeword) plus a second interpreted aggregate for n2pq
       quantized(s, d).filter(col("qv").isNotNull)
-        .withColumn("enc", call_function("graft_pq_codes",
+        .withColumn("enc", GraftFunctions.call("graft_pq_codes",
           typedlit(model.toSeq.map(_.toSeq.map(_._1.toSeq))), col("qv")))
         .select(col("vec_id"), col("enc.codes").as("codes"),
           col("enc.n2pq").as("n2pq"))
@@ -1952,7 +1948,7 @@ object Similarity {
           .select(col("vec_id").as("query_id"), col("qv").as("qq"),
             col("n2").as("n2q"))), "query_id")
         .select(col("query_id"), col("vec_id").as("neighbor_id"),
-          cosine(call_function("graft_dot_q", col("qq"), col("qv")),
+          cosine(GraftFunctions.call("graft_dot_q", col("qq"), col("qv")),
             col("n2q"), col("n2")).as("cosine"))
       TopK.perKey(rescored, Seq("query_id"), "cosine", "neighbor_id", 5)
         .withColumn("rank", row_number().over(
@@ -2094,7 +2090,6 @@ object Similarity {
     * the twin's scaladoc for the per-geometry deployment rule.
     */
   val qKnnJoin: Q = Q.rowsOnly("q_knn_join") { (s, d) =>
-    GraftFunctions.register(s)
     val q = quantized(s, d)
     val candIds = annLshShortlist(s, d,
       queryFilter = lit(true), broadcastProbes = false,
@@ -2106,7 +2101,7 @@ object Similarity {
       .join(q.select(col("vec_id").as("query_id"), col("qv").as("qq"),
         col("n2").as("n2q")), "query_id")
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        cosine(call_function("graft_dot_q", col("qq"), col("qv")),
+        cosine(GraftFunctions.call("graft_dot_q", col("qq"), col("qv")),
           col("n2q"), col("n2")).as("cosine"))
     // bounded-heap top-5 per query (no corpus-wide window sort); the
     // rank window then runs over ≤5 rows per key — spill-free
@@ -2192,7 +2187,7 @@ object Similarity {
     members.join(probes, Seq("cid"))
       .filter(col("vec_id") =!= col("query_id"))
       .select(col("cid"), col("query_id"), col("vec_id").as("neighbor_id"),
-        cosine(call_function("graft_dot_q", col("qq"), col("qv")),
+        cosine(GraftFunctions.call("graft_dot_q", col("qq"), col("qv")),
           col("n2q"), col("n2")).as("cosine"))
   }
 
@@ -2243,10 +2238,7 @@ object Similarity {
     * dropped here, reported unassessed by the consumers.
     */
   private[graft] def annIvfScoredPoint(s: SparkSession, d: String,
-      queryFilter: Column, candidateFilter: Column = lit(true),
-      broadcastProbes: Boolean = true,
-      nprobe: Int = PointIvfProbe): DataFrame = {
-    GraftFunctions.register(s)
+      queryFilter: Column, candidateFilter: Column, broadcastProbes: Boolean): DataFrame = {
     val q = quantized(s, d)
     val n = nQuantized(s, d)
     if (n == 0)
@@ -2263,7 +2255,7 @@ object Similarity {
     // 7.6 s of q_decontaminate_semantic's 9.5 s sf10 wall in that join).
     val members = ivfMembersKnnK(s, d, k).filter(candidateFilter)
     val queries = q.filter(queryFilter && col("qv").isNotNull)
-    val scoreCol = cosine(call_function("graft_dot_q", col("qq"), col("qv")),
+    val scoreCol = cosine(GraftFunctions.call("graft_dot_q", col("qq"), col("qv")),
       col("n2q"), col("n2")).as("cosine")
     // a vector occupies ONE list and the probed lists are distinct, so
     // each (query, vec) pair joins at most once — no distinct pass
@@ -2272,7 +2264,7 @@ object Similarity {
       // (query_id, cid) probes AND the query vectors broadcast; members
       // stream through both map-side joins, nothing shuffles at all
       val probes = queries.select(col("vec_id").as("query_id"),
-        explode(centTopK(model, col("qv"), math.min(nprobe, k))).as("cid"))
+        explode(centTopK(model, col("qv"), math.min(PointIvfProbe, k))).as("cid"))
       val qvecs = queries.select(col("vec_id").as("query_id"),
         col("qv").as("qq"), col("n2").as("n2q"))
       members.join(broadcast(probes), Seq("cid"))
@@ -2286,7 +2278,7 @@ object Similarity {
       // exchange with vectors attached
       val probes = queries.select(col("vec_id").as("query_id"),
         col("qv").as("qq"), col("n2").as("n2q"),
-        explode(centTopK(model, col("qv"), math.min(nprobe, k))).as("cid"))
+        explode(centTopK(model, col("qv"), math.min(PointIvfProbe, k))).as("cid"))
       members.join(probes, Seq("cid"))
         .filter(col("vec_id") =!= col("query_id"))
         .select(col("query_id"), col("vec_id"), col("label"), scoreCol)
@@ -2323,7 +2315,6 @@ object Similarity {
     * collision path; otherwise precondition.
     */
   val qKnnJoinIvf: Q = Q.rowsOnly("q_knn_join_ivf") { (s, d) =>
-    GraftFunctions.register(s)
     val q = quantized(s, d)
     // emptiness probe = the memoized count off the materialized quantized
     // cache — NOT ivfModel(s, d).isEmpty, which would train the fixed-IvfK
@@ -2409,7 +2400,6 @@ object Similarity {
     SessionCache(s, d, "knn_geometry")(knnGeometryStatsUncached(s, d))
 
   private[graft] def knnGeometryStatsUncached(s: SparkSession, d: String): (Double, Double, Double) = {
-    GraftFunctions.register(s)
     val q = quantized(s, d).filter(col("qv").isNotNull)
     // deterministic spread sample: hash-order the ids (a lowest-id or
     // per-file head sample would bias toward one ingest batch's geometry)
@@ -2426,7 +2416,7 @@ object Similarity {
     val scored = q.join(broadcast(sample),
         col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id"),
-        cosine(call_function("graft_dot_q", col("qq"), col("qv")),
+        cosine(GraftFunctions.call("graft_dot_q", col("qq"), col("qv")),
           col("n2q"), col("n2")).as("c"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
@@ -2495,35 +2485,42 @@ object Similarity {
     * edge count (the near-dup pair graph is a small residue of the
     * corpus, but nothing guarantees that at 100 TB). The count is of
     * `pairs`, which both callers pass cached, so it reads the cache; the
-    * threshold is in directed edges, two per pair.
+    * gate is [[ComponentsSingleTaskMaxEdges]] directed edges, two per
+    * pair.
     *
-    *  - `small` (≤ `smallThreshold` directed edges): one narrow
-    *    single-task union-find via mapPartitions over each pair once — no
-    *    driver collect (the graph never leaves the executors), no
-    *    per-round job scheduling. This is the branch every realistic
-    *    post-LSH residue takes. The result is not materialized: the
-    *    caller's cache entry is its one copy.
-    *  - large: min-label propagation with pointer jumping — each node
-    *    repeatedly adopts the smallest label among itself and its one-hop
-    *    neighbors, then jumps to its label's label (O(log diameter)
-    *    rounds). Each round is one shuffle of (node, label) pairs — the
-    *    GraphX-free, DataFrame-native shape of web-scale dedup
-    *    clustering. Iterations are driver-bounded (the cap is a safety
-    *    rail; hitting it on a pathological chain still yields a
-    *    refinement, never a wrong merge).
+    *  - at or below it: one narrow single-task union-find via
+    *    mapPartitions over each pair once — no driver collect (the graph
+    *    never leaves the executors), no per-round job scheduling. This is
+    *    the branch every realistic post-LSH residue takes. The result is
+    *    not materialized: the caller's cache entry is its one copy.
+    *  - above it: [[propagateComponents]], the shuffle loop.
     */
-  def components(pairs: DataFrame, maxIters: Int = 20,
-                 smallThreshold: Long = 2000000L): DataFrame = {
-    if (2 * pairs.count() <= smallThreshold) {
+  def components(pairs: DataFrame): DataFrame =
+    if (2 * pairs.count() > ComponentsSingleTaskMaxEdges) propagateComponents(pairs)
+    else {
       val spark = pairs.sparkSession
       import spark.implicits._
       // through an RDD, so the plan a caller caches is one leaf and not
       // the pair graph's whole lineage
-      return pairs.select(col("id_a"), col("id_b")).as[(Long, Long)].rdd
+      pairs.select(col("id_a"), col("id_b")).as[(Long, Long)].rdd
         .coalesce(1)
         .mapPartitions(it => unionFindLabels(it).iterator)
         .toDF("id", "label")
     }
+
+  /** [[components]]' gate, in directed edges: two per pair. */
+  private[graft] val ComponentsSingleTaskMaxEdges = 2000000L
+
+  /** [[components]] above its gate: min-label propagation with pointer
+    * jumping — each node repeatedly adopts the smallest label among
+    * itself and its one-hop neighbors, then jumps to its label's label
+    * (O(log diameter) rounds). Each round is one shuffle of (node, label)
+    * pairs — the GraphX-free, DataFrame-native shape of web-scale dedup
+    * clustering. Iterations are driver-bounded: the cap of 20 is a
+    * safety rail; hitting it on a pathological chain still yields a
+    * refinement, never a wrong merge.
+    */
+  private[graft] def propagateComponents(pairs: DataFrame): DataFrame = {
     // the pair graph is read twice per round: materialize it once, or an
     // expensive upstream (the minhash verification join) re-executes every
     // iteration
@@ -2541,7 +2538,7 @@ object Similarity {
       .localCheckpoint()
     var iter = 0
     var converged = false
-    while (!converged && iter < maxIters) {
+    while (!converged && iter < 20) {
       // hop: smallest label among self + one-hop neighbors. Plain plan (no
       // checkpoint): with labels an RDD leaf and edges cache-replaced at
       // planning, its tree is constant-size per round — only `next`, the
@@ -2810,30 +2807,26 @@ object Similarity {
     */
   private[graft] val MemberBroadcastMaxRows = 5000000L
 
-  /** Quality-aware survivor corpus, parameterized on the broadcast gate
-    * so the spec pins both physical forms ([[MemberBroadcastMaxRows]]).
+  /** The member-count hint decision: broadcast at or below
+    * [[MemberBroadcastMaxRows]] members, unhinted above it.
     */
-  /** The measured member-count broadcast gate — ONE spelling for every
-    * consumer of the cluster-member tables ([[dedupSurvivorsBestFrame]],
-    * [[Curation.stagedFlags]]): counts the memoized+materialized label
-    * table (a cache read — the components() precedent) and returns a
-    * gating function that hints broadcast only under the threshold,
-    * shipping unhinted above it so AQE size-decides on 30–50%-dup web
-    * corpora. Factored so a future change to the measure (rows → bytes)
-    * or the threshold cannot silently miss one site.
-    */
-  private[graft] def gatedMemberBroadcast(s: SparkSession, d: String,
-      broadcastMaxRows: Long): DataFrame => DataFrame = {
-    val nMembers = dedupClusterLabels(s, d).count()
-    df => if (nMembers <= broadcastMaxRows) broadcast(df) else df
-  }
+  private[graft] def memberHint(nMembers: Long): DataFrame => DataFrame =
+    df => if (nMembers <= MemberBroadcastMaxRows) broadcast(df) else df
 
-  private[graft] def dedupSurvivorsBestFrame(
-      s: SparkSession, d: String,
-      broadcastMaxRows: Long = MemberBroadcastMaxRows): DataFrame = {
-    val labels = dedupClusterLabels(s, d)
-      .select(col("id").as("doc_id"), col("label"))
-    val gated = gatedMemberBroadcast(s, d, broadcastMaxRows)
+  /** [[memberHint]] for a label table, counted — ONE spelling for every
+    * consumer of the cluster-member tables ([[dedupSurvivorsBestFrame]],
+    * [[weightsOverLabels]], [[Curation.stagedFlags]]). The tables are
+    * memoized and materialized, so the count is a cache read (the
+    * components() precedent).
+    */
+  private[graft] def gatedMemberBroadcast(labels: DataFrame): DataFrame => DataFrame =
+    memberHint(labels.count())
+
+  /** Quality-aware survivor corpus; see [[qDedupSurvivorsBest]]. */
+  private[graft] def dedupSurvivorsBestFrame(s: SparkSession, d: String): DataFrame = {
+    val table = dedupClusterLabels(s, d)
+    val labels = table.select(col("id").as("doc_id"), col("label"))
+    val gated = gatedMemberBroadcast(table)
     val memberScores = graft.operators.TextOps.qualityScored(
         Tables.documents(s, d).join(gated(labels.select("doc_id")), "doc_id"))
       .select("doc_id", "quality_score")
@@ -2932,13 +2925,10 @@ object Similarity {
     * oracle anchors the code path the MinHash entry runs.
     */
   private[graft] def weightsOverLabels(
-      s: SparkSession, d: String, labelTable: DataFrame,
-      broadcastMaxRows: Long = MemberBroadcastMaxRows): DataFrame = {
+      s: SparkSession, d: String, labelTable: DataFrame): DataFrame = {
     import graft.functions.Det.exactDiv
     val labels = labelTable.select(col("id").as("doc_id"), col("label"))
-    val nMembers = labels.count()
-    def gated(df: DataFrame): DataFrame =
-      if (nMembers <= broadcastMaxRows) broadcast(df) else df
+    val gated = gatedMemberBroadcast(labelTable)
     val sizes = labels.groupBy("label").agg(count(lit(1)).as("cluster_size"))
     val members = labels.join(gated(sizes), "label")
     val sz = coalesce(col("cluster_size"), lit(1L))
@@ -2951,10 +2941,8 @@ object Similarity {
       .orderBy("doc_id")
   }
 
-  private[graft] def dedupWeightsFrame(
-      s: SparkSession, d: String,
-      broadcastMaxRows: Long = MemberBroadcastMaxRows): DataFrame =
-    weightsOverLabels(s, d, dedupClusterLabels(s, d), broadcastMaxRows)
+  private[graft] def dedupWeightsFrame(s: SparkSession, d: String): DataFrame =
+    weightsOverLabels(s, d, dedupClusterLabels(s, d))
 
   val qDedupWeights: Q = Q.rowsOnly("q_dedup_weights") { (s, d) =>
     dedupWeightsFrame(s, d)

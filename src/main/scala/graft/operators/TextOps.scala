@@ -128,10 +128,9 @@ object TextOps {
     // per-list NFA walks per row; the
     // DuckDB oracle keeps the regex spelling, so the hash gate re-proves
     // the kernel every Verify.
-    GraftFunctions.register(df.sparkSession)
     var out = df
-      .withColumn("cjk", call_function("graft_cjk", col("text")))
-      .withColumn("sc_all", call_function("graft_stop_counts",
+      .withColumn("cjk", GraftFunctions.call("graft_cjk", col("text")))
+      .withColumn("sc_all", GraftFunctions.call("graft_stop_counts",
         col("text"), typedlit(stopwords.map(_._2))))
     for (((l, _), idx) <- stopwords.zipWithIndex)
       out = out.withColumn(s"s_$l", element_at(col("sc_all"), idx + 1))
@@ -338,7 +337,6 @@ object TextOps {
     // per row (the two-stage-projection rule: CollapseProject keeps a
     // non-cheap alias referenced more than once split — inlining would
     // re-run the kernels per consumer expression).
-    GraftFunctions.register(docs.sparkSession)
     val reserved = Seq("q_tc", "q_sc")
     require(!docs.columns.exists(reserved.contains),
       s"qualityScored reserves columns $reserved")
@@ -351,8 +349,8 @@ object TextOps {
     val caps = when(length(col("text")) === 0, 0.0)
       .otherwise(col("q_tc.n_upper").cast("double") / length(col("text")))
     docs
-      .withColumn("q_tc", call_function("graft_token_counts", col("text")))
-      .withColumn("q_sc", call_function("graft_stop_counts",
+      .withColumn("q_tc", GraftFunctions.call("graft_token_counts", col("text")))
+      .withColumn("q_sc", GraftFunctions.call("graft_stop_counts",
         col("text"), typedlit(Seq(stopwords.head._2))))
       .withColumn("len_score", lenScore)
       .withColumn("stop_score", stopScore)
@@ -382,10 +380,9 @@ object TextOps {
     // oracle keeps the regex spelling, so every Verify run re-proves the
     // kernel ≡ regex equivalence corpus-wide (TextOpsSpec pins it
     // against the Spark regex forms and crafted edges too)
-    graft.functions.GraftFunctions.register(s)
     Tables.documents(s, d).select(
       col("doc_id"),
-      call_function("graft_token_counts", col("text")).as("tc"))
+      GraftFunctions.call("graft_token_counts", col("text")).as("tc"))
       .select(col("doc_id"), col("tc.n_ws").as("n_tokens_ws"),
         col("tc.n_bpe").as("n_tokens_bpe"))
       .orderBy("doc_id")
@@ -663,11 +660,10 @@ object TextOps {
        |      FROM documents)
        |ORDER BY doc_id""".stripMargin
   ) { (s, d) =>
-    GraftFunctions.register(s)
     Tables.documents(s, d).select(
       col("doc_id"),
       md5(norm).as("content_md5"),
-      call_function("graft_rolling_hash",
+      GraftFunctions.call("graft_rolling_hash",
         regexp_replace(col("text"), "[^ -~]", "")).as("rolling_hash"))
       .orderBy("doc_id")
   }
@@ -740,10 +736,9 @@ object TextOps {
     // tasks).
     val docs = Tables.documents(s, d)
       .repartition(s.sparkContext.defaultParallelism, col("doc_id"))
-    GraftFunctions.register(s)
     docs
       .filter(norm =!= "")
-      .select(col("doc_id"), call_function("graft_rep_stats", norm).as("r"))
+      .select(col("doc_id"), GraftFunctions.call("graft_rep_stats", norm).as("r"))
       .select(col("doc_id"), col("r.n_words").as("n_words"),
         col("r.n_distinct").as("n_distinct"),
         exactDiv(col("r.n_words") - col("r.n_distinct"),
@@ -764,13 +759,14 @@ object TextOps {
     * linearly with eval size, and a corpus-slice eval at 100 TB would
     * blow any broadcast (Spark hard-caps broadcasts at 8 GB). The plan
     * is therefore ADAPTIVE on a cheap probe (the eval DOC count — one
-    * column-pruned scan; vocab size is linear in it):
-    *  - eval docs ≤ `maxBroadcastEvalDocs`: the eval vocabulary
+    * column-pruned scan; vocab size is linear in it), through
+    * [[evalJoinHint]]:
+    *  - eval docs ≤ [[EvalBroadcastMaxDocs]]: the eval vocabulary
     *    broadcasts and the 100 TB train side streams through a map-side
     *    semi-join — train n-grams never shuffle at all;
-    *  - above the threshold: the same semi-join runs as a shuffled join
-    *    on the n-gram key — both sides exchange, which is the only
-    *    correct shape once the vocabulary exceeds executor memory.
+    *  - above it: the same semi-join runs as a sort-merge join on the
+    *    n-gram key — both sides exchange, which is the only correct shape
+    *    once the vocabulary exceeds executor memory.
     * In BOTH branches the semi-join runs BEFORE any distinct: per-doc
     * dedup clusters on the doc_id repartition key on the eval side only,
     * and the only train N-GRAMS that ever reach the distinct are the
@@ -806,47 +802,29 @@ object TextOps {
        |ORDER BY d.doc_id""".stripMargin
   ) { (s, d) => decontaminate(s, d) }
 
-  /** Eval-doc-count threshold under which the eval n-gram vocabulary
+  /** Eval-doc-count gate under which the eval n-gram vocabulary
     * broadcasts (≈ tens of MB of 5-gram strings at typical doc sizes —
-    * far under the broadcast limit). Library callers with a genuinely
-    * huge held-out set pass a smaller/zero value to force the scale
-    * branches; the spec exercises all three.
+    * far under the broadcast limit). `decontaminate`'s one plan switch:
+    * above it every eval-vocabulary join is a sort-merge join.
     */
   private[graft] val EvalBroadcastMaxDocs = 100000L
 
-  /** Eval-doc-count threshold for the bloom tier: above the broadcast
-    * cutoff but below this, a serialized bloom over the eval vocabulary
-    * (~1.2 bytes/n-gram at 1% fp — ~50× smaller than the strings) rides
-    * the plan as a literal into [[graft.functions.BloomKernel]] and
-    * prunes ~99% of train n-grams MAP-SIDE before the exact sort-merge
-    * semi-join; only bloom survivors (true hits + ~1% fp) ever shuffle.
-    * Sizing arithmetic behind the cutoff: the sketch is sized at 512
-    * n-grams/doc, ≈1.2 bytes each ⇒ 250k docs ≈ 128M items ≈ a ~150 MB
-    * plan constant — heavy but shippable. An order of magnitude more and
-    * the serialized sketch approaches the JVM's 2 GB contiguous-array
-    * limit (writeTo would throw, not degrade), so beyond this cutoff the
-    * operator drops to the plain sort-merge tier instead.
+  /** The eval-vocabulary join hint for `nEvalDocs` eval documents:
+    * broadcast at or below [[EvalBroadcastMaxDocs]]. Above it the vocab
+    * side is known to be huge, so the spill-safe sort-merge shape is
+    * forced rather than left to Catalyst's size estimate (an aggregate's
+    * estimate can come out tiny and re-introduce the broadcast).
     */
-  private[graft] val EvalBloomMaxDocs = 250000L
+  private[graft] def evalJoinHint(nEvalDocs: Long): DataFrame => DataFrame =
+    if (nEvalDocs <= EvalBroadcastMaxDocs) broadcast(_) else _.hint("merge")
 
-  private[graft] def decontaminate(s: SparkSession, d: String,
-      maxBroadcastEvalDocs: Long = EvalBroadcastMaxDocs,
-      maxBloomEvalDocs: Long = EvalBloomMaxDocs): DataFrame = {
-    GraftFunctions.register(s)
+  private[graft] def decontaminate(s: SparkSession, d: String): DataFrame = {
     val isEval = Text.evalSlice(col("doc_id"))
     // the adaptive probe: count eval DOCS (column-pruned scan of doc_id
     // only) — vocabulary size is linear in it, so it is the cheap stand-in
     // for "does the vocab fit a broadcast"
-    val nEvalDocs = Tables.documents(s, d).filter(isEval)
-      .select("doc_id").count()
-    val useBroadcast = nEvalDocs <= maxBroadcastEvalDocs
-    val useBloom = !useBroadcast && nEvalDocs <= maxBloomEvalDocs
-    // above the threshold we KNOW the vocab side is huge — don't leave it
-    // to Catalyst's size estimate (an aggregate's estimate can come out
-    // tiny and re-introduce the broadcast): force the spill-safe
-    // sort-merge shape explicitly
-    def hinted(df: DataFrame): DataFrame =
-      if (useBroadcast) broadcast(df) else df.hint("merge")
+    val hinted = evalJoinHint(Tables.documents(s, d).filter(isEval)
+      .select("doc_id").count())
     def ngrams(evalSide: Boolean) = {
       val base = Tables.documents(s, d).filter(if (evalSide) isEval else !isEval)
       // one doc_id-hash spread for both sides: the eval side's per-doc
@@ -858,7 +836,7 @@ object TextOps {
       // ONE GramHashKernel pass (r14): the tokenize → filter → 5-gram
       // concat lambda chain ran INTERPRETED per row (higher-order
       // functions are CodegenFallback) and every downstream
-      // distinct/join/bloom carried ~30-byte gram strings; the kernel
+      // distinct/join carried ~30-byte gram strings; the kernel
       // emits the grams' xxhash64 directly and everything downstream
       // moves 8-byte longs. Same rows modulo xxhash64 collisions — the
       // 2^-64 standing contract the shingle index already relies on
@@ -871,26 +849,9 @@ object TextOps {
     val evalVocab = evalNg.select("ng").distinct()
     // semi-join FIRST (broadcast or shuffled per the probe): train
     // n-grams never dedup unless they already hit eval vocabulary; the
-    // distinct then runs on that small contaminated subset only. In the
-    // bloom tier the exact join stays — bloom false positives must not
-    // count as hits — but it now reads a ~100× thinner stream.
-    val trainNg = ngrams(evalSide = false).select("ng")
-    val trainSide =
-      if (!useBloom) trainNg
-      else {
-        // driver-held model (IVF-model pattern): one aggregation job
-        // builds the sketch, serialized bytes ride the plan as a literal.
-        // Sized from the doc-count probe (overestimating only wastes
-        // bloom bits, never correctness). Long-keyed since r14
-        // (putLong/mightContainLong — ~1.2 bytes per gram either way,
-        // but the probe hashes 8 bytes instead of a string).
-        val bf = evalVocab.stat.bloomFilter("ng", math.max(nEvalDocs, 1L) * 512, 0.01)
-        val bos = new java.io.ByteArrayOutputStream()
-        bf.writeTo(bos)
-        trainNg.filter(
-          call_function("graft_bloom_contains", lit(bos.toByteArray), col("ng")))
-      }
-    val contaminatedNg = trainSide.join(hinted(evalVocab), "ng").distinct()
+    // distinct then runs on that small contaminated subset only
+    val contaminatedNg = ngrams(evalSide = false).select("ng")
+      .join(hinted(evalVocab), "ng").distinct()
     val hits = evalNg.join(hinted(contaminatedNg), "ng")
       .groupBy("doc_id").agg(count(lit(1)).as("n_hits"))
     val evalDocs = evalNg.groupBy("doc_id").agg(count(lit(1)).as("n_ngrams"))
@@ -938,8 +899,7 @@ object TextOps {
     */
   private[graft] def piiStruct(s: SparkSession,
       text: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
-    graft.functions.GraftFunctions.register(s)
-    call_function("graft_pii_counts", text)
+    GraftFunctions.call("graft_pii_counts", text)
   }
 
   /** n_email + n_ipv4 + n_phone + n_idrun as ONE kernel subtree (the
@@ -1127,10 +1087,9 @@ object TextOps {
     // reference the redacted string — materialize the graft_pii_redact
     // struct once (kernel alternation scan runs ONCE per row where the
     // regex form paid the NFA alternation twice: count + replace)
-    graft.functions.GraftFunctions.register(s)
     Tables.documents(s, d)
       .select(col("doc_id"), col("text"),
-        call_function("graft_pii_redact", col("text")).as("r"))
+        GraftFunctions.call("graft_pii_redact", col("text")).as("r"))
       .select(col("doc_id"),
         col("r.n_redactions").as("n_redactions"),
         (length(col("text")) - length(col("r.clean"))).cast("long")
@@ -1207,10 +1166,9 @@ object TextOps {
     // filter lambdas (r13; the kernel scaladoc carries the norm/split
     // equivalence argument — the DuckDB oracles keep the list_filter
     // spelling, so every Verify re-proves it)
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     docs
       .withColumn("bc",
-        call_function("graft_block_counts", col("text"), typedlit(Blocklist)))
+        GraftFunctions.call("graft_block_counts", col("text"), typedlit(Blocklist)))
       .withColumn("n_tok", col("bc.n_tok").cast("long"))
       .withColumn("n_blocked", col("bc.n_blocked").cast("long"))
       .withColumn("blocked", col("n_blocked") * 20 > col("n_tok"))
@@ -2144,11 +2102,10 @@ object TextOps {
     // a hot window ([[dupSpansOf]]'s rule).
     val matchedStarts = grams.join(dup, "h")
       .groupBy("doc_id").agg(sort_array(collect_set(col("i"))).as("ps"))
-    GraftFunctions.register(s)
     val masked = docs
       .join(matchedStarts, Seq("doc_id"), "left")
       .select(col("doc_id"), col("text").isNotNull.as("has_text"),
-        call_function("graft_cover_mask", norm,
+        GraftFunctions.call("graft_cover_mask", norm,
           coalesce(col("ps"), typedlit(Seq.empty[Int])),
           lit(DupSpanN)).as("r"))
     val nT = coalesce(col("r.n_tokens"), lit(0L))

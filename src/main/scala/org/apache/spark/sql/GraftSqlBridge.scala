@@ -24,12 +24,6 @@ object GraftSqlBridge {
   def expression(c: Column): org.apache.spark.sql.catalyst.expressions.Expression =
     classic.ExpressionUtils.expression(c)
 
-  /** An expected input type accepting any of `ts` as is, with no implicit
-    * cast (`AbstractDataType` and `TypeCollection` are `private[sql]`).
-    */
-  def anyOf(ts: Seq[types.DataType]): types.AbstractDataType =
-    if (ts.size == 1) ts.head else types.TypeCollection(ts: _*)
-
   /** A DataFrame over rows already on the driver, in Catalyst's internal
     * form: no per-row conversion from `Row` (`LocalRelation` is
     * `private[sql]` to build from a schema).

@@ -198,13 +198,11 @@ class AssemblySpec extends SparkSpec {
   }
 
   test("bpe training: distributed and driver loops land the identical merge table") {
-    // the size gate must be invisible in the result — force the
-    // distributed path (gate 0) and compare with the gated default
+    // the size gate must be invisible in the result — run the
+    // distributed loop and compare with the gated default
     for (dir <- Seq(sfDir, astralDir)) {
-      val dist = Assembly.bpeTrain(spark, dir, maxDriverVocab = 0L)
-        .collect().map(r => (r.getInt(0), r.getString(1), r.getString(2),
-          r.getString(3), r.getLong(4))).sortBy(_._1)
-      assert(dist.toSeq == gotMerges(dir).toSeq,
+      val dist = Assembly.bpeDistributed(spark, dir)._1
+      assert(dist == gotMerges(dir).toSeq,
         s"$dir: physical strategy changed the merge table")
     }
     // (U+1F600, U+1F600) occurs 3× in 'a' + 2 + 2 and once in 2 + 2 + 'x':
@@ -253,10 +251,10 @@ class AssemblySpec extends SparkSpec {
     got.foreach { case (src, n, nb, _) =>
       assert(nb >= n, s"$src: fewer BPE tokens than words") }
     // the vocab-size gate must be invisible in the result
-    assert(rows(Assembly.bpeEncode(spark, sfDir, maxDriverVocab = 0L)) == got,
+    assert(rows(Assembly.bpeDistributed(spark, sfDir)._2) == got,
       "distributed segmentation diverged from the driver path")
     val (astralDriver, astralDist) = (Assembly.bpeEncode(spark, astralDir),
-      Assembly.bpeEncode(spark, astralDir, maxDriverVocab = 0L))
+      Assembly.bpeDistributed(spark, astralDir)._2)
     assert(rows(astralDist) == rows(astralDriver),
       "supplementary-plane words segment differently on the two paths")
     assert(astralDist.schema == astralDriver.schema)

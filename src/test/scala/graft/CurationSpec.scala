@@ -200,20 +200,22 @@ class CurationSpec extends SparkSpec {
   }
 
   test("stagedFlags: size-gated broadcast — both physical forms identical") {
-    // gate on → non-keeper join hinted; gate forced to 0 (the web-corpus
-    // 30-50%-dup case) → unhinted, AQE size-decides. Same attribution
-    // either way.
+    // gate on → non-keeper join hinted; the far side (the web-corpus
+    // 30-50%-dup case) is the same plan unhinted, with nothing broadcast
+    // by size either. Same attribution either way.
     val hinted = Curation.stagedFlags(spark, sfDir)
-    val unhinted = Curation.stagedFlags(spark, sfDir, broadcastMaxRows = 0)
-    assert(hinted.queryExecution.analyzed.toString.contains("ResolvedHint"),
-      "gated-on branch lost its broadcast hint")
-    assert(!unhinted.queryExecution.analyzed.toString.contains("ResolvedHint"),
-      "gated-off branch must ship unhinted (AQE size-decides)")
+    assert(joinHints(hinted).nonEmpty, "gated-on branch lost its broadcast hint")
     def staging(df: org.apache.spark.sql.DataFrame): Seq[(Long, Int)] =
       df.collect().map(r => (r.getAs[Long]("doc_id"),
         if (r.isNullAt(r.fieldIndex("dropped_at"))) 0
         else r.getAs[Int]("dropped_at"))).toSeq.sorted
-    assert(staging(hinted) == staging(unhinted),
+    val far = unhinted(hinted) { df =>
+      assert(joinHints(df).isEmpty, "far side must ship unhinted")
+      assert(!df.queryExecution.executedPlan.toString.contains("BroadcastHashJoin"),
+        "far side still statically broadcasts the non-keeper join")
+      staging(df)
+    }
+    assert(staging(hinted) == far,
       "physical strategies disagree on stage attribution")
   }
 }

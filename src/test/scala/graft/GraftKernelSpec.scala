@@ -16,14 +16,6 @@ class GraftKernelSpec extends SparkSpec {
   private val str = BoundReference(0, StringType, nullable = true)
   private val vec = BoundReference(0, ArrayType(LongType), nullable = true)
 
-  private def bloomBytes(items: String*): Array[Byte] = {
-    val bf = org.apache.spark.util.sketch.BloomFilter.create(64, 0.01)
-    items.foreach(bf.putString)
-    val bos = new java.io.ByteArrayOutputStream()
-    bf.writeTo(bos)
-    bos.toByteArray
-  }
-
   /** Per model kernel, its arguments over a model that `seed` varies;
     * every call builds new literals.
     */
@@ -34,9 +26,7 @@ class GraftKernelSpec extends SparkSpec {
       Seq(Seq(Seq(1L), Seq(seed.toLong)), Seq(Seq(5L), Seq(7L))),
       ArrayType(ArrayType(ArrayType(LongType)))), vec)),
     "graft_stop_counts" -> (seed => Seq(str, Literal.create(
-      Seq(Seq("the", "and"), Seq("x" * seed)), ArrayType(ArrayType(StringType))))),
-    "graft_bloom_contains" -> (seed =>
-      Seq(Literal.create(bloomBytes("the", "x" * seed), BinaryType), str)))
+      Seq(Seq("the", "and"), Seq("x" * seed)), ArrayType(ArrayType(StringType))))))
 
   test("kernels over separately built equal model literals are semanticEquals") {
     modelArgs.foreach { case (name, args) =>
@@ -61,25 +51,40 @@ class GraftKernelSpec extends SparkSpec {
     assert(a.collect().map(_.getSeq[Long](0)).toSeq == Seq(Seq(1L, 2L), Seq(3L, 4L)))
   }
 
+  /** (file name, source) of every Scala file under `src/main/scala`. */
+  private def mainSources(): List[(String, String)] = {
+    val root = java.nio.file.Paths.get("src/main/scala")
+    assert(java.nio.file.Files.isDirectory(root), s"run from the repo root: $root")
+    val it = java.nio.file.Files.walk(root)
+    try it.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+      .map(f => (f.getFileName.toString,
+        new String(java.nio.file.Files.readAllBytes(f), "UTF-8")))
+    finally it.close()
+  }
+
   test("no doGenCode or nullSafeEval override under src/main/scala") {
     val decl = raw"override\s+(?:protected\s+)?def\s+(?:doGenCode|nullSafeEval)\b".r
     val owner = raw"(?:class|object|trait)\s+(\w+)".r
-    val root = java.nio.file.Paths.get("src/main/scala")
-    assert(java.nio.file.Files.isDirectory(root), s"run from the repo root: $root")
-    val files = {
-      val it = java.nio.file.Files.walk(root)
-      try it.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
-      finally it.close()
-    }
-    val offenders = files.flatMap { f =>
-      val src = new String(java.nio.file.Files.readAllBytes(f), "UTF-8")
+    val offenders = mainSources().flatMap { case (name, src) =>
       decl.findAllMatchIn(src).map { m =>
         val cls = owner.findAllMatchIn(src.substring(0, m.start)).toSeq.lastOption
-        s"${f.getFileName}: ${cls.fold("?")(_.group(1))}"
+        s"$name: ${cls.fold("?")(_.group(1))}"
       }
     }.distinct
     assert(offenders.isEmpty,
       s"${offenders.size} hand-written eval paths (one static core per kernel, " +
         s"wrapped by GraftKernel): ${offenders.mkString("; ")}")
+  }
+
+  test("src/main builds kernels with GraftFunctions.call, never call_function") {
+    // call_function resolves through the session's function registry, so
+    // every operator using it had to register graft's functions first;
+    // GraftFunctions.call builds the kernel directly, on any session
+    val offenders = mainSources().flatMap { case (name, src) =>
+      src.linesIterator.zipWithIndex.collect {
+        case (line, i) if line.contains("call_function(\"graft_") => s"$name:${i + 1}"
+      }
+    }
+    assert(offenders.isEmpty, s"call_function sites: ${offenders.mkString("; ")}")
   }
 }

@@ -38,13 +38,6 @@ class KernelCodegenSpec extends SparkSpec {
     ArrayType(ArrayType(ArrayType(LongType))))
   private val listsLit = Literal.create(
     Seq(Seq("the", "and"), Seq("der", "und")), ArrayType(ArrayType(StringType)))
-  private val bloomLit = {
-    val bf = org.apache.spark.util.sketch.BloomFilter.create(16, 0.01)
-    bf.putString("alpha")
-    val bos = new java.io.ByteArrayOutputStream()
-    bf.writeTo(bos)
-    Literal.create(bos.toByteArray, BinaryType)
-  }
 
   /** (input row, arguments) per registered function name. */
   private val exemplarArgs: Map[String, (Seq[Any], Seq[Expression])] = {
@@ -58,7 +51,6 @@ class KernelCodegenSpec extends SparkSpec {
       "graft_rolling_hash" -> ((text, Seq(str))),
       "graft_simhash64" -> ((Seq(arr(1L, 2L, 3L)), Seq(vecL))),
       "graft_matvec_q" -> ((Seq(arr(1L, 2L, 3L)), Seq(matLit, vecL))),
-      "graft_bloom_contains" -> ((text, Seq(bloomLit, str))),
       "graft_repeated_run" -> ((text, Seq(str))),
       "graft_cent_topk" -> ((Seq(arr(1L, 2L, 3L)), Seq(matLit, vecL, Literal(2)))),
       "graft_pq_codes" -> ((Seq(arr(1L, 2L, 3L, 4L)), Seq(bookLit, vecL))),

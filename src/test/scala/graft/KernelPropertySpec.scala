@@ -130,15 +130,6 @@ class KernelPropertySpec extends SparkSpec {
   private def byName(name: String, args: Expression*): Expression =
     GraftFunctions.kernel(name, args: _*).replacement
 
-  private val bloomLit = {
-    val bf = org.apache.spark.util.sketch.BloomFilter.create(64, 0.01)
-    Seq("the", "slow", "日本語").foreach(bf.putString)
-    Seq(1L, 42L, -7L).foreach(bf.putLong)
-    val bos = new java.io.ByteArrayOutputStream()
-    bf.writeTo(bos)
-    Literal.create(bos.toByteArray, BinaryType)
-  }
-
   private val jsonValue: Gen[String] = Gen.oneOf(
     "7", "-3", "0", "-0", "2147483647", "2147483648", "-2147483648",
     "-2147483649", "017", "+1", "1e2", "7.0", "1.5E3", "NaN", "Infinity",
@@ -190,11 +181,6 @@ class KernelPropertySpec extends SparkSpec {
       "graft_matvec_q" -> (mats.map(m => Variant(byName("graft_matvec_q", matLit(m), vecL),
         vecRow(if (m.isEmpty) 3 else m(0).length))) :+
         Variant(byName("graft_matvec_q", Literal.create(null, matType), vecL), vecRow(3))),
-      "graft_bloom_contains" -> Seq(
-        Variant(byName("graft_bloom_contains", bloomLit, str), anyText),
-        Variant(byName("graft_bloom_contains", bloomLit, ref(LongType)),
-          orNull(Gen.oneOf(Gen.choose(-50L, 50L), Gen.long)).map(Seq(_))),
-        Variant(byName("graft_bloom_contains", Literal.create(null, BinaryType), str), anyText)),
       "graft_repeated_run" -> Seq(Variant(byName("graft_repeated_run", str), anyText)),
       "graft_cent_topk" -> (for (m <- mats; k <- Seq(1, 2, 3, 8)) yield
         Variant(byName("graft_cent_topk", matLit(m), vecL, Literal(k)),

@@ -73,8 +73,7 @@ class NearDupPathSpec extends SparkSpec {
     assert(Similarity.qDedupSurvivors.run(spark, sfDir).collect().toSeq ==
       Similarity.survivorsOverLabels(spark, sfDir, distLabels).collect().toSeq)
     assert(Similarity.qDedupWeights.run(spark, sfDir).collect().toSeq ==
-      Similarity.weightsOverLabels(spark, sfDir, distLabels, Similarity.MemberBroadcastMaxRows)
-        .collect().toSeq)
+      Similarity.weightsOverLabels(spark, sfDir, distLabels).collect().toSeq)
   }
 
   test("minhash recall and precision hold on the distributed path") {

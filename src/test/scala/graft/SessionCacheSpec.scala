@@ -49,7 +49,7 @@ class SessionCacheSpec extends SparkSpec {
     writeDocs(dir, Seq("ab ab ab", "ab cd"))
     writeEmbeddings(dir, 20)
     assert(Tables.documents(spark, dir).count() == 2)
-    val merges = Assembly.bpeMerges(spark, dir, 5, Assembly.BpeDriverMaxVocab)
+    val merges = Assembly.bpeMerges(spark, dir, 5)
     assert(merges.head._2 == "a" && merges.head._3 == "b")
     assert(Similarity.nQuantized(spark, dir) == 20)
     assert(bucketTotal(dir) == 2)
@@ -57,7 +57,7 @@ class SessionCacheSpec extends SparkSpec {
     writeDocs(dir, Seq("xy xy xy zz", "xy", "zz zz"))
     writeEmbeddings(dir, 30)
     assert(Tables.documents(spark, dir).count() == 3)
-    val fresh = Assembly.bpeMerges(spark, dir, 5, Assembly.BpeDriverMaxVocab)
+    val fresh = Assembly.bpeMerges(spark, dir, 5)
     assert(fresh.head._2 == "x" && fresh.head._3 == "y", fresh)
     assert(Similarity.nQuantized(spark, dir) == 30)
     // the shared quality histogram over the rewritten table is fresh too
@@ -70,13 +70,13 @@ class SessionCacheSpec extends SparkSpec {
     writeEmbeddings(dir, 20)
     val docs = Tables.documents(spark, dir)
     val q = Similarity.quantized(spark, dir)
-    val merges = Assembly.bpeMerges(spark, dir, 5, Assembly.BpeDriverMaxVocab)
+    val merges = Assembly.bpeMerges(spark, dir, 5)
     // files the fingerprint skips: hidden names and non-table directories
     spark.range(3).write.parquet(s"$dir/results/q_x")
     java.nio.file.Files.createFile(java.nio.file.Paths.get(dir, "_SUCCESS"))
     assert(Tables.documents(spark, dir) eq docs)
     assert(Similarity.quantized(spark, dir) eq q)
-    assert(Assembly.bpeMerges(spark, dir, 5, Assembly.BpeDriverMaxVocab) eq merges)
+    assert(Assembly.bpeMerges(spark, dir, 5) eq merges)
   }
 
   test("SessionCache.clear() leaves no persistent RDD behind") {
@@ -86,8 +86,8 @@ class SessionCacheSpec extends SparkSpec {
     val sc = spark.sparkContext
     val before = sc.getPersistentRDDs.keySet
     Similarity.lshBuckets(spark, dir).count()
-    // gate 0: the distributed localCheckpoint cascade
-    Assembly.bpeEncode(spark, dir, maxDriverVocab = 0L).collect()
+    // the distributed localCheckpoint cascade
+    Assembly.bpeDistributed(spark, dir)._2.collect()
     assert((sc.getPersistentRDDs.keySet -- before).nonEmpty, "the builds persisted nothing")
     SessionCache.clear()
     val left = sc.getPersistentRDDs.filter { case (id, _) => !before(id) }
@@ -178,7 +178,7 @@ class SessionCacheSpec extends SparkSpec {
     // (file, enclosing object member) of each persist that is released
     // in a finally (or by the caller's scoped wrapper) before it returns
     val allowed = Set(
-      ("Similarity.scala", "components"),
+      ("Similarity.scala", "propagateComponents"),
       ("Similarity.scala", "knnGeometryStatsUncached"),
       ("Similarity.scala", "minhashIncrementScoped"),
       ("IngestStream.scala", "neardupBatch"),
@@ -196,7 +196,7 @@ class SessionCacheSpec extends SparkSpec {
     // that would otherwise re-plan every earlier round pays for one
     val allowed = Set(
       // label propagation's per-round label table
-      ("Similarity.scala", "components"),
+      ("Similarity.scala", "propagateComponents"),
       // each round of the distributed BPE training loop and encode cascade
       ("Assembly.scala", "resegment"),
       // the word table both distributed BPE loops start from

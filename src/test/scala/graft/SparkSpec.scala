@@ -2,7 +2,8 @@ package graft
 
 import java.nio.file.{Files, Path}
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.{JoinStrategyHint, ResolvedHint}
 import org.apache.spark.sql.internal.{SQLConf, StaticSQLConf}
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -19,6 +20,25 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     val dir = Files.createTempDirectory(prefix)
     tempDirs.synchronized(tempDirs += dir)
     dir
+  }
+
+  /** The join strategies `df`'s analyzed plan is hinted with. */
+  protected def joinHints(df: DataFrame): Seq[JoinStrategyHint] =
+    df.queryExecution.analyzed.collect { case h: ResolvedHint => h.hints.strategy }.flatten
+
+  /** The far side of a size-gated join hint: `df` rebuilt from its
+    * analyzed plan with every hint removed, collected by `f` with Spark's
+    * automatic broadcast joins off (static and adaptive), so no join of it
+    * broadcasts.
+    */
+  protected def unhinted[T](df: DataFrame)(f: DataFrame => T): T = {
+    val plan = df.queryExecution.analyzed.transform { case h: ResolvedHint => h.child }
+    val keys = Seq(SQLConf.AUTO_BROADCASTJOIN_THRESHOLD.key,
+      SQLConf.ADAPTIVE_AUTO_BROADCASTJOIN_THRESHOLD.key)
+    val old = keys.map(k => k -> spark.conf.getOption(k))
+    keys.foreach(spark.conf.set(_, "-1"))
+    try f(GraftSqlBridge.ofRows(spark, plan))
+    finally old.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
   }
 
   // Spark sizes its generated-class cache from the conf active at the

@@ -67,16 +67,16 @@ class TextOpsSpec extends SparkSpec {
       spark.sql("SELECT graft_rolling_hash('a', 'b')").collect()
     }
     assert(e2.getMessage.contains("graft_rolling_hash"))
-    // a non-foldable model and an item of neither accepted type fail at
-    // analysis too, naming the function
+    // a non-foldable model and a wrong-typed argument fail at analysis
+    // too, naming the function
     val e3 = intercept[org.apache.spark.sql.AnalysisException] {
       spark.sql("SELECT graft_matvec_q(m, array(1L)) FROM VALUES (array(array(1L))) AS t(m)")
     }
     assert(e3.getMessage.contains("graft_matvec_q"), e3.getMessage)
     val e4 = intercept[org.apache.spark.sql.AnalysisException] {
-      spark.sql("SELECT graft_bloom_contains(X'00', 1)")
+      spark.sql("SELECT graft_simhash64(X'00')")
     }
-    assert(e4.getMessage.contains("graft_bloom_contains"), e4.getMessage)
+    assert(e4.getMessage.contains("graft_simhash64"), e4.getMessage)
   }
 
   test("rolling hash expression matches a reference fold") {
@@ -130,7 +130,7 @@ class TextOpsSpec extends SparkSpec {
       "a\tb\nc", "tab\tonly", "\ta", "a\t", "ab12cd", "1 22 333",
       "héllo wörld", "日本語 テスト",
       "é", "𝄞 note", // 𝄞: a supplementary code point
-      "a!b?c", "!!!", "a  -  b", "line1\r\nline2vt", "ﬁß")
+      "a!b?c", "!!!", "a  -  b", "line1\r\nline2\u000Bvt", "ﬁß")
     val docs = Tables.documents(spark, sfDir).select(col("text"))
       .unionByName(crafted.toDF("text"))
     val bad = docs.select(
@@ -200,14 +200,11 @@ class TextOpsSpec extends SparkSpec {
     // literal must fold to an inert model, not NPE at plan-compile time
     val rows = Seq(Tuple1("abc")).toDF("t")
       .select(
-        call_function("graft_bloom_contains",
-          lit(null).cast("binary"), col("t")).as("b"),
         call_function("graft_matvec_q",
           lit(null).cast("array<array<bigint>>"),
           typedlit(Array(1L, 2L))).as("m"))
       .collect()
-    assert(rows(0).isNullAt(0), "null bloom must yield null, not crash")
-    assert(rows(0).isNullAt(1), "null matrix must yield null, not crash")
+    assert(rows(0).isNullAt(0), "null matrix must yield null, not crash")
   }
 
   test("identical texts share fingerprints") {
@@ -298,69 +295,35 @@ class TextOpsSpec extends SparkSpec {
     assert(rows.exists(_.getAs[Boolean]("contaminated")))
   }
 
+  test("decontaminate: the eval-join hint broadcasts at EvalBroadcastMaxDocs eval docs, merges one past it") {
+    import org.apache.spark.sql.catalyst.plans.logical.{BROADCAST, SHUFFLE_MERGE}
+    val gate = TextOps.EvalBroadcastMaxDocs
+    val df = spark.range(3).toDF("ng")
+    assert(joinHints(TextOps.evalJoinHint(gate)(df)) == Seq(BROADCAST))
+    assert(joinHints(TextOps.evalJoinHint(gate + 1)(df)) == Seq(SHUFFLE_MERGE))
+  }
+
   test("decontaminate: shuffled-semi-join branch (huge eval) equals broadcast branch") {
-    // default threshold → broadcast branch; both thresholds 0 → every
-    // eval set counts as too big for broadcast AND bloom → the plain
-    // sort-merge tier (the 100 TB fallback). Same rows out.
-    val bcast = TextOps.decontaminate(spark, sfDir).collect()
-    val shuffled = TextOps.decontaminate(spark, sfDir,
-      maxBroadcastEvalDocs = 0L, maxBloomEvalDocs = 0L)
-    assert(!shuffled.queryExecution.executedPlan.toString
-      .contains("BloomKernel"),
-      "forced sort-merge tier must not apply the bloom prefilter")
-    // the forced branch must really drop the broadcast hint on the
-    // N-GRAM joins (the vocab-sized ones). The final doc_id outer join of
-    // two doc-grain aggregates may still auto-broadcast — that is size
-    // estimation doing its job, not the contract under test. (AQE may
-    // also convert the ng shuffle back to broadcast AT RUNTIME on tiny
-    // test data — also fine — so assert on the static plan.)
-    val plan = shuffled.queryExecution.executedPlan.toString
-    val badLines = plan.linesIterator
-      .filter(l => l.contains("BroadcastHashJoin") && l.contains("[ng#")).toSeq
-    assert(badLines.isEmpty,
-      s"shuffled branch still statically broadcasts an ng join:\n${badLines.mkString("\n")}")
+    // under the gate → broadcast branch; the far side (the 100 TB
+    // fallback) is the same plan with its hints stripped and nothing
+    // broadcast by size, so every join is a shuffled one. Same rows out.
+    val hinted = TextOps.decontaminate(spark, sfDir)
+    assert(joinHints(hinted).nonEmpty, "under the gate the eval vocab must be hinted")
     def key(r: org.apache.spark.sql.Row) =
       (r.getAs[Long]("doc_id"), r.getAs[Long]("n_ngrams"), r.getAs[Long]("n_hits"),
         r.getAs[Double]("contamination_frac"), r.getAs[Boolean]("contaminated"))
-    assert(shuffled.collect().map(key).toSet == bcast.map(key).toSet,
-      "branches disagree")
-  }
-
-  test("decontaminate: bloom-prefilter tier equals broadcast branch and really prefilters") {
-    // broadcast cap 0 + bloom cap high → the middle tier: bloom prefilter
-    // then exact sort-merge. False positives must be scrubbed by the
-    // exact join → identical rows to the broadcast branch.
-    val bloomed = TextOps.decontaminate(spark, sfDir,
-      maxBroadcastEvalDocs = 0L, maxBloomEvalDocs = Long.MaxValue)
-    val plan = bloomed.queryExecution.executedPlan.toString
-    assert(plan.contains("BloomKernel"),
-      s"bloom tier must apply the BloomContains prefilter:\n$plan")
-    assert(!plan.linesIterator.exists(l =>
-      l.contains("BroadcastHashJoin") && l.contains("[ng#")),
-      "bloom tier must not statically broadcast an ng join")
-    def key(r: org.apache.spark.sql.Row) =
-      (r.getAs[Long]("doc_id"), r.getAs[Long]("n_ngrams"), r.getAs[Long]("n_hits"),
-        r.getAs[Double]("contamination_frac"), r.getAs[Boolean]("contaminated"))
-    val bcast = TextOps.decontaminate(spark, sfDir).collect()
-    assert(bloomed.collect().map(key).toSet == bcast.map(key).toSet,
-      "bloom tier disagrees with broadcast branch")
-  }
-
-  test("bloom-contains kernel: no false negatives, null stays null") {
-    import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
-    val bf = org.apache.spark.util.sketch.BloomFilter.create(100, 0.01)
-    Seq("alpha", "beta", "gamma").foreach(bf.putString)
-    val bos = new java.io.ByteArrayOutputStream()
-    bf.writeTo(bos)
-    val rows = Seq(Option("alpha"), Option("beta"), Option("zzz-not-inserted"), None)
-      .toDF("s")
-      .select(col("s"),
-        call_function("graft_bloom_contains", lit(bos.toByteArray), col("s")).as("hit"))
-      .collect()
-    assert(rows(0).getBoolean(1) && rows(1).getBoolean(1),
-      "inserted items must always hit (no false negatives)")
-    assert(rows(3).isNullAt(1), "null item must yield null")
+    val shuffled = unhinted(hinted) { df =>
+      // the far side must really drop the broadcast on the N-GRAM joins
+      // (the vocab-sized ones). AQE may convert a shuffle to a broadcast
+      // AT RUNTIME on tiny test data, so assert on the static plan
+      val plan = df.queryExecution.executedPlan.toString
+      val badLines = plan.linesIterator
+        .filter(l => l.contains("BroadcastHashJoin") && l.contains("[ng#")).toSeq
+      assert(badLines.isEmpty,
+        s"shuffled branch still statically broadcasts an ng join:\n${badLines.mkString("\n")}")
+      df.collect().map(key).toSet
+    }
+    assert(shuffled == hinted.collect().map(key).toSet, "branches disagree")
   }
 
   test("pii kernels: crafted strings match the DuckDB-verified counts/deltas") {
@@ -516,7 +479,7 @@ class TextOpsSpec extends SparkSpec {
     val crafted = Seq(
       "slow slow BIG  merge", "SLOW\tbig\nMERGE", " \t ", "", "one",
       "slowx big-ish mergers", "снег slow 雪 big", "slow.big,merge",
-      "  slow  ", "ab slow") // \x0B is NOT in the ws class
+      "  slow  ", "a\u000Bb slow") // \x0B is NOT in the ws class
     val corpus = Tables.documents(spark, sfDir).select("text")
       .where(col("text").isNotNull).as[String].collect().toSeq
     val words = split(graft.operators.Text.norm(col("text")), " ")
@@ -1241,13 +1204,13 @@ class TextOpsSpec extends SparkSpec {
     import spark.implicits._
     val crafted = Seq(
       "", " ", "   ", "a", "A", " a ", "  A  B  ",
-      "\ta\t", "\t x \n", "a\tb", "a\nb", "a\rb", "a\fb", "ab",
+      "\ta\t", "\t x \n", "a\tb", "a\nb", "a\rb", "a\fb", "a\u000Bb",
       "a \t\n\r\f b", "\t\t", "\n\n\n", " \t ", "\f\f",
       "MiXeD CaSe WoRdS", "ABCXYZ abcxyz 0129 _-!",
       "é À Ü ß", "ヴィクター  ユーゴー", "x y", "😀  😀",
       "á combining", "İ dotted-I passthrough",
       "ends with tab\t", "\fstarts with ff", "many   spaces   inside",
-      "CRLF\r\nline", "null-ish NUL   byte", "∂f/∂x ≠ 0")
+      "CRLF\r\nline", "null-ish NUL \u0000 byte", "∂f/∂x ≠ 0")
     val corpus = Tables.documents(spark, sfDir).select("text")
       .where(col("text").isNotNull).as[String].collect().toSeq
     val rows = (crafted ++ corpus).toDF("text")
