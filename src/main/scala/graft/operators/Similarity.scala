@@ -2814,7 +2814,7 @@ object Similarity {
     df => if (nMembers <= MemberBroadcastMaxRows) broadcast(df) else df
 
   /** [[memberHint]] for a label table, counted — ONE spelling for every
-    * consumer of the cluster-member tables ([[dedupSurvivorsBestFrame]],
+    * consumer of the cluster-member tables ([[qDedupSurvivorsBest]],
     * [[weightsOverLabels]], [[Curation.stagedFlags]]). The tables are
     * memoized and materialized, so the count is a cache read (the
     * components() precedent).
@@ -2822,8 +2822,25 @@ object Similarity {
   private[graft] def gatedMemberBroadcast(labels: DataFrame): DataFrame => DataFrame =
     memberHint(labels.count())
 
-  /** Quality-aware survivor corpus; see [[qDedupSurvivorsBest]]. */
-  private[graft] def dedupSurvivorsBestFrame(s: SparkSession, d: String): DataFrame = {
+  /** Quality-aware near-dup survivor corpus (rows-only; spec pins the
+    * partition identity with [[qDedupSurvivors]] and per-cluster argmax
+    * selection): [[qDedupSurvivors]] keeps each cluster's MIN doc_id —
+    * the reference's policy, blind to content; production curation keeps
+    * the cluster's BEST member (CCNet/FineWeb keep-longest lineage).
+    * Keeper = argmax quality_score (the [[graft.operators.TextOps]]
+    * composite), ties and unscoreable (null-text) members falling back
+    * to min doc_id — an all-null cluster selects exactly the min-id
+    * keeper, so this strictly generalizes the reference policy.
+    *
+    * Scale shape: the member semi-join keeps quality regexes off the
+    * non-member corpus; its small side broadcasts only under the
+    * measured [[MemberBroadcastMaxRows]] gate (unhinted above — see the
+    * gate's scaladoc for why a forced hint is a driver bomb on
+    * CCNet/FineWeb-rate corpora); the per-cluster argmax is one
+    * map-side-combinable struct-max aggregate; the final anti-join
+    * streams the corpus against the non-keeper set.
+    */
+  val qDedupSurvivorsBest: Q = Q.rowsOnly("q_dedup_survivors_best") { (s, d) =>
     val table = dedupClusterLabels(s, d)
     val labels = table.select(col("id").as("doc_id"), col("label"))
     val gated = gatedMemberBroadcast(table)
@@ -2846,28 +2863,6 @@ object Similarity {
     Tables.documents(s, d).select("doc_id")
       .join(nonKeepers, Seq("doc_id"), "left_anti")
       .orderBy("doc_id")
-  }
-
-  /** Quality-aware near-dup survivor corpus (rows-only; spec pins the
-    * partition identity with [[qDedupSurvivors]] and per-cluster argmax
-    * selection): [[qDedupSurvivors]] keeps each cluster's MIN doc_id —
-    * the reference's policy, blind to content; production curation keeps
-    * the cluster's BEST member (CCNet/FineWeb keep-longest lineage).
-    * Keeper = argmax quality_score (the [[graft.operators.TextOps]]
-    * composite), ties and unscoreable (null-text) members falling back
-    * to min doc_id — an all-null cluster selects exactly the min-id
-    * keeper, so this strictly generalizes the reference policy.
-    *
-    * Scale shape: the member semi-join keeps quality regexes off the
-    * non-member corpus; its small side broadcasts only under the
-    * measured [[MemberBroadcastMaxRows]] gate (unhinted above — see the
-    * gate's scaladoc for why a forced hint is a driver bomb on
-    * CCNet/FineWeb-rate corpora); the per-cluster argmax is one
-    * map-side-combinable struct-max aggregate; the final anti-join
-    * streams the corpus against the non-keeper set.
-    */
-  val qDedupSurvivorsBest: Q = Q.rowsOnly("q_dedup_survivors_best") {
-    (s, d) => dedupSurvivorsBestFrame(s, d)
   }
 
   /** Per-label centroid of the embedding corpus (the class-prototype /
@@ -2941,11 +2936,8 @@ object Similarity {
       .orderBy("doc_id")
   }
 
-  private[graft] def dedupWeightsFrame(s: SparkSession, d: String): DataFrame =
-    weightsOverLabels(s, d, dedupClusterLabels(s, d))
-
   val qDedupWeights: Q = Q.rowsOnly("q_dedup_weights") { (s, d) =>
-    dedupWeightsFrame(s, d)
+    weightsOverLabels(s, d, dedupClusterLabels(s, d))
   }
 
   /** Soft-dedup weights over the EXACT n-gram pair graph, with a

@@ -197,11 +197,15 @@ class AssemblySpec extends SparkSpec {
     dir
   }
 
+  /** The paths above the vocabulary gate, per lake, run once. */
+  private lazy val distributed = Seq(sfDir, astralDir)
+    .map(d => d -> Assembly.bpeDistributed(spark, d)).toMap
+
   test("bpe training: distributed and driver loops land the identical merge table") {
     // the size gate must be invisible in the result — run the
     // distributed loop and compare with the gated default
     for (dir <- Seq(sfDir, astralDir)) {
-      val dist = Assembly.bpeDistributed(spark, dir)._1
+      val dist = distributed(dir)._1
       assert(dist == gotMerges(dir).toSeq,
         s"$dir: physical strategy changed the merge table")
     }
@@ -251,10 +255,10 @@ class AssemblySpec extends SparkSpec {
     got.foreach { case (src, n, nb, _) =>
       assert(nb >= n, s"$src: fewer BPE tokens than words") }
     // the vocab-size gate must be invisible in the result
-    assert(rows(Assembly.bpeDistributed(spark, sfDir)._2) == got,
+    assert(rows(distributed(sfDir)._2) == got,
       "distributed segmentation diverged from the driver path")
     val (astralDriver, astralDist) = (Assembly.bpeEncode(spark, astralDir),
-      Assembly.bpeDistributed(spark, astralDir)._2)
+      distributed(astralDir)._2)
     assert(rows(astralDist) == rows(astralDriver),
       "supplementary-plane words segment differently on the two paths")
     assert(astralDist.schema == astralDriver.schema)

@@ -1,7 +1,5 @@
 package graft
 
-import scala.jdk.CollectionConverters._
-
 /** A size gate is a constant read in one place, never a parameter: a
   * parameter that only a spec ever moves off its constant keeps a second,
   * untested path open to library callers. A spec reaches a gate's far side
@@ -12,7 +10,7 @@ import scala.jdk.CollectionConverters._
 class GateConstantSpec extends SparkSpec {
 
   /** A parameter named like a gate. */
-  private val gateName = raw"gate|broadcastMaxRows|\w+Threshold|max\w*Vocab|max\w*Docs".r
+  private val gateName = raw"gate|\w+MaxRows|\w+Threshold|max\w*Vocab|max\w*Docs".r
 
   /** A default that names a gate constant (`Long.MaxValue` is none). */
   private val gateConstant = raw"\b(?!MaxValue\b)\w*(?:Max|Threshold)\w*".r
@@ -77,34 +75,27 @@ class GateConstantSpec extends SparkSpec {
     val flagged = gateParams(
       """def a(s: SparkSession, d: String, gate: Long) = 1
         |def b[T](pairs: DataFrame, maxIters: Int = 20,
-        |         smallThreshold: Long = 2000000L): DataFrame = ???
+        |         edgeThreshold: Long = 2000000L, memberMaxRows: Long): DataFrame = ???
         |def c(s: SparkSession)(rows: Long = Similarity.MemberBroadcastMaxRows) = 2
-        |def d(s: SparkSession, maxDriverVocab: Long, maxBloomEvalDocs: Long) = 3
+        |def d(s: SparkSession, maxWordVocab: Long, maxHeldDocs: Long) = 3
         |def e(f: Long => Long = identity, n: Long = Long.MaxValue, threshold: Double = 0.5,
         |      dist: => DataFrame, xs: Seq[(Int, Int)] = Seq((1, 2))) = 4
         |""".stripMargin)
     assert(flagged == List(
       "def a: gate: Long",
-      "def b: smallThreshold: Long = 2000000L",
+      "def b: edgeThreshold: Long = 2000000L",
+      "def b: memberMaxRows: Long",
       "def c: rows: Long = Similarity.MemberBroadcastMaxRows",
-      "def d: maxDriverVocab: Long",
-      "def d: maxBloomEvalDocs: Long"), flagged)
+      "def d: maxWordVocab: Long",
+      "def d: maxHeldDocs: Long"), flagged)
   }
 
   test("no def under src/main/scala takes a size gate as a parameter") {
-    val root = java.nio.file.Paths.get("src/main/scala")
-    assert(java.nio.file.Files.isDirectory(root), s"run from the repo root: $root")
-    val files = {
-      val it = java.nio.file.Files.walk(root)
-      try it.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
-      finally it.close()
-    }
     // TopK.perKey's retention rails are public API, and the spill path
     // they select is chosen per partition at run time, not from a count
     val allowed = raw"TopK\.scala: def perKey: maxRetained\w*PerPartition: .*".r
-    val offenders = files.flatMap { f =>
-      gateParams(new String(java.nio.file.Files.readAllBytes(f), "UTF-8"))
-        .map(p => s"${f.getFileName}: $p")
+    val offenders = SparkSpec.mainSources().flatMap { case (name, src) =>
+      gateParams(src).map(p => s"$name: $p")
     }.filterNot(allowed.matches)
     assert(offenders.isEmpty,
       s"size gates are constants, not parameters: ${offenders.mkString("; ")}")

@@ -4,7 +4,6 @@ import graft.functions.GraftFunctions
 import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression, Literal}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import scala.jdk.CollectionConverters._
 
 /** The one kernel wrapper ([[graft.functions.GraftKernel]]): a wrapper
   * canonicalizes to its replacement, so a folded model must compare by
@@ -51,21 +50,10 @@ class GraftKernelSpec extends SparkSpec {
     assert(a.collect().map(_.getSeq[Long](0)).toSeq == Seq(Seq(1L, 2L), Seq(3L, 4L)))
   }
 
-  /** (file name, source) of every Scala file under `src/main/scala`. */
-  private def mainSources(): List[(String, String)] = {
-    val root = java.nio.file.Paths.get("src/main/scala")
-    assert(java.nio.file.Files.isDirectory(root), s"run from the repo root: $root")
-    val it = java.nio.file.Files.walk(root)
-    try it.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
-      .map(f => (f.getFileName.toString,
-        new String(java.nio.file.Files.readAllBytes(f), "UTF-8")))
-    finally it.close()
-  }
-
   test("no doGenCode or nullSafeEval override under src/main/scala") {
     val decl = raw"override\s+(?:protected\s+)?def\s+(?:doGenCode|nullSafeEval)\b".r
     val owner = raw"(?:class|object|trait)\s+(\w+)".r
-    val offenders = mainSources().flatMap { case (name, src) =>
+    val offenders = SparkSpec.mainSources().flatMap { case (name, src) =>
       decl.findAllMatchIn(src).map { m =>
         val cls = owner.findAllMatchIn(src.substring(0, m.start)).toSeq.lastOption
         s"$name: ${cls.fold("?")(_.group(1))}"
@@ -77,10 +65,10 @@ class GraftKernelSpec extends SparkSpec {
   }
 
   test("src/main builds kernels with GraftFunctions.call, never call_function") {
-    // call_function resolves through the session's function registry, so
-    // every operator using it had to register graft's functions first;
-    // GraftFunctions.call builds the kernel directly, on any session
-    val offenders = mainSources().flatMap { case (name, src) =>
+    // call_function resolves through the session's function registry,
+    // which an operator would have to fill first; GraftFunctions.call
+    // builds the kernel directly, on any session
+    val offenders = SparkSpec.mainSources().flatMap { case (name, src) =>
       src.linesIterator.zipWithIndex.collect {
         case (line, i) if line.contains("call_function(\"graft_") => s"$name:${i + 1}"
       }

@@ -822,21 +822,22 @@ class SimilaritySpec extends SparkSpec {
     assert(joinHints(Similarity.memberHint(gate + 1)(df)).isEmpty)
   }
 
-  test("survivors-best: size-gated broadcast — both physical forms identical") {
-    // under the measured gate the member/keeper joins carry the hint; the
-    // far side (the >MemberBroadcastMaxRows web-corpus case) is the same
-    // plan unhinted, with nothing broadcast by size either. Both forms
-    // are pinned to one survivor set
-    val hinted = Similarity.dedupSurvivorsBestFrame(spark, sfDir)
+  // under the measured gate the member joins carry the hint; the far side
+  // (the >MemberBroadcastMaxRows web-corpus case) is the same plan
+  // unhinted, with nothing broadcast by size either. Both forms are
+  // pinned to one set of rows
+  for ((family, query) <- Seq("survivors-best" -> Similarity.qDedupSurvivorsBest,
+      "dedup weights" -> Similarity.qDedupWeights))
+  test(s"$family: size-gated broadcast — both physical forms identical") {
+    val hinted = query.run(spark, sfDir)
     assert(joinHints(hinted).nonEmpty, "gated-on branch lost its broadcast hint")
     val far = unhinted(hinted) { df =>
       assert(joinHints(df).isEmpty, "far side must ship unhinted")
       assert(!df.queryExecution.executedPlan.toString.contains("BroadcastHashJoin"),
         "far side still statically broadcasts a member join")
-      df.collect().map(_.getLong(0)).toSeq
+      df.collect().toSeq
     }
-    assert(hinted.collect().map(_.getLong(0)).toSeq == far,
-      "physical strategies disagree on the survivor set")
+    assert(hinted.collect().toSeq == far, "physical strategies disagree on the rows")
   }
 
   test("semantic decon: approx maxima never exceed exact; flagged recall >= 0.8") {

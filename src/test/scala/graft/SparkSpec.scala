@@ -7,6 +7,7 @@ import org.apache.spark.sql.catalyst.plans.logical.{JoinStrategyHint, ResolvedHi
 import org.apache.spark.sql.internal.{SQLConf, StaticSQLConf}
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
 /** Shared local SparkSession for all specs. */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
@@ -55,6 +56,18 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkSpec {
+  /** (file name, source) of every Scala file under `src/main/scala`, for
+    * the specs that scan the sources for a banned spelling.
+    */
+  def mainSources(): List[(String, String)] = {
+    val root = java.nio.file.Paths.get("src/main/scala")
+    assert(Files.isDirectory(root), s"run from the repo root: $root")
+    val it = Files.walk(root)
+    try it.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+      .map(f => (f.getFileName.toString, new String(Files.readAllBytes(f), "UTF-8")))
+    finally it.close()
+  }
+
   /** Deletes `root` and everything under it; a missing root is a no-op. */
   def deleteTree(root: Path): Unit =
     if (Files.exists(root)) {
