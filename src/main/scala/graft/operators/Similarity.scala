@@ -71,36 +71,31 @@ object Similarity {
       |  FROM toks, UNNEST(generate_series(1, len(w)-2)) AS t(i)
       |  WHERE len(w) >= 3)""".stripMargin
 
-  /** Exact pairwise Jaccard over candidate pairs drawn from an inverted-
-    * index DataFrame of (doc_id, sh): intersection via groupBy on the pair,
-    * union from per-doc cardinalities. jaccard is one double division of
-    * exact integers.
-    */
   /** Shared candidate-pair machinery over a (doc_id, sh_h) shingle
-    * index: shared-shingle intersection counts (x) with both endpoints'
-    * post-prune cardinalities (na, nb) attached — the ONE definition
-    * both the symmetric Jaccard and the directed containment score read,
-    * so the candidate join/df-cap interaction cannot drift between them.
-    * `directed = false` emits each unordered pair once (id_a < id_b);
-    * `true` emits both orders (a ≠ b).
+    * index: one row per unordered pair (id_a < id_b) with its
+    * shared-shingle intersection count (x) and both endpoints'
+    * post-prune cardinalities (na, nb) — the ONE definition both the
+    * symmetric Jaccard and the directed containment score read (the
+    * directed view mirrors it, [[keptPairStatsDirected]]), so the
+    * candidate join/df-cap interaction cannot drift between them.
     */
-  private def shinglePairStats(sh: DataFrame, directed: Boolean): DataFrame = {
+  private def shinglePairStats(sh: DataFrame): DataFrame = {
     val card = sh.groupBy("doc_id").agg(count(lit(1)).as("n"))
     val a = sh.select(col("doc_id").as("id_a"), col("sh_h"))
     val b = sh.select(col("doc_id").as("id_b"), col("sh_h"))
-    val pred =
-      if (directed) col("id_a") =!= col("id_b") else col("id_a") < col("id_b")
-    a.join(b, Seq("sh_h")).filter(pred)
+    a.join(b, Seq("sh_h")).filter(col("id_a") < col("id_b"))
       .groupBy("id_a", "id_b").agg(count(lit(1)).as("x"))
       .join(card.select(col("doc_id").as("id_a"), col("n").as("na")), "id_a")
       .join(card.select(col("doc_id").as("id_b"), col("n").as("nb")), "id_b")
   }
 
-  private def jaccardPairs(sh: DataFrame, tau: Double): DataFrame =
-    shinglePairStats(sh, directed = false)
-      .select(col("id_a"), col("id_b"),
+  /** Exact Jaccard (τ = 0.5) of every pair of a [[shinglePairStats]]
+    * table: one double division of exact integers per pair.
+    */
+  private def jaccardPairs(stats: DataFrame): DataFrame =
+    stats.select(col("id_a"), col("id_b"),
         (col("x").cast("double") / (col("na") + col("nb") - col("x"))).as("jaccard"))
-      .filter(col("jaccard") >= tau)
+      .filter(col("jaccard") >= 0.5)
 
   /** Stop-shingle document-frequency cap for the exact Jaccard join: a
     * shingle present in more than this many documents contributes C(df,2)
@@ -121,7 +116,7 @@ object Similarity {
     * must compare against this, not the stop-shingle-capped query.
     */
   private[graft] def exactJaccardUnpruned(s: SparkSession, d: String): DataFrame =
-    jaccardPairs(shingles(s, d), 0.5)
+    jaccardPairs(shinglePairStats(shingles(s, d)))
 
   /** N-gram Jaccard similarity join (τ=0.5): inverted shingle index →
     * stop-shingle df cap → shared-shingle candidate pairs → exact Jaccard.
@@ -154,12 +149,7 @@ object Similarity {
     // the SHARED undirected pair-stats table (already id_a < id_b grain)
     // — x/na/nb are direction-independent, so the corpus pays the
     // shingle-keyed candidate join once across both n-gram operators
-    keptPairStats(s, d)
-      .select(col("id_a"), col("id_b"),
-        (col("x").cast("double") / (col("na") + col("nb") - col("x")))
-          .as("jaccard"))
-      .filter(col("jaccard") >= 0.5)
-      .orderBy("id_a", "id_b")
+    jaccardPairs(keptPairStats(s, d)).orderBy("id_a", "id_b")
   }
 
   /** Containment threshold for [[qNgramContainment]] — the partial-copy
@@ -233,7 +223,7 @@ object Similarity {
     */
   private[graft] def keptPairStats(s: SparkSession, d: String): DataFrame =
     SessionCache.persisted(s, d, "shingle_pair_stats")(
-      shinglePairStats(keptShingles(s, d), directed = false))
+      shinglePairStats(keptShingles(s, d)))
 
   /** The DIRECTED (a ≠ b, both orders) view over [[keptPairStats]]:
     * cache ∪ mirror. Row-for-row equal to the old directed
@@ -884,6 +874,20 @@ object Similarity {
     */
   private[graft] val SimhashMemberBroadcastMaxDocs = 1000000L
 
+  /** The half-probe join's hint decision: its exact-key side broadcasts
+    * at or below [[SimhashHalfBroadcastMaxFps]] fingerprints, unhinted
+    * above it.
+    */
+  private[graft] def simhashHalfKeyHint(nFp: Long): DataFrame => DataFrame =
+    df => if (nFp <= SimhashHalfBroadcastMaxFps) broadcast(df) else df
+
+  /** The expansion joins' hint decision: each member map broadcasts at or
+    * below [[SimhashMemberBroadcastMaxDocs]] fingerprints, unhinted above
+    * it.
+    */
+  private[graft] def simhashMemberHint(nFp: Long): DataFrame => DataFrame =
+    df => if (nFp <= SimhashMemberBroadcastMaxDocs) broadcast(df) else df
+
   private[graft] def simhashHalfKeys(fp: DataFrame, probe: Boolean): DataFrame = {
     val lo = col("fp").bitwiseAND(lit(0xffffffffL))
     val hi = shiftrightunsigned(col("fp"), 32)
@@ -982,8 +986,7 @@ object Similarity {
     // stream side must pre-spread on a salt instead; at that scale the
     // pair-flood materializer is the wrong consumer anyway (clusters —
     // [[qDedupClusters]] — are the lake-scale contract).
-    def gatedM(df: DataFrame): DataFrame =
-      if (nFp <= SimhashMemberBroadcastMaxDocs) broadcast(df) else df
+    val gatedM = simhashMemberHint(nFp)
     // hamming-0: all pairs within an identical-fp group (pure expansion)
     val same = m.as("x").join(gatedM(m.as("y")),
         col("x.fp") === col("y.fp") && col("x.doc_id") < col("y.doc_id"))
@@ -1000,8 +1003,7 @@ object Similarity {
       .select(col("fp").as("fp_b"), col("hk"))
     val fpPairs = simhashHalfKeys(dfp, probe = true)
       .select(col("fp").as("fp_a"), col("hk"))
-      .join(if (nFp <= SimhashHalfBroadcastMaxFps) broadcast(exactKeys)
-            else exactKeys, Seq("hk"))
+      .join(simhashHalfKeyHint(nFp)(exactKeys), Seq("hk"))
       .filter(col("fp_a") < col("fp_b"))
       .select("fp_a", "fp_b").distinct()
       .withColumn("hamming",
@@ -1062,6 +1064,66 @@ object Similarity {
   private def cosine(dot: Column, n2a: Column, n2b: Column): Column =
     dot.cast("double") / (sqrt(n2a.cast("double")) * sqrt(n2b.cast("double")))
 
+  // The embedding-neighbor family below shares one two-stage shape (the
+  // REPOSE / incremental top-k split): a candidate stage (brute force,
+  // LSH collision counts, IVF lists or PQ distances) yields query/corpus
+  // pairs, and one exact stage scores and ranks them. Each stage is
+  // spelled once here.
+
+  /** Quantized rows as the query side of a rescore: (query_id, qq, n2q),
+    * then `extra`.
+    */
+  private def queryVecs(q: DataFrame, extra: Column*): DataFrame =
+    q.select(Seq(col("vec_id").as("query_id"), col("qv").as("qq"),
+      col("n2").as("n2q")) ++ extra: _*)
+
+  /** The exact cosine of a query vector (qq, n2q) and a corpus vector
+    * (qv, n2).
+    */
+  private def queryCosine: Column =
+    cosine(GraftFunctions.call("graft_dot_q", col("qq"), col("qv")),
+      col("n2q"), col("n2"))
+
+  /** The exact stage over candidate (query_id, vec_id) ids: the corpus
+    * vector joins on vec_id and the [[queryVecs]] frame `queries` on
+    * query_id, so the candidate stage shuffles three longs, never a
+    * vector. Emits (query_id, neighbor_id, cosine).
+    */
+  private def rescored(q: DataFrame, candIds: DataFrame,
+      queries: DataFrame): DataFrame =
+    candIds.join(q.select(col("vec_id"), col("qv"), col("n2")), "vec_id")
+      .join(queries, "query_id")
+      .select(col("query_id"), col("vec_id").as("neighbor_id"),
+        queryCosine.as("cosine"))
+
+  /** The rank stage: the bounded-heap top-5 per query (r14 — the scored
+    * frame never passes a full partition sort), then a rank window over
+    * ≤ 5 rows per key. Same rows as a row_number ≤ 5 form: top-5 under
+    * (cosine DESC, neighbor_id) is exactly the rank ≤ 5 set, and the
+    * window re-derives rank under the identical order.
+    */
+  private def top5Ranked(scored: DataFrame): DataFrame =
+    TopK.perKey(scored, Seq("query_id"), "cosine", "neighbor_id", 5)
+      .withColumn("rank", row_number().over(
+        Window.partitionBy("query_id")
+          .orderBy(col("cosine").desc, col("neighbor_id"))))
+      .select("query_id", "neighbor_id", "rank", "cosine")
+      .orderBy("query_id", "rank")
+
+  /** Every corpus vector of `q` scored against a broadcast [[queryVecs]]
+    * sample, self-pairs dropped: (query_id, vec_id, c) — the linear S·n
+    * brute force of the index-health truth and the geometry probe.
+    */
+  private def sampleScored(q: DataFrame, sample: DataFrame): DataFrame =
+    q.join(broadcast(sample), col("vec_id") =!= col("query_id"))
+      .select(col("query_id"), col("vec_id"), queryCosine.as("c"))
+
+  /** A neighbor report with no rows (the day-one empty lake). */
+  private def noNeighbors(q: DataFrame): DataFrame =
+    q.filter(lit(false))
+      .select(col("vec_id").as("query_id"), col("vec_id").as("neighbor_id"),
+        lit(1).as("rank"), lit(0.0).as("cosine"))
+
   /** Embedding cosine near-dup (τ=0.4), exact within label blocks — the
     * guarded correctness baseline (SURVEY §4.4); q_ann_lsh is the unblocked
     * scale path. Quantized integer dots → bit-identical to the oracle.
@@ -1121,25 +1183,10 @@ object Similarity {
        |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin
   ) { (s, d) =>
     val q = quantized(s, d)
-    val queries = q.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("query_id"), col("qv").as("qq"), col("n2").as("n2q"))
-    // bounded-heap top-5 per query (the qKnnJoinIvf composition, r14):
-    // the corpus-wide scored frame never passes a full partition sort —
-    // the rank window then runs over ≤5 rows per key. Same rows as the
-    // oracle's row_number form: top-5 under (cosine DESC, neighbor_id)
-    // is exactly the rank ≤ 5 set, and the tiny window re-derives rank
-    // under the identical order.
-    val scored = q.crossJoin(broadcast(queries))
+    top5Ranked(q.crossJoin(broadcast(queryVecs(q.filter(col("vec_id") < 10))))
       .filter(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        cosine(GraftFunctions.call("graft_dot_q", col("qq"), col("qv")),
-          col("n2q"), col("n2")).as("cosine"))
-    TopK.perKey(scored, Seq("query_id"), "cosine", "neighbor_id", 5)
-      .withColumn("rank", row_number().over(
-        Window.partitionBy("query_id")
-          .orderBy(col("cosine").desc, col("neighbor_id"))))
-      .select("query_id", "neighbor_id", "rank", "cosine")
-      .orderBy("query_id", "rank")
+        queryCosine.as("cosine")))
   }
 
   /** Deterministic pseudo-random hyperplanes (splitmix64 → integer
@@ -1196,7 +1243,7 @@ object Similarity {
     * HARD-CAPPING the exact-evaluation budget bounds candidate fraction
     * by construction — the recall/selectivity knob the raw candidate
     * union lacks. The fractional budget is a POINT-QUERY cost dial only:
-    * the corpus-wide self-join uses the constant [[KnnShortlist]].
+    * the corpus-wide self-join uses [[knnBudget]].
     */
   private[operators] val ShortlistMin = 75
   private[operators] val ShortlistFrac = 0.15
@@ -1248,8 +1295,6 @@ object Similarity {
         }
       }
     })
-  private[graft] def hyperplanes: Array[Array[Long]] =
-    hyperplanesFor(BitsPerTable)
 
   /** LSH-bucketed ANN (rows-only; spec pins recall ≥ 0.8 AND candidate
     * fraction ≤ 0.2): random-hyperplane sign buckets over 32 tables ×
@@ -1282,36 +1327,10 @@ object Similarity {
   private[graft] def annLshTop5(s: SparkSession, d: String,
       queryFilter: Column): DataFrame = {
     val q = quantized(s, d)
-    // dedup candidate (query, neighbor) ids FIRST — the shortlist
-    // shuffles three longs, not 64-element vectors — then rejoin the
-    // cached quantized index for the exact pass
-    val candIds = annLshShortlist(s, d, queryFilter = queryFilter)
-      .select("query_id", "vec_id")
-    val candidates = candIds
-      .join(q.select(col("vec_id"), col("qv"), col("n2")), "vec_id")
-      .join(broadcast(q.filter(queryFilter).select(
-        col("vec_id").as("query_id"), col("qv").as("qq"), col("n2").as("n2q"))),
-        "query_id")
-    // bounded-heap top-5 per query + ≤5-row rank window (the qKnnJoinIvf
-    // composition, r14) — no full sort of the candidate set
-    val scored = candidates
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        cosine(GraftFunctions.call("graft_dot_q", col("qq"), col("qv")),
-          col("n2q"), col("n2")).as("cosine"))
-    TopK.perKey(scored, Seq("query_id"), "cosine", "neighbor_id", 5)
-      .withColumn("rank", row_number().over(
-        Window.partitionBy("query_id")
-          .orderBy(col("cosine").desc, col("neighbor_id"))))
-      .select("query_id", "neighbor_id", "rank", "cosine")
-      .orderBy("query_id", "rank")
+    top5Ranked(rescored(q, annLshShortlist(s, d, queryFilter).select("query_id", "vec_id"),
+      broadcast(queryVecs(q.filter(queryFilter)))))
   }
 
-  /** The LSH candidate shortlist: (query_id, vec_id, n_tables) — the top
-    * `max(ShortlistMin, ShortlistFrac · corpus)` corpus vectors per query
-    * by table-collision count (ties broken by vec_id — deterministic).
-    * Package-visible so the spec can assert the candidate-fraction cap
-    * directly.
-    */
   // the whole (32·bits)×64 hyperplane bank rides the plan as ONE literal
   // into the codegen'd graft_matvec_q kernel (32·bits dots per vector in
   // two generated loops). The earlier formulation shipped 256 separate
@@ -1360,31 +1379,20 @@ object Similarity {
           .as(Seq("table_id", "bucket")))
     }
 
-  private[graft] def annLshShortlist(s: SparkSession, d: String,
-      queryFilter: Column = col("vec_id") < 10,
-      broadcastProbes: Boolean = true,
-      budget: Option[Int] = None,
-      symmetric: Boolean = false,
-      probeBits: Int = ProbeBits,
-      candidateFilter: Column = lit(true)): DataFrame = {
-    val q = quantized(s, d)
+  /** The multiprobe rows (query_id, table_id, bucket) of the
+    * `queryFilter` queries. Query-directed multiprobe, QUERY side only
+    * (the corpus index is untouched): per table keep the signed dots,
+    * rank bits by |dot| ascending (least confident first) and probe every
+    * flip of ≤ 2 of the `probeBits` least-confident bits — 1 + m + C(m,2)
+    * probe rows per (query, table), targeted where a near neighbor most
+    * likely fell across. A null-vector query has no meaningful signs:
+    * dropped (like IVF).
+    */
+  private def lshProbes(s: SparkSession, d: String, queryFilter: Column,
+      probeBits: Int): DataFrame = {
     val bits = lshBits(s, d)
-    val dots = bankDots(bits)
-    // candidateFilter restricts the CORPUS side of the bucket join (e.g.
-    // q_decontaminate_semantic probes eval queries against train-only
-    // candidates) BEFORE the per-query top-b cut — filtering the
-    // shortlist afterwards would let out-of-scope collisions crowd
-    // in-scope candidates out of the budget. The shared bucket index is
-    // untouched; the filter rides its scan.
-    val withBuckets = lshBuckets(s, d).filter(candidateFilter)
-    // query-directed multiprobe, QUERY side only (the corpus index is
-    // untouched): per table keep the signed dots, rank bits by |dot|
-    // ascending (least confident first) and probe every flip of ≤ 2 of
-    // the ProbeBits least-confident bits — 22 probe rows per (query,
-    // table), targeted where a near neighbor most likely fell across.
-    // A null-vector query has no meaningful signs: dropped (like IVF).
-    val qs = q.filter(queryFilter && col("qv").isNotNull)
-      .select(col("vec_id").as("query_id"), dots.as("ds256"))
+    quantized(s, d).filter(queryFilter && col("qv").isNotNull)
+      .select(col("vec_id").as("query_id"), bankDots(bits).as("ds256"))
       .select(col("query_id"), posexplode(expr(
         s"transform(sequence(0, ${Tables_ - 1}), t -> " +
           s"slice(ds256, t * $bits + 1, $bits))"))
@@ -1404,39 +1412,56 @@ object Similarity {
           s"shiftleft(1L, fl[i]) + shiftleft(1L, fl[j])))))")))
       .select(col("query_id"), col("table_id"),
         col("bucket").bitwiseXOR(col("mask")).as("bucket"))
-    // a corpus vector occupies ONE bucket per table and probe buckets are
-    // distinct within a table, so the join hits each (query, vec, table)
-    // at most once: count(*) IS the table-collision count. A small query
-    // set broadcasts its probe rows; a corpus-wide query set (the k-NN
-    // self-join) shuffles both sides on (table_id, bucket) — the probe
-    // table is |queries|·T·22 narrow rows, linear in the corpus.
-    val probeSide = if (broadcastProbes) broadcast(qs) else qs
-    val rawHits = withBuckets.join(probeSide, Seq("table_id", "bucket"))
+  }
+
+  /** The bucket index joined to `probes` on (table_id, bucket), self-hits
+    * dropped. A corpus vector occupies ONE bucket per table and probe
+    * buckets are distinct within a table, so the join hits each (query,
+    * vec, table) at most once: a pair's row count IS its table-collision
+    * count.
+    */
+  private def lshHits(s: SparkSession, d: String, probes: DataFrame): DataFrame =
+    lshBuckets(s, d).join(probes, Seq("table_id", "bucket"))
       .filter(col("vec_id") =!= col("query_id"))
-    // self-join (symmetric): fold hits to UNORDERED pairs before the
-    // count — c_sym(a,b) = c(a→b) + c(b→a) sums both probe directions'
-    // collision evidence (2× the ranking signal at the same join
-    // volume, which is what lets the constant KnnShortlist budget hold
-    // recall), and the aggregate carries half the groups; the pair
-    // counts are mirrored back per query AFTER aggregation (tiny).
-    val hits =
-      if (symmetric) {
-        val sym = rawHits
-          .select(least(col("query_id"), col("vec_id")).as("id_a"),
-            greatest(col("query_id"), col("vec_id")).as("id_b"))
-          .groupBy("id_a", "id_b").agg(count(lit(1)).as("n_tables"))
-        sym.select(col("id_a").as("query_id"), col("id_b").as("vec_id"), col("n_tables"))
-          .unionByName(sym.select(col("id_b").as("query_id"),
-            col("id_a").as("vec_id"), col("n_tables")))
-      } else
-        rawHits.groupBy("query_id", "vec_id").agg(count(lit(1)).as("n_tables"))
-    // default budget probe: corpus count off the already-materialized
-    // quantized cache (same cheap-probe pattern as decontaminate's eval
-    // count) — the point-query cost dial; the self-join passes the
-    // constant KnnShortlist instead
-    val b = budget.getOrElse(math.max(ShortlistMin,
-      math.ceil(q.count() * ShortlistFrac).toInt))
+
+  /** The LSH candidate shortlist of the `queryFilter` point queries:
+    * (query_id, vec_id, n_tables) — the top `max(ShortlistMin,
+    * ShortlistFrac · corpus)` corpus vectors per query by table-collision
+    * count (ties broken by vec_id — deterministic). The probe rows of a
+    * small query set broadcast. The budget's corpus count reads the
+    * materialized quantized cache. Package-visible so the spec can
+    * assert the candidate-fraction cap directly.
+    */
+  private[graft] def annLshShortlist(s: SparkSession, d: String,
+      queryFilter: Column): DataFrame = {
+    val hits = lshHits(s, d, broadcast(lshProbes(s, d, queryFilter, ProbeBits)))
+      .groupBy("query_id", "vec_id").agg(count(lit(1)).as("n_tables"))
+    val b = math.max(ShortlistMin,
+      math.ceil(quantized(s, d).count() * ShortlistFrac).toInt)
     TopK.perKey(hits, Seq("query_id"), "n_tables", "vec_id", b)
+  }
+
+  /** The k-NN self-join's shortlist, every vector a query: (query_id,
+    * vec_id, n_tables), the top [[knnBudget]] per query. The probe table
+    * (|corpus|·T·11 narrow rows at [[KnnProbeBits]]) is linear in the
+    * corpus and too big to broadcast, so the bucket join shuffles both
+    * sides on (table_id, bucket). Hits fold to UNORDERED pairs before the
+    * count — c_sym(a,b) = c(a→b) + c(b→a) sums both probe directions'
+    * collision evidence (2× the ranking signal at the same join volume,
+    * which is what lets the √n budget hold recall), and the aggregate
+    * carries half the groups; the pair counts are mirrored back per query
+    * AFTER aggregation (tiny).
+    */
+  private[graft] def knnShortlist(s: SparkSession, d: String): DataFrame = {
+    val sym = lshHits(s, d, lshProbes(s, d, lit(true), KnnProbeBits))
+      .select(least(col("query_id"), col("vec_id")).as("id_a"),
+        greatest(col("query_id"), col("vec_id")).as("id_b"))
+      .groupBy("id_a", "id_b").agg(count(lit(1)).as("n_tables"))
+    val hits = sym.select(col("id_a").as("query_id"), col("id_b").as("vec_id"), col("n_tables"))
+      .unionByName(sym.select(col("id_b").as("query_id"),
+        col("id_a").as("vec_id"), col("n_tables")))
+    TopK.perKey(hits, Seq("query_id"), "n_tables", "vec_id",
+      knnBudget(quantized(s, d).count()))
   }
 
   private val IvfK = 16
@@ -1542,13 +1567,9 @@ object Similarity {
     * Narrow per-row argmin over the typedlit model; co-partitioned with
     * the corpus, nothing shuffles.
     */
-  private[graft] def ivfAssigned(s: SparkSession, d: String): DataFrame =
-    ivfAssignedK(s, d, IvfK, "ivf_assign")
-
-  private def ivfAssignedK(s: SparkSession, d: String, k: Int,
-      cacheKey: String): DataFrame = {
-    val model = ivfModelK(s, d, k)
-    SessionCache.persisted(s, d, cacheKey) {
+  private[graft] def ivfAssigned(s: SparkSession, d: String): DataFrame = {
+    val model = ivfModel(s, d)
+    SessionCache.persisted(s, d, "ivf_assign") {
       quantized(s, d).filter(col("qv").isNotNull)
         .withColumn("cid", centArgmin(model, col("qv")))
         .select("vec_id", "cid")
@@ -1656,40 +1677,19 @@ object Similarity {
       queryFilter: Column): DataFrame = {
     val q = quantized(s, d)
     val model = ivfModel(s, d)
-    if (model.isEmpty) {
-      // day-one empty lake: keep the schema, emit no rows
-      q.filter(lit(false))
-        .select(col("vec_id").as("query_id"), col("vec_id").as("neighbor_id"),
-          lit(1).as("rank"), lit(0.0).as("cosine"))
-    } else {
-      val assigned = ivfAssigned(s, d)
+    if (model.isEmpty) noNeighbors(q)
+    else {
       // nprobe nearest lists per query: bounded top-nprobe selection over
       // the K centroids — no sort, no window. A query with a null vector
       // has no meaningful probes: drop it here (the assignment side
       // already does), or it would emit null-cosine rows
-      val qprobe = q.filter(queryFilter && col("qv").isNotNull)
-        .select(col("vec_id").as("query_id"),
-          explode(centTopK(model, col("qv"), IvfProbe)).as("cid"))
-      val candIds = assigned.join(broadcast(qprobe), Seq("cid"))
+      val queries = q.filter(queryFilter && col("qv").isNotNull)
+      val qprobe = queries.select(col("vec_id").as("query_id"),
+        explode(centTopK(model, col("qv"), IvfProbe)).as("cid"))
+      val candIds = ivfAssigned(s, d).join(broadcast(qprobe), Seq("cid"))
         .filter(col("vec_id") =!= col("query_id"))
         .select("query_id", "vec_id").distinct()
-      val candidates = candIds
-        .join(q.select(col("vec_id"), col("qv"), col("n2")), "vec_id")
-        .join(broadcast(q.filter(queryFilter && col("qv").isNotNull).select(
-          col("vec_id").as("query_id"), col("qv").as("qq"), col("n2").as("n2q"))),
-          "query_id")
-      // bounded-heap top-5 per query + ≤5-row rank window (the
-      // qKnnJoinIvf composition, r14) — no full sort of the candidates
-      val scored = candidates
-        .select(col("query_id"), col("vec_id").as("neighbor_id"),
-          cosine(GraftFunctions.call("graft_dot_q", col("qq"), col("qv")),
-            col("n2q"), col("n2")).as("cosine"))
-      TopK.perKey(scored, Seq("query_id"), "cosine", "neighbor_id", 5)
-        .withColumn("rank", row_number().over(
-          Window.partitionBy("query_id")
-            .orderBy(col("cosine").desc, col("neighbor_id"))))
-        .select("query_id", "neighbor_id", "rank", "cosine")
-        .orderBy("query_id", "rank")
+      top5Ranked(rescored(q, candIds, broadcast(queryVecs(queries))))
     }
   }
 
@@ -1740,12 +1740,7 @@ object Similarity {
         .toDF("index_kind", "n_queries", "n_truth", "n_matched", "recall_at_5")
     } else {
       val qf = col("vec_id").isin(ids.toIndexedSeq: _*)
-      val sample = q.filter(qf).select(col("vec_id").as("query_id"),
-        col("qv").as("qq"), col("n2").as("n2q"))
-      val scored = q.join(broadcast(sample), col("vec_id") =!= col("query_id"))
-        .select(col("query_id"), col("vec_id"),
-          cosine(GraftFunctions.call("graft_dot_q", col("qq"), col("qv")),
-            col("n2q"), col("n2")).as("c"))
+      val scored = sampleScored(q, queryVecs(q.filter(qf)))
       val truth = SessionCache.persisted(s, d, "ann_health_truth")(
         TopK.perKey(scored, Seq("query_id"), "c", "vec_id", 5)
           .select(col("query_id"), col("vec_id").as("nid")))
@@ -1796,7 +1791,7 @@ object Similarity {
     * [[PqCodes]] lowest vec_ids' sub-vectors, then ONE Lloyd refinement
     * with exact integer means (floor division) — bit-identical at any
     * parallelism; empty codes keep their seed. m·K·8 longs ≈ 1 KB — the
-    * same broadcast-model footprint family as [[hyperplanes]]/IVF; a
+    * same broadcast-model footprint family as [[hyperplanesFor]]/IVF; a
     * lake-scale build trains on a sample exactly like this.
     */
   private[graft] def pqModel(s: SparkSession, d: String)
@@ -1889,17 +1884,13 @@ object Similarity {
   val qAnnPq: Q = Q.rowsOnly("q_ann_pq") { (s, d) =>
     val q = quantized(s, d)
     val model = pqModel(s, d)
-    if (model.isEmpty) {
-      q.filter(lit(false))
-        .select(col("vec_id").as("query_id"), col("vec_id").as("neighbor_id"),
-          lit(1).as("rank"), lit(0.0).as("cosine"))
-    } else {
+    if (model.isEmpty) noNeighbors(q)
+    else {
       // stride = the ACTUAL per-block code count (a small corpus trains
       // a narrower codebook — the pqCodesFrame contract)
       val nk = model(0).length
       val queries = q.filter(col("vec_id") < 10 && col("qv").isNotNull)
-        .select("vec_id", "qv", "n2").collect()
-      val lutRows = queries.map { r =>
+      val lutRows = queries.select("vec_id", "qv", "n2").collect().map { r =>
         val qv = r.getSeq[Long](1).toArray
         val lut = Array.tabulate(PqBlocks * nk) { i =>
           val (j, k) = (i / nk, i % nk)
@@ -1939,33 +1930,25 @@ object Similarity {
       // (approx DESC, vec_id), the window form's exact row set (r14)
       val shortlist = TopK.perKey(approx, Seq("query_id"), "approx",
         "vec_id", PqShortlist).select("query_id", "vec_id")
-      // exact re-rank of the shortlist from the full quantized vectors —
-      // bounded-heap top-5 + ≤5-row rank window (the qKnnJoinIvf
-      // composition)
-      val rescored = shortlist
-        .join(q.select(col("vec_id"), col("qv"), col("n2")), "vec_id")
-        .join(broadcast(q.filter(col("vec_id") < 10 && col("qv").isNotNull)
-          .select(col("vec_id").as("query_id"), col("qv").as("qq"),
-            col("n2").as("n2q"))), "query_id")
-        .select(col("query_id"), col("vec_id").as("neighbor_id"),
-          cosine(GraftFunctions.call("graft_dot_q", col("qq"), col("qv")),
-            col("n2q"), col("n2")).as("cosine"))
-      TopK.perKey(rescored, Seq("query_id"), "cosine", "neighbor_id", 5)
-        .withColumn("rank", row_number().over(
-          Window.partitionBy("query_id")
-            .orderBy(col("cosine").desc, col("neighbor_id"))))
-        .select("query_id", "neighbor_id", "rank", "cosine")
-        .orderBy("query_id", "rank")
+      // exact re-rank of the shortlist from the full quantized vectors
+      top5Ranked(rescored(q, shortlist, broadcast(queryVecs(queries))))
     }
   }
 
-  /** Eval-doc-count threshold under which the probe rows (|eval|·32
-    * tables·22 probes) broadcast into the bucket join — mirrors
-    * [[graft.operators.TextOps]]'s decontaminate adaptive tiers: a
-    * held-out benchmark suite is small in production, but a caller with
-    * a huge eval slice must not OOM the driver on a broadcast.
+  /** Eval-vector-count gate under which [[annIvfScoredPoint]]'s probe
+    * rows and query vectors broadcast into the list join — mirrors
+    * [[graft.operators.TextOps]]'s decontaminate tiers: a held-out
+    * benchmark suite is small in production, but a huge eval slice is
+    * too big to broadcast.
     */
   private[graft] val SemanticEvalBroadcastMaxDocs = 100000L
+
+  /** [[annIvfScoredPoint]]'s hint decision for `nEval` embeddable eval
+    * vectors: broadcast the probes at or below
+    * [[SemanticEvalBroadcastMaxDocs]], shuffle them on cid above it.
+    */
+  private[graft] def evalProbesBroadcast(nEval: Long): Boolean =
+    nEval <= SemanticEvalBroadcastMaxDocs
 
   /** Semantic contamination threshold = the family's embedding near-dup
     * τ ([[qEmbedNeardup]]): an eval member is contaminated when the train
@@ -1980,14 +1963,13 @@ object Similarity {
     * approximate maxima against a brute-force exact recompute — never
     * above the exact value, flagged-set recall floored): for every eval
     * vector (same md5-prefix eval slice rule as the n-gram pass, on
-    * vec_id), the nearest TRAIN vector by cosine over the LSH
-    * collision-count shortlist, and a contaminated flag at τ =
-    * [[SemanticTau]].
+    * vec_id), the nearest TRAIN vector by cosine over the IVF list
+    * shortlist, and a contaminated flag at τ = [[SemanticTau]].
     *
     * Scale shape (r11 — rerouted through [[annIvfScoredPoint]]):
     * queries are the eval slice only and candidates are train-only —
-    * the candidateFilter restricts the IVF assignment side BEFORE the
-    * list join, so eval–eval neighbors never reach the exact pass. The
+    * the list members are filtered to the train side BEFORE the list
+    * join, so eval–eval neighbors never reach the exact pass. The
     * shortlist is every train vector in the eval vector's
     * [[PointIvfProbe]] nearest IVF lists: Θ(|eval|·√n) candidate rows
     * by construction, vs the LSH collision-count join this operator
@@ -2005,24 +1987,18 @@ object Similarity {
     * cases are deliberately distinguishable.
     */
   val qDecontaminateSemantic: Q = Q.rowsOnly("q_decontaminate_semantic") { (s, d) =>
-    val q = quantized(s, d)
-    val isEval = Text.evalSlice(col("vec_id"))
-    // cheap adaptive probe off the materialized quantized cache (the
-    // decontaminate eval-count pattern)
-    val nEval = q.filter(isEval && col("qv").isNotNull).count()
-    val small = nEval <= SemanticEvalBroadcastMaxDocs
     // r15: the shortlist arrives already scored inside the list-join
     // stage (annIvfScoredPoint — vectors never cross an exchange); the
     // per-query rollup below is the first and only shuffle, and it
     // map-side-combines narrow (query_id, cosine, vec_id) rows
-    val rescored = annIvfScoredPoint(s, d, queryFilter = isEval,
-        candidateFilter = not(isEval), broadcastProbes = small)
+    val rescored = annIvfScoredPoint(s, d)
       // struct max is lexicographic: the per-query maximum cosine, ties
       // broken deterministically by the larger neighbor id
       .groupBy("query_id").agg(
         count(lit(1)).as("n_candidates"),
         max(struct(col("cosine").as("c"), col("vec_id").as("nid"))).as("m"))
-    q.filter(isEval).select(col("vec_id"), col("qv").isNotNull.as("assessable"))
+    quantized(s, d).filter(Text.evalSlice(col("vec_id")))
+      .select(col("vec_id"), col("qv").isNotNull.as("assessable"))
       .join(rescored.select(col("query_id").as("vec_id"),
         col("n_candidates"), col("m.nid").as("nearest_train_id"),
         col("m.c").as("max_train_cosine")), Seq("vec_id"), "left")
@@ -2045,10 +2021,10 @@ object Similarity {
     * nearest-neighbor-graph pass of a curation pipeline run corpus-wide
     * (the q_ann_* ops answer point queries; dedup needs the whole graph).
     *
-    * Uses the [[annLshShortlist]] machinery with EVERY vector as a query:
-    * collision-count ranking across the 32 hyperplane tables shortlists
-    * each vector's top-15% most-colliding peers, and only those pay an
-    * exact integer dot. (The IVF-list formulation was measured at recall
+    * Uses the LSH shortlist ([[knnShortlist]]) with EVERY vector as a
+    * query: collision-count ranking across the 32 hyperplane tables
+    * shortlists each vector's [[knnBudget]] most-colliding peers, and only
+    * those pay an exact integer dot. (The IVF-list formulation was measured at recall
     * 0.37 @ 12.5% candidates on this near-isotropic corpus — its probe-2
     * lists are a coarse 16-way partition, while collision COUNTS give a
     * per-pair similarity proxy; at equal candidate budgets the shortlist
@@ -2091,26 +2067,7 @@ object Similarity {
     */
   val qKnnJoin: Q = Q.rowsOnly("q_knn_join") { (s, d) =>
     val q = quantized(s, d)
-    val candIds = annLshShortlist(s, d,
-      queryFilter = lit(true), broadcastProbes = false,
-      budget = Some(knnBudget(q.count())), symmetric = true,
-      probeBits = KnnProbeBits)
-      .select("query_id", "vec_id")
-    val scored = candIds
-      .join(q.select(col("vec_id"), col("qv"), col("n2")), "vec_id")
-      .join(q.select(col("vec_id").as("query_id"), col("qv").as("qq"),
-        col("n2").as("n2q")), "query_id")
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        cosine(GraftFunctions.call("graft_dot_q", col("qq"), col("qv")),
-          col("n2q"), col("n2")).as("cosine"))
-    // bounded-heap top-5 per query (no corpus-wide window sort); the
-    // rank window then runs over ≤5 rows per key — spill-free
-    TopK.perKey(scored, Seq("query_id"), "cosine", "neighbor_id", 5)
-      .withColumn("rank", row_number().over(
-        Window.partitionBy("query_id")
-          .orderBy(col("cosine").desc, col("neighbor_id"))))
-      .select("query_id", "neighbor_id", "rank", "cosine")
-      .orderBy("query_id", "rank")
+    top5Ranked(rescored(q, knnShortlist(s, d).select("query_id", "vec_id"), queryVecs(q)))
   }
 
   /** Lists-per-corpus law of the PRECONDITIONED k-NN self-join: K =
@@ -2153,43 +2110,41 @@ object Similarity {
     }
   }
 
+  /** The IVF list join, scored: each vector of `queries` probes its
+    * `nprobe` nearest lists of the knn-K model CARRYING its own query
+    * vector into the cid join (nprobe·|queries| vector rows — linear),
+    * the list-resident `members` stream in, and the cosine is computed
+    * inside the list-join stage — the exchanges downstream of this frame
+    * see only narrow scored rows, never a vector (§8: decide with small
+    * rows after moving the heavy bytes once). A vector occupies ONE
+    * primary list and the probed lists are distinct, so each (query,
+    * vec) pair joins at most once — no distinct pass. Emits (cid,
+    * query_id, vec_id, label, cosine); package-visible so the spec pins
+    * [[annIvfScoredPoint]]'s shuffled shape against its broadcast one.
+    */
+  private[graft] def ivfListScored(s: SparkSession, d: String,
+      queries: DataFrame, members: DataFrame, nprobe: Int): DataFrame = {
+    val model = ivfModelK(s, d, knnIvfK(nQuantized(s, d)))
+    members.join(queryVecs(queries,
+        explode(centTopK(model, col("qv"), nprobe)).as("cid")), Seq("cid"))
+      .filter(col("vec_id") =!= col("query_id"))
+      .select(col("cid"), col("query_id"), col("vec_id"), col("label"),
+        queryCosine.as("cosine"))
+  }
+
+  /** The IVF-preconditioned k-NN self-join's scored candidates: every
+    * embeddable vector against its [[KnnIvfProbe]] nearest lists.
+    */
+  private def knnIvfScored(s: SparkSession, d: String): DataFrame =
+    ivfListScored(s, d, quantized(s, d).filter(col("qv").isNotNull),
+      ivfMembersKnnK(s, d, knnIvfK(nQuantized(s, d))), KnnIvfProbe)
+
   /** The preconditioned path's candidate pairs (query_id, vec_id):
     * probes ⋈ member lists on cid — package-visible so the spec asserts
     * the sub-√n per-query candidate bound directly.
     */
   private[graft] def knnIvfCandidates(s: SparkSession, d: String): DataFrame =
-    knnIvfScoredN(s, d, nQuantized(s, d))
-      .select(col("query_id"), col("neighbor_id").as("vec_id"))
-
-  /** Scored candidates of the IVF-preconditioned k-NN self-join:
-    * (cid, query_id, neighbor_id, cosine). The probe side carries its
-    * OWN query vector into the cid join (nprobe·n vector rows — linear),
-    * the member side is the list-resident index, and the cosine is
-    * computed inside the list-join stage — the exchanges downstream of
-    * this frame see only narrow scored rows, never a vector (§8: decide
-    * with small rows after moving the heavy bytes once). `cid` is kept
-    * so the per-query top-k can fold FIRST at (cid, query) grain on the
-    * join's existing cid partitioning — no exchange — leaving ≤
-    * KnnIvfProbe·k rows per query for the global cut.
-    */
-  private def knnIvfScoredN(s: SparkSession, d: String, n: Long): DataFrame = {
-    val q = quantized(s, d)
-    val k = knnIvfK(n)
-    val model = ivfModelK(s, d, k)
-    val members = ivfMembersKnnK(s, d, k)
-    val probes = q.filter(col("qv").isNotNull)
-      .select(col("vec_id").as("query_id"), col("qv").as("qq"),
-        col("n2").as("n2q"),
-        explode(centTopK(model, col("qv"), KnnIvfProbe)).as("cid"))
-    // a vector occupies ONE primary list and the probed lists are
-    // distinct, so each (query, vec) pair joins at most once — no
-    // distinct pass needed.
-    members.join(probes, Seq("cid"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("cid"), col("query_id"), col("vec_id").as("neighbor_id"),
-        cosine(GraftFunctions.call("graft_dot_q", col("qq"), col("qv")),
-          col("n2q"), col("n2")).as("cosine"))
-  }
+    knnIvfScored(s, d).select("query_id", "vec_id")
 
   /** Probed-list count of the POINT-QUERY IVF shortlist
     * ([[annIvfScoredPoint]]) — far wider than the self-join's
@@ -2213,32 +2168,31 @@ object Similarity {
     */
   private[graft] val PointIvfProbe = 32
 
-  /** IVF-preconditioned candidate shortlist for POINT-QUERY fan-outs
-    * (query slice ≪ corpus): (query_id, vec_id) = every candidateFilter-
-    * passing corpus vector in the query's [[PointIvfProbe]] nearest IVF
-    * lists. The r11 reroute of [[qDecontaminateSemantic]] /
-    * [[qLabelPropagate]], which until then rode [[annLshShortlist]]'s
-    * collision-count join — measured exponents 1.89/1.85 over sf1→sf10
-    * (3437 s / 3461 s — together 57% of the sf10 wall) because the
-    * 9-bit-bucket collision volume ran 2.4× above the √n-bucket model,
-    * while [[qKnnJoinIvf]] measured 1.15 on the same decade with the
-    * same K = ⌈6·√n⌉ coarse quantizer this shortlist reuses (the
-    * `ivf_members_knn` list-resident cache and the memoized model are
-    * SHARED — one training pass serves the self-join and both point
-    * gates).
+  /** The IVF point scorer of the eval slice ([[graft.operators.Text
+    * .evalSlice]] on vec_id) against the rest: (query_id, vec_id, label,
+    * cosine) for every train vector in an embeddable eval vector's
+    * [[PointIvfProbe]] nearest IVF lists, scored inside the list join.
+    * The r11 reroute of [[qDecontaminateSemantic]] / [[qLabelPropagate]],
+    * which until then rode the LSH collision-count join — measured
+    * exponents 1.89/1.85 over sf1→sf10 (3437 s / 3461 s — together 57% of
+    * the sf10 wall) because the 9-bit-bucket collision volume ran 2.4×
+    * above the √n-bucket model, while [[qKnnJoinIvf]] measured 1.15 on
+    * the same decade with the same K = ⌈6·√n⌉ coarse quantizer this
+    * scorer reuses (the `ivf_members_knn` list-resident cache and the
+    * memoized model are SHARED — one training pass serves the self-join
+    * and both point gates).
     *
-    * Scale shape: probes are |queries|·nprobe narrow (query_id, cid)
-    * rows — broadcast while the query slice is small (the production
-    * case: held-out suites), shuffled on cid past the gate; the list
-    * join emits Θ(|queries|·nprobe·n/K) = Θ(|queries|·√n) candidate rows
-    * BY CONSTRUCTION, no term tracks bucket-load concentration. The
-    * candidateFilter restricts the ASSIGNMENT side before the join (the
-    * shared index scan is untouched), so out-of-scope vectors never
-    * reach the exact pass. Null-vector queries have no list distances:
-    * dropped here, reported unassessed by the consumers.
+    * Scale shape: probes are |eval|·nprobe rows, broadcast while the
+    * eval slice is small (the production case: held-out suites) and
+    * shuffled on cid past the gate ([[evalProbesBroadcast]] of the
+    * embeddable eval count); the list join emits Θ(|eval|·nprobe·n/K) =
+    * Θ(|eval|·√n) candidate rows BY CONSTRUCTION, no term tracks
+    * bucket-load concentration. The members are filtered to the train
+    * side before the join (the shared index scan is untouched), so eval
+    * vectors never reach the exact pass. Null-vector queries have no list
+    * distances: dropped here, reported unassessed by the consumers.
     */
-  private[graft] def annIvfScoredPoint(s: SparkSession, d: String,
-      queryFilter: Column, candidateFilter: Column, broadcastProbes: Boolean): DataFrame = {
+  private[graft] def annIvfScoredPoint(s: SparkSession, d: String): DataFrame = {
     val q = quantized(s, d)
     val n = nQuantized(s, d)
     if (n == 0)
@@ -2246,43 +2200,32 @@ object Similarity {
         .select(col("vec_id").as("query_id"), col("vec_id"),
           col("label"), lit(0.0).as("cosine"))
     val k = knnIvfK(n)
-    val model = ivfModelK(s, d, k)
+    val isEval = Text.evalSlice(col("vec_id"))
     // list-resident members (r15): the candidate vector is already ON
     // the list row, so the shortlist scores inside the list-join stage
     // and emits narrow (query_id, vec_id, label, cosine) rows — the old
     // ID-only shortlist re-attached vectors by joining the corpus on
     // vec_id, shuffling the Θ(|queries|·√n) candidate stream (measured
     // 7.6 s of q_decontaminate_semantic's 9.5 s sf10 wall in that join).
-    val members = ivfMembersKnnK(s, d, k).filter(candidateFilter)
-    val queries = q.filter(queryFilter && col("qv").isNotNull)
-    val scoreCol = cosine(GraftFunctions.call("graft_dot_q", col("qq"), col("qv")),
-      col("n2q"), col("n2")).as("cosine")
-    // a vector occupies ONE list and the probed lists are distinct, so
-    // each (query, vec) pair joins at most once — no distinct pass
-    if (broadcastProbes) {
-      // small query slice (the production case — held-out suites): the
-      // (query_id, cid) probes AND the query vectors broadcast; members
-      // stream through both map-side joins, nothing shuffles at all
+    val members = ivfMembersKnnK(s, d, k).filter(not(isEval))
+    val queries = q.filter(isEval && col("qv").isNotNull)
+    val nprobe = math.min(PointIvfProbe, k)
+    if (evalProbesBroadcast(queries.count())) {
+      // the (query_id, cid) probes AND the query vectors broadcast;
+      // members stream through both map-side joins, nothing shuffles
       val probes = queries.select(col("vec_id").as("query_id"),
-        explode(centTopK(model, col("qv"), math.min(PointIvfProbe, k))).as("cid"))
-      val qvecs = queries.select(col("vec_id").as("query_id"),
-        col("qv").as("qq"), col("n2").as("n2q"))
+        explode(centTopK(ivfModelK(s, d, k), col("qv"), nprobe)).as("cid"))
       members.join(broadcast(probes), Seq("cid"))
         .filter(col("vec_id") =!= col("query_id"))
-        .join(broadcast(qvecs), Seq("query_id"))
-        .select(col("query_id"), col("vec_id"), col("label"), scoreCol)
-    } else {
-      // huge query slice: probes carry their own query vector into the
-      // cid exchange — |queries|·nprobe vector rows, a factor n/K
-      // FEWER heavy rows than letting the candidate stream cross an
-      // exchange with vectors attached
-      val probes = queries.select(col("vec_id").as("query_id"),
-        col("qv").as("qq"), col("n2").as("n2q"),
-        explode(centTopK(model, col("qv"), math.min(PointIvfProbe, k))).as("cid"))
-      members.join(probes, Seq("cid"))
-        .filter(col("vec_id") =!= col("query_id"))
-        .select(col("query_id"), col("vec_id"), col("label"), scoreCol)
-    }
+        .join(broadcast(queryVecs(queries)), Seq("query_id"))
+        .select(col("query_id"), col("vec_id"), col("label"),
+          queryCosine.as("cosine"))
+    } else
+      // probes carry their own query vector into the cid exchange — a
+      // factor n/K FEWER heavy rows than letting the candidate stream
+      // cross an exchange with vectors attached
+      ivfListScored(s, d, queries, members, nprobe)
+        .select("query_id", "vec_id", "label", "cosine")
   }
 
   /** IVF-PRECONDITIONED ANN k-NN self-join (rows-only; spec pins recall
@@ -2315,19 +2258,13 @@ object Similarity {
     * collision path; otherwise precondition.
     */
   val qKnnJoinIvf: Q = Q.rowsOnly("q_knn_join_ivf") { (s, d) =>
-    val q = quantized(s, d)
     // emptiness probe = the memoized count off the materialized quantized
     // cache — NOT ivfModel(s, d).isEmpty, which would train the fixed-IvfK
     // model this operator never uses (a full Lloyd pass paid purely as a test)
-    val n = nQuantized(s, d)
-    if (n == 0) {
-      // day-one empty lake: keep the schema, emit no rows
-      q.filter(lit(false))
-        .select(col("vec_id").as("query_id"), col("vec_id").as("neighbor_id"),
-          lit(1).as("rank"), lit(0.0).as("cosine"))
-    } else {
+    if (nQuantized(s, d) == 0) noNeighbors(quantized(s, d))
+    else {
       // r15: scoring happens inside the list join (vectors never cross an
-      // exchange — see knnIvfScoredN), and the top-5 folds in TWO levels:
+      // exchange — see ivfListScored), and the top-5 folds in TWO levels:
       // first at (cid, query) grain, which the list join's existing cid
       // hash partitioning already satisfies (ClusteredDistribution over a
       // SUPERSET of the partitioning keys — no exchange), so the global
@@ -2336,15 +2273,10 @@ object Similarity {
       // a (query, neighbor) pair exists in exactly one cid (one primary
       // list, distinct probes), and top-5 under (cosine DESC, id ASC) of
       // a union is contained in the union of per-part top-5s.
-      val scored = knnIvfScoredN(s, d, n)
-      val local = TopK.perKey(scored, Seq("cid", "query_id"),
-        "cosine", "neighbor_id", 5)
-      TopK.perKey(local, Seq("query_id"), "cosine", "neighbor_id", 5)
-        .withColumn("rank", row_number().over(
-          Window.partitionBy("query_id")
-            .orderBy(col("cosine").desc, col("neighbor_id"))))
-        .select("query_id", "neighbor_id", "rank", "cosine")
-        .orderBy("query_id", "rank")
+      val scored = knnIvfScored(s, d).select(col("cid"), col("query_id"),
+        col("vec_id").as("neighbor_id"), col("cosine"))
+      top5Ranked(TopK.perKey(scored, Seq("cid", "query_id"),
+        "cosine", "neighbor_id", 5))
     }
   }
 
@@ -2403,9 +2335,7 @@ object Similarity {
     val q = quantized(s, d).filter(col("qv").isNotNull)
     // deterministic spread sample: hash-order the ids (a lowest-id or
     // per-file head sample would bias toward one ingest batch's geometry)
-    val sample = q
-      .select(col("vec_id").as("query_id"), col("qv").as("qq"),
-        col("n2").as("n2q"))
+    val sample = queryVecs(q)
       .orderBy(xxhash64(col("query_id").cast("string")), col("query_id"))
       .limit(KnnProbeQueries)
     // ONE action over ONE computed scored frame (r14, guide §1.2): the
@@ -2413,11 +2343,7 @@ object Similarity {
     // actions, each re-computing the S·n probe join; the scored frame
     // persists for the two aggregate subtrees and both land in a single
     // 1×1 cross-joined head()
-    val scored = q.join(broadcast(sample),
-        col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"),
-        cosine(GraftFunctions.call("graft_dot_q", col("qq"), col("qv")),
-          col("n2q"), col("n2")).as("c"))
+    val scored = sampleScored(q, sample)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val row = scored.agg(expr(
@@ -2979,9 +2905,9 @@ object Similarity {
     *
     * Scale shape — identical to [[qDecontaminateSemantic]]'s (r11:
     * both rerouted through [[annIvfScoredPoint]]): queries are the
-    * held slice only, candidates labeled-only (candidateFilter on the
-    * IVF assignment side, so held–held neighbors never reach the exact
-    * pass), probe rows broadcast while the held slice is small
+    * held slice only, candidates labeled-only (the list members are
+    * filtered before the join, so held–held neighbors never reach the
+    * exact pass), probe rows broadcast while the held slice is small
     * (shuffled past [[SemanticEvalBroadcastMaxDocs]]); candidates are
     * the held vector's [[PointIvfProbe]] nearest lists — Θ(|held|·√n)
     * rows by construction, retiring the LSH collision join whose
@@ -2995,16 +2921,11 @@ object Similarity {
     */
   val qLabelPropagate: Q = Q.rowsOnly("q_label_propagate") { (s, d) =>
     import graft.functions.Det.exactDiv
-    val q = quantized(s, d)
-    val isHeld = Text.evalSlice(col("vec_id"))
-    val nHeld = q.filter(isHeld && col("qv").isNotNull).count()
-    val small = nHeld <= SemanticEvalBroadcastMaxDocs
     // r15: the shortlist arrives already scored (and label-carrying)
     // from the list-resident index — annIvfScoredPoint scores inside
     // the list join, so only narrow (query_id, label, cosine, vec_id)
     // rows reach the bounded-heap cut below
-    val rescored = annIvfScoredPoint(s, d, queryFilter = isHeld,
-        candidateFilter = not(isHeld), broadcastProbes = small)
+    val rescored = annIvfScoredPoint(s, d)
       .select(col("query_id"), col("label"), col("cosine"), col("vec_id"))
     // top-5 labeled neighbors per held vector — bounded-heap selection
     // (r14): the vote only needs the top-5 ROW SET, never a rank, so
@@ -3020,7 +2941,7 @@ object Similarity {
       max(struct(col("v").as("v"), (-col("label")).as("nl"))).as("m"))
       .select(col("query_id"), col("n_neighbors"),
         (-col("m.nl")).as("predicted_label"), col("m.v").as("n_votes"))
-    q.filter(isHeld)
+    quantized(s, d).filter(Text.evalSlice(col("vec_id")))
       .select(col("vec_id"), col("label").as("actual_label"))
       .join(per.select(col("query_id").as("vec_id"), col("predicted_label"),
         col("n_votes"), col("n_neighbors")), Seq("vec_id"), "left")

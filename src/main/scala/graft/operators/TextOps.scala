@@ -758,10 +758,11 @@ object TextOps {
     * benchmark suite), NOT a corpus fraction: its distinct 5-grams grow
     * linearly with eval size, and a corpus-slice eval at 100 TB would
     * blow any broadcast (Spark hard-caps broadcasts at 8 GB). The plan
-    * is therefore ADAPTIVE on a cheap probe (the eval DOC count — one
-    * column-pruned scan; vocab size is linear in it), through
-    * [[evalJoinHint]]:
-    *  - eval docs ≤ [[EvalBroadcastMaxDocs]]: the eval vocabulary
+    * is therefore ADAPTIVE on a probe that runs no job (the corpus
+    * document count from the parquet footers, [[graft.Tables.rowsUpTo]]:
+    * the eval slice is a fixed 1/16 of it and vocab size is linear in
+    * the eval docs), through [[evalJoinHint]]:
+    *  - documents ≤ [[EvalBroadcastMaxCorpusDocs]]: the eval vocabulary
     *    broadcasts and the 100 TB train side streams through a map-side
     *    semi-join — train n-grams never shuffle at all;
     *  - above it: the same semi-join runs as a sort-merge join on the
@@ -802,29 +803,28 @@ object TextOps {
        |ORDER BY d.doc_id""".stripMargin
   ) { (s, d) => decontaminate(s, d) }
 
-  /** Eval-doc-count gate under which the eval n-gram vocabulary
-    * broadcasts (≈ tens of MB of 5-gram strings at typical doc sizes —
-    * far under the broadcast limit). `decontaminate`'s one plan switch:
-    * above it every eval-vocabulary join is a sort-merge join.
+  /** Corpus-document gate under which the eval n-gram vocabulary
+    * broadcasts: 16 × 100k, so the 1/16 eval slice holds about 100k
+    * documents (≈ tens of MB of 5-gram hashes — far under the broadcast
+    * limit). `decontaminate`'s one plan switch: above it every
+    * eval-vocabulary join is a sort-merge join.
     */
-  private[graft] val EvalBroadcastMaxDocs = 100000L
+  private[graft] val EvalBroadcastMaxCorpusDocs = 1600000L
 
-  /** The eval-vocabulary join hint for `nEvalDocs` eval documents:
-    * broadcast at or below [[EvalBroadcastMaxDocs]]. Above it the vocab
-    * side is known to be huge, so the spill-safe sort-merge shape is
-    * forced rather than left to Catalyst's size estimate (an aggregate's
-    * estimate can come out tiny and re-introduce the broadcast).
+  /** The eval-vocabulary join hint for a corpus of `nDocs` documents:
+    * broadcast at or below [[EvalBroadcastMaxCorpusDocs]]. Above it the
+    * vocab side is known to be huge, so the spill-safe sort-merge shape
+    * is forced rather than left to Catalyst's size estimate (an
+    * aggregate's estimate can come out tiny and re-introduce the
+    * broadcast).
     */
-  private[graft] def evalJoinHint(nEvalDocs: Long): DataFrame => DataFrame =
-    if (nEvalDocs <= EvalBroadcastMaxDocs) broadcast(_) else _.hint("merge")
+  private[graft] def evalJoinHint(nDocs: Long): DataFrame => DataFrame =
+    if (nDocs <= EvalBroadcastMaxCorpusDocs) broadcast(_) else _.hint("merge")
 
   private[graft] def decontaminate(s: SparkSession, d: String): DataFrame = {
     val isEval = Text.evalSlice(col("doc_id"))
-    // the adaptive probe: count eval DOCS (column-pruned scan of doc_id
-    // only) — vocabulary size is linear in it, so it is the cheap stand-in
-    // for "does the vocab fit a broadcast"
-    val hinted = evalJoinHint(Tables.documents(s, d).filter(isEval)
-      .select("doc_id").count())
+    val hinted = evalJoinHint(
+      Tables.rowsUpTo(s, d, "documents", EvalBroadcastMaxCorpusDocs))
     def ngrams(evalSide: Boolean) = {
       val base = Tables.documents(s, d).filter(if (evalSide) isEval else !isEval)
       // one doc_id-hash spread for both sides: the eval side's per-doc

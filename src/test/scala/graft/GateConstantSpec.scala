@@ -2,10 +2,13 @@ package graft
 
 /** A size gate is a constant read in one place, never a parameter: a
   * parameter that only a spec ever moves off its constant keeps a second,
-  * untested path open to library callers. A spec reaches a gate's far side
-  * through a builder of that path (`Similarity.nearDupDistributed`,
-  * `Assembly.bpeDistributed`, `Similarity.propagateComponents`) or through
-  * the hinted frame's plan with its hints stripped.
+  * untested path open to library callers. Nor is a gate's decision: a
+  * Boolean `broadcast…` parameter hands the hint choice to each caller,
+  * when it belongs in one decision function of the gate's count. A spec
+  * reaches a gate's far side through a function that builds that path
+  * (`Similarity.nearDupDistributed`, `Assembly.bpeDistributed`,
+  * `Similarity.propagateComponents`, `Similarity.ivfListScored`) or
+  * through the hinted frame's plan with its hints stripped.
   */
 class GateConstantSpec extends SparkSpec {
 
@@ -14,6 +17,9 @@ class GateConstantSpec extends SparkSpec {
 
   /** A default that names a gate constant (`Long.MaxValue` is none). */
   private val gateConstant = raw"\b(?!MaxValue\b)\w*(?:Max|Threshold)\w*".r
+
+  /** A hint decision passed in (the parameter's whitespace-normalized text). */
+  private val hintDecision = raw"broadcast\w*: Boolean\b.*".r
 
   /** The text of each balanced bracket group opened by `open` from
     * `from` on (skipping whitespace between groups), and the index after
@@ -63,10 +69,10 @@ class GateConstantSpec extends SparkSpec {
       groups(src, afterTypes, '(')._1.flatMap(topLevel).flatMap { p =>
         val param = p.trim.stripPrefix("implicit ").trim
         val name = param.takeWhile(c => c.isLetterOrDigit || c == '_')
-        val default = raw"[^=<>!]=(?!>)(.*)".r.findFirstMatchIn(param.replaceAll("\\s+", " "))
-          .map(_.group(1)).getOrElse("")
-        if (gateName.matches(name) || gateConstant.findFirstIn(default).nonEmpty)
-          Some(s"def ${m.group(1)}: ${param.replaceAll("\\s+", " ")}")
+        val text = param.replaceAll("\\s+", " ")
+        val default = raw"[^=<>!]=(?!>)(.*)".r.findFirstMatchIn(text).map(_.group(1)).getOrElse("")
+        if (gateName.matches(name) || gateConstant.findFirstIn(default).nonEmpty ||
+            hintDecision.matches(text)) Some(s"def ${m.group(1)}: $text")
         else None
       }
     }
@@ -80,6 +86,8 @@ class GateConstantSpec extends SparkSpec {
         |def d(s: SparkSession, maxWordVocab: Long, maxHeldDocs: Long) = 3
         |def e(f: Long => Long = identity, n: Long = Long.MaxValue, threshold: Double = 0.5,
         |      dist: => DataFrame, xs: Seq[(Int, Int)] = Seq((1, 2))) = 4
+        |def f(q: Column, broadcastProbes: Boolean, broadcast: Boolean = true,
+        |      broadcastKeys: Seq[String], small: Boolean) = 5
         |""".stripMargin)
     assert(flagged == List(
       "def a: gate: Long",
@@ -87,7 +95,9 @@ class GateConstantSpec extends SparkSpec {
       "def b: memberMaxRows: Long",
       "def c: rows: Long = Similarity.MemberBroadcastMaxRows",
       "def d: maxWordVocab: Long",
-      "def d: maxHeldDocs: Long"), flagged)
+      "def d: maxHeldDocs: Long",
+      "def f: broadcastProbes: Boolean",
+      "def f: broadcast: Boolean = true"), flagged)
   }
 
   test("no def under src/main/scala takes a size gate as a parameter") {

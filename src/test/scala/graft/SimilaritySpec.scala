@@ -161,12 +161,7 @@ class SimilaritySpec extends SparkSpec {
     // budgeted fraction of all pairs — the self-join must not degenerate
     // to all-pairs
     def knnFraction(dir: String): Double = {
-      val nAll = spark.read.parquet(s"$dir/embeddings.parquet").count()
-      val shortlist = Similarity.annLshShortlist(spark, dir,
-        queryFilter = org.apache.spark.sql.functions.lit(true),
-        broadcastProbes = false,
-        budget = Some(Similarity.knnBudget(nAll)), symmetric = true,
-        probeBits = Similarity.KnnProbeBits).count()
+      val shortlist = Similarity.knnShortlist(spark, dir).count()
       val n = spark.read.parquet(s"$dir/embeddings.parquet")
         .filter(col("embedding").isNotNull).count()
       shortlist.toDouble / (n * (n - 1))
@@ -607,7 +602,7 @@ class SimilaritySpec extends SparkSpec {
     val nVec = Tables.embeddings(spark, sfDir).count()
     val nQueries = Tables.embeddings(spark, sfDir)
       .filter(col("vec_id") < 10).count()
-    val shortlisted = Similarity.annLshShortlist(spark, sfDir).count()
+    val shortlisted = Similarity.annLshShortlist(spark, sfDir, col("vec_id") < 10).count()
     val frac = shortlisted.toDouble / (nQueries * (nVec - 1))
     info(s"LSH candidate fraction = $frac")
     assert(frac <= 0.2, s"candidate fraction $frac exceeds 0.2")
@@ -822,6 +817,29 @@ class SimilaritySpec extends SparkSpec {
     assert(joinHints(Similarity.memberHint(gate + 1)(df)).isEmpty)
   }
 
+  test("simhash hints: broadcast at SimhashHalfBroadcastMaxFps / SimhashMemberBroadcastMaxDocs, unhinted one past") {
+    import org.apache.spark.sql.catalyst.plans.logical.BROADCAST
+    val df = spark.range(3).toDF("fp")
+    val half = Similarity.SimhashHalfBroadcastMaxFps
+    assert(joinHints(Similarity.simhashHalfKeyHint(half)(df)) == Seq(BROADCAST))
+    assert(joinHints(Similarity.simhashHalfKeyHint(half + 1)(df)).isEmpty)
+    val member = Similarity.SimhashMemberBroadcastMaxDocs
+    assert(joinHints(Similarity.simhashMemberHint(member)(df)) == Seq(BROADCAST))
+    assert(joinHints(Similarity.simhashMemberHint(member + 1)(df)).isEmpty)
+  }
+
+  test("simhash: size-gated broadcasts — the unhinted far side emits the same pairs") {
+    val hinted = Similarity.qDedupSimhash.run(spark, sfDir)
+    assert(joinHints(hinted).nonEmpty, "under both gates the joins must be hinted")
+    val far = unhinted(hinted) { df =>
+      assert(!df.queryExecution.executedPlan.toString.contains("BroadcastHashJoin"),
+        "far side still statically broadcasts a join")
+      df.collect().toSet
+    }
+    val rows = hinted.collect()
+    assert(rows.nonEmpty && rows.toSet == far, "physical strategies disagree on the pairs")
+  }
+
   // under the measured gate the member joins carry the hint; the far side
   // (the >MemberBroadcastMaxRows web-corpus case) is the same plan
   // unhinted, with nothing broadcast by size either. Both forms are
@@ -838,6 +856,32 @@ class SimilaritySpec extends SparkSpec {
       df.collect().toSeq
     }
     assert(hinted.collect().toSeq == far, "physical strategies disagree on the rows")
+  }
+
+  test("IVF point scorer: eval probes broadcast at SemanticEvalBroadcastMaxDocs, shuffle one past") {
+    val gate = Similarity.SemanticEvalBroadcastMaxDocs
+    assert(Similarity.evalProbesBroadcast(gate) && !Similarity.evalProbesBroadcast(gate + 1))
+  }
+
+  test("IVF point scorer: the shuffled list join scores the broadcast form's rows") {
+    // the far side of evalProbesBroadcast: eval probes carrying their
+    // vectors into a shuffled cid join against the train members
+    val isEval = graft.operators.Text.evalSlice(col("vec_id"))
+    val k = Similarity.knnIvfK(Similarity.nQuantized(spark, sfDir))
+    val shuffled = Similarity.ivfListScored(spark, sfDir,
+        Similarity.quantized(spark, sfDir).filter(isEval && col("qv").isNotNull),
+        Similarity.ivfMembersKnnK(spark, sfDir, k).filter(!isEval),
+        math.min(Similarity.PointIvfProbe, k))
+      .select("query_id", "vec_id", "label", "cosine")
+    val far = unhinted(shuffled) { df =>
+      assert(!df.queryExecution.executedPlan.toString.contains("BroadcastHashJoin"),
+        "the list join must shuffle")
+      df.collect().toSet
+    }
+    val hinted = Similarity.annIvfScoredPoint(spark, sfDir)
+    assert(joinHints(hinted).nonEmpty, "under the gate the probes must broadcast")
+    val rows = hinted.collect()
+    assert(rows.nonEmpty && rows.toSet == far, "the two shapes disagree on the scored rows")
   }
 
   test("semantic decon: approx maxima never exceed exact; flagged recall >= 0.8") {
@@ -1208,7 +1252,10 @@ class SimilaritySpec extends SparkSpec {
     // fresh deterministic family), but the 8-bit bank itself must be
     // byte-stable: pinned recalls depend on its exact planes
     val b8 = Similarity.hyperplanesFor(8)
-    assert(b8.length == 256 && b8(0)(0) == Similarity.hyperplanes(0)(0))
+    assert(b8.length == 256 && b8.forall(_.length == 64))
+    val pinned = Seq((0, 0) -> 620L, (0, 1) -> 78L, (0, 63) -> 698L,
+      (1, 0) -> 152L, (128, 32) -> 835L, (255, 63) -> -440L)
+    for (((j, i), v) <- pinned) assert(b8(j)(i) == v, s"8-bit bank plane $j component $i")
     assert(Similarity.hyperplanesFor(9).length == 32 * 9)
   }
 

@@ -295,9 +295,9 @@ class TextOpsSpec extends SparkSpec {
     assert(rows.exists(_.getAs[Boolean]("contaminated")))
   }
 
-  test("decontaminate: the eval-join hint broadcasts at EvalBroadcastMaxDocs eval docs, merges one past it") {
+  test("decontaminate: the eval-join hint broadcasts at EvalBroadcastMaxCorpusDocs documents, merges one past it") {
     import org.apache.spark.sql.catalyst.plans.logical.{BROADCAST, SHUFFLE_MERGE}
-    val gate = TextOps.EvalBroadcastMaxDocs
+    val gate = TextOps.EvalBroadcastMaxCorpusDocs
     val df = spark.range(3).toDF("ng")
     assert(joinHints(TextOps.evalJoinHint(gate)(df)) == Seq(BROADCAST))
     assert(joinHints(TextOps.evalJoinHint(gate + 1)(df)) == Seq(SHUFFLE_MERGE))
