@@ -47,13 +47,19 @@ import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
   * `CodegenMetrics.METRIC_COMPILATION_TIME` histogram has recorded and
   * their total time (`CodeGenerator.compileTime`) since `install`/`clear`.
   * A warm session that keeps compiling is evicting generated classes it
-  * will need again (see `Sessions.CodegenCacheEntries`).
+  * will need again (see `Sessions.CodegenCacheEntries`). Spark caches a
+  * compiled class under (context class loader, source), so a source
+  * compiled on a driver thread is compiled again on a task thread, whose
+  * loader differs: [[distinctSources]] counts the sources among the
+  * classes cached since install/clear, and the report prints the
+  * compiles that repeat one.
   */
 object CodegenGuard {
   private val hits = new ConcurrentLinkedQueue[String]()
   @volatile private var installed = false
-  // (compiles, compile ns) at the last install/clear
+  // (compiles, compile ns) and the codegen cache's keys at the last install/clear
   @volatile private var mark = (0L, 0L)
+  @volatile private var markKeys = Set.empty[Any]
 
   /** JVM-wide (compiles, compile ns). `CodeGenerator` sizes its class cache
     * from the conf active when it initializes, so it is not touched before
@@ -62,6 +68,24 @@ object CodegenGuard {
   private def totals: (Long, Long) = {
     val n = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     (n, if (n == 0) 0L else CodeGenerator.compileTime)
+  }
+
+  /** Spark's codegen class cache, a private field of `CodeGenerator`. */
+  private lazy val classCache: java.util.Map[_, _] = {
+    val m = CodeGenerator.getClass.getDeclaredMethod("cache")
+    m.setAccessible(true)
+    val cache = m.invoke(CodeGenerator)
+    val guava = cache.getClass.getMethod("loadingCache").invoke(cache)
+    guava.asInstanceOf[org.sparkproject.guava.cache.Cache[_, _]].asMap()
+  }
+
+  /** The (class loader, source) keys of the compiled classes Spark holds,
+    * empty before the first compile (as in [[totals]]).
+    */
+  private def cachedKeys: Set[Any] = {
+    import scala.jdk.CollectionConverters._
+    if (CodegenMetrics.METRIC_COMPILATION_TIME.getCount == 0) Set.empty
+    else classCache.keySet.asScala.toSet
   }
 
   private val Needles = Seq(
@@ -91,6 +115,7 @@ object CodegenGuard {
       ctx.getConfiguration.getRootLogger.addAppender(Guard, Level.WARN, null)
       ctx.updateLoggers()
       mark = totals
+      markKeys = cachedKeys
       installed = true
     }
   }
@@ -98,10 +123,18 @@ object CodegenGuard {
   def clear(): Unit = {
     hits.clear()
     mark = totals
+    markKeys = cachedKeys
   }
 
   /** Generated classes Janino compiled since install/clear. */
   def compiles: Long = totals._1 - mark._1
+
+  /** Distinct generated sources among the classes cached since
+    * install/clear; `compiles - distinctSources` compiles repeated a
+    * source under another class loader (or replaced an evicted class).
+    */
+  def distinctSources: Long =
+    (cachedKeys -- markKeys).collect { case (_, code) => code }.size.toLong
 
   /** Their total compile time in ms. */
   def compileMs: Double = (totals._2 - mark._2) / 1e6
@@ -118,8 +151,10 @@ object CodegenGuard {
     * artifact).
     */
   def report(context: String): Int = {
-    System.err.println(
-      f"[codegen-guard] $context: $compiles%d compile(s), $compileMs%.1f ms in Janino")
+    val n = compiles
+    val repeats = math.max(0L, n - distinctSources)
+    System.err.println(f"[codegen-guard] $context: $n%d compile(s) ($repeats%d repeat a " +
+      f"source compiled under another class loader), $compileMs%.1f ms in Janino")
     val v = violations
     if (v.nonEmpty) {
       System.err.println(

@@ -193,8 +193,8 @@ object Assembly {
        |FROM p GROUP BY 1
        |ORDER BY n DESC, pair LIMIT $PairTopK""".stripMargin
   ) { (s, d) =>
-    // doc_id-hash spread: the single-file testdata scan's parallelism
-    // guard (a multi-split lake scan replaces it), as in dupSpanCounts
+    // doc_id-hash spread so the tokenizing runs on every core: a full
+    // shuffle at any lake size, as in dupSpanCounts
     val toks = Tables.documents(s, d)
       .repartition(s.sparkContext.defaultParallelism, col("doc_id"))
       .select(words(col("text")).as("w"))
@@ -289,13 +289,27 @@ object Assembly {
     * in each source — BPE's one corpus pass. Training reads a word's
     * frequency as its n summed over sources; encode reads
     * `n_words = Σ n` and `n_bpe_tokens = Σ n·n_bpe(word)` per source.
+    * The documents are spread by doc_id only above
+    * [[graft.Tables.SpreadMinDocs]] (the footer count, no job): a
+    * single-split corpus below it aggregates in its one partition with
+    * no shuffle exchange.
     */
-  private def wordCounts(s: SparkSession, d: String): DataFrame =
-    Tables.documents(s, d)
-      // doc_id-hash spread: the single-file testdata scan's parallelism
-      // guard (a multi-split lake scan replaces it), as in dupSpanCounts
-      .repartition(s.sparkContext.defaultParallelism, col("doc_id"))
-      .select(col("source"), explode(words(col("text"))).as("word"))
+  private[graft] def wordCounts(s: SparkSession, d: String): DataFrame = {
+    val docs = Tables.documents(s, d)
+    wordCountsOf(
+      if (Tables.spreadsByDocId(Tables.rowsUpTo(s, d, "documents", Tables.SpreadMinDocs)))
+        Tables.spreadByDocId(docs)
+      else docs)
+  }
+
+  /** [[wordCounts]] over documents spread by doc_id at any corpus size:
+    * the far side of [[graft.Tables.spreadsByDocId]], unmemoized.
+    */
+  private[graft] def wordCountsSpread(s: SparkSession, d: String): DataFrame =
+    wordCountsOf(Tables.spreadByDocId(Tables.documents(s, d)))
+
+  private def wordCountsOf(docs: DataFrame): DataFrame =
+    docs.select(col("source"), explode(words(col("text"))).as("word"))
       .groupBy("source", "word").agg(count(lit(1)).as("n"))
 
   /** [[wordCounts]]' rows if at most [[BpeDriverMaxVocab]], else None:

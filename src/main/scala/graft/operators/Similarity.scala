@@ -905,7 +905,8 @@ object Similarity {
     SessionCache.persisted(s, d, "simhash_fp") {
       withSimhashFp(Tables.documents(s, d)
         // small single-file inputs scan as ONE partition; spread rows so
-        // the fingerprint map runs at full parallelism (no-op at lake scale)
+        // the fingerprint map runs at full parallelism (a full shuffle at
+        // any lake size)
         .repartition(s.sparkContext.defaultParallelism, col("doc_id")))
         .select("doc_id", "fp")
     }
@@ -1047,7 +1048,7 @@ object Similarity {
         // inherits THAT parallelism and serializes on 3 of 32 cores
         // (r11 finding: the sf10 IVF build ran 3 concurrent tasks).
         // Spread rows before quantizing — the simhashFingerprints
-        // precedent; a no-op at lake scale (thousands of files)
+        // precedent; a full shuffle at any lake size
         .repartition(s.sparkContext.defaultParallelism, col("vec_id"))
         .select(
           col("vec_id"), col("label"),
@@ -1350,6 +1351,13 @@ object Similarity {
     SessionCache(s, d, "n_quantized")(
       quantized(s, d).filter(col("qv").isNotNull).count())
 
+  /** Row count of the quantized cache, null vectors included — the LSH
+    * shortlist budgets' corpus size — memoized beside [[nQuantized]], so
+    * a shortlist call runs no count job after the first.
+    */
+  private[graft] def nQuantizedRows(s: SparkSession, d: String): Long =
+    SessionCache(s, d, "n_quantized_rows")(quantized(s, d).count())
+
   /** Bucket width for (session, dir) = [[lshBitsFor]] of the indexed
     * (non-null) vector count, memoized in [[graft.SessionCache]] beside
     * the index it shapes.
@@ -1428,8 +1436,8 @@ object Similarity {
     * (query_id, vec_id, n_tables) — the top `max(ShortlistMin,
     * ShortlistFrac · corpus)` corpus vectors per query by table-collision
     * count (ties broken by vec_id — deterministic). The probe rows of a
-    * small query set broadcast. The budget's corpus count reads the
-    * materialized quantized cache. Package-visible so the spec can
+    * small query set broadcast. The budget's corpus count is
+    * [[nQuantizedRows]]. Package-visible so the spec can
     * assert the candidate-fraction cap directly.
     */
   private[graft] def annLshShortlist(s: SparkSession, d: String,
@@ -1437,7 +1445,7 @@ object Similarity {
     val hits = lshHits(s, d, broadcast(lshProbes(s, d, queryFilter, ProbeBits)))
       .groupBy("query_id", "vec_id").agg(count(lit(1)).as("n_tables"))
     val b = math.max(ShortlistMin,
-      math.ceil(quantized(s, d).count() * ShortlistFrac).toInt)
+      math.ceil(nQuantizedRows(s, d) * ShortlistFrac).toInt)
     TopK.perKey(hits, Seq("query_id"), "n_tables", "vec_id", b)
   }
 
@@ -1461,7 +1469,7 @@ object Similarity {
       .unionByName(sym.select(col("id_b").as("query_id"),
         col("id_a").as("vec_id"), col("n_tables")))
     TopK.perKey(hits, Seq("query_id"), "n_tables", "vec_id",
-      knnBudget(quantized(s, d).count()))
+      knnBudget(nQuantizedRows(s, d)))
   }
 
   private val IvfK = 16

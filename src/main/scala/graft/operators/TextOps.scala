@@ -772,9 +772,11 @@ object TextOps {
     * dedup clusters on the doc_id repartition key on the eval side only,
     * and the only train N-GRAMS that ever reach the distinct are the
     * ones already matching eval vocabulary — the corpus-wide n-gram
-    * distinct a naive vocab-first formulation would pay never happens
-    * (the raw train doc rows do pass one doc_id-hash spread, the
-    * tiny-file guard that a multi-split lake scan replaces).
+    * distinct a naive vocab-first formulation would pay never happens.
+    * Above [[graft.Tables.SpreadMinDocs]] documents both sides' raw doc
+    * rows pass one doc_id-hash spread (a full shuffle) so the tokenizing
+    * runs on every core; at or below it a single-split corpus stays one
+    * partition and the plan carries no shuffle exchange at all.
     * Zero-hit eval docs are kept with n_hits = 0 (a decontamination
     * report that silently drops the clean docs can't certify anything).
     */
@@ -822,17 +824,28 @@ object TextOps {
     if (nDocs <= EvalBroadcastMaxCorpusDocs) broadcast(_) else _.hint("merge")
 
   private[graft] def decontaminate(s: SparkSession, d: String): DataFrame = {
+    val nDocs = Tables.rowsUpTo(s, d, "documents", EvalBroadcastMaxCorpusDocs)
+    decontaminated(s, d, evalJoinHint(nDocs),
+      if (Tables.spreadsByDocId(nDocs)) Tables.spreadByDocId else identity)
+  }
+
+  /** [[decontaminate]] with both sides spread by doc_id at any corpus
+    * size: the far side of [[graft.Tables.spreadsByDocId]].
+    */
+  private[graft] def decontaminateSpread(s: SparkSession, d: String): DataFrame =
+    decontaminated(s, d,
+      evalJoinHint(Tables.rowsUpTo(s, d, "documents", EvalBroadcastMaxCorpusDocs)),
+      Tables.spreadByDocId)
+
+  private def decontaminated(s: SparkSession, d: String,
+      hinted: DataFrame => DataFrame, spread: DataFrame => DataFrame): DataFrame = {
     val isEval = Text.evalSlice(col("doc_id"))
-    val hinted = evalJoinHint(
-      Tables.rowsUpTo(s, d, "documents", EvalBroadcastMaxCorpusDocs))
     def ngrams(evalSide: Boolean) = {
-      val base = Tables.documents(s, d).filter(if (evalSide) isEval else !isEval)
-      // one doc_id-hash spread for both sides: the eval side's per-doc
-      // distinct and groupBys ride that partitioning; the train side needs
-      // no clustering, so there it is only the single-file parallelism
-      // guard (Similarity.tokenized's pattern: a lake-scale scan is
-      // already multi-split)
-      val spread = base.repartition(s.sparkContext.defaultParallelism, col("doc_id"))
+      // one spread for both sides: the eval side's per-doc distinct and
+      // groupBys ride its partitioning (or the corpus' single partition);
+      // the train side needs no clustering, so there it only spreads the
+      // tokenizing
+      val docs = spread(Tables.documents(s, d).filter(if (evalSide) isEval else !isEval))
       // ONE GramHashKernel pass (r14): the tokenize → filter → 5-gram
       // concat lambda chain ran INTERPRETED per row (higher-order
       // functions are CodegenFallback) and every downstream
@@ -841,7 +854,7 @@ object TextOps {
       // moves 8-byte longs. Same rows modulo xxhash64 collisions — the
       // 2^-64 standing contract the shingle index already relies on
       // (re-proven: oracles hash-green at sf0.01 AND sf0.001).
-      spread.select(col("doc_id"), explode(gramHashes(norm, 5)).as("ng"))
+      docs.select(col("doc_id"), explode(gramHashes(norm, 5)).as("ng"))
     }
     // only the (bounded) eval side pays a per-doc distinct — train n-grams
     // feed an existence check, where within-doc duplicates are harmless
@@ -1939,8 +1952,8 @@ object TextOps {
     * document frame.
     */
   private def dupSpanCountsOf(docs: DataFrame): DataFrame = {
-    // doc_id-hash spread: the single-file testdata scan's parallelism
-    // guard (a multi-split lake scan replaces it), as in qDecontaminate.
+    // doc_id-hash spread so the tokenizing runs on every core: a full
+    // shuffle at any lake size.
     // r14: the tokenize → 5-gram concat → xxhash64 chain is ONE
     // GramHashKernel pass (dropEmpty = the filtered-split tokenization
     // this table has always used) — bit-identical hashes, no token array
@@ -2084,8 +2097,8 @@ object TextOps {
     // carries the position; array expr INLINE in the generator
     // (CLAUDE.md invariant); empty arrays (< DupSpanN tokens) explode to
     // zero rows like the old size(w) >= DupSpanN filter.
-    // doc_id-hash spread: the single-file testdata scan's parallelism
-    // guard (a multi-split lake scan replaces it), as in dupSpanCounts
+    // doc_id-hash spread so the tokenizing runs on every core: a full
+    // shuffle at any lake size, as in dupSpanCounts
     val grams = docs.repartition(s.sparkContext.defaultParallelism, col("doc_id"))
       .filter(col("text").isNotNull)
       .select(col("doc_id"),
@@ -2262,8 +2275,8 @@ object TextOps {
         posexplode(split(col("text"), "\n")).as(Seq("pos", "raw")))
       .select(col("doc_id"), col("pos"), Text.norm(col("raw")).as("ln"))
       .filter(trim(col("ln")) =!= "")
-    // doc_id-hash spread: the single-file testdata scan's parallelism
-    // guard (a multi-split lake scan replaces it), as in dupSpanCounts
+    // doc_id-hash spread so the tokenizing runs on every core: a full
+    // shuffle at any lake size, as in dupSpanCounts
     val spread = docs.repartition(s.sparkContext.defaultParallelism, col("doc_id"))
     // first occurrence per line hash: one narrow (h, doc_id, pos)
     // aggregate — struct min is lexicographic, so (doc_id, pos) argmin

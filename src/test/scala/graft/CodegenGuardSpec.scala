@@ -42,6 +42,19 @@ class CodegenGuardSpec extends SparkSpec {
     assert(CodegenGuard.report("spec") == v.size)
   }
 
+  test("distinct sources: at most the compiles, and a warm second pass adds neither") {
+    CodegenGuard.install()
+    CodegenGuard.clear()
+    // literals no other spec uses, so the first pass compiles
+    def q = spark.range(100).selectExpr("id % 7919 AS k", "id * 104729 AS v")
+      .groupBy("k").agg(org.apache.spark.sql.functions.sum("v").as("s")).orderBy("k")
+    q.collect()
+    val (compiles, distinct) = (CodegenGuard.compiles, CodegenGuard.distinctSources)
+    assert(compiles > 0 && distinct > 0 && distinct <= compiles, s"$distinct of $compiles")
+    q.collect()
+    assert(CodegenGuard.compiles == compiles && CodegenGuard.distinctSources == distinct)
+  }
+
   test("a healthy kernel leaves the guard clean") {
     CodegenGuard.install()
     CodegenGuard.clear()

@@ -608,6 +608,15 @@ class SimilaritySpec extends SparkSpec {
     assert(frac <= 0.2, s"candidate fraction $frac exceeds 0.2")
   }
 
+  test("lsh shortlists: the budgets' corpus count runs once per lake") {
+    val queries = col("vec_id") < 10
+    Similarity.annLshShortlist(spark, sfDir, queries)
+    Similarity.knnShortlist(spark, sfDir)
+    assert(Similarity.nQuantizedRows(spark, sfDir) == Similarity.quantized(spark, sfDir).count())
+    assert(jobs(Similarity.annLshShortlist(spark, sfDir, queries)) == 0)
+    assert(jobs(Similarity.knnShortlist(spark, sfDir)) == 0)
+  }
+
   test("neardup cross-source: rollup matches a driver recompute from the pinned labels") {
     val labels = Similarity.dedupClusterLabels(spark, sfDir).collect()
       .map(r => r.getAs[Long]("id") -> r.getAs[Long]("label"))

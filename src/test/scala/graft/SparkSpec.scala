@@ -1,9 +1,14 @@
 package graft
 
 import java.nio.file.{Files, Path}
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.{JoinStrategyHint, ResolvedHint}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.internal.{SQLConf, StaticSQLConf}
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -21,6 +26,35 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     val dir = Files.createTempDirectory(prefix)
     tempDirs.synchronized(tempDirs += dir)
     dir
+  }
+
+  /** The shuffle exchanges of `df`'s executed plan, adaptive stages included. */
+  protected def shuffles(df: DataFrame): Seq[ShuffleExchangeExec] =
+    SparkSpec.Plans.collect(df.queryExecution.executedPlan) { case s: ShuffleExchangeExec => s }
+
+  /** The jobs `body` starts, counted by a listener. A marker job, started
+    * after `body` under its own group, drains the listener bus: events
+    * arrive in order, so every earlier job start has been seen by then.
+    */
+  protected def jobs(body: => Unit): Int = {
+    val group = "graft-spec-drain"
+    val drained = new CountDownLatch(1)
+    val started = new AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          drained.countDown()
+        else started.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      body
+      sc.setJobGroup(group, "drain the listener bus")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(drained.await(60, TimeUnit.SECONDS), "listener bus did not drain")
+      started.get
+    } finally sc.removeSparkListener(listener)
   }
 
   /** The join strategies `df`'s analyzed plan is hinted with. */
@@ -56,6 +90,8 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkSpec {
+  private object Plans extends AdaptiveSparkPlanHelper
+
   /** (file name, source) of every Scala file under `src/main/scala`, for
     * the specs that scan the sources for a banned spelling.
     */

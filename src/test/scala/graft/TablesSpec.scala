@@ -1,22 +1,17 @@
 package graft
 
-import java.util.concurrent.{CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.logical.Repartition
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
 
 /** [[Tables.table]]'s single-split rule: a table whose files fit one input
   * split is planned as one partition, so aggregates, joins and sorts over
   * it need no exchange; filters and column pruning still reach its scan;
   * a table above one split keeps its parallel scan and its exchanges; and
-  * a rewritten table is decided again on its next lookup.
+  * a rewritten table is decided again on its next lookup. It also pins
+  * the documents' doc_id spread gate ([[Tables.spreadsByDocId]]).
   */
-class TablesSpec extends SparkSpec with AdaptiveSparkPlanHelper {
+class TablesSpec extends SparkSpec {
 
   private val SplitKey = "spark.sql.files.maxPartitionBytes"
 
@@ -32,34 +27,6 @@ class TablesSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     val peaks = events.filter(col("value") > 0)
       .groupBy("event_type").agg(max("value").as("peak"))
     counts.join(peaks, "event_type").orderBy("event_type")
-  }
-
-  private def shuffles(df: DataFrame): Seq[ShuffleExchangeExec] =
-    collect(df.queryExecution.executedPlan) { case s: ShuffleExchangeExec => s }
-
-  /** The jobs `body` starts, counted by a listener. A marker job, started
-    * after `body` under its own group, drains the listener bus: events
-    * arrive in order, so every earlier job start has been seen by then.
-    */
-  private def jobs(body: => Unit): Int = {
-    val group = "graft-tables-spec-drain"
-    val drained = new CountDownLatch(1)
-    val started = new AtomicInteger()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
-          drained.countDown()
-        else started.incrementAndGet()
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    try {
-      body
-      sc.setJobGroup(group, "drain the listener bus")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      assert(drained.await(60, TimeUnit.SECONDS), "listener bus did not drain")
-      started.get
-    } finally sc.removeSparkListener(listener)
   }
 
   /** `body` with the split size at `bytes` and a fresh registry, whose
@@ -124,6 +91,13 @@ class TablesSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       assert(docs.rdd.getNumPartitions > 1)
       assert(docs.count() == 2000)
     }
+  }
+
+  test("doc_id spread: none at SpreadMinDocs documents, spread one past it") {
+    assert(!Tables.spreadsByDocId(Tables.SpreadMinDocs))
+    assert(Tables.spreadsByDocId(Tables.SpreadMinDocs + 1))
+    assert(shuffles(Tables.documents(spark, sfDir)).isEmpty)
+    assert(shuffles(Tables.spreadByDocId(Tables.documents(spark, sfDir))).nonEmpty)
   }
 
   test("reading events changes no session conf") {

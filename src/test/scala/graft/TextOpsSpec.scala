@@ -326,6 +326,15 @@ class TextOpsSpec extends SparkSpec {
     assert(shuffled == hinted.collect().map(key).toSet, "branches disagree")
   }
 
+  test("decontaminate: a single-split corpus plans no shuffle; the doc_id spread lands the same rows") {
+    val plain = TextOps.decontaminate(spark, sfDir)
+    val rows = plain.collect().toSeq
+    assert(shuffles(plain).isEmpty, plain.queryExecution.executedPlan.toString)
+    val spread = TextOps.decontaminateSpread(spark, sfDir)
+    assert(spread.collect().toSeq == rows, "the doc_id spread changed the rows")
+    assert(shuffles(spread).nonEmpty, spread.queryExecution.executedPlan.toString)
+  }
+
   test("pii kernels: crafted strings match the DuckDB-verified counts/deltas") {
     // The corpus contains no digits or '@' (q_pii_scan's oracle hash is
     // structurally all-zero), so the regex kernels are pinned HERE: each
