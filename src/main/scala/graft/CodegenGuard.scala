@@ -2,6 +2,8 @@ package graft
 
 import java.util.concurrent.ConcurrentLinkedQueue
 
+import scala.util.Try
+
 import org.apache.logging.log4j.{Level, LogManager}
 import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
 import org.apache.logging.log4j.core.appender.AbstractAppender
@@ -52,14 +54,16 @@ import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
   * compiled on a driver thread is compiled again on a task thread, whose
   * loader differs: [[distinctSources]] counts the sources among the
   * classes cached since install/clear, and the report prints the
-  * compiles that repeat one.
+  * compiles that repeat a cached source (a loader change, or a class
+  * compiled again after its eviction). That cache is a private field, so
+  * the count reads n/a if Spark renames it; the fallback gate still runs.
   */
 object CodegenGuard {
   private val hits = new ConcurrentLinkedQueue[String]()
   @volatile private var installed = false
   // (compiles, compile ns) and the codegen cache's keys at the last install/clear
   @volatile private var mark = (0L, 0L)
-  @volatile private var markKeys = Set.empty[Any]
+  @volatile private var markKeys = Option(Set.empty[Any])
 
   /** JVM-wide (compiles, compile ns). `CodeGenerator` sizes its class cache
     * from the conf active when it initializes, so it is not touched before
@@ -70,8 +74,10 @@ object CodegenGuard {
     (n, if (n == 0) 0L else CodeGenerator.compileTime)
   }
 
-  /** Spark's codegen class cache, a private field of `CodeGenerator`. */
-  private lazy val classCache: java.util.Map[_, _] = {
+  /** Spark's codegen class cache, a private field of `CodeGenerator`;
+    * a Failure if Spark's internals no longer match.
+    */
+  private lazy val classCache: Try[java.util.Map[_, _]] = Try {
     val m = CodeGenerator.getClass.getDeclaredMethod("cache")
     m.setAccessible(true)
     val cache = m.invoke(CodeGenerator)
@@ -80,12 +86,13 @@ object CodegenGuard {
   }
 
   /** The (class loader, source) keys of the compiled classes Spark holds,
-    * empty before the first compile (as in [[totals]]).
+    * empty before the first compile (as in [[totals]]); None if the cache
+    * cannot be read.
     */
-  private def cachedKeys: Set[Any] = {
+  private def cachedKeys: Option[Set[Any]] = {
     import scala.jdk.CollectionConverters._
-    if (CodegenMetrics.METRIC_COMPILATION_TIME.getCount == 0) Set.empty
-    else classCache.keySet.asScala.toSet
+    if (CodegenMetrics.METRIC_COMPILATION_TIME.getCount == 0) Some(Set.empty)
+    else classCache.flatMap(c => Try(c.keySet.asScala.toSet[Any])).toOption
   }
 
   private val Needles = Seq(
@@ -130,11 +137,13 @@ object CodegenGuard {
   def compiles: Long = totals._1 - mark._1
 
   /** Distinct generated sources among the classes cached since
-    * install/clear; `compiles - distinctSources` compiles repeated a
-    * source under another class loader (or replaced an evicted class).
+    * install/clear, None if Spark's cache cannot be read;
+    * `compiles - distinctSources` compiles repeated a cached source under
+    * another class loader or after its eviction.
     */
-  def distinctSources: Long =
-    (cachedKeys -- markKeys).collect { case (_, code) => code }.size.toLong
+  def distinctSources: Option[Long] =
+    for (now <- cachedKeys; before <- markKeys)
+      yield (now -- before).collect { case (_, code) => code }.size.toLong
 
   /** Their total compile time in ms. */
   def compileMs: Double = (totals._2 - mark._2) / 1e6
@@ -152,9 +161,9 @@ object CodegenGuard {
     */
   def report(context: String): Int = {
     val n = compiles
-    val repeats = math.max(0L, n - distinctSources)
-    System.err.println(f"[codegen-guard] $context: $n%d compile(s) ($repeats%d repeat a " +
-      f"source compiled under another class loader), $compileMs%.1f ms in Janino")
+    val repeats = distinctSources.fold("n/a")(d => math.max(0L, n - d).toString)
+    System.err.println(f"[codegen-guard] $context: $n%d compile(s) ($repeats repeat a " +
+      f"cached source: loader change or eviction), $compileMs%.1f ms in Janino")
     val v = violations
     if (v.nonEmpty) {
       System.err.println(

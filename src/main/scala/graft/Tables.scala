@@ -61,20 +61,22 @@ object Tables {
     rows
   }
 
-  /** Document rows above which a document table is hash-spread by
-    * `doc_id` over the cores before tokenizing ([[spreadsByDocId]]).
-    * `repartition(n, col)` always plans a full shuffle, and a single-split
-    * corpus is already one partition ([[table]]), so at or below the
-    * gate the per-doc distincts, groupBys and broadcast semi-joins over
-    * it plan no exchange. Measured on 4 cores over row subsets of the
-    * sf1 documents, spread → unspread: in a fresh JVM (median of 3)
-    * `q_decontaminate` read 5k docs 3.26 → 2.47 s, 20k 4.46 → 3.54 s,
-    * 30k 5.20 → 3.74 s and `q_bpe_encode` 5k 1.92 → 1.39 s, 20k
-    * 2.24 → 2.24 s; JIT-warm (median of 7) decontamination read 5k
-    * 0.47 → 0.40 s, 10k 0.53 → 0.57 s, 20k 0.63 → 0.77 s, 50k
-    * 0.90 → 1.38 s, and the BPE word table 5k 0.19 → 0.26 s, 20k
-    * 0.38 → 0.86 s. Above the gate the spread's parallel tokenizing
-    * pays for the shuffle in a warm session as well.
+  /** Document rows above which decontamination hash-spreads the
+    * documents by `doc_id` over the cores before tokenizing
+    * ([[spreadsByDocId]]). `repartition(n, col)` always plans a full
+    * shuffle, and a single-split corpus is already one partition
+    * ([[table]]), so at or below the gate the per-doc distincts, groupBys
+    * and broadcast semi-joins over it plan no exchange.
+    *
+    * 20k is an estimate, not a measured crossover: the crossover depends
+    * on whether the JVM is cold, and no benchmark workload runs a corpus
+    * above the gate to pin it. On 4 cores over row prefixes of the sf1
+    * documents, spread → unspread, a fresh JVM (median of 3) read
+    * `q_decontaminate` 5k 3.26 → 2.47 s, 20k 4.46 → 3.54 s and
+    * 30k 5.20 → 3.74 s, so cold the unspread plan wins at every size
+    * measured; JIT-warm (median of 7) it read 5k 0.47 → 0.40 s,
+    * 10k 0.53 → 0.57 s, 20k 0.63 → 0.77 s and 50k 0.90 → 1.38 s, so warm
+    * the spread wins from about 10k.
     */
   private[graft] val SpreadMinDocs = 20000L
 

@@ -264,17 +264,6 @@ class AssemblySpec extends SparkSpec {
     assert(astralDist.schema == astralDriver.schema)
   }
 
-  test("bpe word table: a single-split corpus aggregates with no shuffle; the doc_id spread counts the same rows") {
-    def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map(r => (r.getString(0), r.getString(1), r.getLong(2))).toSet
-    val plain = Assembly.wordCounts(spark, sfDir)
-    val got = rows(plain)
-    assert(shuffles(plain).isEmpty, plain.queryExecution.executedPlan.toString)
-    val spread = Assembly.wordCountsSpread(spark, sfDir)
-    assert(rows(spread) == got, "the doc_id spread changed the word table")
-    assert(shuffles(spread).nonEmpty, spread.queryExecution.executedPlan.toString)
-  }
-
   test("bpe encode: a cold run over a fresh lake reads documents.parquet once") {
     import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution}
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
