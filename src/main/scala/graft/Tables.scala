@@ -86,7 +86,11 @@ object Tables {
   private[graft] def spreadsByDocId(nDocs: Long): Boolean = nDocs > SpreadMinDocs
 
   /** `docs` hash-spread by `doc_id` over the session's default
-    * parallelism: the far side of [[spreadsByDocId]].
+    * parallelism, so the tokenizing after it runs on every core: a full
+    * shuffle at any lake size (a single-split corpus otherwise reads as
+    * one partition, [[table]]). The one spread of the corpus operators;
+    * decontamination takes it only above [[spreadsByDocId]], the others
+    * at every size.
     */
   private[graft] def spreadByDocId(docs: DataFrame): DataFrame =
     docs.repartition(docs.sparkSession.sparkContext.defaultParallelism, col("doc_id"))

@@ -573,8 +573,8 @@ object CjkKernel {
   * blocklist filter; shared by q_blocklist_scan, q_doc_features,
   * q_datacard and q_release_gate through TextOps.blocklistFlags): for a
   * foldable word list, returns struct(n_tok, n_blocked) ≡
-  * (`size(filter(split(norm, ' '), t -> t <> ''))`,
-  *  `size(filter(split(norm, ' '), t -> t IN (words)))`)
+  * (`size(array_remove(split(norm, ' '), ''))`,
+  *  `size(filter(array_remove(split(norm, ' '), ''), t -> t IN (words)))`)
   * where norm is the canonical Text.norm
   * (`regexp_replace(translate(trim(text), A-Z, a-z), '[ \t\n\r\f]+', ' ')`).
   *
@@ -1084,7 +1084,7 @@ object NormKernel {
   * (r14, guide §1.2 per-task work). Replaces the
   * `transform(sequence(0, size(w)-n), i -> xxhash64(concat_ws(' ',
   * get(w,i)..get(w,i+n-1))))` spelling over `w = split(text, ' ')`
-  * (keepEmpty) or `w = filter(split(text, ' '), t -> t <> '')`
+  * (keepEmpty) or `w = array_remove(split(text, ' '), '')`
   * (dropEmpty), which materialized the token array plus one concatenated
   * string per position just to hash it.
   *

@@ -158,12 +158,6 @@ object Assembly {
       s"$outDir/manifest")
   }
 
-  /** The words of [[Text.norm]]'s text, minus split's phantom "" tokens
-    * (see qRepetitionStats) — the tokenizer [[qPairCounts]] and BPE share.
-    */
-  private def words(text: Column): Column =
-    filter(split(Text.norm(text), " "), t => t =!= "")
-
   /** How many top pairs [[qPairCounts]] emits. */
   private[graft] val PairTopK = 100
 
@@ -193,11 +187,8 @@ object Assembly {
        |FROM p GROUP BY 1
        |ORDER BY n DESC, pair LIMIT $PairTopK""".stripMargin
   ) { (s, d) =>
-    // doc_id-hash spread so the tokenizing runs on every core: a full
-    // shuffle at any lake size, as in dupSpanCounts
-    val toks = Tables.documents(s, d)
-      .repartition(s.sparkContext.defaultParallelism, col("doc_id"))
-      .select(words(col("text")).as("w"))
+    val toks = Tables.spreadByDocId(Tables.documents(s, d))
+      .select(Text.words(col("text")).as("w"))
     toks.filter(size(col("w")) >= 2)
       // array expr INLINE in the generator (CLAUDE.md invariant); get()
       // not w[i] so index lambdas never evaluate before their size guard
@@ -285,21 +276,18 @@ object Assembly {
       .map { case (rk, l, r, m, n) => Row(rk, l, r, m, n) }.asJava, outSchema)
   }
 
-  /** The (source, word, n) table: how often each [[words]] word occurs
+  /** The (source, word, n) table: how often each [[Text.words]] word occurs
     * in each source — BPE's one corpus pass. Training reads a word's
     * frequency as its n summed over sources; encode reads
     * `n_words = Σ n` and `n_bpe_tokens = Σ n·n_bpe(word)` per source.
     */
   private def wordCounts(s: SparkSession, d: String): DataFrame =
-    Tables.documents(s, d)
-      // doc_id-hash spread so the tokenizing runs on every core: a full
-      // shuffle at any lake size. Unlike decontamination it is not gated
-      // on Tables.SpreadMinDocs: a warm session reading the word table
-      // unspread took 0.26 s at 5k documents, 0.45 s at 10k and 0.86 s
-      // at 20k against 0.19, 0.25 and 0.38 s spread (4 cores), and
-      // gating it left release_cold's wall unchanged
-      .repartition(s.sparkContext.defaultParallelism, col("doc_id"))
-      .select(col("source"), explode(words(col("text"))).as("word"))
+    // spread at every size, unlike decontamination: a warm session
+    // reading the word table unspread took 0.26 s at 5k documents, 0.45 s
+    // at 10k and 0.86 s at 20k against 0.19, 0.25 and 0.38 s spread
+    // (4 cores), and gating it left release_cold's wall unchanged
+    Tables.spreadByDocId(Tables.documents(s, d))
+      .select(col("source"), explode(Text.words(col("text"))).as("word"))
       .groupBy("source", "word").agg(count(lit(1)).as("n"))
 
   /** [[wordCounts]]' rows if at most [[BpeDriverMaxVocab]], else None:
@@ -434,7 +422,7 @@ object Assembly {
 
   /** [[codePointSyms]] in Spark: `split` on "" steps by code point. */
   private def wordSyms: Column =
-    concat(filter(split(col("word"), ""), c => c =!= ""), array(lit(BpeEow)))
+    concat(array_remove(split(col("word"), ""), ""), array(lit(BpeEow)))
       .as("syms")
 
   /** Code-POINT segmentation of a word plus the end-of-word marker — the

@@ -71,7 +71,7 @@ object Curation {
     // one scan: every per-row gate as a projection chain
     val perDoc = TextOps.blocklistFlags(TextOps.qualityScored(Tables.documents(s, d)))
       .select(col("doc_id"),
-        md5(Text.norm(col("text"))).as("h"),
+        Text.contentKey(col("text")).as("h"),
         col("quality_score"), col("blocked"),
         Text.evalSlice(col("doc_id")).as("is_eval"))
     // exact keeper per content group as a MIN window riding one narrow
@@ -154,7 +154,7 @@ object Curation {
     * training corpus): eleven headline numbers in long format
     * (section, metric, value, rate), each computed by the SAME shared
     * definition as its standalone report — token counting
-    * ([[Text.wordCount]]), content keys ([[Text.norm]]+md5, the
+    * ([[Text.wordCount]]), content keys ([[Text.contentKey]], the
     * exact-dedup rule), PII and blocklist flags ([[TextOps.piiCols]],
     * [[TextOps.blocklistFlags]]), language prediction
     * ([[TextOps.predictedLang]]), quality buckets
@@ -271,7 +271,7 @@ object Curation {
         .as("n_langs"))
     val a4 = docs.filter(col("text").isNotNull)
       .agg(count(lit(1)).as("n_content"),
-        countDistinct(md5(Text.norm(col("text")))).as("n_distinct"))
+        countDistinct(Text.contentKey(col("text"))).as("n_distinct"))
     val qb = TextOps.sourceBucketCounts(s, d).filter(col("b").isNotNull)
       .groupBy("b").agg(sum("c").as("cb"))
     val sc = qb.agg(coalesce(sum("cb"), lit(0L)).cast("long").as("n_scored"))
@@ -451,7 +451,7 @@ object Curation {
         .cast("long").as("blk_docs"))
     val a4 = docs.filter(col("text").isNotNull)
       .agg(count(lit(1)).as("n_content"),
-        countDistinct(md5(Text.norm(col("text")))).as("n_distinct"))
+        countDistinct(Text.contentKey(col("text"))).as("n_distinct"))
     val st = flagged.groupBy("source")
       .agg(sum(col("toks")).cast("long").as("s_toks"))
       .agg(coalesce(max("s_toks"), lit(0L)).as("max_toks"),

@@ -407,8 +407,7 @@ object Similarity {
     * `size(w) >= 3` doc filter: grams ≥ 1 ⇔ split tokens ≥ 3.
     */
   private def shingleHashesOf(docs: DataFrame): DataFrame =
-    docs
-      .repartition(docs.sparkSession.sparkContext.defaultParallelism, col("doc_id"))
+    Tables.spreadByDocId(docs)
       .select(col("doc_id"), shingleHashCol.as("hs"))
       .filter(size(col("hs")) > 0)
 
@@ -804,12 +803,11 @@ object Similarity {
     val reserved = Seq("__hs", "fp")
     require(!docs.columns.exists(reserved.contains),
       s"withSimhashFp reserves columns $reserved")
-    // tokens over Text.norm — the SAME canonical normalization the exact
-    // content key uses, so a widened whitespace class moves the exact and
-    // near-dup tiers together (the funnel's stage-1 ⊆ stage-2 premise)
-    val toks = split(Text.norm(col("text")), " ")
-    val hs = array_distinct(
-      transform(filter(toks, t => t =!= ""), t => xxhash64(t)))
+    // word hashes over Text.norm — the SAME canonical normalization the
+    // exact content key uses, so a widened whitespace class moves the
+    // exact and near-dup tiers together (the funnel's stage-1 ⊆ stage-2
+    // premise)
+    val hs = array_distinct(Text.gramHashes(col("text"), 1))
     docs
       .withColumn("__hs", hs)
       .filter(size(col("__hs")) >= 1) // docs with zero tokens have no signature
@@ -903,11 +901,7 @@ object Similarity {
 
   private[graft] def simhashFingerprints(s: SparkSession, d: String): DataFrame =
     SessionCache.persisted(s, d, "simhash_fp") {
-      withSimhashFp(Tables.documents(s, d)
-        // small single-file inputs scan as ONE partition; spread rows so
-        // the fingerprint map runs at full parallelism (a full shuffle at
-        // any lake size)
-        .repartition(s.sparkContext.defaultParallelism, col("doc_id")))
+      withSimhashFp(Tables.spreadByDocId(Tables.documents(s, d)))
         .select("doc_id", "fp")
     }
 
@@ -2660,27 +2654,28 @@ object Similarity {
        |  string_agg(CAST(id AS VARCHAR), ',' ORDER BY id) AS members
        |FROM labels GROUP BY label HAVING COUNT(*) > 1
        |ORDER BY keep_id""".stripMargin
-  ) { (s, d) =>
-    ngramClusterLabels(s, d)
-      .groupBy(col("label").as("keep_id"))
-      .agg(count(lit(1)).as("n_members"),
-        array_join(sort_array(collect_list(col("id"))), ",").as("members"))
-      .filter(col("n_members") > 1)
-      .orderBy("keep_id")
-  }
+  ) { (s, d) => clustersOverLabels(ngramClusterLabels(s, d)) }
 
   val qDedupClusters: Q = Q.rowsOnly("q_dedup_clusters") { (s, d) =>
-    val labels = dedupClusterLabels(s, d)
-    // members as a sorted CSV string, not array<long>: the driver
-    // hash-sorts every output with pandas, and array cells are unhashable
-    // there — a scalar string keeps the rows-only check clean
+    clustersOverLabels(dedupClusterLabels(s, d))
+  }
+
+  /** The cluster roster over any (id, label) component table — ONE
+    * spelling read by the MinHash entry ([[qDedupClusters]], rows-only)
+    * and the exact n-gram entry ([[qDedupClustersNgram]], hash-green
+    * against the WITH RECURSIVE closure oracle), as
+    * [[survivorsOverLabels]] and [[weightsOverLabels]] are for their
+    * families. Members are a sorted CSV string, not array<long>: the
+    * driver hash-sorts every output with pandas, and array cells are
+    * unhashable there.
+    */
+  private[graft] def clustersOverLabels(labels: DataFrame): DataFrame =
     labels
       .groupBy(col("label").as("keep_id"))
       .agg(count(lit(1)).as("n_members"),
         array_join(sort_array(collect_list(col("id"))), ",").as("members"))
       .filter(col("n_members") > 1)
       .orderBy("keep_id")
-  }
 
   /** End-to-end deduped corpus (rows-only; spec): the document ids that
     * survive near-dup removal — every cluster keeps only its canonical

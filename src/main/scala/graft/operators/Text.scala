@@ -50,6 +50,32 @@ private[graft] object Text {
     graft.functions.GraftFunctions.call("graft_norm", c)
   }
 
+  /** The words of `c`: [[norm]] split at single spaces, minus split's
+    * empty tokens (a leading or trailing space, an empty text). The one
+    * string tokenizer of the corpus operators. `array_remove` keeps the
+    * rows `filter(…, t => t =!= "")` kept (split yields no null
+    * elements) and, unlike `ArrayFilter`'s lambda, has generated code.
+    */
+  def words(c: Column): Column = array_remove(split(norm(c), " "), "")
+
+  /** The xxhash64 of each word-`n`-gram of [[words]]`(c)`, in position
+    * order ([[graft.functions.GramHashKernel]], drop-empty): the
+    * tokenizer of every operator that needs only gram hashes, never the
+    * strings. Null text → null; fewer than `n` words → empty. On valid
+    * UTF-8 the hashes are bit-identical to `xxhash64` over the
+    * space-joined words; malformed bytes are hashed as they are, where
+    * `split` would first rewrite them to U+FFFD.
+    */
+  def gramHashes(c: Column, n: Int): Column =
+    graft.functions.GraftFunctions.call("graft_gram_hashes", norm(c), lit(n), lit(false))
+
+  /** The content key of a text: md5 of [[norm]]. The one definition the
+    * batch exact-dedup operators and the streaming ingest dedup
+    * ([[graft.streaming.IngestStream.dedupeContent]]) key on, so the two
+    * tiers cannot disagree about which documents are the same content.
+    */
+  def contentKey(c: Column): Column = md5(norm(c))
+
   /** The pre-kernel regex spelling of [[norm]] (spec use: the kernel's
     * equivalence pin compares against this exact form).
     */

@@ -63,7 +63,7 @@ object TextOps {
        |GROUP BY 1 ORDER BY keep_id""".stripMargin
   ) { (s, d) =>
     Tables.documents(s, d)
-      .groupBy(md5(norm).as("content_hash"))
+      .groupBy(Text.contentKey(col("text")).as("content_hash"))
       .agg(min(col("doc_id")).as("keep_id"), count(lit(1)).as("n_copies"))
       .orderBy("keep_id")
   }
@@ -488,7 +488,7 @@ object TextOps {
   ) { (s, d) =>
     val toks = Tables.documents(s, d)
       .select(col("doc_id"), col("source"),
-        // ≡ size(filter(split(norm, " "), _ =!= "")): the ASCII fold
+        // ≡ size(Text.words(text)): the ASCII fold
         // never touches the whitespace class, so the folded text's
         // maximal non-ws runs are the raw text's — the TokenCounts
         // kernel counts them in one byte scan (r13; oracle unchanged)
@@ -563,7 +563,7 @@ object TextOps {
   ) { (s, d) =>
     val toks = Tables.documents(s, d)
       .select(col("doc_id"), expr("doc_id DIV 100").as("batch_id"),
-        filter(split(norm, " "), t => t =!= "").as("w"))
+        Text.words(col("text")).as("w"))
     val bt = toks.groupBy("batch_id")
       .agg(count(lit(1)).as("n_docs"),
         sum(size(col("w"))).cast("long").as("n_tokens"))
@@ -614,10 +614,8 @@ object TextOps {
     // token-string stream never crosses an exchange at all (it used to
     // be the operator's largest shuffle: every token occurrence as a
     // string row, hashed on (doc_id, term)).
-    val tf = Tables.documents(s, d)
-      .repartition(s.sparkContext.defaultParallelism, col("doc_id"))
-      .select(col("doc_id"),
-        explode(filter(split(norm, " "), t => t =!= "")).as("term"))
+    val tf = Tables.spreadByDocId(Tables.documents(s, d))
+      .select(col("doc_id"), explode(Text.words(col("text"))).as("term"))
       .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
       .withColumn("h", xxhash64(col("term")))
     // document frequency as a map-side-combined aggregate over the
@@ -662,7 +660,7 @@ object TextOps {
   ) { (s, d) =>
     Tables.documents(s, d).select(
       col("doc_id"),
-      md5(norm).as("content_md5"),
+      Text.contentKey(col("text")).as("content_md5"),
       GraftFunctions.call("graft_rolling_hash",
         regexp_replace(col("text"), "[^ -~]", "")).as("rolling_hash"))
       .orderBy("doc_id")
@@ -734,9 +732,7 @@ object TextOps {
     // §2.5) — measured 3.7 → 19.8 s at sf10 when this spread briefly
     // went round-robin (the corpus text sorted in the handful of scan
     // tasks).
-    val docs = Tables.documents(s, d)
-      .repartition(s.sparkContext.defaultParallelism, col("doc_id"))
-    docs
+    Tables.spreadByDocId(Tables.documents(s, d))
       .filter(norm =!= "")
       .select(col("doc_id"), GraftFunctions.call("graft_rep_stats", norm).as("r"))
       .select(col("doc_id"), col("r.n_words").as("n_words"),
@@ -854,7 +850,7 @@ object TextOps {
       // moves 8-byte longs. Same rows modulo xxhash64 collisions — the
       // 2^-64 standing contract the shingle index already relies on
       // (re-proven: oracles hash-green at sf0.01 AND sf0.001).
-      docs.select(col("doc_id"), explode(gramHashes(norm, 5)).as("ng"))
+      docs.select(col("doc_id"), explode(Text.gramHashes(col("text"), 5)).as("ng"))
     }
     // only the (bounded) eval side pays a per-doc distinct — train n-grams
     // feed an existence check, where within-doc duplicates are harmless
@@ -1046,7 +1042,7 @@ object TextOps {
        |ORDER BY source_a, source_b""".stripMargin
   ) { (s, d) =>
     val h = Tables.documents(s, d).filter(col("text").isNotNull)
-      .select(col("source"), md5(norm).as("ch")).distinct()
+      .select(col("source"), Text.contentKey(col("text")).as("ch")).distinct()
     val card = h.groupBy("source").agg(count(lit(1)).as("n"))
     val x = h.select(col("source").as("source_a"), col("ch"))
       .join(h.select(col("source").as("source_b"), col("ch")), Seq("ch"))
@@ -1946,39 +1942,26 @@ object TextOps {
     */
   private[graft] def dupSpanCounts(s: SparkSession, d: String): DataFrame =
     SessionCache.persisted(s, d, "dup_span_counts")(
-      dupSpanCountsOf(Tables.documents(s, d)))
+      gramCounts(Tables.documents(s, d), DupSpanN))
 
-  /** The uncached (doc_id, gram-hash, multiplicity) plan over any
-    * document frame.
+  /** The uncached (doc_id, gram hash `h`, multiplicity `m`) plan of the
+    * word-`n`-grams ([[Text.gramHashes]]) of any document frame: the
+    * builder of both persisted count tables, [[dupSpanCounts]] and
+    * [[tokenCounts]]. A document with fewer than `n` words explodes to
+    * no rows; the (doc_id, h) aggregate rides the doc_id spread, so the
+    * gram stream crosses no exchange. The array expression stays INLINE
+    * in the generator (CLAUDE.md invariant).
     */
-  private def dupSpanCountsOf(docs: DataFrame): DataFrame = {
-    // doc_id-hash spread so the tokenizing runs on every core: a full
-    // shuffle at any lake size.
-    // r14: the tokenize → 5-gram concat → xxhash64 chain is ONE
-    // GramHashKernel pass (dropEmpty = the filtered-split tokenization
-    // this table has always used) — bit-identical hashes, no token array
-    // or per-position string; an empty hash array (< 5 tokens) explodes
-    // to zero rows exactly like the old size(w) >= 5 filter. The array
-    // expression stays INLINE in the generator (CLAUDE.md invariant).
-    docs
-      .repartition(docs.sparkSession.sparkContext.defaultParallelism,
-        col("doc_id"))
-      .select(col("doc_id"), explode(gramHashes(norm, DupSpanN)).as("h"))
+  private def gramCounts(docs: DataFrame, n: Int): DataFrame =
+    Tables.spreadByDocId(docs)
+      .select(col("doc_id"), explode(Text.gramHashes(col("text"), n)).as("h"))
       .groupBy("doc_id", "h").agg(count(lit(1)).as("m"))
-  }
-
-  /** dropEmpty positional gram hashes of a text column (see
-    * [[graft.functions.GramHashKernel]]) — built directly, no registry
-    * handle needed.
-    */
-  private def gramHashes(text: Column, n: Int): Column =
-    GraftFunctions.call("graft_gram_hashes", text, lit(n), lit(false))
 
   /** [[dupSpansFrom]] over any document frame, counted by the uncached
     * plan (the spec's strategy cross-check on crafted corpora).
     */
   private[graft] def dupSpansOf(docs: DataFrame, useWindow: Boolean): DataFrame =
-    dupSpansFrom(docs, dupSpanCountsOf(docs), useWindow)
+    dupSpansFrom(docs, gramCounts(docs, DupSpanN), useWindow)
 
   /** Both physical strategies of the dup-span accounting, shared so the
     * spec pins them identical on the real corpus AND a crafted
@@ -2097,12 +2080,10 @@ object TextOps {
     // carries the position; array expr INLINE in the generator
     // (CLAUDE.md invariant); empty arrays (< DupSpanN tokens) explode to
     // zero rows like the old size(w) >= DupSpanN filter.
-    // doc_id-hash spread so the tokenizing runs on every core: a full
-    // shuffle at any lake size, as in dupSpanCounts
-    val grams = docs.repartition(s.sparkContext.defaultParallelism, col("doc_id"))
+    val grams = Tables.spreadByDocId(docs)
       .filter(col("text").isNotNull)
       .select(col("doc_id"),
-        posexplode(gramHashes(norm, DupSpanN)).as(Seq("i", "h")))
+        posexplode(Text.gramHashes(col("text"), DupSpanN)).as(Seq("i", "h")))
     // r15 (guide §2.3 — ship intervals, not positions): the matched gram
     // STARTS aggregate per doc (narrow longs+ints, map-side combined,
     // ×DupSpanN fewer rows than the old covered-position explode and no
@@ -2275,9 +2256,7 @@ object TextOps {
         posexplode(split(col("text"), "\n")).as(Seq("pos", "raw")))
       .select(col("doc_id"), col("pos"), Text.norm(col("raw")).as("ln"))
       .filter(trim(col("ln")) =!= "")
-    // doc_id-hash spread so the tokenizing runs on every core: a full
-    // shuffle at any lake size, as in dupSpanCounts
-    val spread = docs.repartition(s.sparkContext.defaultParallelism, col("doc_id"))
+    val spread = Tables.spreadByDocId(docs)
     // first occurrence per line hash: one narrow (h, doc_id, pos)
     // aggregate — struct min is lexicographic, so (doc_id, pos) argmin
     val first = lines(spread)
@@ -2393,12 +2372,7 @@ object TextOps {
     */
   private[graft] def tokenCounts(s: SparkSession, d: String): DataFrame =
     SessionCache.persisted(s, d, "token_counts")(
-      Tables.documents(s, d)
-        .repartition(s.sparkContext.defaultParallelism, col("doc_id"))
-        .select(col("doc_id"),
-          explode(filter(split(norm, " "), t => t =!= "")).as("tok"))
-        .groupBy(col("doc_id"), xxhash64(col("tok")).as("h"))
-        .agg(count(lit(1)).as("m")))
+      gramCounts(Tables.documents(s, d), 1))
 
   /** Per-document feature frame for quality-classifier training — the
     * featurization pass behind a FineWeb-Edu-style learned quality
@@ -2504,7 +2478,7 @@ object TextOps {
     val totals = Tables.documents(s, d).groupBy("source")
       .agg(count(lit(1)).as("n_docs"), count(col("text")).as("n_content"))
     val content = Tables.documents(s, d)
-      .select(col("doc_id"), col("source"), md5(norm).as("ch"))
+      .select(col("doc_id"), col("source"), Text.contentKey(col("text")).as("ch"))
       .filter(col("ch").isNotNull)
     val groups = content.groupBy("ch")
       .agg(min(col("doc_id")).as("keep_id"), count(lit(1)).as("n_copies"))

@@ -97,9 +97,9 @@ object IngestStream {
 
   /** Streaming exact CONTENT dedup — [[graft.operators.TextOps]]'
     * q_dedup_exact keep-first semantics applied at ingest time: the same
-    * canonical normalization ([[graft.operators.Text.norm]] — one shared
-    * definition, so batch and stream cannot drift), md5 content key,
-    * dropDuplicatesWithinWatermark. Input: any stream with (ts, text).
+    * content key ([[graft.operators.Text.contentKey]], md5 of the
+    * canonical normalization — one shared definition, so batch and
+    * stream cannot drift), dropDuplicatesWithinWatermark. Input: any stream with (ts, text).
     *
     * State: one 16-byte key per DISTINCT content inside the watermark
     * horizon — bounded by arrival rate × horizon, never corpus size. A
@@ -117,7 +117,7 @@ object IngestStream {
     require(!docs.columns.contains("content_hash"),
       "dedupeContent reserves the content_hash column")
     val keyed = docs
-      .withColumn("content_hash", md5(graft.operators.Text.norm(col("text"))))
+      .withColumn("content_hash", graft.operators.Text.contentKey(col("text")))
       .withWatermark("ts", watermark)
     // a NULL content key (null text) has NO identity: the batch tier
     // PASSES such documents (q_dedup_exact's null-hash group never joins

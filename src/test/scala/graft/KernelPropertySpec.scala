@@ -6,7 +6,7 @@ import graft.functions._
 import org.apache.spark.sql.{Column, Row}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.expressions.{BindReferences, BoundReference, Expression, InterpretedUnsafeProjection, Literal, UnsafeProjection}
-import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenFallback, GenerateUnsafeProjection}
 import org.apache.spark.sql.catalyst.optimizer.ReplaceExpressions
 import org.apache.spark.sql.catalyst.plans.logical.Project
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -30,6 +30,8 @@ import org.scalacheck.util.Pretty
   *     GramHashKernel, the `from_json` form for graft_json_int
   *     (evaluated as analyzed Catalyst expressions, no job per case), and
   *     a plain Scala reference for the vector kernels.
+  *  3. `Text.words` ≡ the filter-lambda tokenizer it replaced, through
+  *     both eval paths.
   *
   * Generators mix ASCII words, whitespace runs, punctuation, multi-byte
   * and supplementary code points, CJK range boundaries, invalid and
@@ -250,17 +252,24 @@ class KernelPropertySpec extends SparkSpec {
     * case then evaluates in-process instead of launching a job.
     */
   private def spelling(cols: Column*): UTF8String => Seq[Any] = {
-    val schema = StructType(Seq(StructField("t", StringType)))
-    val df = spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
-      .select(cols: _*)
-    val project = ReplaceExpressions(df.queryExecution.analyzed).asInstanceOf[Project]
-    val exprs = project.projectList.map(BindReferences.bindReference(_, project.child.output))
+    val exprs = bound(cols: _*)
     val proj = UnsafeProjection.create(exprs)
     s => {
       val out = proj(InternalRow(s))
       exprs.indices.map(i => CatalystTypeConverters.convertToScala(
         out.get(i, exprs(i).dataType), exprs(i).dataType))
     }
+  }
+
+  /** `cols` over one string column `t`, analyzed, RuntimeReplaceable
+    * forms inlined, and bound to ordinal 0.
+    */
+  private def bound(cols: Column*): Seq[Expression] = {
+    val schema = StructType(Seq(StructField("t", StringType)))
+    val df = spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
+      .select(cols: _*)
+    val project = ReplaceExpressions(df.queryExecution.analyzed).asInstanceOf[Project]
+    project.projectList.map(BindReferences.bindReference(_, project.child.output))
   }
 
   private def kernelOf(e: Expression): Any => Any = {
@@ -382,6 +391,26 @@ class KernelPropertySpec extends SparkSpec {
           agree(Seq(kernel(s)), reference(s), s"n = ${ns(i)} on <$s>")
       })
     }
+  }
+
+  // Text.words replaced the filter-lambda tokenizer, whose ArrayFilter is
+  // CodegenFallback: both forms through eval and through a compiled
+  // projection must give one answer on every generated text, and the
+  // words expression must compile without a fallback node.
+  test("Text.words ≡ the filter(split(Text.norm)) lambda, interpreted and codegen") {
+    val exprs = bound(graft.operators.Text.words(t),
+      filter(split(graft.operators.Text.norm(t), " "), w => w =!= ""))
+    assert(!exprs.head.exists(_.isInstanceOf[CodegenFallback]), exprs.head)
+    val paths = Seq(InterpretedUnsafeProjection.createProjection(exprs),
+      GenerateUnsafeProjection.generate(exprs))
+    check(Prop.forAllNoShrink(orNull(text(valid = false))) { in =>
+      val outs = paths.flatMap { p =>
+        val r = p(InternalRow(in))
+        exprs.indices.map(i => CatalystTypeConverters.convertToScala(
+          r.get(i, exprs(i).dataType), exprs(i).dataType))
+      }
+      agree(outs.distinct.size, 1, s"$outs on <$in>")
+    })
   }
 
   test("JsonIntField ≡ the dup-key guarded from_json form") {

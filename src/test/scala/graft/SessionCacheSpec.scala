@@ -150,29 +150,9 @@ class SessionCacheSpec extends SparkSpec {
     }
   }
 
-  private def mainSources(): List[java.nio.file.Path] = {
-    val root = java.nio.file.Paths.get("src/main/scala")
-    assert(java.nio.file.Files.isDirectory(root), s"run from the repo root: $root")
-    val it = java.nio.file.Files.walk(root)
-    try it.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
-    finally it.close()
-  }
-
-  /** (file, enclosing object member) of each match of `call` under
-    * `src/main/scala`, SessionCache.scala excepted; members are declared
-    * at the object's two-space indent.
-    */
-  private def callSites(call: scala.util.matching.Regex): List[(String, String)] = {
-    val member = raw"(?m)^  (?:[\w\[\]]+ )*(?:def|val) (\w+)".r
-    mainSources().filterNot(_.getFileName.toString == "SessionCache.scala").flatMap { f =>
-      val src = new String(java.nio.file.Files.readAllBytes(f), "UTF-8")
-      call.findAllMatchIn(src).map { m =>
-        val owner = member.findAllMatchIn(src.substring(0, m.start)).toList
-          .lastOption.fold("<top level>")(_.group(1))
-        (f.getFileName.toString, owner)
-      }
-    }
-  }
+  /** [[SparkSpec.callSites]] outside SessionCache.scala. */
+  private def callSites(call: scala.util.matching.Regex): List[(String, String)] =
+    SparkSpec.callSites(call).filterNot(_._1 == "SessionCache.scala")
 
   test("no frame is persisted outside SessionCache but in a scoped try/finally") {
     // (file, enclosing object member) of each persist that is released
@@ -211,9 +191,7 @@ class SessionCacheSpec extends SparkSpec {
     // session or lake
     val allowed = Set(("Similarity.scala", "hyperplaneBanks"))
     val decl = raw"val\s+(\w+)\s*=\s*(?:scala\.collection\.concurrent\.)?TrieMap".r
-    val offenders = mainSources().filterNot(_.getFileName.toString == "SessionCache.scala").flatMap { f =>
-      val src = new String(java.nio.file.Files.readAllBytes(f), "UTF-8")
-      val name = f.getFileName.toString
+    val offenders = SparkSpec.mainSources().filterNot(_._1 == "SessionCache.scala").flatMap { case (name, src) =>
       val declared = decl.findAllMatchIn(src).map(_.group(1)).toList
       val uses = "TrieMap".r.findAllMatchIn(src).size
       declared.filterNot(v => allowed((name, v))).map(v => s"$name: $v") ++

@@ -104,6 +104,21 @@ object SparkSpec {
     finally it.close()
   }
 
+  /** (file name, enclosing object member) of each match of `call` in
+    * [[mainSources]]; members are declared at the object's two-space
+    * indent.
+    */
+  def callSites(call: scala.util.matching.Regex): List[(String, String)] = {
+    val member = raw"(?m)^  (?:[\w\[\]]+ )*(?:def|val) (\w+)".r
+    mainSources().flatMap { case (name, src) =>
+      call.findAllMatchIn(src).map { m =>
+        val owner = member.findAllMatchIn(src.substring(0, m.start)).toList
+          .lastOption.fold("<top level>")(_.group(1))
+        (name, owner)
+      }
+    }
+  }
+
   /** Deletes `root` and everything under it; a missing root is a no-op. */
   def deleteTree(root: Path): Unit =
     if (Files.exists(root)) {
