@@ -61,36 +61,12 @@ object Tables {
     rows
   }
 
-  /** Document rows above which decontamination hash-spreads the
-    * documents by `doc_id` over the cores before tokenizing
-    * ([[spreadsByDocId]]). `repartition(n, col)` always plans a full
-    * shuffle, and a single-split corpus is already one partition
-    * ([[table]]), so at or below the gate the per-doc distincts, groupBys
-    * and broadcast semi-joins over it plan no exchange.
-    *
-    * 20k is an estimate, not a measured crossover: the crossover depends
-    * on whether the JVM is cold, and no benchmark workload runs a corpus
-    * above the gate to pin it. On 4 cores over row prefixes of the sf1
-    * documents, spread → unspread, a fresh JVM (median of 3) read
-    * `q_decontaminate` 5k 3.26 → 2.47 s, 20k 4.46 → 3.54 s and
-    * 30k 5.20 → 3.74 s, so cold the unspread plan wins at every size
-    * measured; JIT-warm (median of 7) it read 5k 0.47 → 0.40 s,
-    * 10k 0.53 → 0.57 s, 20k 0.63 → 0.77 s and 50k 0.90 → 1.38 s, so warm
-    * the spread wins from about 10k.
-    */
-  private[graft] val SpreadMinDocs = 20000L
-
-  /** Whether a document table of `nDocs` rows is spread by `doc_id`:
-    * above [[SpreadMinDocs]]. Read the count with [[rowsUpTo]].
-    */
-  private[graft] def spreadsByDocId(nDocs: Long): Boolean = nDocs > SpreadMinDocs
-
   /** `docs` hash-spread by `doc_id` over the session's default
     * parallelism, so the tokenizing after it runs on every core: a full
     * shuffle at any lake size (a single-split corpus otherwise reads as
     * one partition, [[table]]). The one spread of the corpus operators;
-    * decontamination takes it only above [[spreadsByDocId]], the others
-    * at every size.
+    * decontamination takes it only above [[Gates.SpreadMinDocs]], the
+    * others at every size.
     */
   private[graft] def spreadByDocId(docs: DataFrame): DataFrame =
     docs.repartition(docs.sparkSession.sparkContext.defaultParallelism, col("doc_id"))

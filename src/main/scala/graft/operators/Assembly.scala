@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Q, SessionCache, Tables}
+import graft.{Gates, Q, SessionCache, Tables}
 import graft.functions.Det._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -211,19 +211,6 @@ object Assembly {
     */
   private[graft] val BpeEow = "</w>"
 
-  /** Size gate between the two physical BPE paths, in rows of the
-    * (source, word, n) table ([[bpeWordRows]]): a word that occurs in k
-    * sources counts k times. At or below it the table collects to the
-    * driver and both training and encode run there (how production
-    * tokenizer trainers work — the vocab of even a large corpus is
-    * usually O(10⁶) words); above it both stay distributed (a 100 TB web
-    * crawl's token set — URLs, hashes, code identifiers — is unbounded
-    * and can outgrow any driver). One bounded collect, `limit(gate + 1)`,
-    * decides; both paths are spec-pinned identical ([[bpeDistributed]]
-    * runs the far side on any corpus).
-    */
-  private[graft] val BpeDriverMaxVocab = 200000L
-
   /** BPE tokenizer TRAINING — the iterative loop whose single step
     * [[qPairCounts]] is: n rounds of (count adjacent symbol pairs →
     * promote the most frequent pair to a new symbol → re-segment every
@@ -235,7 +222,7 @@ object Assembly {
     * runs on word frequencies, O(vocabulary) rows where the corpus is
     * billions; pair counts are freq-weighted so the result is identical
     * to training on the raw corpus). The merge loop then dispatches on
-    * the table's size ([[BpeDriverMaxVocab]]): small vocabularies train
+    * the table's size ([[Gates.BpeDriverMaxVocab]]): small vocabularies train
     * on the driver (model-sized data — the merge table is the model);
     * oversized ones run the distributed loop, where each round costs one
     * inline-generator pair explode into a map-side-combined count (a
@@ -290,15 +277,15 @@ object Assembly {
       .select(col("source"), explode(Text.words(col("text"))).as("word"))
       .groupBy("source", "word").agg(count(lit(1)).as("n"))
 
-  /** [[wordCounts]]' rows if at most [[BpeDriverMaxVocab]], else None:
+  /** [[wordCounts]]' rows if at most [[Gates.BpeDriverMaxVocab]], else None:
     * one bounded collect, `limit(gate + 1)`, both measures the table and,
     * under the gate, brings it to the driver for training and encode.
     */
   private def bpeWordRows(s: SparkSession, d: String): Option[Array[(String, String, Long)]] =
     SessionCache(s, d, "bpe_word_rows") {
-      val rows = wordCounts(s, d).limit(BpeDriverMaxVocab.toInt + 1)
+      val rows = wordCounts(s, d).limit(Gates.BpeDriverMaxVocab.max.toInt + 1)
         .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2)))
-      if (rows.length <= BpeDriverMaxVocab) Some(rows) else None
+      if (Gates.BpeDriverMaxVocab.near(rows.length)) Some(rows) else None
     }
 
   /** [[wordCounts]] localCheckpointed for the paths above the gate, which
@@ -329,7 +316,7 @@ object Assembly {
     distributedLoop(bpeWordTable(s, d).groupBy("word")
       .agg(sum(col("n")).as("freq")).select(col("freq"), wordSyms), nMerges)
 
-  /** The paths above [[BpeDriverMaxVocab]] on any corpus, unmemoized: the
+  /** The paths above [[Gates.BpeDriverMaxVocab]] on any corpus, unmemoized: the
     * distributed loop's merge table and the encode rows of the distributed
     * cascade under it, for pinning both against the driver path.
     */
@@ -491,7 +478,7 @@ object Assembly {
     * so the corpus never re-segments and is never re-read: encode works
     * on training's own (source, word, n) table ([[wordCounts]]). Each
     * distinct word segments once — driver-side under
-    * [[BpeDriverMaxVocab]] (model-sized work), above it the training
+    * [[Gates.BpeDriverMaxVocab]] (model-sized work), above it the training
     * loop's own distributed [[mergeFold]] cascade in rank order, joined
     * back to the table and rolled up per source. Either way the result
     * is one row per source, memoized per (session, dir).

@@ -53,7 +53,7 @@ object Curation {
     * exact-dedup keeper is a MIN window over the 16-byte content key —
     * one narrow shuffle, no corpus-sized keeper table to join back;
     * the cluster non-keeper join broadcasts only under the measured
-    * [[Similarity.MemberBroadcastMaxRows]] gate (unhinted above — web
+    * [[graft.Gates.MemberBroadcastMaxRows]] gate (unhinted above — web
     * corpora run 30-50% near-dup members and a forced hint is a driver
     * bomb there); the funnel
     * itself aggregates 5 counter cells map-side (one row per stage out,
@@ -87,7 +87,7 @@ object Curation {
     // CCNet/FineWeb-rate web corpus — so the broadcast hint is gated on
     // the MEASURED member count (a cache read: the label table is
     // memoized+materialized), unhinted above the threshold so AQE
-    // size-decides. See Similarity.MemberBroadcastMaxRows; both physical
+    // size-decides. See Gates.MemberBroadcastMaxRows; both physical
     // forms are spec-pinned identical.
     val labels = Similarity.dedupClusterLabels(s, d)
     val gatedNonKeepers = Similarity.gatedMemberBroadcast(labels)(labels

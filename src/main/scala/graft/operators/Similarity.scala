@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Q, SessionCache, Tables}
+import graft.{Gates, Q, SessionCache, Tables}
 import graft.functions.GraftFunctions
 import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
@@ -323,35 +323,6 @@ object Similarity {
   private val MinhashK = 32
   private val BandRows = 4 // 8 bands × 4 rows
 
-  /** Size gates between the two physical near-dup paths ([[nearDupLocal]]).
-    * At or below both, the corpus's shingle-hash arrays come to the driver
-    * in one collect and the whole chain (bands, candidates, exact
-    * verification, clusters) runs there on primitive arrays; above either,
-    * the distributed chain runs. The distributed chain pays about 28 jobs
-    * (persist, count and a stage boundary per entry) at any size, so the
-    * driver path wins while its data fits; driver memory is the measure,
-    * and it has two terms.
-    *
-    * Documents: the testdata corpus averages ~55 shingles per document, so
-    * 100k documents hold ~5.5M hashes (~45 MB as `long[]`) plus 8 band
-    * hashes each. The count is the documents' row count from their parquet
-    * footers, read before any collect, so a corpus above it pays no
-    * driver pass. sf1 (50,000 documents) stays on the driver, sf10
-    * (500,000) and any lake-scale corpus go distributed. Rows, not bytes,
-    * as [[Assembly]]'s `BpeDriverMaxVocab`.
-    *
-    * Bucket pairs: a band bucket of m rows yields m(m-1)/2 candidate pairs,
-    * so a few thousand exact copies (boilerplate pages) would build ~10^9
-    * on the driver. The sum of C(m, 2) over every band's buckets, counted
-    * from the sorted band hashes before any pair is built, is held to 1M
-    * (8 MB of packed pairs; the verified frames hold at most that many
-    * rows). Ordinary corpora sit far below it (sf1: 98 candidates); above
-    * it the distributed chain, which spreads the join and can spill, runs
-    * instead. Both paths are spec-pinned identical.
-    */
-  private[graft] val MinhashDriverMaxDocs = 100000L
-  private[graft] val MinhashDriverMaxPairs = 1000000L
-
   /** MinHash + LSH near-dup (rows-only; spec checks vs exact Jaccard):
     * k=32 min-hashes per doc (one pass over the shingle index, 32 partial
     * min aggregates over the precomputed shingle hash — each permutation
@@ -412,7 +383,11 @@ object Similarity {
       .filter(size(col("hs")) > 0)
 
   /** A document's shingle hashes: the one expression both near-dup paths
-    * evaluate, so their hashes are bit-identical.
+    * evaluate, so their hashes are bit-identical. It keeps empty tokens,
+    * unlike [[Text.gramHashes]]: [[Text.norm]] trims only spaces and maps
+    * an edge tab, newline, CR or form feed to one space, so "abc def ghi\n"
+    * keeps an edge space and two trigrams where dropping empties gives
+    * one. Folding the two would change such documents' MinHash shingles.
     */
   private def shingleHashCol: Column =
     GraftFunctions.call("graft_gram_hashes", Text.norm(col("text")), lit(3), lit(true))
@@ -584,23 +559,25 @@ object Similarity {
     }
 
   /** The driver pass, or None above either gate. The documents' footer
-    * row count meets [[MinhashDriverMaxDocs]] first, with no job; under it
-    * one collect brings the (doc_id, shingle hashes) rows of every
-    * document with a shingle to the driver ([[shingleHashCol]], the
+    * row count meets [[Gates.MinhashDriverMaxDocs]] first, with no job;
+    * under it one collect brings the (doc_id, shingle hashes) rows of
+    * every document with a shingle to the driver ([[shingleHashCol]], the
     * expression the distributed chain evaluates), and their band buckets'
-    * pair count meets [[MinhashDriverMaxPairs]], before any pair is built.
-    * Memoized, as [[Assembly]]'s BPE word rows are.
+    * pair count meets [[Gates.MinhashDriverMaxPairs]], before any pair is
+    * built. Memoized, as [[Assembly]]'s BPE word rows are.
     */
   private def nearDupLocal(s: SparkSession, d: String): Option[NearDupLocal] =
     SessionCache(s, d, "near_dup_rows") {
-      if (Tables.rowsUpTo(s, d, "documents", MinhashDriverMaxDocs) > MinhashDriverMaxDocs) None
+      val gate = Gates.MinhashDriverMaxDocs
+      if (!gate.near(Tables.rowsUpTo(s, d, "documents", gate.max))) None
       else {
         import s.implicits._
         val rows = Tables.documents(s, d)
           .select(col("doc_id"), shingleHashCol.as("hs"))
           .filter(size(col("hs")) > 0)
           .as[(Option[Long], Array[Long])].collect()
-        Some(new NearDupLocal(rows)).filter(_.bucketPairs <= MinhashDriverMaxPairs)
+        Some(new NearDupLocal(rows))
+          .filter(nd => Gates.MinhashDriverMaxPairs.near(nd.bucketPairs))
       }
     }
 
@@ -620,7 +597,7 @@ object Similarity {
     /** Distinct non-null doc_ids ascending: a pair is packed into one long
       * as rank(id_a) << 32 | rank(id_b), so sorting packed pairs sorts by
       * (id_a, id_b). Ranks fit an int: there are at most
-      * [[MinhashDriverMaxDocs]] rows.
+      * [[Gates.MinhashDriverMaxDocs]] rows.
       */
     private lazy val byRank: Array[Long] = sortedDistinct(withId.map(ids))
     private lazy val rank: Array[Int] =
@@ -849,43 +826,6 @@ object Similarity {
     * corpus key side is 2 rows/fp — at this scale a broadcastable build
     * side, so the 66·D probe rows never shuffle.
     */
-  /** Fingerprint-count gate for hinting the half-probe join's exact-key
-    * side broadcast: 2 rows/fp × 16 bytes ≈ 130 MB of hash table at the
-    * cap — safely inside a driver/executor heap, and ~500× the sf10
-    * corpus's D. Past the cap the join ships unhinted and AQE
-    * size-decides (a web-scale D must shuffle, not OOM the driver).
-    */
-  private[graft] val SimhashHalfBroadcastMaxFps = 4000000L
-
-  /** Separate, LOWER gate for the doc-grain member-map broadcasts of
-    * [[qDedupSimhash]]'s expansion joins (r11 advice): the plan carries
-    * up to three member-map HashedRelations CONCURRENTLY (same-fp +
-    * both cross-fp sides) alongside the exact-key relation, and a
-    * HashedRelation costs several× its 16 B/row raw bytes — sharing the
-    * 4M exact-key gate would let the three maps alone reach GB scale on
-    * the executors and driver. 1M docs ≈ 16 MB raw / tens of MB hashed
-    * per map — three of them comfortably inside any executor. Above the
-    * gate the expansion joins ship unhinted (AQE size-decides); at that
-    * corpus scale the pair-flood materializer is the wrong consumer
-    * anyway (clusters are the lake-scale contract — see the operator
-    * doc).
-    */
-  private[graft] val SimhashMemberBroadcastMaxDocs = 1000000L
-
-  /** The half-probe join's hint decision: its exact-key side broadcasts
-    * at or below [[SimhashHalfBroadcastMaxFps]] fingerprints, unhinted
-    * above it.
-    */
-  private[graft] def simhashHalfKeyHint(nFp: Long): DataFrame => DataFrame =
-    df => if (nFp <= SimhashHalfBroadcastMaxFps) broadcast(df) else df
-
-  /** The expansion joins' hint decision: each member map broadcasts at or
-    * below [[SimhashMemberBroadcastMaxDocs]] fingerprints, unhinted above
-    * it.
-    */
-  private[graft] def simhashMemberHint(nFp: Long): DataFrame => DataFrame =
-    df => if (nFp <= SimhashMemberBroadcastMaxDocs) broadcast(df) else df
-
   private[graft] def simhashHalfKeys(fp: DataFrame, probe: Boolean): DataFrame = {
     val lo = col("fp").bitwiseAND(lit(0xffffffffL))
     val hi = shiftrightunsigned(col("fp"), 32)
@@ -981,7 +921,7 @@ object Similarity {
     // stream side must pre-spread on a salt instead; at that scale the
     // pair-flood materializer is the wrong consumer anyway (clusters —
     // [[qDedupClusters]] — are the lake-scale contract).
-    val gatedM = simhashMemberHint(nFp)
+    val gatedM = Gates.SimhashMemberBroadcastMaxDocs.broadcastNear(nFp)
     // hamming-0: all pairs within an identical-fp group (pure expansion)
     val same = m.as("x").join(gatedM(m.as("y")),
         col("x.fp") === col("y.fp") && col("x.doc_id") < col("y.doc_id"))
@@ -998,7 +938,7 @@ object Similarity {
       .select(col("fp").as("fp_b"), col("hk"))
     val fpPairs = simhashHalfKeys(dfp, probe = true)
       .select(col("fp").as("fp_a"), col("hk"))
-      .join(simhashHalfKeyHint(nFp)(exactKeys), Seq("hk"))
+      .join(Gates.SimhashHalfBroadcastMaxFps.broadcastNear(nFp)(exactKeys), Seq("hk"))
       .filter(col("fp_a") < col("fp_b"))
       .select("fp_a", "fp_b").distinct()
       .withColumn("hamming",
@@ -1937,21 +1877,6 @@ object Similarity {
     }
   }
 
-  /** Eval-vector-count gate under which [[annIvfScoredPoint]]'s probe
-    * rows and query vectors broadcast into the list join — mirrors
-    * [[graft.operators.TextOps]]'s decontaminate tiers: a held-out
-    * benchmark suite is small in production, but a huge eval slice is
-    * too big to broadcast.
-    */
-  private[graft] val SemanticEvalBroadcastMaxDocs = 100000L
-
-  /** [[annIvfScoredPoint]]'s hint decision for `nEval` embeddable eval
-    * vectors: broadcast the probes at or below
-    * [[SemanticEvalBroadcastMaxDocs]], shuffle them on cid above it.
-    */
-  private[graft] def evalProbesBroadcast(nEval: Long): Boolean =
-    nEval <= SemanticEvalBroadcastMaxDocs
-
   /** Semantic contamination threshold = the family's embedding near-dup
     * τ ([[qEmbedNeardup]]): an eval member is contaminated when the train
     * corpus contains a vector this close — the embedding-space complement
@@ -1979,7 +1904,7 @@ object Similarity {
     * 1.89 over sf1→sf10 (3437 s at sf10 — the collision load ran 2.4×
     * above the √n-bucket model; see SURVEY §8). Probe rows broadcast
     * while the eval slice is small (the production case: held-out
-    * benchmark suites), shuffle past [[SemanticEvalBroadcastMaxDocs]];
+    * benchmark suites), shuffle past [[Gates.SemanticEvalBroadcastMaxDocs]];
     * exact rescoring pays ≈ |eval|·5.3√n integer dots, not
     * |eval|·|train|. Null-embedding eval rows stay in the report with a
     * NULL verdict — an unembeddable member is UNASSESSED, not clean
@@ -2186,8 +2111,8 @@ object Similarity {
     *
     * Scale shape: probes are |eval|·nprobe rows, broadcast while the
     * eval slice is small (the production case: held-out suites) and
-    * shuffled on cid past the gate ([[evalProbesBroadcast]] of the
-    * embeddable eval count); the list join emits Θ(|eval|·nprobe·n/K) =
+    * shuffled on cid past [[Gates.SemanticEvalBroadcastMaxDocs]] embeddable
+    * eval vectors; the list join emits Θ(|eval|·nprobe·n/K) =
     * Θ(|eval|·√n) candidate rows BY CONSTRUCTION, no term tracks
     * bucket-load concentration. The members are filtered to the train
     * side before the join (the shared index scan is untouched), so eval
@@ -2212,7 +2137,7 @@ object Similarity {
     val members = ivfMembersKnnK(s, d, k).filter(not(isEval))
     val queries = q.filter(isEval && col("qv").isNotNull)
     val nprobe = math.min(PointIvfProbe, k)
-    if (evalProbesBroadcast(queries.count())) {
+    if (Gates.SemanticEvalBroadcastMaxDocs.near(queries.count())) {
       // the (query_id, cid) probes AND the query vectors broadcast;
       // members stream through both map-side joins, nothing shuffles
       val probes = queries.select(col("vec_id").as("query_id"),
@@ -2413,8 +2338,8 @@ object Similarity {
     * edge count (the near-dup pair graph is a small residue of the
     * corpus, but nothing guarantees that at 100 TB). The count is of
     * `pairs`, which both callers pass cached, so it reads the cache; the
-    * gate is [[ComponentsSingleTaskMaxEdges]] directed edges, two per
-    * pair.
+    * gate is [[Gates.ComponentsSingleTaskMaxEdges]] directed edges, two
+    * per pair.
     *
     *  - at or below it: one narrow single-task union-find via
     *    mapPartitions over each pair once — no driver collect (the graph
@@ -2424,8 +2349,7 @@ object Similarity {
     *  - above it: [[propagateComponents]], the shuffle loop.
     */
   def components(pairs: DataFrame): DataFrame =
-    if (2 * pairs.count() > ComponentsSingleTaskMaxEdges) propagateComponents(pairs)
-    else {
+    if (Gates.ComponentsSingleTaskMaxEdges.near(2 * pairs.count())) {
       val spark = pairs.sparkSession
       import spark.implicits._
       // through an RDD, so the plan a caller caches is one leaf and not
@@ -2434,10 +2358,7 @@ object Similarity {
         .coalesce(1)
         .mapPartitions(it => unionFindLabels(it).iterator)
         .toDF("id", "label")
-    }
-
-  /** [[components]]' gate, in directed edges: two per pair. */
-  private[graft] val ComponentsSingleTaskMaxEdges = 2000000L
+    } else propagateComponents(pairs)
 
   /** [[components]] above its gate: min-label propagation with pointer
     * jumping — each node repeatedly adopts the smallest label among
@@ -2719,37 +2640,14 @@ object Similarity {
        |ORDER BY d.doc_id""".stripMargin
   ) { (s, d) => survivorsOverLabels(s, d, ngramClusterLabels(s, d)) }
 
-  /** Broadcast gate for the survivor/funnel family's cluster-member-
-    * derived tables (member roster, keeper table, non-keeper table): on
-    * THIS synthetic corpus near-dup members are ~5% of documents and a
-    * broadcast is obviously right — but the operators' own lineage
-    * (CCNet/FineWeb) describes web corpora where near-dup members run
-    * 30-50% of ALL documents, and a *forced* broadcast hint there is a
-    * multi-hundred-GB driver bomb that bypasses AQE's size check. So the
-    * hint is SIZE-GATED, the [[components]] measured-edge-count
-    * precedent: the label table is memoized+materialized
-    * ([[dedupClusterLabels]]), its count is a cache read, and the hint
-    * only applies under this row threshold — above it the join ships
-    * UNHINTED and AQE size-decides (a 5M-row id table is ~100 MB
-    * broadcast-side; anything bigger belongs in a shuffle
-    * semi/anti-join). Both physical forms are spec-pinned identical.
-    */
-  private[graft] val MemberBroadcastMaxRows = 5000000L
-
-  /** The member-count hint decision: broadcast at or below
-    * [[MemberBroadcastMaxRows]] members, unhinted above it.
-    */
-  private[graft] def memberHint(nMembers: Long): DataFrame => DataFrame =
-    df => if (nMembers <= MemberBroadcastMaxRows) broadcast(df) else df
-
-  /** [[memberHint]] for a label table, counted — ONE spelling for every
-    * consumer of the cluster-member tables ([[qDedupSurvivorsBest]],
-    * [[weightsOverLabels]], [[Curation.stagedFlags]]). The tables are
-    * memoized and materialized, so the count is a cache read (the
-    * components() precedent).
+  /** [[Gates.MemberBroadcastMaxRows]]' hint for a label table, counted —
+    * ONE spelling for every consumer of the cluster-member tables
+    * ([[qDedupSurvivorsBest]], [[weightsOverLabels]],
+    * [[Curation.stagedFlags]]). The tables are memoized and materialized,
+    * so the count is a cache read (the components() precedent).
     */
   private[graft] def gatedMemberBroadcast(labels: DataFrame): DataFrame => DataFrame =
-    memberHint(labels.count())
+    Gates.MemberBroadcastMaxRows.broadcastNear(labels.count())
 
   /** Quality-aware near-dup survivor corpus (rows-only; spec pins the
     * partition identity with [[qDedupSurvivors]] and per-cluster argmax
@@ -2763,8 +2661,8 @@ object Similarity {
     *
     * Scale shape: the member semi-join keeps quality regexes off the
     * non-member corpus; its small side broadcasts only under the
-    * measured [[MemberBroadcastMaxRows]] gate (unhinted above — see the
-    * gate's scaladoc for why a forced hint is a driver bomb on
+    * measured [[Gates.MemberBroadcastMaxRows]] gate (unhinted above — see
+    * the gate's scaladoc for why a forced hint is a driver bomb on
     * CCNet/FineWeb-rate corpora); the per-cluster argmax is one
     * map-side-combinable struct-max aggregate; the final anti-join
     * streams the corpus against the non-keeper set.
@@ -2839,7 +2737,7 @@ object Similarity {
     *
     * Scale shape: cluster sizes are one map-side-combined aggregate over
     * the memoized label table; the member join is size-gated through the
-    * same [[MemberBroadcastMaxRows]] rule as the survivor family
+    * same [[Gates.MemberBroadcastMaxRows]] rule as the survivor family
     * (broadcast under the measured count, unhinted above it — 30–50%-dup
     * web corpora must not force a driver-bomb hint); the corpus left-join
     * streams unbuffered.
@@ -2911,7 +2809,7 @@ object Similarity {
     * held slice only, candidates labeled-only (the list members are
     * filtered before the join, so held–held neighbors never reach the
     * exact pass), probe rows broadcast while the held slice is small
-    * (shuffled past [[SemanticEvalBroadcastMaxDocs]]); candidates are
+    * (shuffled past [[Gates.SemanticEvalBroadcastMaxDocs]]); candidates are
     * the held vector's [[PointIvfProbe]] nearest lists — Θ(|held|·√n)
     * rows by construction, retiring the LSH collision join whose
     * bucket-load-bound volume measured exponent 1.85 over sf1→sf10

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Q, SessionCache, Tables}
+import graft.{Gates, Q, SessionCache, Tables}
 import graft.functions.Det._
 import graft.functions.GraftFunctions
 import org.apache.spark.sql.expressions.Window
@@ -758,9 +758,9 @@ object TextOps {
     * document count from the parquet footers, [[graft.Tables.rowsUpTo]]:
     * the eval slice is a fixed 1/16 of it and vocab size is linear in
     * the eval docs), through [[evalJoinHint]]:
-    *  - documents ≤ [[EvalBroadcastMaxCorpusDocs]]: the eval vocabulary
-    *    broadcasts and the 100 TB train side streams through a map-side
-    *    semi-join — train n-grams never shuffle at all;
+    *  - documents ≤ [[Gates.EvalBroadcastMaxCorpusDocs]]: the eval
+    *    vocabulary broadcasts and the 100 TB train side streams through a
+    *    map-side semi-join — train n-grams never shuffle at all;
     *  - above it: the same semi-join runs as a sort-merge join on the
     *    n-gram key — both sides exchange, which is the only correct shape
     *    once the vocabulary exceeds executor memory.
@@ -769,7 +769,7 @@ object TextOps {
     * and the only train N-GRAMS that ever reach the distinct are the
     * ones already matching eval vocabulary — the corpus-wide n-gram
     * distinct a naive vocab-first formulation would pay never happens.
-    * Above [[graft.Tables.SpreadMinDocs]] documents both sides' raw doc
+    * Above [[Gates.SpreadMinDocs]] documents both sides' raw doc
     * rows pass one doc_id-hash spread (a full shuffle) so the tokenizing
     * runs on every core; at or below it a single-split corpus stays one
     * partition and the plan carries no shuffle exchange at all.
@@ -801,36 +801,29 @@ object TextOps {
        |ORDER BY d.doc_id""".stripMargin
   ) { (s, d) => decontaminate(s, d) }
 
-  /** Corpus-document gate under which the eval n-gram vocabulary
-    * broadcasts: 16 × 100k, so the 1/16 eval slice holds about 100k
-    * documents (≈ tens of MB of 5-gram hashes — far under the broadcast
-    * limit). `decontaminate`'s one plan switch: above it every
-    * eval-vocabulary join is a sort-merge join.
-    */
-  private[graft] val EvalBroadcastMaxCorpusDocs = 1600000L
-
   /** The eval-vocabulary join hint for a corpus of `nDocs` documents:
-    * broadcast at or below [[EvalBroadcastMaxCorpusDocs]]. Above it the
-    * vocab side is known to be huge, so the spill-safe sort-merge shape
-    * is forced rather than left to Catalyst's size estimate (an
+    * broadcast at or below [[Gates.EvalBroadcastMaxCorpusDocs]]. Above it
+    * the vocab side is known to be huge, so the spill-safe sort-merge
+    * shape is forced rather than left to Catalyst's size estimate (an
     * aggregate's estimate can come out tiny and re-introduce the
     * broadcast).
     */
   private[graft] def evalJoinHint(nDocs: Long): DataFrame => DataFrame =
-    if (nDocs <= EvalBroadcastMaxCorpusDocs) broadcast(_) else _.hint("merge")
+    if (Gates.EvalBroadcastMaxCorpusDocs.near(nDocs)) broadcast(_) else _.hint("merge")
 
   private[graft] def decontaminate(s: SparkSession, d: String): DataFrame = {
-    val nDocs = Tables.rowsUpTo(s, d, "documents", EvalBroadcastMaxCorpusDocs)
+    // one footer count, read up to the larger gate, decides both
+    val nDocs = Tables.rowsUpTo(s, d, "documents", Gates.EvalBroadcastMaxCorpusDocs.max)
     decontaminated(s, d, evalJoinHint(nDocs),
-      if (Tables.spreadsByDocId(nDocs)) Tables.spreadByDocId else identity)
+      if (Gates.SpreadMinDocs.near(nDocs)) identity else Tables.spreadByDocId)
   }
 
   /** [[decontaminate]] with both sides spread by doc_id at any corpus
-    * size: the far side of [[graft.Tables.spreadsByDocId]].
+    * size: the far side of [[Gates.SpreadMinDocs]].
     */
   private[graft] def decontaminateSpread(s: SparkSession, d: String): DataFrame =
     decontaminated(s, d,
-      evalJoinHint(Tables.rowsUpTo(s, d, "documents", EvalBroadcastMaxCorpusDocs)),
+      evalJoinHint(Tables.rowsUpTo(s, d, "documents", Gates.EvalBroadcastMaxCorpusDocs.max)),
       Tables.spreadByDocId)
 
   private def decontaminated(s: SparkSession, d: String,

@@ -393,6 +393,22 @@ class KernelPropertySpec extends SparkSpec {
     }
   }
 
+  // Similarity.shingleHashCol hashes keep-empty trigrams of Text.norm,
+  // Text.gramHashes drop-empty ones. NormKernel trims only 0x20 and maps an
+  // edge tab or newline to one space, so such a text keeps an edge space
+  // and one more keep-empty trigram: the two spellings are not one.
+  test("an edge tab or newline leaves Text.norm an edge space: keep-empty trigrams differ") {
+    val norm = graft.operators.Text.norm(t)
+    val grams = spelling(norm,
+      GraftFunctions.call("graft_gram_hashes", norm, lit(3), lit(true)),
+      graft.operators.Text.gramHashes(t, 3))
+    for ((in, normed) <- Seq("abc def ghi\n" -> "abc def ghi ", "\tabc def ghi" -> " abc def ghi")) {
+      val Seq(n, keep: Seq[_], drop: Seq[_]) = grams(UTF8String.fromString(in))
+      assert(n == normed)
+      assert(keep.size == 2 && drop.size == 1 && keep.contains(drop.head), s"<$in>")
+    }
+  }
+
   // Text.words replaced the filter-lambda tokenizer, whose ArrayFilter is
   // CodegenFallback: both forms through eval and through a compiled
   // projection must give one answer on every generated text, and the

@@ -8,7 +8,7 @@ import org.scalacheck.{Gen, Prop, Test}
 import org.scalacheck.util.Pretty
 
 /** The MinHash near-dup chain's two physical paths give the same answer.
-  * Under `Similarity.MinhashDriverMaxDocs` and `MinhashDriverMaxPairs` the
+  * Under `Gates.MinhashDriverMaxDocs` and `MinhashDriverMaxPairs` the
   * accessors build four of the five entries from one driver pass; every
   * spec corpus (sf0.001/sf0.01) is under both gates, so the other specs pin
   * the driver path. This one pins it to `Similarity.nearDupDistributed`,
@@ -113,12 +113,12 @@ class NearDupPathSpec extends SparkSpec {
     def docs(rows: Long): Seq[(Option[Long], String)] =
       Seq(Some(1L) -> "a b c d", Some(2L) -> "a b c d", Some(3L) -> null) ++
         (4L to rows).map(i => Some(i) -> "x")
-    for (rows <- Seq(Similarity.MinhashDriverMaxDocs, Similarity.MinhashDriverMaxDocs + 1)) {
+    for (rows <- Seq(Gates.MinhashDriverMaxDocs.max, Gates.MinhashDriverMaxDocs.max + 1)) {
       val dir = tempDir("graft_neardup_gate").toString
       writeDocs(dir, docs(rows))
       assert(Tables.rowsUpTo(spark, dir, "documents", rows) == rows)
       val labels = Similarity.dedupClusterLabels(spark, dir)
-      assert(local(labels) == (rows <= Similarity.MinhashDriverMaxDocs), s"$rows rows")
+      assert(local(labels) == (rows <= Gates.MinhashDriverMaxDocs.max), s"$rows rows")
       assert(cells(labels) == Seq("1|1", "2|1"))
       assert(cells(Similarity.minhashPairs(spark, dir)) == Seq("1|2|1.0"))
     }
@@ -129,7 +129,7 @@ class NearDupPathSpec extends SparkSpec {
     // m exact copies fill one bucket in each of the 8 bands: 8·C(m, 2)
     // bucket pairs. The largest m at the gate runs on the driver, one more
     // copy goes distributed; both give one cluster of every copy.
-    val cap = Similarity.MinhashDriverMaxPairs
+    val cap = Gates.MinhashDriverMaxPairs.max
     val atGate = Iterator.from(2).takeWhile(m => 8L * m * (m - 1) / 2 <= cap).max
     for (m <- Seq(atGate, atGate + 1)) {
       val dir = tempDir("graft_neardup_copies").toString

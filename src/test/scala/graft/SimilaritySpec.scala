@@ -818,25 +818,6 @@ class SimilaritySpec extends SparkSpec {
     }
   }
 
-  test("member hint: broadcast at MemberBroadcastMaxRows members, unhinted one past it") {
-    import org.apache.spark.sql.catalyst.plans.logical.BROADCAST
-    val gate = Similarity.MemberBroadcastMaxRows
-    val df = spark.range(3).toDF("doc_id")
-    assert(joinHints(Similarity.memberHint(gate)(df)) == Seq(BROADCAST))
-    assert(joinHints(Similarity.memberHint(gate + 1)(df)).isEmpty)
-  }
-
-  test("simhash hints: broadcast at SimhashHalfBroadcastMaxFps / SimhashMemberBroadcastMaxDocs, unhinted one past") {
-    import org.apache.spark.sql.catalyst.plans.logical.BROADCAST
-    val df = spark.range(3).toDF("fp")
-    val half = Similarity.SimhashHalfBroadcastMaxFps
-    assert(joinHints(Similarity.simhashHalfKeyHint(half)(df)) == Seq(BROADCAST))
-    assert(joinHints(Similarity.simhashHalfKeyHint(half + 1)(df)).isEmpty)
-    val member = Similarity.SimhashMemberBroadcastMaxDocs
-    assert(joinHints(Similarity.simhashMemberHint(member)(df)) == Seq(BROADCAST))
-    assert(joinHints(Similarity.simhashMemberHint(member + 1)(df)).isEmpty)
-  }
-
   test("simhash: size-gated broadcasts — the unhinted far side emits the same pairs") {
     val hinted = Similarity.qDedupSimhash.run(spark, sfDir)
     assert(joinHints(hinted).nonEmpty, "under both gates the joins must be hinted")
@@ -850,7 +831,7 @@ class SimilaritySpec extends SparkSpec {
   }
 
   // under the measured gate the member joins carry the hint; the far side
-  // (the >MemberBroadcastMaxRows web-corpus case) is the same plan
+  // (the >Gates.MemberBroadcastMaxRows web-corpus case) is the same plan
   // unhinted, with nothing broadcast by size either. Both forms are
   // pinned to one set of rows
   for ((family, query) <- Seq("survivors-best" -> Similarity.qDedupSurvivorsBest,
@@ -867,13 +848,8 @@ class SimilaritySpec extends SparkSpec {
     assert(hinted.collect().toSeq == far, "physical strategies disagree on the rows")
   }
 
-  test("IVF point scorer: eval probes broadcast at SemanticEvalBroadcastMaxDocs, shuffle one past") {
-    val gate = Similarity.SemanticEvalBroadcastMaxDocs
-    assert(Similarity.evalProbesBroadcast(gate) && !Similarity.evalProbesBroadcast(gate + 1))
-  }
-
   test("IVF point scorer: the shuffled list join scores the broadcast form's rows") {
-    // the far side of evalProbesBroadcast: eval probes carrying their
+    // the far side of Gates.SemanticEvalBroadcastMaxDocs: eval probes carrying their
     // vectors into a shuffled cid join against the train members
     val isEval = graft.operators.Text.evalSlice(col("vec_id"))
     val k = Similarity.knnIvfK(Similarity.nQuantized(spark, sfDir))

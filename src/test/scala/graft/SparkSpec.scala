@@ -57,6 +57,21 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     } finally sc.removeSparkListener(listener)
   }
 
+  /** `body` with the input split size at `bytes` and a fresh registry,
+    * whose entries decided under that size are dropped again afterwards.
+    */
+  protected def withSplit[T](bytes: String)(body: => T): T = {
+    val key = "spark.sql.files.maxPartitionBytes"
+    val prev = spark.conf.getOption(key)
+    SessionCache.clear()
+    spark.conf.set(key, bytes)
+    try body
+    finally {
+      prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+      SessionCache.clear()
+    }
+  }
+
   /** The join strategies `df`'s analyzed plan is hinted with. */
   protected def joinHints(df: DataFrame): Seq[JoinStrategyHint] =
     df.queryExecution.analyzed.collect { case h: ResolvedHint => h.hints.strategy }.flatten

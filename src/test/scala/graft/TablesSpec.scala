@@ -9,11 +9,10 @@ import org.apache.spark.sql.functions._
   * it need no exchange; filters and column pruning still reach its scan;
   * a table above one split keeps its parallel scan and its exchanges; and
   * a rewritten table is decided again on its next lookup. It also pins
-  * the documents' doc_id spread gate ([[Tables.spreadsByDocId]]).
+  * both sides of the documents' doc_id spread ([[Tables.spreadByDocId]],
+  * taken above [[Gates.SpreadMinDocs]]; [[GatesSpec]] checks the gate).
   */
 class TablesSpec extends SparkSpec {
-
-  private val SplitKey = "spark.sql.files.maxPartitionBytes"
 
   private def coalesced(df: DataFrame): Boolean =
     df.queryExecution.analyzed.exists {
@@ -27,20 +26,6 @@ class TablesSpec extends SparkSpec {
     val peaks = events.filter(col("value") > 0)
       .groupBy("event_type").agg(max("value").as("peak"))
     counts.join(peaks, "event_type").orderBy("event_type")
-  }
-
-  /** `body` with the split size at `bytes` and a fresh registry, whose
-    * entries decided under that size are dropped again afterwards.
-    */
-  private def withSplit[T](bytes: String)(body: => T): T = {
-    val prev = spark.conf.getOption(SplitKey)
-    SessionCache.clear()
-    spark.conf.set(SplitKey, bytes)
-    try body
-    finally {
-      prev.fold(spark.conf.unset(SplitKey))(spark.conf.set(SplitKey, _))
-      SessionCache.clear()
-    }
   }
 
   test("a single-split table plans no exchange: aggregates, join and sort in at most 2 jobs") {
@@ -93,9 +78,7 @@ class TablesSpec extends SparkSpec {
     }
   }
 
-  test("doc_id spread: none at SpreadMinDocs documents, spread one past it") {
-    assert(!Tables.spreadsByDocId(Tables.SpreadMinDocs))
-    assert(Tables.spreadsByDocId(Tables.SpreadMinDocs + 1))
+  test("doc_id spread: the documents read unshuffled, spreadByDocId shuffles them") {
     assert(shuffles(Tables.documents(spark, sfDir)).isEmpty)
     assert(shuffles(Tables.spreadByDocId(Tables.documents(spark, sfDir))).nonEmpty)
   }

@@ -297,7 +297,7 @@ class TextOpsSpec extends SparkSpec {
 
   test("decontaminate: the eval-join hint broadcasts at EvalBroadcastMaxCorpusDocs documents, merges one past it") {
     import org.apache.spark.sql.catalyst.plans.logical.{BROADCAST, SHUFFLE_MERGE}
-    val gate = TextOps.EvalBroadcastMaxCorpusDocs
+    val gate = Gates.EvalBroadcastMaxCorpusDocs.max
     val df = spark.range(3).toDF("ng")
     assert(joinHints(TextOps.evalJoinHint(gate)(df)) == Seq(BROADCAST))
     assert(joinHints(TextOps.evalJoinHint(gate + 1)(df)) == Seq(SHUFFLE_MERGE))
